@@ -4,104 +4,76 @@ oracle check of its results.
 The tables carry the columns the six corpus entries and their oracle SQL
 read, under the names of the repo's testdata (documents, embeddings,
 lineitem), so the program loads them through its own `graft.Tables`.
+Their shape is the testdata's, as measured on its sf0.01 and sf0.1
+tables (perfbench/README.md, "Corpus shape"): the same row counts per
+scale factor, the same 30-word vocabulary drawn uniformly, lengths
+uniform over 10-99 tokens, 5% of documents a copy of another one with
+" dup" appended, and embeddings without cluster structure.
 """
-import datetime
-import decimal
-import hashlib
 import json
-import math
+import hashlib
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-VERSION = 1
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+from check_oracle import table_digest  # noqa: E402
 
-WORDS = ("spark window merge table column vector stream value data small "
-         "join filter key agg row scan slow fast part hash batch sort line "
-         "a the index shard page cache plan node").split()
+VERSION = 2
+
+WORDS = ("a agg batch big column customer data fast filter group hash join "
+         "key line merge order part query row scan slow small sort spark "
+         "stream table the value vector window").split()
+LANGS = ("en", "zh", "es", "fr", "de")
+LANG_P = (0.4, 0.15, 0.15, 0.15, 0.15)
 
 
 def generate(out_dir, seed, sf):
-    """Write documents/embeddings/lineitem parquet for one seed.
-
-    Sizes follow the testdata at sf: 50,000 docs, 20,000 vectors and
-    6,000,000 lineitem rows per unit of sf. A seeded 5% of documents
-    repeat an earlier text and 2% repeat one with a single word changed,
-    so the dedup entries find pairs.
-    """
+    """Write documents/embeddings/lineitem parquet for one seed."""
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
-    n_docs = max(50, round(50000 * sf))
+    n_docs = max(500, round(50000 * sf))
     words = np.array(WORDS)
-    texts = []
-    for i in range(n_docs):
-        u = rng.random()
-        if i > 10 and u < 0.05:
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i > 10 and u < 0.07:
-            w = texts[int(rng.integers(0, i))].split(" ")
-            w[int(rng.integers(0, len(w)))] = str(words[rng.integers(0, len(words))])
-            texts.append(" ".join(w))
-        else:
-            n = int(rng.integers(30, 70))
-            texts.append(" ".join(words[rng.zipf(1.3, n) % len(words)]))
-    langs = np.array(["en", "de", "fr", "es", "zh"])
+    texts = [" ".join(words[rng.integers(0, len(words), int(n))])
+             for n in rng.integers(10, 100, n_docs)]
+    for i in np.flatnonzero(rng.random(n_docs) < 0.05):
+        j = (i + int(rng.integers(1, n_docs))) % n_docs
+        texts[i] = texts[j] + " dup"
     pq.write_table(pa.table({
         "doc_id": pa.array(np.arange(n_docs, dtype=np.int64)),
         "text": pa.array(texts),
-        "lang": pa.array(langs[rng.integers(0, 5, n_docs)].tolist()),
-        "source": pa.array([f"src{i % 5}" for i in range(n_docs)]),
+        "lang": pa.array(np.array(LANGS)[rng.choice(len(LANGS), n_docs, p=LANG_P)].tolist()),
+        "source": pa.array([f"src{i % 20}" for i in range(n_docs)]),
         "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
     }), os.path.join(out_dir, "documents.parquet"))
 
-    n_vec = max(50, round(20000 * sf))
-    centers = rng.normal(size=(10, 64))
-    labels = rng.integers(0, 10, n_vec)
-    vec = centers[labels] + rng.normal(scale=0.35, size=(n_vec, 64))
+    n_vec = max(500, round(20000 * sf))
+    vec = rng.normal(size=(n_vec, 64))
     vec /= np.linalg.norm(vec, axis=1, keepdims=True)
     pq.write_table(pa.table({
         "vec_id": pa.array(np.arange(n_vec, dtype=np.int64)),
         "embedding": pa.array(list(vec.astype(np.float32)),
                               type=pa.list_(pa.float32())),
-        "label": pa.array(labels.astype(np.int32)),
+        "label": pa.array(rng.integers(0, 10, n_vec).astype(np.int32)),
     }), os.path.join(out_dir, "embeddings.parquet"))
 
-    n_li = max(100, round(6000000 * sf))
+    n_li = max(6000, round(6000000 * sf))
     pq.write_table(pa.table({
-        "l_orderkey": pa.array(np.sort(rng.integers(0, n_li // 4 + 1, n_li))),
+        "l_orderkey": pa.array(rng.integers(0, n_li // 4, n_li)),
         "l_quantity": pa.array(rng.integers(1, 51, n_li).astype(np.float64)),
-        "l_extendedprice": pa.array(rng.integers(100, 10000000, n_li) / 100.0),
+        "l_extendedprice": pa.array(rng.integers(90000, 10500000, n_li) / 100.0),
         "l_returnflag": pa.array(np.array(["A", "N", "R"])[
             rng.integers(0, 3, n_li)].tolist()),
     }), os.path.join(out_dir, "lineitem.parquet"))
 
 
-# Canonical result digest, as the repo's tools/check_oracle.py computes it.
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def _digest(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    h = hashlib.sha256()
-    for r in sorted("\x1f".join(_canon(r[i]) for i in order) for r in rows):
-        h.update(r.encode())
-        h.update(b"\x1e")
-    return f"{sorted(cols)}:{len(rows)}:{h.hexdigest()}"
+def digest(rows, cols):
+    """Column names, row count and the repo's canonical table digest."""
+    return f"{sorted(cols)}:{len(rows)}:{table_digest(rows, cols)}"
 
 
 def oracle_digests(data_dir, sqls):
@@ -122,7 +94,7 @@ def oracle_digests(data_dir, sqls):
     out = {}
     for name, sql in sorted(sqls.items()):
         res = con.execute(sql)
-        out[name] = _digest(res.fetchall(), [d[0] for d in res.description])
+        out[name] = digest(res.fetchall(), [d[0] for d in res.description])
     con.close()
     with open(cache, "w") as f:
         json.dump({"key": key, "digests": out}, f)
@@ -134,5 +106,5 @@ def result_digests(results_dir, names):
     for name in names:
         t = pq.read_table(os.path.join(results_dir, name))
         rows = [tuple(r[c] for c in t.column_names) for r in t.to_pylist()]
-        out[name] = _digest(rows, t.column_names)
+        out[name] = digest(rows, t.column_names)
     return out

@@ -8,7 +8,7 @@ Usage (from the checkout root):
 
 Workloads (see perfbench/README.md for why each was chosen):
   sync_oneshot  SyncJob.syncAuto on one seeded dump pair, repeated
-  corpus_ops    six corpus entries through the noop sink, per pass
+  corpus_ops    four corpus entries through the noop sink, per pass
 
 With --trace 0 the result carries the end-to-end metrics of
 BENCHMARK.json; with --trace 1 the per-layer metrics, and the span file
@@ -35,13 +35,14 @@ import corpus  # noqa: E402
 # Dump generator version; bump with perfbench.Gen.Version.
 GEN_VERSION = 1
 
-# Operations per run at least: the cold one plus enough warm ones that
-# the median lands past the JIT warm-up of the first warm ops.
-MIN_OPS = {"sync_oneshot": 5, "corpus_ops": 2}
+# Untimed warm-up operations after the cold first one, so that the timed
+# ones run past the JIT warm-up, and the least number of timed ones.
+WARMUP = {"sync_oneshot": 2, "corpus_ops": 0}
+MIN_TIMED = {"sync_oneshot": 4, "corpus_ops": 2}
 
 # Scale factor of the generated inputs per workload.
 SCALES = {
-    "default": {"sync_oneshot": 0.03, "corpus_ops": 0.005},
+    "default": {"sync_oneshot": 0.01, "corpus_ops": 0.01},
     "tiny": {"sync_oneshot": 0.001, "corpus_ops": 0.001},
 }
 DEADLINE_S = 170  # the whole run, build excepted, must end within 180 s
@@ -98,7 +99,8 @@ def metric_specs():
 
 
 def check_recorded(workload, scale, seed, ops, record):
-    """Output hashes must equal those recorded for this seed, if any."""
+    """Output hashes must equal those recorded for this seed, if any, and
+    agree between the operations of the run."""
     path = os.path.join(HERE, "recorded.json")
     rec = {}
     if os.path.exists(path):
@@ -109,10 +111,10 @@ def check_recorded(workload, scale, seed, ops, record):
     for o in ops:
         if o["error"] is not None or not o["hash"]:
             continue
-        if o["key"] in known and known[o["key"]] != o["hash"]:
-            o["error"] = f"output hash of {o['key']} differs from the one recorded for seed {seed}"
-        elif o["key"] not in known:
-            new[o["key"]] = o["hash"]
+        want = known.get(o["key"]) or new.setdefault(o["key"], o["hash"])
+        if o["hash"] != want:
+            where = "recorded for seed" if o["key"] in known else "of the first operation of seed"
+            o["error"] = f"output hash of {o['key']} differs from the one {where} {seed}"
     if record and new:
         rec.setdefault(workload, {}).setdefault(scale, {}).setdefault(str(seed), {}).update(new)
         with open(path, "w") as f:
@@ -151,7 +153,8 @@ def main():
     cmd = java_cmd(classes, tmp, "perfbench.Main", "--workload", a.workload,
                    "--data", data, "--work", work, "--out", res_file,
                    "--seconds", str(a.seconds), "--trace", str(a.trace),
-                   "--cores", str(cores), "--min-ops", str(MIN_OPS[a.workload]))
+                   "--cores", str(cores), "--warmup", str(WARMUP[a.workload]),
+                   "--min-timed", str(MIN_TIMED[a.workload]))
     with open(os.path.join(work, "jvm.log"), "w") as jlog:
         p = subprocess.Popen(cmd, stdout=jlog, stderr=subprocess.STDOUT, cwd=work)
         try:
@@ -192,8 +195,10 @@ def main():
 
     info = res["info"]
     print(f"workload {a.workload}, seed {a.seed}, scale {a.scale}, {cores} cores")
-    print(f"setup samples (s): {info['setup_samples']}")
-    print(f"first (cold) op: {info.get('first_op_s')} s; warm ops: {info['op_samples']}")
+    print(f"first (cold) op: {res['metrics'].get('first_op_s')} s; "
+          f"warm-up ops (s): {info['warmup_op_s']}; timed ops (s): {info['timed_op_samples']}")
+    if "entry_median_s" in info:
+        print(f"per-entry medians over the timed passes (s): {info['entry_median_s']}")
     for n, m in metrics.items():
         print(f"  {n} = {m['value']:.6g} {m['unit']}")
     if a.trace:

@@ -180,15 +180,15 @@ object Layers {
     val (stages, jobs) = attribute(r, rec)
     def stagesOf(p: Span => Boolean) = stages.collect { case (s, Some(c)) if p(c) => s }
     def jobsOf(p: Span => Boolean) = jobs.collect { case (j, Some(c)) if p(c) => j }
-    // per-op figures are over the warm ops: the cold first op differs
+    // per-op figures are over the timed ops: the cold first op differs
     // in JIT and, on corpus_ops, in its sink
-    val timed = (c: Span) => c.opId >= 1
-    val nOps = math.max(1, r.ops.size - 1)
+    val timed = (c: Span) => c.opId >= r.firstTimed
+    val nOps = math.max(1, r.timedOps.size)
     val ts = stagesOf(timed)
     m("spark.jobs") = jobsOf(timed).size.toDouble / nOps
     m("spark.stages") = ts.size.toDouble / nOps
     m("spark.tasks") = ts.map(_.tasks).sum.toDouble / nOps
-    val opWall = r.ops.filter(o => o.i > 0 && !o.seconds.isNaN).map(_.seconds).sum
+    val opWall = r.timedOps.map(_.seconds).sum
     m("spark.busy_frac") = ts.map(_.runMs).sum / 1000.0 / math.max(1e-9, opWall * r.c.cores)
     m("spark.exec_cpu_s") = ts.map(_.cpuNs).sum / 1e9 / nOps
     m("spark.gc_s") = ts.map(_.gcMs).sum / 1000.0 / nOps
@@ -207,7 +207,7 @@ object Layers {
         shuffleMb(c => c.name == "SyncJob.run") - shuffleMb(named("SyncJob.records"))
     // render + sink: from the end of the last diff/summarize stage of a
     // syncAuto call to the call's return; its own stages collect the lines
-    val syncs = calls.filter(c => c.name == "SyncJob.syncAuto" && c.opId != 0)
+    val syncs = calls.filter(c => c.name == "SyncJob.syncAuto" && timed(c))
     val tails = syncs.map { c =>
       val own = stagesOf(_ == c)
       val (render, diff) = own.partition(_.callSite.startsWith("graft.engine.SyncJob.syncAuto"))

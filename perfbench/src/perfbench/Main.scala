@@ -1,5 +1,6 @@
 package perfbench
 
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
@@ -17,7 +18,8 @@ import graft.engine.SyncJob
   * every result, and write the measurements as JSON.
   *
   * Usage: `perfbench.Main --workload <name> --data <inputDir> --work <dir>
-  * --out <result.json> --seconds <s> --trace 0|1 --cores <n> --min-ops <n>`
+  * --out <result.json> --seconds <s> --trace 0|1 --cores <n> --warmup <n>
+  * --min-timed <n>`
   */
 object Main {
 
@@ -25,9 +27,8 @@ object Main {
   val Now = "2000-01-01 00:00:00"
 
   /** The corpus entries of the `corpus_ops` workload. */
-  val CorpusEntries = Seq("q88_median_mad", "q174_vocab_coverage",
-    "q22_dedup_minhash_lsh", "q54_simhash_neardup", "q113_semantic_dedup",
-    "q58_bm25")
+  val CorpusEntries = Seq("q88_median_mad", "q22_dedup_minhash_lsh",
+    "q113_semantic_dedup", "q58_bm25")
 
   def main(args: Array[String]): Unit = {
     val kv = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -43,17 +44,17 @@ object Main {
 }
 
 final case class Conf(workload: String, data: Path, work: Path, out: Path,
-    seconds: Double, trace: Boolean, cores: Int, minOps: Int)
+    seconds: Double, trace: Boolean, cores: Int, warmup: Int, minTimed: Int)
 
 object Conf {
   def apply(kv: Map[String, String]): Conf = Conf(kv("workload"),
     Paths.get(kv("data")).toAbsolutePath, Paths.get(kv("work")).toAbsolutePath,
     Paths.get(kv("out")), kv("seconds").toDouble, kv("trace") == "1",
-    kv("cores").toInt, kv("min-ops").toInt)
+    kv("cores").toInt, kv("warmup").toInt, kv("min-timed").toInt)
 }
 
-/** Per-op record: wall seconds, the output it produced and that
-  * output's hash, plus any failed check.
+/** Per-op record: wall seconds (NaN if it threw), the output it produced
+  * and that output's hash, plus any failed check.
   */
 final case class OpRec(i: Int, seconds: Double, key: String, hash: String,
     error: Option[String])
@@ -63,19 +64,28 @@ final class Run(val c: Conf) {
   val spans = new Spans
   var recorder: Option[Recorder] = None
   var spark: SparkSession = _
-  val setupS = mutable.ArrayBuffer.empty[Double]
   val ops = mutable.ArrayBuffer.empty[OpRec]
   val metrics = mutable.LinkedHashMap.empty[String, Double]
   val info = mutable.LinkedHashMap.empty[String, Any]
-  /** JIT and GC milliseconds at: timed start, after op 0, timed end. */
+  /** JIT and GC milliseconds at: loop start, after op 0, loop end. */
   val jvmMarks = mutable.ArrayBuffer.empty[(Long, Long)]
+
+  /** Index of the first timed op: op 0 runs cold, then `c.warmup`
+    * untimed warm-up ops.
+    */
+  def firstTimed: Int = 1 + c.warmup
+  def timedOps: Seq[OpRec] =
+    ops.toSeq.filter(o => o.i >= firstTimed && !o.seconds.isNaN)
 
   def expected: Seq[Array[String]] =
     Files.readAllLines(c.data.resolve("expected.tsv")).asScala.toSeq
       .filter(_.nonEmpty).map(_.split('\t'))
 
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
+  /** Starts the session like the CLI's `Main`; `setup_s` is the JVM's
+    * uptime when it is ready: one cold start in a fresh process.
+    */
+  def setup(): Unit = {
+    spark = SparkSession.builder()
       .master(s"local[${c.cores}]")
       .appName("perfbench")
       .config("spark.sql.shuffle.partitions", c.cores.toString)
@@ -84,72 +94,48 @@ final class Run(val c: Conf) {
       .config("spark.sql.warehouse.dir", c.work.resolve("warehouse").toString)
       .config("spark.local.dir", c.work.resolve("spark-local").toString)
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel("WARN")
     if (c.trace) {
       val r = new Recorder
-      s.sparkContext.addSparkListener(r)
+      spark.sparkContext.addSparkListener(r)
       recorder = Some(r)
     }
-    s
-  }
-
-  /** Set up five times, each in a fresh session; the last stays. */
-  def setup(prep: Int => Unit): Unit = (0 until 5).foreach { i =>
-    if (spark != null) spark.stop()
-    val t0 = System.nanoTime
-    spark = session()
-    prep(i)
-    setupS += (System.nanoTime - t0) / 1e9
+    metrics("setup_s") = ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
   }
 
   /** Closed loop: run op i (timed), then the check it returns (untimed).
-    * The first op runs cold; warm ops follow until they have spent the
-    * run's seconds and `minOps` ops have run in all.
+    * Op 0 runs cold (`first_op_s`) and `c.warmup` warm-up ops follow;
+    * then timed ops run until they have spent the run's seconds and at
+    * least `c.minTimed` have run. `heap_peak_mb` is the median over the
+    * timed ops of each op's peak live heap; one collection before the
+    * timed ops clears the garbage the cold and warm-up ops left.
     */
   def loop(op: Int => (() => (String, String))): Unit = {
     jvmMarks += ((Jvm.jitMs, Jvm.gcMs))
-    var busy = 0.0
+    var timedS = 0.0
     var i = 0
-    while (i < c.minOps || busy < c.seconds) {
+    while (i < firstTimed + c.minTimed || timedS < c.seconds) {
+      if (i == firstTimed) Jvm.collect()
       var check: () => (String, String) = null
-      excluded = 0L
-      opHeap = 0.0
-      Jvm.startOp()
       val t0 = System.nanoTime
-      val secs = try spans.op(i, c.workload) { check = op(i) } - excluded / 1e9 catch {
+      val secs = try spans.op(i, c.workload) { check = op(i) } catch {
         case NonFatal(e) =>
           ops += OpRec(i, Double.NaN, "", "", Some(s"op threw: $e"))
           Double.NaN
       }
-      if (i > 0) busy += (System.nanoTime - t0) / 1e9
-      heapMark()
-      if (!secs.isNaN) {
-        if (i > 0) heapPeaks += opHeap
+      if (i >= firstTimed) timedS += (System.nanoTime - t0) / 1e9
+      if (!secs.isNaN)
         ops += (try { val (k, h) = check(); OpRec(i, secs, k, h, None) }
           catch { case NonFatal(e) => OpRec(i, secs, "", "", Some(e.getMessage)) })
-      }
       if (i == 0) jvmMarks += ((Jvm.jitMs, Jvm.gcMs))
       i += 1
     }
     jvmMarks += ((Jvm.jitMs, Jvm.gcMs))
-    metrics("heap_peak_mb") = Stats.median(heapPeaks.toSeq)
-  }
-
-  /** Per warm op: peak driver heap left live after a collection. */
-  val heapPeaks = mutable.ArrayBuffer.empty[Double]
-  private var opHeap = 0.0
-  /** Nanoseconds of untimed work inside the current op. */
-  private var excluded = 0L
-
-  /** Closes a heap-peak interval with a full collection, untimed: an op
-    * made of independent parts can start each part from a collected
-    * heap, so old garbage of earlier parts does not count towards it.
-    */
-  def heapMark(): Unit = {
-    val t0 = System.nanoTime
-    opHeap = math.max(opHeap, Jvm.opPeakMb())
-    Jvm.startOp()
-    excluded += System.nanoTime - t0
+    val timed = timedOps.map(_.i).toSet
+    val peaks = Jvm.peaksMb(spans.all.filter(s => s.kind == "op" && timed(s.opId.toInt))
+      .map(s => (s.start, s.end)))
+    info("heap_peak_samples") = peaks
+    if (peaks.nonEmpty) metrics("heap_peak_mb") = Stats.median(peaks)
   }
 
   def fail(cond: Boolean, msg: => String): Unit =
@@ -219,26 +205,23 @@ final class Run(val c: Conf) {
       spark.stop()
       spark = null
     }
-    val timed = ops.filterNot(_.seconds.isNaN)
-    if (setupS.nonEmpty) metrics("setup_s") = Stats.median(setupS.toSeq)
-    val warm = timed.filter(_.i > 0).map(_.seconds).toSeq
-    if (warm.nonEmpty) metrics("op_s") = Stats.median(warm)
-    info("setup_samples") = setupS.toSeq
-    info("heap_peak_samples") = heapPeaks.toSeq
-    info("op_samples") = summary(warm)
-    timed.find(_.i == 0).foreach(o => info("first_op_s") = o.seconds)
+    val timed = timedOps.map(_.seconds)
+    if (timed.nonEmpty && !metrics.contains("op_s")) metrics("op_s") = Stats.median(timed)
+    ops.find(o => o.i == 0 && !o.seconds.isNaN).foreach(o => metrics("first_op_s") = o.seconds)
+    info("timed_op_samples") = summary(timed)
+    info("warmup_op_s") = ops.filter(o => o.i > 0 && o.i < firstTimed).map(_.seconds)
     val doc = Map(
-      "ops" -> ops.map(o => Map("i" -> o.i, "seconds" -> o.seconds,
-        "key" -> o.key, "hash" -> o.hash, "error" -> o.error.orNull)).toSeq,
-      "extra" -> extra.map { case (n, e) => Map("name" -> n, "error" -> e.orNull) }.toSeq,
-      "metrics" -> metrics.toMap,
-      "info" -> info.toMap)
-    Files.write(c.out, Json.render(doc).getBytes(UTF_8))
-    if (c.trace) Files.write(c.work.resolve("spans.json"),
-      Json.render(spans.all.map(s => Map("id" -> s.id, "parent" -> s.parent,
+      "ops" -> ops.map(o => Map("i" -> o.i,
+        "seconds" -> Option(o.seconds).filterNot(_.isNaN), "key" -> o.key,
+        "hash" -> o.hash, "error" -> o.error)),
+      "extra" -> extra.map { case (n, e) => Map("name" -> n, "error" -> e) },
+      "metrics" -> metrics,
+      "info" -> info)
+    Json.write(c.out, doc)
+    if (c.trace) Json.write(c.work.resolve("spans.json"),
+      spans.all.map(s => Map("id" -> s.id, "parent" -> s.parent,
         "op_id" -> s.opId, "kind" -> s.kind, "name" -> s.name,
         "start" -> s.start, "end" -> s.end)) ++ Layers.sparkSpans(this))
-        .getBytes(UTF_8))
   }
 }
 
@@ -257,7 +240,7 @@ final class SyncOneshot(r: Run) {
   private val backup = r.c.data.resolve("backup.sql").toString
 
   def apply(): Unit = {
-    r.setup(_ => ())
+    r.setup()
     r.loop { i =>
       val out = r.c.work.resolve(s"sync_$i.sql")
       val ((_, parts), _) = r.spans.call(r.spark.sparkContext, "SyncJob.syncAuto") {
@@ -283,7 +266,8 @@ final class SyncOneshot(r: Run) {
   * against the DuckDB oracle; every later pass goes through the noop
   * sink and drains deferred releases, as the repo's Bench does, and
   * observes each result's row count and row-hash sum in the same job,
-  * which must equal those of the parquet copy.
+  * which must equal those of the parquet copy. `op_s` is the sum over
+  * the entries of each entry's median over the timed passes.
   */
 final class CorpusOps(r: Run) {
   private val dir = r.c.data.toString
@@ -293,12 +277,11 @@ final class CorpusOps(r: Run) {
     sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))
 
   def apply(): Unit = {
-    r.setup(_ => ())
-    val entryS = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    r.setup()
+    val entryS = mutable.LinkedHashMap.empty[String, Seq[(Int, Double)]]
     val sums = mutable.Map.empty[Int, Map[String, String]]
     r.loop { i =>
-      val got = Main.CorpusEntries.map { e =>
-        if (e != Main.CorpusEntries.head) r.heapMark()
+      sums(i) = Main.CorpusEntries.map { e =>
         val (digest, secs) = r.spans.call(r.spark.sparkContext, e) {
           val df = graft.SparkEntry.queries(e)(r.spark, dir)
           if (i == 0) {
@@ -314,12 +297,14 @@ final class CorpusOps(r: Run) {
             s"${m("n")}:${m("h")}"
           }
         }
-        entryS(e) = entryS.getOrElse(e, Nil) :+ secs
+        entryS(e) = entryS.getOrElse(e, Nil) :+ (i -> secs)
         e -> digest
       }.toMap
-      sums(i) = got
       () => ("pass", "")
     }
+    val timed = r.timedOps.map(_.i).toSet
+    val medians = entryS.map { case (e, xs) => e -> Stats.median(xs.filter(x => timed(x._1)).map(_._2)) }
+    if (medians.values.forall(!_.isNaN)) r.metrics("op_s") = medians.values.sum
     val ref = Main.CorpusEntries.map { e =>
       val back = r.spark.read.parquet(results.resolve(e).toString)
       val row = back.agg(count(lit(1)), checksum(back)).head()
@@ -331,31 +316,17 @@ final class CorpusOps(r: Run) {
       if (o.error.isEmpty && bad.nonEmpty)
         r.ops(j) = o.copy(error = Some(s"pass ${o.i} differs from the checked copy: $bad"))
     }
-    r.info("entry_s") = entryS
-    Files.write(results.resolve("oracle_sql.json"),
-      Json.render(Main.CorpusEntries.map(e => e -> graft.SparkEntry.oracleSql(e)).toMap)
-        .getBytes(UTF_8))
+    r.info("entry_s") = entryS.map { case (e, xs) => e -> xs.map(_._2) }
+    r.info("entry_median_s") = medians
+    Json.write(results.resolve("oracle_sql.json"),
+      Main.CorpusEntries.map(e => e -> graft.SparkEntry.oracleSql(e)).toMap)
   }
 }
 
-/** Minimal JSON writer for the result and span files. */
+/** Writes the result and span files with the Jackson in Spark's jars. */
 object Json {
-  def render(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => render(x)
-    case s: String => "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float => render(f.toDouble)
-    case b: Boolean => b.toString
-    case n: Number => n.toString
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => render(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
-    case x => render(x.toString)
-  }
+  private val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
+
+  def write(p: Path, v: Any): Unit = mapper.writeValue(p.toFile, v)
 }

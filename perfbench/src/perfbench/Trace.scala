@@ -144,14 +144,16 @@ final class Recorder extends SparkListener {
   }
 }
 
-/** Driver-JVM counters: JIT and GC time from the MXBeans, and the peak
-  * heap left live after each collection, read from GC notifications so
-  * it does not depend on when the collector happens to run.
+/** Driver-JVM counters: JIT and GC time from the MXBeans, and the heap
+  * left live after each collection, read from GC notifications so no
+  * collection has to be forced to read it.
   */
 object Jvm {
   private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
     .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
-  @volatile private var peak = 0L
+  private val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime
+  /** (epoch ms at the collection's start, heap bytes live after it). */
+  private val afterGc = mutable.ArrayBuffer.empty[(Long, Long)]
 
   def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
   def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -162,26 +164,29 @@ object Jvm {
       em.addNotificationListener((n: javax.management.Notification, _: AnyRef) => {
         if (n.getType == com.sun.management.GarbageCollectionNotificationInfo
             .GARBAGE_COLLECTION_NOTIFICATION) {
-          val info = com.sun.management.GarbageCollectionNotificationInfo.from(
-            n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData])
-          val live = info.getGcInfo.getMemoryUsageAfterGc.asScala
+          val gc = com.sun.management.GarbageCollectionNotificationInfo.from(
+            n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData]).getGcInfo
+          val live = gc.getMemoryUsageAfterGc.asScala
             .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
-          synchronized { peak = math.max(peak, live) }
+          synchronized { afterGc += ((jvmStart + gc.getStartTime, live)) }
         }
       }, null, null)
     case _ => ()
   }
 
-  def startOp(): Unit = synchronized { peak = 0L }
-
-  /** Peak post-collection heap in MB since [[startOp]], closed by a full
-    * collection: it adds the retained heap as a reading, and the next
-    * interval starts from a collected heap.
+  /** Collects the garbage of earlier ops once, before the timed ops and
+    * never inside or between them.
     */
-  def opPeakMb(): Double = {
-    System.gc()
-    Thread.sleep(100) // notifications are delivered asynchronously
-    val p = synchronized { peak }
-    p / 1048576.0
+  def collect(): Unit = System.gc()
+
+  /** Peak live heap in MB of each interval (epoch ms) that saw a
+    * collection.
+    */
+  def peaksMb(intervals: Seq[(Long, Long)]): Seq[Double] = {
+    Thread.sleep(200) // notifications are delivered asynchronously
+    val xs = synchronized { afterGc.toList }
+    intervals.flatMap { case (a, b) =>
+      xs.collect { case (t, live) if t >= a && t <= b => live / 1048576.0 }.maxOption
+    }
   }
 }
