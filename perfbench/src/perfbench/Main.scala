@@ -27,8 +27,7 @@ object Main {
   val Now = "2000-01-01 00:00:00"
 
   /** The corpus entries of the `corpus_ops` workload. */
-  val CorpusEntries = Seq("q88_median_mad", "q22_dedup_minhash_lsh",
-    "q113_semantic_dedup", "q58_bm25")
+  val CorpusEntries = Seq("q88_median_mad")
 
   def main(args: Array[String]): Unit = {
     val kv = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -81,8 +80,9 @@ final class Run(val c: Conf) {
     Files.readAllLines(c.data.resolve("expected.tsv")).asScala.toSeq
       .filter(_.nonEmpty).map(_.split('\t'))
 
-  /** Starts the session like the CLI's `Main`; `setup_s` is the JVM's
-    * uptime when it is ready: one cold start in a fresh process.
+  /** Starts the session like the CLI's `Main`, but with `c.cores` task
+    * threads (half the machine's cores, see run.py); `setup_s` is the
+    * JVM's uptime when it is ready: one cold start in a fresh process.
     */
   def setup(): Unit = {
     spark = SparkSession.builder()
@@ -107,8 +107,8 @@ final class Run(val c: Conf) {
     * Op 0 runs cold (`first_op_s`) and `c.warmup` warm-up ops follow;
     * then timed ops run until they have spent the run's seconds and at
     * least `c.minTimed` have run. `heap_peak_mb` is the median over the
-    * timed ops of each op's peak live heap; one collection before the
-    * timed ops clears the garbage the cold and warm-up ops left.
+    * timed ops of each op's peak live heap; collecting before the timed
+    * ops clears the garbage the cold and warm-up ops left.
     */
   def loop(op: Int => (() => (String, String))): Unit = {
     jvmMarks += ((Jvm.jitMs, Jvm.gcMs))

@@ -174,10 +174,12 @@ object Jvm {
     case _ => ()
   }
 
-  /** Collects the garbage of earlier ops once, before the timed ops and
-    * never inside or between them.
+  /** Collects the garbage of earlier ops before the timed ops and never
+    * inside or between them: twice, a second apart, since after a single
+    * collection some runs kept ~225 MB more live through every timed op
+    * (perfbench/README.md).
     */
-  def collect(): Unit = System.gc()
+  def collect(): Unit = { System.gc(); Thread.sleep(1000); System.gc() }
 
   /** Peak live heap in MB of each interval (epoch ms) that saw a
     * collection.
