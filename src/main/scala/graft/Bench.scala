@@ -271,15 +271,15 @@ object Bench {
       // per timed run would both accumulate unbounded script copies
       // under /tmp across bench invocations and charge dir creation to
       // the timing
-      // size-routed since round 14 (syncDistributedAuto): a sync this
-      // small collects the ordered lines into one part file — the
-      // 32-task text-sink commit overhead was the entry's measured
-      // small-scale floor — while past-threshold diffs take the
-      // executor-rendered distributed write; bytes identical either way
+      // size-routed (syncDistributed): a sync this small collects the
+      // ordered lines into one part file — the 32-task text-sink commit
+      // overhead was the entry's measured small-scale floor — while
+      // past-threshold diffs take the executor-rendered distributed
+      // write; bytes identical either way
       ("sync_dump_diff_distributed", {
         val out = Paths.get(cacheDir, "sync_distributed_out").toString
         () => {
-          new SyncJob(spark).syncDistributedAuto(
+          new SyncJob(spark).syncDistributed(
             prodPath.toString, backupPath.toString, out, "bench")
           ()
         }

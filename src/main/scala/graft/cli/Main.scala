@@ -15,10 +15,12 @@ import graft.report.SummaryReporter
   *
   * defaulting to prod.sql / backup.sql / database_sync_crud.sql.
   *
-  * `--distributed-out <dir>` routes the script through the distributed
-  * full-script sink (SyncJob.syncDistributed) instead of collecting ops
-  * to the driver — the at-scale path; concatenated sorted part files are
-  * byte-identical to the single-file script.
+  * `--distributed-out <dir>` writes the script as sorted part files
+  * under `<dir>` (SyncJob.syncDistributed), size-routed like the default
+  * path: a diff that fits the driver is collected into one part file, a
+  * larger one goes through the executor-rendered text sink. Either way
+  * the concatenated part files are the single-file script plus a final
+  * newline.
   *
   * `--state <dir>` enables the repeated-sync fast path: both dumps are
   * snapshotted as bucketed tables under `<dir>` (fingerprint-gated, so

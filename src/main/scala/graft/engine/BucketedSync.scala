@@ -27,7 +27,7 @@ private[engine] case class SnapshotCatRow(ord: Long, table: String,
   * shuffle dominates the diff cost.
   *
   * The diff classification is identical to the streaming-parse path
-  * (SyncJob.diffFrameInfo): BucketedSyncSpec asserts op-for-op equality
+  * (SyncJob.prepare): BucketedSyncSpec asserts op-for-op equality
   * with SyncJob.run and an exchange-free physical plan.
   */
 object BucketedSync {

@@ -1,11 +1,19 @@
 package graft.engine
 
+import java.io.{BufferedWriter, InputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.immutable.ListMap
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.IOUtils
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
+import graft.codegen.SyncSqlGenerator
 import graft.model.{InsertRow, Stmt, TableMeta}
 import graft.parse.DumpParser
 import graft.sources.DumpSource
@@ -26,14 +34,9 @@ final case class DiffOp(
     backupVals: Option[Seq[String]],
     rawInsert: Option[String])
 
-/** One rendered statement with its global sort key (distributed sink). */
-final case class RenderedOp(
-    table: String, pk: String, op: String, section: Int, tbl_idx: Int,
-    ordOff: Long, ordRow: Int, stmt: String)
-
-/** One line of the full sync script with its global sort key — the
-  * distributed full-script sink unions banner/comment lines (driver-built,
-  * O(tables)) with rendered statements (executor-built) and range-sorts.
+/** One line of the full sync script with its global sort key — every
+  * script route unions banner/comment lines (driver-built, O(tables))
+  * with rendered statements (executor-built) and range-sorts.
   */
 final case class ScriptLine(
     sec: Int, tbl: Int, off: Long, row: Int, sub: Int, line: String)
@@ -54,9 +57,8 @@ final case class TableStats(
     opBytes: Long = 0L)
 
 /** Driver-side result of a sync comparison. `ops` holds every classified
-  * operation (collected; the script output is ~1000× smaller than the
-  * input dumps — for truly huge diffs use [[SyncJob.opsFrame]] and a
-  * distributed write instead).
+  * operation when [[SyncJob.run]] collected them; the script routes
+  * render executor-side and leave it empty.
   */
 final case class SyncOutcome(
     prodCatalog: ListMap[String, TableMeta],
@@ -89,10 +91,12 @@ final case class SyncOutcome(
   *                            tables at once (single shuffle), null-safe
   *                            value-array comparison
   *   6. codegen             — executor-side statement rendering
+  *   7. sink                — collected script file or sorted text
+  *                            parts, routed by size
   *
   * Scale: both record frames shuffle once on (table, pk); the dedup
   * window and the join reuse the same hash partitioning. No driver state
-  * grows with input size except the final op collect.
+  * grows with input size except a script that fits the driver.
   */
 class SyncJob(spark: SparkSession) {
   import spark.implicits._
@@ -132,19 +136,6 @@ class SyncJob(spark: SparkSession) {
     CatalogInfo(metas, firstCreatePos, ends)
   }
 
-  /** Raw byte slice of a dump file (driver-side; used only to emit the
-    * reference-quirk CREATE sections for missing tables).
-    */
-  private def fileSlice(path: String, start: Long, end: Long): String = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      raf.seek(start)
-      val buf = new Array[Byte]((end - start).toInt)
-      raf.readFully(buf)
-      new String(buf, "UTF-8")
-    } finally raf.close()
-  }
-
   /** Parse + dedup the record frame of one dump:
     * (table, pk, ord_off, ord_row, vals) — one row per surviving
     * record, values from the PK's last statement, order key from its
@@ -177,221 +168,157 @@ class SyncJob(spark: SparkSession) {
         col("vals"))
   }
 
-  /** The classified-op frame WITHOUT collecting: (table, pk, op, ordOff,
-    * ordRow, stmt) with statements rendered executor-side. The at-scale
-    * sink: `opsFrame(...).orderBy("section", "tbl_idx", "ordOff",
-    * "ordRow")` written partitioned (see [[writeScriptDistributed]])
-    * instead of the driver-assembled byte-parity script.
+  /** Reference-parity run: the outcome with every classified op
+    * collected, for [[graft.codegen.SyncSqlGenerator.assemble]] — the
+    * driver-side emitter the specs hold every script route against.
     */
-  def opsFrame(prodPath: String, backupPath: String): DataFrame = {
-    val (joined, prodCat, backupCat, commonTables) = diffFrame(prodPath, backupPath)
-    renderedOps(joined, prodCat, backupCat, commonTables)
+  def run(prodPath: String, backupPath: String): SyncOutcome = {
+    val d = prepare(prodPath, backupPath)
+    try d.outcome.copy(ops = diffOps(d.joined).collect().toSeq)
+    finally d.release()
   }
 
-  /** Executor-side statement rendering of an already-joined diff frame. */
-  private def renderedOps(joined: DataFrame,
-      prodCat: ListMap[String, TableMeta], backupCat: ListMap[String, TableMeta],
-      commonTables: Seq[String]): DataFrame = {
-    val tblIdx = commonTables.zipWithIndex.toMap
-    val bcProd = spark.sparkContext.broadcast(prodCat)
-    val bcBackup = spark.sparkContext.broadcast(backupCat)
-    val bcIdx = spark.sparkContext.broadcast(tblIdx)
-    joined.filter(col("op").isNotNull)
-      .select(col("table"), col("pk"), col("op"),
-        when(col("op") === Differ.OP_DELETE, col("b_ord_off"))
-          .otherwise(col("p_ord_off")).as("ordOff"),
-        when(col("op") === Differ.OP_DELETE, col("b_ord_row"))
-          .otherwise(col("p_ord_row")).as("ordRow"),
-        col("p_vals").as("prodVals"), col("b_vals").as("backupVals"),
-        graft.codegen.SyncSqlGenerator.rawInsertCol(col("table"), col("p_vals"))
-          .as("rawInsert"))
-      .as[DiffOp]
-      .map { op =>
-        val stmt = graft.codegen.SyncSqlGenerator.renderOp(
-          bcProd.value(op.table), bcBackup.value(op.table), op)
-        val section = op.op match {
-          case Differ.OP_DELETE => 3
-          case Differ.OP_UPDATE => 4
-          case _ => 5
-        }
-        RenderedOp(op.table, op.pk, op.op, section, bcIdx.value(op.table),
-          op.ordOff, op.ordRow, stmt)
-      }
-      .toDF()
-  }
-
-  /** Distributed script sink for diffs too large to collect: statements
-    * written as text, range-partitioned by the global sort key so file
-    * NNNNN order concatenates to the reference's section/table/position
-    * order (a manifest-free total order).
-    */
-  def writeScriptDistributed(prodPath: String, backupPath: String,
-      outDir: String): Unit = {
-    val (joined, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    try renderedOps(joined, prodInfo.metas, backupCat, commonTables)
-      .filter(length(col("stmt")) > 0)
-      .orderBy("section", "tbl_idx", "ordOff", "ordRow")
-      .select("stmt")
-      .write.mode("overwrite").text(outDir)
-    finally cleanup()
-  }
-
-  /** Distributed FULL-script sink: emits the complete sync script —
-    * header, DROP/CREATE sections, per-table banners, statements, stats
-    * summary — byte-identical to [[graft.codegen.SyncSqlGenerator.assemble]]
-    * when the sorted part files are concatenated (modulo the text sink's
-    * trailing newline). Statements are rendered executor-side and never
-    * collected; banner/comment lines are O(tables) driver rows unioned in
-    * with the same global sort key. This is the 100 TB path: no driver
-    * state grows with the diff size.
-    */
-  def syncDistributed(prodPath: String, backupPath: String, outDir: String,
-      now: String): SyncOutcome = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      scriptLineFrame(joined, prodInfo.metas, backupCat, commonTables,
-        outcome, now)
-        .write.mode("overwrite").text(outDir)
-      outcome
-    } finally { joined.unpersist(); cleanup() }
-  }
-
-  /** Size-routed sibling of [[syncDistributed]] with the SAME outDir
-    * contract (sorted part files concatenate to the full script):
-    * small diffs — op count at or under `maxCollectedOps` — collect the
-    * ordered lines and write ONE part file through the Hadoop FS,
-    * because a shuffle-partition-wide text sink spends more on task
-    * launch + per-file commit than on the script at that size (the
-    * measured small-tile floor of the distributed entry); large diffs
-    * take [[syncDistributed]]'s executor-rendered write untouched. The
-    * bytes are identical on both routes (DistributedSinkSpec pins
-    * each against assemble), so consumers never care which fired.
-    */
-  def syncDistributedAuto(prodPath: String, backupPath: String,
-      outDir: String, now: String,
-      maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps): SyncOutcome = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val nOps = outcome.stats.valuesIterator
-        .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum
-      val lineFrame = scriptLineFrame(joined, prodInfo.metas, backupCat,
-        commonTables, outcome, now)
-      val estBytes = outcome.stats.valuesIterator.map(_.opBytes).sum
-      if (nOps <= maxCollectedOps &&
-          estBytes <= SyncJob.MaxCollectedBytes) {
-        val lines = lineFrame.as[String].collect()
-        val dirPath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(dirPath, true) // overwrite semantics, like the text sink
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(dirPath, "part-00000"), true)
-        try lines.foreach { l =>
-          out.write(l.getBytes("UTF-8")); out.write('\n')
-        } finally out.close()
-      } else {
-        lineFrame.write.mode("overwrite").text(outDir)
-      }
-      outcome
-    } finally { joined.unpersist(); cleanup() }
-  }
-
-  /** The complete script as one globally-ordered single-column frame —
-    * executor-rendered statements unioned with the O(tables) driver
-    * banner rows under the (sec, tbl, off, row, sub) sort key. Shared by
-    * the distributed text sink and the collected single-file path so the
-    * byte-parity rules (notably: DELETE/UPDATE that render empty are
-    * skipped, exactly as assemble does, while empty INSERT lines are
-    * kept — assemble emits them bare) live in ONE place.
-    */
-  private def scriptLineFrame(joined: DataFrame,
-      prodCat: ListMap[String, TableMeta], backupCat: ListMap[String, TableMeta],
-      commonTables: Seq[String], outcome: SyncOutcome, now: String): DataFrame = {
-    val stmts = renderedOps(joined, prodCat, backupCat, commonTables)
-      .filter(col("op") === Differ.OP_INSERT || length(col("stmt")) > 0)
-      .select(col("section").as("sec"), col("tbl_idx").as("tbl"),
-        col("ordOff").as("off"), col("ordRow").as("row"),
-        lit(0).as("sub"), col("stmt").as("line"))
-    val banners = spark.createDataFrame(driverLines(outcome, now))
-      .select("sec", "tbl", "off", "row", "sub", "line")
-    banners.unionByName(stmts)
-      .orderBy("sec", "tbl", "off", "row", "sub")
-      .select("line")
-  }
-
-  /** Single-file sibling of [[syncDistributed]]: same executor-side
-    * statement rendering and global sort, but the ordered lines are
-    * collected and joined into one script string (byte-identical to
-    * `SyncSqlGenerator.assemble(run(...), now)` — the golden spec pins
-    * it). This is the fast default CLI path: the driver receives only
-    * the final script bytes (~1000× smaller than the input dumps), never
-    * the per-op value arrays, and does no per-op rendering loop.
+  /** The full script as one string, byte-identical to
+    * `SyncSqlGenerator.assemble(run(...), now)` (the golden spec pins
+    * it). Statements are rendered executor-side; the driver receives
+    * only the ordered script lines, never the per-op value arrays.
     */
   def syncCollected(prodPath: String, backupPath: String,
       now: String): (SyncOutcome, String) = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val lines = scriptLineFrame(joined, prodInfo.metas, backupCat,
-        commonTables, outcome, now).as[String].collect()
-      (outcome, lines.mkString("\n"))
-    } finally { joined.unpersist(); cleanup() }
+    val d = prepare(prodPath, backupPath)
+    try (d.outcome, d.lines(now).collect().mkString("\n"))
+    finally d.release()
   }
 
-  /** Size-routed sink: one diff (summarize's per-table stats are
-    * O(tables) and already computed for the report), then the SAME
-    * cached frame feeds either the collected single-file script (small
-    * diffs — the reference-parity shape) or the distributed text sink
-    * at `outPath + ".parts"` (op count above `maxCollectedOps` — the
-    * 100 TB path, where collecting the script would bottleneck the
-    * driver). Returns the outcome and, when distributed, the parts
-    * directory; the script bytes are identical either way
-    * (DistributedSinkSpec pins the concatenated parts against
-    * assemble).
+  /** The default CLI sink. A diff that fits the driver (op count at
+    * most `maxCollectedOps` and estimated script bytes at most
+    * [[SyncJob.MaxCollectedBytes]]) is collected and written as ONE
+    * file at `outPath`, [[syncCollected]]'s bytes; a larger one goes
+    * through the distributed text sink at `outPath + ".parts"`, whose
+    * sorted part files concatenate to the same bytes plus a final '\n'.
+    * Each run replaces its route's output and deletes the other
+    * route's, so a reader of either path never gets an older script.
+    * Returns the outcome and, on the parts route, the parts directory.
     */
   def syncAuto(prodPath: String, backupPath: String, outPath: String,
       now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
       : (SyncOutcome, Option[String]) = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
+    val d = prepare(prodPath, backupPath)
     try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val nOps = outcome.stats.valuesIterator
-        .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum
-      val lineFrame = scriptLineFrame(joined, prodInfo.metas, backupCat,
-        commonTables, outcome, now)
-      val estBytes = outcome.stats.valuesIterator.map(_.opBytes).sum
-      if (nOps <= maxCollectedOps &&
-          estBytes <= SyncJob.MaxCollectedBytes) {
-        val lines = lineFrame.as[String].collect()
-        // Hadoop FS, not java.nio: outPath resolves against the
-        // deployment FS like every other sink in this file (the
-        // distributed route below and syncDistributedAuto already do).
-        // Raw (checksum-free) create — the final script is a
-        // user-facing file, not internal state; no .crc sidecar.
-        val p = new org.apache.hadoop.fs.Path(outPath)
-        val fs = graft.operators.ContentGate.rawFs(
-          p.getFileSystem(spark.sessionState.newHadoopConf()))
-        val out = fs.create(p, true)
-        try out.write(lines.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        (outcome, None)
+      val out = new Path(outPath)
+      val partsDir = outPath + ".parts"
+      val fs = fsOf(out)
+      if (d.fitsDriver(maxCollectedOps)) {
+        val lines = d.lines(now).collect()
+        // raw (checksum-free) create: the script is a user-facing file,
+        // not internal state — no .crc sidecar
+        writeLines(graft.operators.ContentGate.rawFs(fs), out, lines,
+          terminated = false)
+        fs.delete(new Path(partsDir), true)
+        (d.outcome, None)
       } else {
-        val partsDir = outPath + ".parts"
-        lineFrame.write.mode("overwrite").text(partsDir)
-        (outcome, Some(partsDir))
+        d.lines(now).write.mode("overwrite").text(partsDir)
+        fs.delete(out, false)
+        (d.outcome, Some(partsDir))
       }
-    } finally { joined.unpersist(); cleanup() }
+    } finally d.release()
   }
+
+  /** The full script as sorted part files under `outDir` that
+    * concatenate to [[syncCollected]]'s bytes plus a final '\n' — the
+    * CLI `--distributed-out` and watcher sink. Same size rule as
+    * [[syncAuto]]: a diff that fits the driver is collected into ONE
+    * part file, because a shuffle-partition-wide text sink spends more
+    * on task launch and per-file commit than on a script that size; a
+    * larger one takes the executor-rendered text sink, where no driver
+    * state grows with the diff. Either route replaces all of `outDir`.
+    */
+  def syncDistributed(prodPath: String, backupPath: String, outDir: String,
+      now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
+      : SyncOutcome = {
+    val d = prepare(prodPath, backupPath)
+    try {
+      if (d.fitsDriver(maxCollectedOps)) {
+        val lines = d.lines(now).collect()
+        val dir = new Path(outDir)
+        val fs = fsOf(dir)
+        fs.delete(dir, true)
+        writeLines(fs, new Path(dir, "part-00000"), lines, terminated = true)
+      } else {
+        d.lines(now).write.mode("overwrite").text(outDir)
+      }
+      d.outcome
+    } finally d.release()
+  }
+
+  /** One diff of a dump pair, cached and summarized: what every script
+    * route starts from. `release` drops its caches once the route has
+    * consumed the joined frame.
+    */
+  private final class Prepared(val joined: DataFrame,
+      val outcome: SyncOutcome, val release: () => Unit) {
+    def lines(now: String): Dataset[String] = scriptLines(joined, outcome, now)
+
+    /** The one size rule of the routed sinks: collect the script to the
+      * driver when both the op count and the estimated script bytes
+      * fit.
+      */
+    def fitsDriver(maxCollectedOps: Long): Boolean = {
+      val stats = outcome.stats.values
+      stats.map(s => s.missingCount + s.updatedCount + s.deletedCount).sum <=
+        maxCollectedOps &&
+        stats.map(_.opBytes).sum <= SyncJob.MaxCollectedBytes
+    }
+  }
+
+  /** The complete script as one globally-ordered line frame —
+    * executor-rendered statements unioned with the O(tables) driver
+    * banner rows under the (sec, tbl, off, row, sub) sort key. Every
+    * script route renders through here, so the byte-parity rules live
+    * in ONE place: notably, DELETE/UPDATE that render empty are
+    * skipped, exactly as assemble does, while empty INSERT lines are
+    * kept (assemble emits them bare).
+    */
+  private def scriptLines(joined: DataFrame, o: SyncOutcome,
+      now: String): Dataset[String] = {
+    val bcProd = spark.sparkContext.broadcast(o.prodCatalog)
+    val bcBackup = spark.sparkContext.broadcast(o.backupCatalog)
+    val bcIdx = spark.sparkContext.broadcast(o.commonTables.zipWithIndex.toMap)
+    val stmts = diffOps(joined).flatMap { op =>
+      val stmt = SyncSqlGenerator.renderOp(
+        bcProd.value(op.table), bcBackup.value(op.table), op)
+      val sec = op.op match {
+        case Differ.OP_DELETE => 3
+        case Differ.OP_UPDATE => 4
+        case _ => 5
+      }
+      if (stmt.isEmpty && op.op != Differ.OP_INSERT) None
+      else Some(ScriptLine(sec, bcIdx.value(op.table), op.ordOff, op.ordRow, 0, stmt))
+    }
+    spark.createDataset(driverLines(o, now)).union(stmts)
+      .orderBy("sec", "tbl", "off", "row", "sub")
+      .select("line").as[String]
+  }
+
+  /** Writes collected script lines to `path` without joining them into
+    * one string: '\n'-separated, plus a final '\n' when `terminated`
+    * (the text sink's part-file layout).
+    */
+  private def writeLines(fs: FileSystem, path: Path, lines: Array[String],
+      terminated: Boolean): Unit = {
+    val w = new BufferedWriter(
+      new OutputStreamWriter(fs.create(path, true), UTF_8), 1 << 16)
+    try {
+      lines.iterator.zipWithIndex.foreach { case (l, i) =>
+        if (i > 0) w.write('\n')
+        w.write(l)
+      }
+      if (terminated && lines.nonEmpty) w.write('\n')
+    } finally w.close()
+  }
+
+  private def fsOf(p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The non-statement lines of the full script (header, section banners,
     * per-table comments, stats tail) with their global sort keys —
@@ -505,64 +432,117 @@ class SyncJob(spark: SparkSession) {
     out.result()
   }
 
-  /** Shared diff pipeline: cached full-outer joined frame + catalogs. */
-  private def diffFrame(prodPath: String, backupPath: String)
-      : (DataFrame, ListMap[String, TableMeta], ListMap[String, TableMeta], Seq[String]) = {
-    val (j, pInfo, bCat, common, _) = diffFrameInfo(prodPath, backupPath,
-      persistStmts = false)
-    (j, pInfo.metas, bCat, common)
+  /** The shared diff pipeline (steps 1-5 above) and its summary. Each
+    * dump's statement scan is cached MEMORY_AND_DISK so the catalog pass
+    * and the record pass share one text scan per dump; the joined frame
+    * is cached because the stats aggregate and the script both read it.
+    * Everything cached is released on failure, or by the caller through
+    * [[Prepared.release]].
+    */
+  private def prepare(prodPath: String, backupPath: String): Prepared = {
+    val prodStmts = DumpSource.statements(spark, prodPath)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val backupStmts = DumpSource.statements(spark, backupPath)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val cached = scala.collection.mutable.ArrayBuffer[Dataset[_]](
+      prodStmts, backupStmts)
+    val release = () => cached.foreach(_.unpersist())
+    try {
+      // the two catalog passes are independent driver-blocking collects —
+      // run them as concurrent Spark jobs so both dumps' statement scans
+      // (and their caches) fill the executor in parallel
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val prodInfoF = Future(catalogInfo(prodStmts))
+      val backupCatF = Future(catalog(backupStmts))
+      val prodInfo = Await.result(prodInfoF, Duration.Inf)
+      val prodCat = prodInfo.metas
+      val backupCat = Await.result(backupCatF, Duration.Inf)
+
+      val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
+      val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
+      val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
+
+      val prod = records(prodStmts, prodCat)
+        .filter(col("table").isInCollection(commonTables))
+        .select(col("table"), col("pk"), lit(true).as("p_present"),
+          col("ord_off").as("p_ord_off"), col("ord_row").as("p_ord_row"),
+          col("vals").as("p_vals"))
+      val backup = records(backupStmts, backupCat)
+        .filter(col("table").isInCollection(commonTables))
+        .select(col("table"), col("pk"), lit(true).as("b_present"),
+          col("ord_off").as("b_ord_off"), col("ord_row").as("b_ord_row"),
+          col("vals").as("b_vals"))
+
+      val joined = prod.join(backup, Seq("table", "pk"), "full_outer")
+        .withColumn("op",
+          when(col("b_present").isNull, Differ.OP_INSERT)
+            .when(col("p_present").isNull, Differ.OP_DELETE)
+            .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+        .cache()
+      // released before the scans it is built on: uncaching a frame
+      // re-plans the still-cached frames that depend on it
+      cached.prepend(joined)
+
+      val sections = createSections(prodPath, missingTables,
+        prodInfo.firstCreatePos, prodInfo.stmtEnd)
+      val stats = joined.groupBy("table").agg(
+        count(col("p_present")).as("productionCount"),
+        count(col("b_present")).as("backupCount"),
+        count(when(col("op") === Differ.OP_INSERT, 1)).as("missingCount"),
+        count(when(col("op") === Differ.OP_UPDATE, 1)).as("updatedCount"),
+        count(when(col("op") === Differ.OP_DELETE, 1)).as("deletedCount"),
+        coalesce(sum(opBytesCol(prodCat, backupCat)), lit(0L)).as("opBytes"))
+        .as[TableStats].collect()
+        .map(s => s.table -> s).toMap
+      new Prepared(joined, SyncOutcome(prodCat, backupCat, missingTables,
+        extraTables, commonTables, stats, Nil, sections), release)
+    } catch { case e: Throwable => release(); throw e }
   }
 
-  /** With `persistStmts` each dump's statement scan is cached
-    * MEMORY_AND_DISK so the catalog pass and the record pass share one
-    * text scan per dump instead of two; the returned thunk unpersists
-    * them — call it once the joined frame has been fully consumed.
+  /** The classified rows of a joined diff frame as [[DiffOp]]s: order
+    * key from the backup for DELETE, from production otherwise.
     */
-  private def diffFrameInfo(prodPath: String, backupPath: String,
-      persistStmts: Boolean = true)
-      : (DataFrame, CatalogInfo, ListMap[String, TableMeta], Seq[String], () => Unit) = {
-    def stmtsOf(path: String) = {
-      val s = DumpSource.statements(spark, path)
-      if (persistStmts)
-        s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else s
+  private def diffOps(joined: DataFrame): Dataset[DiffOp] =
+    joined.filter(col("op").isNotNull)
+      .select(col("table"), col("pk"), col("op"),
+        when(col("op") === Differ.OP_DELETE, col("b_ord_off"))
+          .otherwise(col("p_ord_off")).as("ordOff"),
+        when(col("op") === Differ.OP_DELETE, col("b_ord_row"))
+          .otherwise(col("p_ord_row")).as("ordRow"),
+        col("p_vals").as("prodVals"), col("b_vals").as("backupVals"),
+        SyncSqlGenerator.rawInsertCol(col("table"), col("p_vals"))
+          .as("rawInsert"))
+      .as[DiffOp]
+
+  /** The reference-quirk CREATE text of each missing table (see
+    * [[SyncOutcome.createSections]]): the production dump's bytes from
+    * its first CREATE TABLE through the table's own statement end. The
+    * offsets count decompressed bytes, so the dump is read through its
+    * path's Hadoop FS and compression codec, once for all tables.
+    */
+  private def createSections(prodPath: String, missingTables: Seq[String],
+      firstCreatePos: Option[Long], stmtEnd: Map[String, Long])
+      : Map[String, String] = {
+    val ends = missingTables.flatMap(t => stmtEnd.get(t).map(t -> _))
+    firstCreatePos.filter(_ => ends.nonEmpty).fold(Map.empty[String, String]) {
+      start =>
+        val path = new Path(prodPath)
+        val conf = spark.sessionState.newHadoopConf()
+        val raw = path.getFileSystem(conf).open(path)
+        val in = Option(new CompressionCodecFactory(conf).getCodec(path))
+          .fold[InputStream](raw)(_.createInputStream(raw))
+        val buf = try {
+          IOUtils.skipFully(in, start)
+          val b = new Array[Byte]((ends.map(_._2).max - start).toInt)
+          IOUtils.readFully(in, b, 0, b.length)
+          b
+        } finally in.close()
+        ends.map { case (t, end) =>
+          t -> new String(buf, 0, (end - start).toInt, UTF_8)
+        }.toMap
     }
-    val prodStmts = stmtsOf(prodPath)
-    val backupStmts = stmtsOf(backupPath)
-    val cleanup = () => if (persistStmts) {
-      prodStmts.unpersist(); backupStmts.unpersist(); ()
-    }
-    // the two catalog passes are independent driver-blocking collects —
-    // run them as concurrent Spark jobs so both dumps' statement scans
-    // (and their caches) fill the executor in parallel
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val prodInfoF = Future(catalogInfo(prodStmts))
-    val backupCatF = Future(catalog(backupStmts))
-    val prodInfo = Await.result(prodInfoF, Duration.Inf)
-    val prodCat = prodInfo.metas
-    val backupCat = Await.result(backupCatF, Duration.Inf)
-
-    val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
-
-    val prod = records(prodStmts, prodCat)
-      .filter(col("table").isInCollection(commonTables))
-      .select(col("table"), col("pk"), lit(true).as("p_present"),
-        col("ord_off").as("p_ord_off"), col("ord_row").as("p_ord_row"),
-        col("vals").as("p_vals"))
-    val backup = records(backupStmts, backupCat)
-      .filter(col("table").isInCollection(commonTables))
-      .select(col("table"), col("pk"), lit(true).as("b_present"),
-        col("ord_off").as("b_ord_off"), col("ord_row").as("b_ord_row"),
-        col("vals").as("b_vals"))
-
-    val joined = prod.join(backup, Seq("table", "pk"), "full_outer")
-      .withColumn("op",
-        when(col("b_present").isNull, Differ.OP_INSERT)
-          .when(col("p_present").isNull, Differ.OP_DELETE)
-          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
-    (joined, prodInfo, backupCat, commonTables, cleanup)
   }
 
   /** Estimated rendered-script bytes of one diff row — value text plus
@@ -591,7 +571,6 @@ class SyncJob(spark: SparkSession) {
   private[graft] def opBytesCol(prodCat: scala.collection.Map[String, TableMeta],
       backupCat: scala.collection.Map[String, TableMeta])
       : org.apache.spark.sql.Column = {
-    import graft.codegen.SyncSqlGenerator
     def emptyVals(m: TableMeta) = IndexedSeq.fill(m.columns.length)("")
     val updOh: Map[String, Long] = prodCat.iterator.map { case (t, m) =>
       t -> (SyncSqlGenerator.updateStatement(m, emptyVals(m), emptyVals(m))
@@ -617,59 +596,6 @@ class SyncJob(spark: SparkSession) {
       .otherwise(lit(0L))
   }
 
-  /** Everything in a SyncOutcome except the collected ops: table-set
-    * diffs, reference-quirk CREATE sections, and the per-table stats
-    * aggregation over the (cached) joined frame.
-    */
-  private def summarize(joined: DataFrame, prodInfo: CatalogInfo,
-      backupCat: ListMap[String, TableMeta], commonTables: Seq[String],
-      prodPath: String): SyncOutcome = {
-    val prodCat = prodInfo.metas
-    val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
-    val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
-    // reference-quirk CREATE sections (whole-file regex capture)
-    val createSections = (prodInfo.firstCreatePos match {
-      case Some(start) => missingTables.flatMap { t =>
-        prodInfo.stmtEnd.get(t).map(end => t -> fileSlice(prodPath, start, end))
-      }
-      case None => Nil
-    }).toMap
-    val stats = joined.groupBy("table").agg(
-      count(col("p_present")).as("productionCount"),
-      count(col("b_present")).as("backupCount"),
-      count(when(col("op") === Differ.OP_INSERT, 1)).as("missingCount"),
-      count(when(col("op") === Differ.OP_UPDATE, 1)).as("updatedCount"),
-      count(when(col("op") === Differ.OP_DELETE, 1)).as("deletedCount"),
-      coalesce(sum(opBytesCol(prodCat, backupCat)), lit(0L)).as("opBytes"))
-      .as[TableStats].collect()
-      .map(s => s.table -> s).toMap
-    SyncOutcome(prodCat, backupCat, missingTables, extraTables,
-      commonTables, stats, Nil, createSections)
-  }
-
-  def run(prodPath: String, backupPath: String): SyncOutcome = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-
-      val ops = joined.filter(col("op").isNotNull)
-        .select(col("table"), col("pk"), col("op"),
-          when(col("op") === Differ.OP_DELETE, col("b_ord_off"))
-            .otherwise(col("p_ord_off")).as("ordOff"),
-          when(col("op") === Differ.OP_DELETE, col("b_ord_row"))
-            .otherwise(col("p_ord_row")).as("ordRow"),
-          col("p_vals").as("prodVals"), col("b_vals").as("backupVals"),
-          graft.codegen.SyncSqlGenerator.rawInsertCol(col("table"), col("p_vals"))
-            .as("rawInsert"))
-        .as[DiffOp].collect().toSeq
-
-      outcome.copy(ops = ops)
-    } finally { joined.unpersist(); cleanup() }
-  }
-
   /** Full sync script straight from two [[BucketedSync]] snapshots —
     * the repeated-sync fast path behind the CLI `--state` flag. Byte-
     * identical to [[syncCollected]] on the same dump pair (the golden
@@ -690,15 +616,10 @@ class SyncJob(spark: SparkSession) {
     val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
     val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
     val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
-    val createSections = (prodSnap.firstCreatePos match {
-      case Some(start) => missingTables.flatMap { t =>
-        prodSnap.stmtEnd.get(t).map(end => t -> fileSlice(prodPath, start, end))
-      }
-      case None => Nil
-    }).toMap
-    val (joined0, _, _) =
-      BucketedSync.diffChangedInfo(spark, prodTable, backupTable)
-    val joined = joined0.cache()
+    val sections = createSections(prodPath, missingTables,
+      prodSnap.firstCreatePos, prodSnap.stmtEnd)
+    val joined =
+      BucketedSync.diffChangedInfo(spark, prodTable, backupTable)._1.cache()
     try {
       // op-type counts exist only for changed tables (the joined frame
       // is diff rows of changed tables); totals come from the sidecars
@@ -715,23 +636,22 @@ class SyncJob(spark: SparkSession) {
           backupSnap.counts.getOrElse(t, 0L), mi, up, de)
       }.toMap
       val outcome = SyncOutcome(prodCat, backupCat, missingTables,
-        extraTables, commonTables, stats, Nil, createSections)
-      val lines = scriptLineFrame(joined, prodCat, backupCat,
-        commonTables, outcome, now).as[String].collect()
-      (outcome, lines.mkString("\n"))
+        extraTables, commonTables, stats, Nil, sections)
+      (outcome, scriptLines(joined, outcome, now).collect().mkString("\n"))
     } finally { joined.unpersist(); () }
   }
 }
 
 object SyncJob {
-  /** Collected-script routing threshold for [[SyncJob.syncAuto]]: above
-    * this many classified ops the script goes through the distributed
-    * text sink instead of a driver collect. 1M ops of TYPICAL width ≈
+  /** Collected-script routing threshold for [[SyncJob.syncAuto]] and
+    * [[SyncJob.syncDistributed]]: above this many classified ops the
+    * script goes through the distributed text sink instead of a driver
+    * collect. 1M ops of TYPICAL width ≈
     * tens of MB of script bytes — comfortably a driver string, while
     * anything larger is the at-scale regime where the single-file
     * contract stops being the point. The op count alone is NOT a safe
     * driver-heap bound (a million wide rows renders to GBs), so the
-    * auto routes also gate on [[MaxCollectedBytes]] via an estimated
+    * routed sinks also gate on [[MaxCollectedBytes]] via an estimated
     * rendered size; callers raising maxCollectedOps are raising op
     * COUNT only — the byte ceiling still applies.
     */
@@ -739,10 +659,10 @@ object SyncJob {
 
   /** Hard byte ceiling for the collected routes: estimated rendered
     * script size above this always takes the distributed sink,
-    * whatever the op count. 256 MB collected lines (plus the one
-    * mkString copy on the single-file route) sits safely inside a
-    * modest driver heap; the estimate is value-text length + 64 B/op
-    * syntax overhead.
+    * whatever the op count. 256 MB of collected lines, written out
+    * without being joined into one string, sits safely inside a modest
+    * driver heap; the estimate is value text plus each (table, op)'s
+    * rendered syntax skeleton ([[SyncJob.opBytesCol]]).
     */
   val MaxCollectedBytes: Long = 256L << 20
 

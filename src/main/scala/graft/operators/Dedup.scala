@@ -137,8 +137,8 @@ object Dedup {
   /** [[jaccardPairs]] plus a cleanup thunk that unpersists the internal
     * shingle cache — call it after the consuming action. The thunk-less
     * overload leaves the cache to the session (fine for one-shot jobs;
-    * long-running hosts should use this one, cf. SyncJob's diffFrameInfo
-    * cleanup).
+    * long-running hosts should use this one, cf. SyncJob's prepared-diff
+    * release).
     */
   def jaccardPairsManaged(sh: DataFrame, threshold: Double, digits: Int = 4,
       maxDocFreq: Option[Long] = None, persist: Boolean = true)

@@ -66,42 +66,6 @@ object Prof {
         val recs = job.records(stmts, cat)
         time("records mat (noop)")(mat(recs))
         time("rediff")(mat(BucketedSync.diff(spark, "prof_bk_prod", "prof_bk_backup")))
-      case "sync" =>
-        val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-        val cacheDir = s"/tmp/graft_bench_dumps_${sfName}_v${DumpGen.FormatVersion}"
-        val prodPath = java.nio.file.Paths.get(cacheDir, "prod.sql").toString
-        val backupPath = java.nio.file.Paths.get(cacheDir, "backup.sql").toString
-        val job = new SyncJob(spark)
-        val stmts = DumpSource.statements(spark, prodPath)
-        println("PROF stmt partitions = " + stmts.rdd.getNumPartitions)
-        time("stmts count")(stmts.count())
-        val cat = time("catalog")(job.catalog(stmts))
-        time("records mat")(mat(job.records(stmts, cat)))
-        time("records mat again")(mat(job.records(stmts, cat)))
-        time("syncCollected 1") {
-          job.syncCollected(prodPath, backupPath, "prof")
-        }
-        time("syncCollected 2") {
-          job.syncCollected(prodPath, backupPath, "prof")
-        }
-      case "ops" =>
-        // op count + measured cost of each syncDistributedAuto route,
-        // to place the routing threshold at the real crossover
-        val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-        val cacheDir = s"/tmp/graft_bench_dumps_${sfName}_v${DumpGen.FormatVersion}"
-        val prodPath = java.nio.file.Paths.get(cacheDir, "prod.sql").toString
-        val backupPath = java.nio.file.Paths.get(cacheDir, "backup.sql").toString
-        val job = new SyncJob(spark)
-        val (oc, _) = job.syncCollected(prodPath, backupPath, "prof")
-        println("PROF nOps = " + oc.stats.valuesIterator
-          .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum)
-        val out = java.nio.file.Files.createTempDirectory("prof-route").toString
-        (1 to 2).foreach { i =>
-          time(s"collected route $i")(job.syncDistributedAuto(
-            prodPath, backupPath, out, "prof", maxCollectedOps = Long.MaxValue))
-          time(s"distributed route $i")(job.syncDistributedAuto(
-            prodPath, backupPath, out, "prof", maxCollectedOps = 0L))
-        }
       case "q54ab" =>
         import org.apache.spark.sql.functions._
         def corpus(base: org.apache.spark.sql.DataFrame) = {

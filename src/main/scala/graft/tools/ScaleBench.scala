@@ -119,7 +119,7 @@ object ScaleBench {
       // part file, past-threshold diffs take the distributed text sink)
       entry("sync_dump_diff_distributed", dir => {
         val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncDistributedAuto(p, b, outs(dir), "scale")
+        new SyncJob(spark).syncDistributed(p, b, outs(dir), "scale")
         ()
       })
       // the forced 100 TB sink (maxCollectedOps=0): keeps the pure
@@ -127,7 +127,7 @@ object ScaleBench {
       // when the routed entry's tiles both fit the collected route
       entry("sync_dump_diff_distributed_pure", dir => {
         val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncDistributedAuto(p, b, outs(dir), "scale",
+        new SyncJob(spark).syncDistributed(p, b, outs(dir), "scale",
           maxCollectedOps = 0L)
         ()
       })

@@ -7,36 +7,9 @@ import graft.codegen.SyncSqlGenerator
 import graft.engine.SyncJob
 
 /** The distributed script sink must emit exactly the driver-assembled
-  * script's statements, in the same total order.
+  * script, in the same total order, on either size route.
   */
 class DistributedSinkSpec extends SparkSuite {
-
-  test("writeScriptDistributed matches the collected script's statement order") {
-    def res(name: String): String = {
-      val in = getClass.getResourceAsStream(s"/refdumps/$name")
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val prod = Files.createTempFile("rt-prod", ".sql")
-    Files.write(prod, res("prod_sf0.001.sql").getBytes("UTF-8"))
-    val backup = Files.createTempFile("rt-backup", ".sql")
-    Files.write(backup, res("backup_sf0.001.sql").getBytes("UTF-8"))
-
-    val job = new SyncJob(spark)
-    val outcome = job.run(prod.toString, backup.toString)
-    val collected = SyncSqlGenerator.assemble(outcome, "T")
-      .split("\n").toSeq.filter(l => l.startsWith("INSERT INTO")
-        || l.startsWith("UPDATE ") || l.startsWith("DELETE FROM")) // record ops
-
-    val outDir = Files.createTempDirectory("graft-dist").toString
-    job.writeScriptDistributed(prod.toString, backup.toString, outDir)
-    val parts = Files.list(Paths.get(outDir)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
-    val distributed = parts.flatMap(p =>
-      new String(Files.readAllBytes(p), "UTF-8").split("\n").filter(_.nonEmpty))
-
-    assert(distributed == collected,
-      s"distributed=${distributed.size} collected=${collected.size}")
-  }
 
   test("syncDistributed full-script parts concatenate byte-identically to assemble") {
     def res(name: String): String = {
@@ -62,7 +35,7 @@ class DistributedSinkSpec extends SparkSuite {
       s"distributed=${concatenated.length}B collected=${collected.length + 1}B")
   }
 
-  test("syncDistributedAuto routes by size; both routes byte-match assemble") {
+  test("syncDistributed routes by size; both routes byte-match assemble") {
     def res(name: String): String = {
       val in = getClass.getResourceAsStream(s"/refdumps/$name")
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -83,18 +56,18 @@ class DistributedSinkSpec extends SparkSuite {
     }
     // small route: ops fit the threshold → ONE collected part file
     val outSmall = Files.createTempDirectory("graft-auto-small").toString
-    job.syncDistributedAuto(prod.toString, backup.toString, outSmall, "T")
+    job.syncDistributed(prod.toString, backup.toString, outSmall, "T")
     val (nSmall, bytesSmall) = concatenated(outSmall)
     assert(nSmall == 1, s"small route wrote $nSmall part files")
     assert(bytesSmall == expected)
     // forced distributed route (threshold 0): same bytes, multi-part ok
     val outBig = Files.createTempDirectory("graft-auto-big").toString
-    job.syncDistributedAuto(prod.toString, backup.toString, outBig, "T",
+    job.syncDistributed(prod.toString, backup.toString, outBig, "T",
       maxCollectedOps = 0L)
     assert(concatenated(outBig)._2 == expected)
     // routed overwrite: running the big route into the small route's dir
     // must leave exactly the text sink's layout (stale part-00000 gone)
-    job.syncDistributedAuto(prod.toString, backup.toString, outSmall, "T",
+    job.syncDistributed(prod.toString, backup.toString, outSmall, "T",
       maxCollectedOps = 0L)
     assert(concatenated(outSmall)._2 == expected)
   }

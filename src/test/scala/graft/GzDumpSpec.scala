@@ -50,6 +50,31 @@ class GzDumpSpec extends SparkSuite {
       plain.contains("INSERT"))
   }
 
+  // a table missing from the backup gets its CREATE section sliced from
+  // the production dump at offsets counted in decompressed bytes
+  private def missingTablePair(): (String, String) = (
+    tmpFile(ddl +
+      "INSERT INTO `t` (`id`, `s`) VALUES\n(1, 'a'),\n(2, 'b');\n" +
+      "CREATE TABLE `u` (\n  `id` INT(11),\n  PRIMARY KEY (`id`)\n" +
+      ") ENGINE=InnoDB;\nINSERT INTO `u` (`id`) VALUES\n(7);\n"),
+    tmpFile(ddl +
+      "INSERT INTO `t` (`id`, `s`) VALUES\n(1, 'a'),\n(2, 'x');\n"))
+
+  test("gzipped pair with a table missing from the backup: plain script") {
+    val (prod, backup) = missingTablePair()
+    val job = new SyncJob(spark)
+    val (_, plain) = job.syncCollected(prod, backup, "T")
+    assert(plain.contains("-- Creating missing table: u"))
+    assert(job.syncCollected(gzip(prod), gzip(backup), "T")._2 == plain)
+  }
+
+  test("file: URI pair with a table missing from the backup: plain script") {
+    val (prod, backup) = missingTablePair()
+    val job = new SyncJob(spark)
+    val (_, plain) = job.syncCollected(prod, backup, "T")
+    assert(job.syncCollected("file:" + prod, "file:" + backup, "T")._2 == plain)
+  }
+
   test("gz statement scan: same statements, unique increasing offsets") {
     val f = tmpFile(ddl + "INSERT INTO `t` (`id`, `s`) VALUES\n(1, 'a');\n")
     val plain = graft.sources.DumpSource.statements(spark, f).collect()

@@ -220,11 +220,23 @@ class SyncJobSpec extends SparkSuite {
       outBig.toString, now, maxCollectedOps = 0L)
     assert(parts2.contains(outBig.toString + ".parts"))
     assert(!Files.exists(outBig))
-    val partFiles = new java.io.File(parts2.get).listFiles()
+    def concatenated(dir: String): String = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val joined = partFiles.map(f =>
-      new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
-    assert(joined == expected + "\n")
+      .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
+    assert(concatenated(parts2.get) == expected + "\n")
+
+    // one output path across routes: each run leaves only its own
+    // route's output, so no reader of either path gets an older script
+    val outSame = outDir.resolve("same.sql")
+    val partsSame = outSame.toString + ".parts"
+    job.syncAuto(prod.toString, backup.toString, outSame.toString, now)
+    job.syncAuto(prod.toString, backup.toString, outSame.toString, now,
+      maxCollectedOps = 0L)
+    assert(!Files.exists(outSame))
+    assert(concatenated(partsSame) == expected + "\n")
+    job.syncAuto(prod.toString, backup.toString, outSame.toString, now)
+    assert(!Files.exists(java.nio.file.Paths.get(partsSame)))
+    assert(new String(Files.readAllBytes(outSame), "UTF-8") == expected)
   }
 
   test("opBytesCol = value text + per-(table, op) catalog-derived skeleton") {
