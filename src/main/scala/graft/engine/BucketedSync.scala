@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Colocate
@@ -26,9 +26,10 @@ private[engine] case class SnapshotCatRow(ord: Long, table: String,
   * snapshot, N×M dump-pair comparisons) at 100 TB, where the record
   * shuffle dominates the diff cost.
   *
-  * The diff classification is identical to the streaming-parse path
-  * (SyncJob.prepare): BucketedSyncSpec asserts op-for-op equality
-  * with SyncJob.run and an exchange-free physical plan.
+  * The diff classification is [[SyncJob.recordDiff]], the one record
+  * classifier the dump pipeline and the dump watcher also call:
+  * BucketedSyncSpec asserts op-for-op equality with SyncJob.run and an
+  * exchange-free physical plan.
   */
 object BucketedSync {
 
@@ -173,45 +174,18 @@ object BucketedSync {
   }
 
   /** The sidecar catalog restored to the shape SyncJob renders from:
-    * DDL-ordered TableMeta map + the CREATE-section offsets.
+    * DDL-ordered TableMeta map, record counts and CREATE-section offsets.
     */
   private[engine] def catalogInfoOf(spark: SparkSession,
-      tableName: String): SyncJob.SnapshotCatalog = {
-    val rows = spark.read.parquet(catPath(spark, tableName))
-      .orderBy("ord").collect()
-    val metas = scala.collection.immutable.ListMap(rows.map { r =>
-      r.getAs[String]("table") -> graft.model.TableMeta(
-        r.getAs[String]("table"),
-        r.getAs[Seq[String]]("columns").toIndexedSeq,
-        r.getAs[Seq[String]]("pkCols").toIndexedSeq,
-        r.getAs[String]("createStmt"),
-        r.getAs[Seq[String]]("colTypes").toIndexedSeq)
-    }: _*)
+      tableName: String): SyncJob.CatalogInfo = {
+    val (metas, rows) = SyncJob.readCatalog(spark, catPath(spark, tableName))
     val counts = rows.map(r =>
       r.getAs[String]("table") -> r.getAs[Long]("nRecords")).toMap
     val stmtEnd = rows.flatMap(r => Option(r.get(r.fieldIndex("stmtEnd")))
       .map(e => r.getAs[String]("table") -> e.asInstanceOf[Long])).toMap
     val firstCreate = rows.headOption.flatMap(r =>
       Option(r.get(r.fieldIndex("firstCreatePos"))).map(_.asInstanceOf[Long]))
-    SyncJob.SnapshotCatalog(metas, counts, firstCreate, stmtEnd)
-  }
-
-  /** [[diffChanged]]'s joined frame plus the changed / common table
-    * lists — what [[SyncJob.syncFromBucketed]] needs to assemble a full
-    * script (stats for unchanged common tables come from the sidecar
-    * counts, never their data).
-    */
-  private[engine] def diffChangedInfo(spark: SparkSession, prodTable: String,
-      backupTable: String): (DataFrame, Seq[String], Seq[String]) = {
-    import spark.implicits._
-    val common = commonTables(spark, prodTable, backupTable)
-    def recs(t: String): DataFrame = spark.table(t)
-      .filter(col("table").isInCollection(common))
-    def rowCol = concat_ws("", col("pk"), col("vals"))
-    val changed = graft.operators.AntiEntropy
-      .changedBuckets(recs(prodTable), recs(backupTable), col("table"), rowCol)
-      .select("bucket").as[String].collect().toSeq
-    (diffOn(spark, prodTable, backupTable, changed), changed, common)
+    SyncJob.CatalogInfo(metas, firstCreate, stmtEnd, Some(counts))
   }
 
   /** Digest-bucket partition key: a deterministic function of
@@ -233,8 +207,8 @@ object BucketedSync {
     wh.stripSuffix("/") + "/" + tableName.toLowerCase + "_cat"
   }
 
-  /** Diff two bucketed snapshots: the sync core's full-outer join +
-    * 3-way classification over the tables present in BOTH snapshots
+  /** Diff two bucketed snapshots: the sync core's record classifier
+    * ([[SyncJob.recordDiff]]) over the tables present in BOTH snapshots
     * (matching SyncJob's commonTables rule — tables in only one dump are
     * CREATE/DROP DDL, never row ops), planned without any Exchange
     * (bucket files ARE the (table, pk) partitioning on both sides; the
@@ -256,19 +230,10 @@ object BucketedSync {
     * rediff cost becomes O(changed tables), not O(snapshot).
     */
   def diffChanged(spark: SparkSession, prodTable: String,
-      backupTable: String): DataFrame = {
-    import spark.implicits._
-    val common = commonTables(spark, prodTable, backupTable)
-    def recs(t: String): DataFrame = spark.table(t)
-      .filter(col("table").isInCollection(common))
-    // row serialization for the digest: pk + vals under a separator that
-    // cannot appear in parsed literals (vals are raw SQL tokens)
-    def rowCol = concat_ws("", col("pk"), col("vals"))
-    val changed = graft.operators.AntiEntropy
-      .changedBuckets(recs(prodTable), recs(backupTable), col("table"), rowCol)
-      .select("bucket").as[String].collect().toSeq
-    diffOn(spark, prodTable, backupTable, changed)
-  }
+      backupTable: String): DataFrame =
+    diffOn(spark, prodTable, backupTable,
+      changedKeys(spark, prodTable, backupTable, col("table"))._2
+        .map(_.toString))
 
   /** [[diffChanged]] at DIGEST-BUCKET granularity for snapshots written
     * with `dbuckets > 0`: the anti-entropy summaries are keyed on the
@@ -285,20 +250,35 @@ object BucketedSync {
     */
   def diffChangedBuckets(spark: SparkSession, prodTable: String,
       backupTable: String): DataFrame = {
-    import spark.implicits._
+    val (common, changed) =
+      changedKeys(spark, prodTable, backupTable, col("dbucket"))
+    diffOn(spark, prodTable, backupTable, common, Some(
+      if (changed.isEmpty) lit(false)
+      else col("dbucket").isInCollection(changed)))
+  }
+
+  /** The row serialization both change gates digest: injective on
+    * (table, pk, vals), because JSON quotes and escapes every value. A
+    * separator join is not: under an empty separator the rows
+    * (1, 12, 3) and (1, 1, 23) of one table serialize alike, so the
+    * gate would pass over their UPDATE.
+    */
+  private val RowDigest: Column =
+    to_json(struct(col("table"), col("pk"), col("vals")))
+
+  /** The anti-entropy gate of [[diffChanged]] and [[diffChangedBuckets]]:
+    * the tables both snapshots hold, and the values of `key` (a table
+    * name or a digest bucket) whose (count, `RowDigest`) summaries
+    * differ between them.
+    */
+  private def changedKeys(spark: SparkSession, prodTable: String,
+      backupTable: String, key: Column): (Seq[String], Seq[Any]) = {
     val common = commonTables(spark, prodTable, backupTable)
     def recs(t: String): DataFrame = spark.table(t)
       .filter(col("table").isInCollection(common))
-    // the digest row must carry the table name: dbuckets span tables
-    def rowCol = concat_ws("", col("table"), col("pk"), col("vals"))
-    val changed = graft.operators.AntiEntropy
-      .changedBuckets(recs(prodTable), recs(backupTable), col("dbucket"), rowCol)
-      .select("bucket").as[Long].collect().toSeq
-    if (changed.isEmpty)
-      diffOn(spark, prodTable, backupTable, common, Some(lit(false)))
-    else
-      diffOn(spark, prodTable, backupTable, common,
-        Some(col("dbucket").isInCollection(changed)))
+    (common, graft.operators.AntiEntropy
+      .changedBuckets(recs(prodTable), recs(backupTable), key, RowDigest)
+      .select("bucket").collect().map(_.get(0)).toSeq)
   }
 
   private def commonTables(spark: SparkSession, prodTable: String,
@@ -312,28 +292,12 @@ object BucketedSync {
 
   private def diffOn(spark: SparkSession, prodTable: String,
       backupTable: String, common: Seq[String],
-      extraFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    def restrict(df: DataFrame): DataFrame = {
-      val byTable = df.filter(col("table").isInCollection(common))
-      extraFilter.fold(byTable)(byTable.filter)
+      extraFilter: Option[Column] = None): DataFrame = {
+    def recs(t: String): DataFrame = {
+      val byTable = spark.table(t).filter(col("table").isInCollection(common))
+      extraFilter.fold(byTable)(byTable.filter).select(RecordCols.map(col): _*)
     }
-    val p = restrict(spark.table(prodTable))
-      .select(col("table"), col("pk"),
-      lit(true).as("p_present"),
-      col("ord_off").as("p_ord_off"), col("ord_row").as("p_ord_row"),
-      col("vals").as("p_vals"),
-      graft.codegen.SyncSqlGenerator.rawInsertCol(col("table"), col("vals"))
-        .as("p_raw"))
-    val b = restrict(spark.table(backupTable))
-      .select(col("table"), col("pk"),
-      lit(true).as("b_present"),
-      col("ord_off").as("b_ord_off"), col("ord_row").as("b_ord_row"),
-      col("vals").as("b_vals"))
-    p.join(b, Seq("table", "pk"), "full_outer")
-      .withColumn("op",
-        when(col("b_present").isNull, Differ.OP_INSERT)
-          .when(col("p_present").isNull, Differ.OP_DELETE)
-          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+    SyncJob.recordDiff(recs(prodTable), recs(backupTable))
       .filter(col("op").isNotNull)
   }
 }

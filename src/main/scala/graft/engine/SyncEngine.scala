@@ -8,7 +8,7 @@ import scala.collection.immutable.ListMap
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -87,7 +87,9 @@ final case class SyncOutcome(
   *   3. record parse        — executor-side flatMap over INSERT
   *                            statements (quote-aware tokenizer)
   *   4. last-wins dedup     — window per (table, pk) ordered by position
-  *   5. diff                — ONE full-outer join on (table, pk) for all
+  *   5. diff                — [[SyncJob.recordDiff]], the one record
+  *                            classifier every sync path calls: ONE
+  *                            full-outer join on (table, pk) for all
   *                            tables at once (single shuffle), null-safe
   *                            value-array comparison
   *   6. codegen             — executor-side statement rendering
@@ -107,18 +109,10 @@ class SyncJob(spark: SparkSession) {
   def catalog(stmts: Dataset[Stmt]): ListMap[String, TableMeta] =
     catalogInfo(stmts).metas
 
-  /** Catalog + the byte positions needed to reproduce the reference's
-    * whole-file CREATE-statement capture (see SyncOutcome.createSections):
-    * the byte position of the first "CREATE TABLE" token in the file and
-    * each table's own statement-end byte (exclusive of the '\n' after
-    * ';').
+  /** [[catalog]] plus the CREATE-section byte offsets
+    * ([[SyncJob.CatalogInfo]]).
     */
-  private[graft] case class CatalogInfo(
-      metas: ListMap[String, TableMeta],
-      firstCreatePos: Option[Long],
-      stmtEnd: Map[String, Long])
-
-  private[graft] def catalogInfo(stmts: Dataset[Stmt]): CatalogInfo = {
+  private[graft] def catalogInfo(stmts: Dataset[Stmt]): SyncJob.CatalogInfo = {
     val creates = stmts
       .filter(col("text").rlike("(?is)^\\s*CREATE\\s+TABLE"))
       .orderBy("off")
@@ -133,7 +127,7 @@ class SyncJob(spark: SparkSession) {
       DumpParser.parseCreate(st.text).map(m =>
         m.name -> (st.off + st.text.getBytes("UTF-8").length + 1)) // + ';'
     }.toMap
-    CatalogInfo(metas, firstCreatePos, ends)
+    SyncJob.CatalogInfo(metas, firstCreatePos, ends)
   }
 
   /** Parse + dedup the record frame of one dump:
@@ -432,62 +426,59 @@ class SyncJob(spark: SparkSession) {
     out.result()
   }
 
-  /** The shared diff pipeline (steps 1-5 above) and its summary. Each
+  /** The shared diff pipeline (steps 1-5 above) over two dumps. Each
     * dump's statement scan is cached MEMORY_AND_DISK so the catalog pass
-    * and the record pass share one text scan per dump; the joined frame
-    * is cached because the stats aggregate and the script both read it.
-    * Everything cached is released on failure, or by the caller through
-    * [[Prepared.release]].
+    * and the record pass share one text scan per dump.
     */
   private def prepare(prodPath: String, backupPath: String): Prepared = {
-    val prodStmts = DumpSource.statements(spark, prodPath)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val backupStmts = DumpSource.statements(spark, backupPath)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cached = scala.collection.mutable.ArrayBuffer[Dataset[_]](
-      prodStmts, backupStmts)
-    val release = () => cached.foreach(_.unpersist())
-    try {
+    val scans = Seq(prodPath, backupPath).map(p =>
+      DumpSource.statements(spark, p).persist(StorageLevel.MEMORY_AND_DISK))
+    summarize(prodPath, scans) {
       // the two catalog passes are independent driver-blocking collects —
       // run them as concurrent Spark jobs so both dumps' statement scans
       // (and their caches) fill the executor in parallel
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      val prodInfoF = Future(catalogInfo(prodStmts))
-      val backupCatF = Future(catalog(backupStmts))
-      val prodInfo = Await.result(prodInfoF, Duration.Inf)
-      val prodCat = prodInfo.metas
-      val backupCat = Await.result(backupCatF, Duration.Inf)
+      val Seq(prod, backup) = scans.map(s => Future(catalogInfo(s)))
+        .map(Await.result(_, Duration.Inf))
+      def recs(stmts: Dataset[Stmt], info: SyncJob.CatalogInfo,
+          common: Seq[String]) =
+        records(stmts, info.metas).filter(col("table").isInCollection(common))
+      (prod, backup, (common: Seq[String]) => SyncJob.recordDiff(
+        recs(scans(0), prod, common), recs(scans(1), backup, common)))
+    }
+  }
 
+  /** One diff summarized for the script routes, whatever produced it:
+    * the two catalogs' common/missing/extra table split, the record diff
+    * of the common tables (cached, because the stats aggregate and the
+    * script both read it), the CREATE sections and the per-table stats.
+    * Catalogs that carry record counts (snapshot sidecars) supply the
+    * stats' table totals, so a diff holding only changed rows still
+    * reports every common table. `cached` and the diff are released on
+    * failure, or by the caller through [[Prepared.release]].
+    */
+  private def summarize(prodPath: String, cached: Seq[Dataset[_]])(
+      source: => (SyncJob.CatalogInfo, SyncJob.CatalogInfo,
+        Seq[String] => DataFrame)): Prepared = {
+    val held = scala.collection.mutable.ArrayBuffer[Dataset[_]](cached: _*)
+    val release = () => held.foreach(_.unpersist())
+    try {
+      val (prod, backup, diff) = source
+      val (prodCat, backupCat) = (prod.metas, backup.metas)
       val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
       val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
       val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
 
-      val prod = records(prodStmts, prodCat)
-        .filter(col("table").isInCollection(commonTables))
-        .select(col("table"), col("pk"), lit(true).as("p_present"),
-          col("ord_off").as("p_ord_off"), col("ord_row").as("p_ord_row"),
-          col("vals").as("p_vals"))
-      val backup = records(backupStmts, backupCat)
-        .filter(col("table").isInCollection(commonTables))
-        .select(col("table"), col("pk"), lit(true).as("b_present"),
-          col("ord_off").as("b_ord_off"), col("ord_row").as("b_ord_row"),
-          col("vals").as("b_vals"))
-
-      val joined = prod.join(backup, Seq("table", "pk"), "full_outer")
-        .withColumn("op",
-          when(col("b_present").isNull, Differ.OP_INSERT)
-            .when(col("p_present").isNull, Differ.OP_DELETE)
-            .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
-        .cache()
+      val joined = diff(commonTables).cache()
       // released before the scans it is built on: uncaching a frame
       // re-plans the still-cached frames that depend on it
-      cached.prepend(joined)
+      held.prepend(joined)
 
       val sections = createSections(prodPath, missingTables,
-        prodInfo.firstCreatePos, prodInfo.stmtEnd)
-      val stats = joined.groupBy("table").agg(
+        prod.firstCreatePos, prod.stmtEnd)
+      val counted = joined.groupBy("table").agg(
         count(col("p_present")).as("productionCount"),
         count(col("b_present")).as("backupCount"),
         count(when(col("op") === Differ.OP_INSERT, 1)).as("missingCount"),
@@ -496,6 +487,14 @@ class SyncJob(spark: SparkSession) {
         coalesce(sum(opBytesCol(prodCat, backupCat)), lit(0L)).as("opBytes"))
         .as[TableStats].collect()
         .map(s => s.table -> s).toMap
+      val stats = (prod.counts, backup.counts) match {
+        case (Some(pn), Some(bn)) => commonTables.map { t =>
+          t -> counted.getOrElse(t, TableStats(t, 0L, 0L, 0L, 0L, 0L)).copy(
+            productionCount = pn.getOrElse(t, 0L),
+            backupCount = bn.getOrElse(t, 0L))
+        }.toMap
+        case _ => counted
+      }
       new Prepared(joined, SyncOutcome(prodCat, backupCat, missingTables,
         extraTables, commonTables, stats, Nil, sections), release)
     } catch { case e: Throwable => release(); throw e }
@@ -602,43 +601,19 @@ class SyncJob(spark: SparkSession) {
     * spec pins it), but the dumps are never re-parsed: catalogs, table
     * counts, and CREATE-section offsets come from the snapshot
     * sidecars; the row diff is the Merkle-gated changed-tables-only
-    * exchange-free bucket join ([[BucketedSync.diffChangedInfo]]).
+    * exchange-free bucket join ([[BucketedSync.diffChanged]]).
     * Unchanged tables contribute their sidecar counts to the stats tail
     * without a single row read. `prodPath` is touched only to slice the
     * reference-quirk CREATE text when the backup is missing a table.
     */
   def syncFromBucketed(prodTable: String, backupTable: String,
       prodPath: String, now: String): (SyncOutcome, String) = {
-    val prodSnap = BucketedSync.catalogInfoOf(spark, prodTable)
-    val backupSnap = BucketedSync.catalogInfoOf(spark, backupTable)
-    val prodCat = prodSnap.metas
-    val backupCat = backupSnap.metas
-    val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
-    val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
-    val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
-    val sections = createSections(prodPath, missingTables,
-      prodSnap.firstCreatePos, prodSnap.stmtEnd)
-    val joined =
-      BucketedSync.diffChangedInfo(spark, prodTable, backupTable)._1.cache()
-    try {
-      // op-type counts exist only for changed tables (the joined frame
-      // is diff rows of changed tables); totals come from the sidecars
-      val opStats = joined.groupBy("table").agg(
-        count(when(col("op") === Differ.OP_INSERT, 1)).as("missingCount"),
-        count(when(col("op") === Differ.OP_UPDATE, 1)).as("updatedCount"),
-        count(when(col("op") === Differ.OP_DELETE, 1)).as("deletedCount"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      val stats = commonTables.map { t =>
-        val (mi, up, de) = opStats.getOrElse(t, (0L, 0L, 0L))
-        t -> TableStats(t, prodSnap.counts.getOrElse(t, 0L),
-          backupSnap.counts.getOrElse(t, 0L), mi, up, de)
-      }.toMap
-      val outcome = SyncOutcome(prodCat, backupCat, missingTables,
-        extraTables, commonTables, stats, Nil, sections)
-      (outcome, scriptLines(joined, outcome, now).collect().mkString("\n"))
-    } finally { joined.unpersist(); () }
+    val d = summarize(prodPath, Nil)((
+      BucketedSync.catalogInfoOf(spark, prodTable),
+      BucketedSync.catalogInfoOf(spark, backupTable),
+      (_: Seq[String]) => BucketedSync.diffChanged(spark, prodTable, backupTable)))
+    try (d.outcome, d.lines(now).collect().mkString("\n"))
+    finally d.release()
   }
 }
 
@@ -666,14 +641,56 @@ object SyncJob {
     */
   val MaxCollectedBytes: Long = 256L << 20
 
-  /** A [[BucketedSync]] snapshot's sidecar restored for script
-    * assembly: DDL-ordered catalog, per-table post-dedup record counts,
-    * and the byte offsets that let [[SyncJob.syncFromBucketed]] emit
-    * the reference-quirk CREATE sections by slicing the original dump.
+  /** A dump's DDL-ordered catalog plus the byte positions that reproduce
+    * the reference's whole-file CREATE-statement capture (see
+    * [[SyncOutcome.createSections]]): the byte position of the first
+    * "CREATE TABLE" token in the file and each table's own statement-end
+    * byte (exclusive of the '\n' after ';'). Restored from a
+    * [[BucketedSync]] snapshot sidecar it also carries the per-table
+    * post-dedup record `counts`; parsed from a dump it has none, and the
+    * diff counts the records.
     */
-  final case class SnapshotCatalog(
+  private[graft] final case class CatalogInfo(
       metas: ListMap[String, TableMeta],
-      counts: Map[String, Long],
       firstCreatePos: Option[Long],
-      stmtEnd: Map[String, Long])
+      stmtEnd: Map[String, Long],
+      counts: Option[Map[String, Long]] = None)
+
+  /** The record diff, the one classifier of every sync path (the dump
+    * pipeline, [[BucketedSync.diff]] and the dump watcher): ONE
+    * full-outer join of two record frames on (table, pk). Each side's
+    * other columns come out prefixed `p_` (production) or `b_` (backup)
+    * beside a `p_present`/`b_present` flag, and `op` is INSERT
+    * (production only), DELETE (backup only), UPDATE (null-safe `vals`
+    * inequality) or null (unchanged); callers filter or count the
+    * unchanged rows themselves.
+    */
+  private[graft] def recordDiff(prod: DataFrame, backup: DataFrame): DataFrame = {
+    def side(df: DataFrame, p: String): DataFrame = df.select(
+      Seq(col("table"), col("pk"), lit(true).as(s"${p}_present")) ++
+        df.columns.filterNot(Set("table", "pk")).map(c => col(c).as(s"${p}_$c")): _*)
+    side(prod, "p").join(side(backup, "b"), Seq("table", "pk"), "full_outer")
+      .withColumn("op",
+        when(col("b_present").isNull, Differ.OP_INSERT)
+          .when(col("p_present").isNull, Differ.OP_DELETE)
+          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+  }
+
+  /** A catalog sidecar (one parquet row per table: `ord`, `table`,
+    * `columns`, `pkCols`, `createStmt`, `colTypes`, plus whatever its
+    * writer adds) read back as the DDL-ordered catalog, with the rows
+    * for the added columns. [[BucketedSync]] snapshots and the dump
+    * watcher's state versions each carry one.
+    */
+  private[graft] def readCatalog(spark: SparkSession, path: String)
+      : (ListMap[String, TableMeta], Array[Row]) = {
+    val rows = spark.read.parquet(path).orderBy("ord").collect()
+    (ListMap(rows.map { r =>
+      val t = r.getAs[String]("table")
+      t -> TableMeta(t, r.getAs[Seq[String]]("columns").toIndexedSeq,
+        r.getAs[Seq[String]]("pkCols").toIndexedSeq,
+        r.getAs[String]("createStmt"),
+        r.getAs[Seq[String]]("colTypes").toIndexedSeq)
+    }: _*), rows)
+  }
 }

@@ -29,8 +29,12 @@ import graft.functions.Portable
 object AntiEntropy {
 
   /** Per-bucket summary: (bucket, n_rows, digest). `rowCol` must be a
-    * deterministic serialization of the row's content (e.g.
-    * `concat_ws("|", pk, cols...)`).
+    * deterministic serialization of the row's content that no two
+    * distinct rows share, e.g. `to_json(struct(pk, cols...))` as in
+    * BucketedSync's row digest. A separator join such as
+    * `concat_ws("|", pk, cols...)` is not one: a value holding the
+    * separator, or a NULL (which concat_ws skips), lets two rows
+    * serialize alike, and their change goes unseen.
     */
   def bucketDigest(df: DataFrame, bucketCol: Column, rowCol: Column): DataFrame =
     df.select(bucketCol.as("bucket"), Portable.hash48p(rowCol).as("h"))

@@ -23,11 +23,11 @@ import graft.sources.DumpSource
   *   scripts/         per-arrival full sync scripts, byte-identical to
   *                    the batch CLI run on (arrival, previous arrival)
   *
-  * Scale: the per-batch work is the same one-shuffle full-outer diff as
-  * the batch engine; snapshots are plain parquet (partitionable by
-  * table), and the stream source only carries file *metadata* — dump
-  * bytes are read by the splittable DumpSource, never through the
-  * stream.
+  * Scale: the per-batch work is the batch engine's one-shuffle record
+  * classifier ([[graft.engine.SyncJob.recordDiff]]); snapshots are
+  * plain parquet (partitionable by table), and the stream source only
+  * carries file *metadata* — dump bytes are read by the splittable
+  * DumpSource, never through the stream.
   */
 object DumpWatchSync {
 
@@ -178,15 +178,7 @@ object DumpWatchSync {
     // consume it, and recomputing means re-running the full-outer diff
     val ops = (prevSnapshot match {
       case Some(prev) =>
-        val p = incoming.select(col("table"), col("pk"),
-          lit(true).as("p_present"), col("vals").as("p_vals"))
-        val b = prev.select(col("table"), col("pk"),
-          lit(true).as("b_present"), col("vals").as("b_vals"))
-        p.join(b, Seq("table", "pk"), "full_outer")
-          .withColumn("op",
-            when(col("b_present").isNull, Differ.OP_INSERT)
-              .when(col("p_present").isNull, Differ.OP_DELETE)
-              .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+        SyncJob.recordDiff(incoming, prev.select("table", "pk", "vals"))
           .filter(col("op").isNotNull)
           .select(col("table"), col("pk"), col("op"))
       case None =>
@@ -271,18 +263,7 @@ object DumpWatchSync {
     readLatest(stateDir)
       .filter(v => fileSystem(stateDir)
         .exists(new HPath(stateDir, s"catalog_$v")))
-      .map { v =>
-        val rows = spark.read.parquet(s"$stateDir/catalog_$v")
-          .orderBy("ord").collect()
-        scala.collection.immutable.ListMap(rows.map { r =>
-          r.getAs[String]("table") -> graft.model.TableMeta(
-            r.getAs[String]("table"),
-            r.getAs[Seq[String]]("columns").toIndexedSeq,
-            r.getAs[Seq[String]]("pkCols").toIndexedSeq,
-            r.getAs[String]("createStmt"),
-            r.getAs[Seq[String]]("colTypes").toIndexedSeq)
-        }: _*)
-      }
+      .map(v => SyncJob.readCatalog(spark, s"$stateDir/catalog_$v")._1)
 
   private def writeCatalogSidecar(spark: SparkSession, stateDir: String,
       version: String,

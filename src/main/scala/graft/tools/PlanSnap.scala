@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** r16 deliverable helper: write `.explain("formatted")` for each named
-  * SparkEntry query to <outDir>/<query>_<tag>.txt — the before/after
-  * plan evidence the optimization round commits under plans/r16/.
+/** The plan-dump main: write `.explain("formatted")` for each named
+  * SparkEntry query to <outDir>/<query>_<tag>.txt, followed by its
+  * executed plan — the before/after plan evidence committed under
+  * plans/.
   *
   *   runMain graft.tools.PlanSnap before plans/r16 q172_sketch_error_audit,q226_trimmed_mean [sfDir]
   *

@@ -181,6 +181,38 @@ class BucketedSyncSpec extends SparkSuite {
     assert(!Files.exists(outDir.resolve(".script.sql.crc")))
   }
 
+  test("--state rediff sees an UPDATE whose values concatenate to the same text") {
+    // (1, 12, 3) and (1, 1, 23) join to the same text under an empty
+    // separator; the change gates must still name the table and bucket
+    val ddl3 =
+      """CREATE TABLE `c` (
+        |  `id` INT(11),
+        |  `a` INT(11),
+        |  `b` INT(11),
+        |  PRIMARY KEY (`id`)
+        |) ENGINE=InnoDB;
+        |""".stripMargin
+    val (pf, bf) = (
+      tmpFile(ddl3 + "INSERT INTO `c` (`id`, `a`, `b`) VALUES\n(1, 12, 3);\n"),
+      tmpFile(ddl3 + "INSERT INTO `c` (`id`, `a`, `b`) VALUES\n(1, 1, 23);\n"))
+    val job = new SyncJob(spark)
+    val now = "CONCAT-TEST"
+    BucketedSync.snapshot(spark, pf, "bsync_cc_prod", buckets = 4, dbuckets = 8)
+    BucketedSync.snapshot(spark, bf, "bsync_cc_backup", buckets = 4, dbuckets = 8)
+    val (_, expected) = job.syncCollected(pf, bf, now)
+    assert(expected.contains("-- Updating 1 records in c"))
+    val (_, got) = job.syncFromBucketed("bsync_cc_prod", "bsync_cc_backup", pf, now)
+    assert(got == expected)
+
+    def ops(df: org.apache.spark.sql.DataFrame) =
+      df.select("table", "pk", "op").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val full = ops(BucketedSync.diff(spark, "bsync_cc_prod", "bsync_cc_backup"))
+    assert(full == Set(("c", "1", "UPDATE")))
+    assert(ops(BucketedSync.diffChangedBuckets(
+      spark, "bsync_cc_prod", "bsync_cc_backup")) == full)
+  }
+
   test("tables present in only one snapshot yield NO row ops (DDL concern)") {
     val extraDdl =
       """CREATE TABLE `w` (
