@@ -2,21 +2,10 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.Colocate
 import graft.sources.DumpSource
-
-/** One [[BucketedSync]] sidecar row per table (DDL order);
-  * snapshot-level fields (firstCreatePos, fingerprint, buckets) are
-  * repeated on every row — a handful of rows, and it keeps the sidecar
-  * a single flat frame. Top-level so the encoder derivation stays on
-  * the codegen path (a case class nested in an object trips the
-  * generated accessor lookup and falls back to interpreted).
-  */
-private[engine] case class SnapshotCatRow(ord: Long, table: String,
-    columns: Seq[String], pkCols: Seq[String], createStmt: String,
-    colTypes: Seq[String], nRecords: Long, stmtEnd: Option[Long],
-    firstCreatePos: Option[Long], fingerprint: String, buckets: Int)
 
 /** Bucketed sync fast-path: persist a dump's parsed+deduped record frame
   * as a catalog table bucketed AND sorted on (table, pk). The write pays
@@ -26,10 +15,11 @@ private[engine] case class SnapshotCatRow(ord: Long, table: String,
   * snapshot, N×M dump-pair comparisons) at 100 TB, where the record
   * shuffle dominates the diff cost.
   *
-  * The diff classification is [[SyncJob.recordDiff]], the one record
-  * classifier the dump pipeline and the dump watcher also call:
-  * BucketedSyncSpec asserts op-for-op equality with SyncJob.run and an
-  * exchange-free physical plan.
+  * The diff classification is the engine's keyed classifier
+  * ([[Differ.classify]] on (table, pk) over `vals`), the record diff the
+  * dump pipeline and the dump watcher also call: BucketedSyncSpec
+  * asserts op-for-op equality with SyncJob.run and an exchange-free
+  * physical plan.
   */
 object BucketedSync {
 
@@ -79,16 +69,18 @@ object BucketedSync {
       .as[(String, Long)].collect().toMap
     // Sidecar: the dump's full catalog in DDL order — enough to render
     // UPDATE/DELETE/INSERT statements and the reference-quirk CREATE
-    // sections without re-parsing the dump. `ord` preserves the
-    // ListMap/DDL insertion order the script sections depend on.
-    cat.toSeq.zipWithIndex.map { case ((t, m), i) =>
-      SnapshotCatRow(i.toLong, t, m.columns, m.pkCols, m.createStmt,
-        m.colTypes, counts.getOrElse(t, 0L),
-        info.stmtEnd.get(t), info.firstCreatePos,
-        dumpFingerprint(spark, dumpPath), buckets)
-    }.toDF().coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(catPath(spark, tableName))
+    // sections without re-parsing the dump — plus the snapshot-only
+    // fields: per-table record count and statement end, and the
+    // snapshot-level CREATE position, fingerprint and bucket count
+    // (repeated on every row; a handful of rows, one flat frame).
+    val fingerprint = dumpFingerprint(spark, dumpPath)
+    SyncJob.writeCatalog(spark, catPath(spark, tableName), cat, Seq(
+      StructField("nRecords", LongType) -> (t => counts.getOrElse(t, 0L)),
+      StructField("stmtEnd", LongType) -> (t => info.stmtEnd.getOrElse(t, null)),
+      StructField("firstCreatePos", LongType) ->
+        (_ => info.firstCreatePos.getOrElse(null)),
+      StructField("fingerprint", StringType) -> (_ => fingerprint),
+      StructField("buckets", IntegerType) -> (_ => buckets)))
   }
 
   /** Path+size+mtime fingerprint of a dump file — the cheap staleness
@@ -207,8 +199,8 @@ object BucketedSync {
     wh.stripSuffix("/") + "/" + tableName.toLowerCase + "_cat"
   }
 
-  /** Diff two bucketed snapshots: the sync core's record classifier
-    * ([[SyncJob.recordDiff]]) over the tables present in BOTH snapshots
+  /** Diff two bucketed snapshots: the sync core's record diff
+    * ([[Differ.classify]]) over the tables present in BOTH snapshots
     * (matching SyncJob's commonTables rule — tables in only one dump are
     * CREATE/DROP DDL, never row ops), planned without any Exchange
     * (bucket files ARE the (table, pk) partitioning on both sides; the
@@ -231,8 +223,17 @@ object BucketedSync {
     */
   def diffChanged(spark: SparkSession, prodTable: String,
       backupTable: String): DataFrame =
+    diffChanged(spark, prodTable, backupTable,
+      commonTables(spark, prodTable, backupTable))
+
+  /** [[diffChanged]] over a `common` table list the caller already holds
+    * (the `--state` rediff reads it from the catalogs it restores, so the
+    * sidecars are not read a second time).
+    */
+  private[engine] def diffChanged(spark: SparkSession, prodTable: String,
+      backupTable: String, common: Seq[String]): DataFrame =
     diffOn(spark, prodTable, backupTable,
-      changedKeys(spark, prodTable, backupTable, col("table"))._2
+      changedKeys(spark, prodTable, backupTable, common, col("table"))
         .map(_.toString))
 
   /** [[diffChanged]] at DIGEST-BUCKET granularity for snapshots written
@@ -250,8 +251,8 @@ object BucketedSync {
     */
   def diffChangedBuckets(spark: SparkSession, prodTable: String,
       backupTable: String): DataFrame = {
-    val (common, changed) =
-      changedKeys(spark, prodTable, backupTable, col("dbucket"))
+    val common = commonTables(spark, prodTable, backupTable)
+    val changed = changedKeys(spark, prodTable, backupTable, common, col("dbucket"))
     diffOn(spark, prodTable, backupTable, common, Some(
       if (changed.isEmpty) lit(false)
       else col("dbucket").isInCollection(changed)))
@@ -267,18 +268,17 @@ object BucketedSync {
     to_json(struct(col("table"), col("pk"), col("vals")))
 
   /** The anti-entropy gate of [[diffChanged]] and [[diffChangedBuckets]]:
-    * the tables both snapshots hold, and the values of `key` (a table
-    * name or a digest bucket) whose (count, `RowDigest`) summaries
-    * differ between them.
+    * the values of `key` (a table name or a digest bucket) whose
+    * (count, `RowDigest`) summaries differ between the two snapshots'
+    * `common` tables.
     */
   private def changedKeys(spark: SparkSession, prodTable: String,
-      backupTable: String, key: Column): (Seq[String], Seq[Any]) = {
-    val common = commonTables(spark, prodTable, backupTable)
+      backupTable: String, common: Seq[String], key: Column): Seq[Any] = {
     def recs(t: String): DataFrame = spark.table(t)
       .filter(col("table").isInCollection(common))
-    (common, graft.operators.AntiEntropy
+    graft.operators.AntiEntropy
       .changedBuckets(recs(prodTable), recs(backupTable), key, RowDigest)
-      .select("bucket").collect().map(_.get(0)).toSeq)
+      .select("bucket").collect().map(_.get(0)).toSeq
   }
 
   private def commonTables(spark: SparkSession, prodTable: String,
@@ -297,7 +297,7 @@ object BucketedSync {
       val byTable = spark.table(t).filter(col("table").isInCollection(common))
       extraFilter.fold(byTable)(byTable.filter).select(RecordCols.map(col): _*)
     }
-    SyncJob.recordDiff(recs(prodTable), recs(backupTable))
-      .filter(col("op").isNotNull)
+    Differ.classify(recs(prodTable), recs(backupTable), Seq("table", "pk"),
+      Seq("vals")).filter(col("op").isNotNull)
   }
 }

@@ -3,18 +3,23 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Snapshot diff: classify rows of `prod` vs `backup` into
-  * INSERT / UPDATE / DELETE by primary key — the distributed equivalent of
-  * the reference's per-table dict diff (/root/reference/sync.py:255-291).
+/** The keyed classifier: rows of `prod` vs `backup` sorted into
+  * INSERT / UPDATE / DELETE by primary key — the distributed equivalent
+  * of the reference's per-table dict diff (sync.py:255-291).
   *
-  * Implementation: one full-outer equi-join on the PK columns plus a
-  * null-safe struct comparison (`<=>`) over the value columns — Spark's
-  * `<=>` reproduces the reference's string-equality-with-NULL==NULL
-  * semantics (sync.py:217-226) when columns are strings, and generalizes
-  * to typed columns in native mode.
+  * [[classify]] is the one full-outer key join of the engine. Its callers:
+  * the sync core's record diff ([[SyncJob]]'s dump pipeline,
+  * [[BucketedSync.diff]] and the dump watcher, on (table, pk) over
+  * `vals`), [[diff]] (q06/q11/q12/q190, [[mergeApply]] and typed mode's
+  * q39), the SCD-2 advance ([[Scd.advance]], q103 and the watcher's
+  * history) and aggregate maintenance ([[Ivm.aggDeltas]], q91).
   *
-  * Scale: the join shuffles both sides by PK (sort-merge under AQE); no
-  * driver-side state. Skewed PKs are handled by AQE skew-join splitting.
+  * A value differs under Spark's null-safe `<=>`, which reproduces the
+  * reference's string equality with NULL == NULL (sync.py:217-226) on
+  * string columns and carries real value semantics on typed columns.
+  *
+  * Scale: the join shuffles both sides by key (sort-merge under AQE); no
+  * driver-side state. Skewed keys are handled by AQE skew-join splitting.
   * If one snapshot is known-small, callers can pass it broadcast()-ed.
   */
 object Differ {
@@ -23,36 +28,42 @@ object Differ {
   val OP_UPDATE = "UPDATE"
   val OP_DELETE = "DELETE"
 
-  /** Prefixes for the two sides' value columns in the diff output. */
-  val ProdPrefix = "prod_"
-  val BackupPrefix = "backup_"
+  /** Prefixes of each side's non-key columns in the classified frame. */
+  val ProdPrefix = "p_"
+  val BackupPrefix = "b_"
 
-  /** Full diff frame: pk columns, `op`, and both sides' value columns
-    * (`prod_*` from production, `backup_*` from backup). Unchanged rows
-    * are dropped. PKs are assumed non-null (the reference derives them
-    * from parsed values and never produces SQL NULL keys).
+  /** ONE full-outer join of `prod` and `backup` on `keys`. Every other
+    * column of each side comes out prefixed `p_` (production) or `b_`
+    * (backup), beside a `p_present`/`b_present` flag, and `op` is INSERT
+    * (production only), DELETE (backup only), UPDATE (some column of
+    * `compared` differs, null-safe) or null (unchanged). Unchanged rows
+    * are kept: callers filter or count them themselves. Keys are assumed
+    * non-null (the reference derives them from parsed values and never
+    * produces SQL NULL keys).
     */
-  def diff(prod: DataFrame, backup: DataFrame, pkCols: Seq[String]): DataFrame = {
-    val valueCols = prod.columns.filterNot(pkCols.contains).toSeq
-    val p = prod.select(
-      pkCols.map(col) ++ Seq(lit(true).as("_p_present")) ++
-        valueCols.map(c => col(c).as(ProdPrefix + c)): _*)
-    val b = backup.select(
-      pkCols.map(col) ++ Seq(lit(true).as("_b_present")) ++
-        valueCols.map(c => col(c).as(BackupPrefix + c)): _*)
-    val joined = p.join(b, pkCols, "full_outer")
-    val rowsDiffer: Column =
-      if (valueCols.isEmpty) lit(false)
-      else !(struct(valueCols.map(c => col(ProdPrefix + c)): _*) <=>
-             struct(valueCols.map(c => col(BackupPrefix + c)): _*))
-    joined
+  def classify(prod: DataFrame, backup: DataFrame, keys: Seq[String],
+      compared: Seq[String]): DataFrame = {
+    def side(df: DataFrame, prefix: String): DataFrame = df.select(
+      keys.map(col) ++ (lit(true).as(prefix + "present") +:
+        df.columns.filterNot(keys.contains).map(c => col(c).as(prefix + c))): _*)
+    val changed: Column = compared
+      .map(c => !(col(ProdPrefix + c) <=> col(BackupPrefix + c)))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    side(prod, ProdPrefix).join(side(backup, BackupPrefix), keys, "full_outer")
       .withColumn("op",
-        when(col("_b_present").isNull, OP_INSERT)
-          .when(col("_p_present").isNull, OP_DELETE)
-          .when(rowsDiffer, OP_UPDATE))
-      .filter(col("op").isNotNull)
-      .drop("_p_present", "_b_present")
+        when(col(BackupPrefix + "present").isNull, OP_INSERT)
+          .when(col(ProdPrefix + "present").isNull, OP_DELETE)
+          .when(changed, OP_UPDATE))
   }
+
+  /** Full diff frame: pk columns, both sides' value columns (`p_*` from
+    * production, `b_*` from backup) and `op`, over every non-key column
+    * of `prod`. Unchanged rows are dropped.
+    */
+  def diff(prod: DataFrame, backup: DataFrame, pkCols: Seq[String]): DataFrame =
+    classify(prod, backup, pkCols, prod.columns.filterNot(pkCols.contains).toSeq)
+      .filter(col("op").isNotNull)
+      .drop(ProdPrefix + "present", BackupPrefix + "present")
 
   /** Compact diff: pk columns + op only. */
   def diffOps(prod: DataFrame, backup: DataFrame, pkCols: Seq[String]): DataFrame =
@@ -78,16 +89,5 @@ object Differ {
       .select(pkCols.map(col) ++
         valueCols.map(c => col(ProdPrefix + c).as(c)): _*)
     kept.unionByName(upserts)
-  }
-
-  /** Catalog diff on table-name sets — CREATE/DROP planning
-    * (sync.py:245-253). Inputs are single-column `table` frames.
-    */
-  def catalogDiff(prodTables: DataFrame, backupTables: DataFrame): DataFrame = {
-    val missing = prodTables.join(backupTables, Seq("table"), "left_anti")
-      .withColumn("op", lit("CREATE"))
-    val extra = backupTables.join(prodTables, Seq("table"), "left_anti")
-      .withColumn("op", lit("DROP"))
-    missing.unionByName(extra)
   }
 }

@@ -29,24 +29,26 @@ object Ivm {
 
   /** Row-level delta contributions between `oldTable` and `newTable`,
     * keyed by `pkCols`: one (g, dn, dv) row per side of each changed
-    * row. Unchanged rows (same group, same value, present in both) are
-    * filtered out BEFORE the shuffle — the frame is O(changed), and the
-    * full-outer diff join only carries the three maintained columns
-    * (pk, group, value), i.e. a column-pruned scan of each side.
+    * row. The change rule is the engine's keyed classifier
+    * ([[Differ.classify]], new table as production, compared on the
+    * group and the value): unchanged rows (op null) contribute nothing,
+    * so the frame is O(changed), and the diff join only carries the
+    * three maintained columns (pk, group, value), i.e. a column-pruned
+    * scan of each side.
     */
   def aggDeltas(oldTable: DataFrame, newTable: DataFrame, pkCols: Seq[String],
       groupCol: Column, valueCol: Column): DataFrame = {
-    def slim(df: DataFrame, tag: String) =
-      df.select(pkCols.map(col) :+ groupCol.as(s"g_$tag") :+
-        valueCol.cast("long").as(s"v_$tag") :+ lit(1).as(s"p_$tag"): _*)
-    val joined = slim(oldTable, "old")
-      .join(slim(newTable, "new"), pkCols, "full_outer")
-      .filter(!(col("p_old").isNotNull && col("p_new").isNotNull &&
-        col("g_old") <=> col("g_new") && col("v_old") <=> col("v_new")))
-    val removed = joined.filter(col("p_old").isNotNull)
-      .select(col("g_old").as("g"), lit(-1L).as("dn"), (-col("v_old")).as("dv"))
-    val added = joined.filter(col("p_new").isNotNull)
-      .select(col("g_new").as("g"), lit(1L).as("dn"), col("v_new").as("dv"))
+    def slim(df: DataFrame) = df.select(pkCols.map(col) :+ groupCol.as("g") :+
+      valueCol.cast("long").as("v"): _*)
+    val changed = Differ.classify(slim(newTable), slim(oldTable), pkCols,
+      Seq("g", "v")).filter(col("op").isNotNull)
+    // each branch keeps the rows one side is present in: a null-rejecting
+    // filter on that side's flag lets the optimizer narrow the full outer
+    // join to a one-sided outer join per branch
+    val removed = changed.filter(col("b_present").isNotNull)
+      .select(col("b_g").as("g"), lit(-1L).as("dn"), (-col("b_v")).as("dv"))
+    val added = changed.filter(col("p_present").isNotNull)
+      .select(col("p_g").as("g"), lit(1L).as("dn"), col("p_v").as("dv"))
     removed.unionByName(added)
   }
 

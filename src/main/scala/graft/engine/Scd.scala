@@ -60,13 +60,14 @@ object Scd {
 
   /** Incrementally advance an SCD-2 run frame by ONE new snapshot
     * version — the IVM formulation of [[scd2]]: closed runs pass through
-    * untouched, and one full-outer join of the OPEN runs against the new
-    * snapshot (the sync engine's diff shape) classifies each pk:
+    * untouched, and the OPEN runs meet the new snapshot in the engine's
+    * keyed classifier ([[Differ.classify]], snapshot as production, open
+    * runs as backup, compared on `valCols`), whose `op` decides each pk:
     *
-    *  - present both sides, values null-safe equal → run stays open;
-    *  - open but absent from the snapshot (delete) → close at `newVer`;
-    *  - values differ (update) → close at `newVer` AND open a fresh run;
-    *  - snapshot-only (insert/reinsert) → open a fresh run at `newVer`.
+    *  - null (values null-safe equal) → run stays open;
+    *  - DELETE (open but absent from the snapshot) → close at `newVer`;
+    *  - UPDATE (values differ) → close at `newVer` AND open a fresh run;
+    *  - INSERT (snapshot-only, incl. reinsert) → open a fresh run at `newVer`.
     *
     * Cost is O(open runs + snapshot rows) per version — history depth
     * never rescans — vs [[scd2]]'s O(pks × versions) grid; fold it over
@@ -84,15 +85,11 @@ object Scd {
       pkCols: Seq[String], valCols: Seq[String]): DataFrame = {
     val closed = runs.filter(col("ver_to").isNotNull)
     val open = runs.filter(col("ver_to").isNull)
-    val o = open.select(pkCols.map(col) ++ valCols.map(col) :+
-      col("ver_from") :+ lit(true).as("__o"): _*)
-    val sn = snap.select(pkCols.map(col) ++
-      valCols.map(c => col(c).as(s"__s_$c")) :+ lit(true).as("__s"): _*)
-    val j = o.join(sn, pkCols, "full_outer")
-    val oVals = struct(valCols.map(col): _*)
-    val sVals = struct(valCols.map(c => col(s"__s_$c")): _*)
-    val both = col("__o").isNotNull && col("__s").isNotNull
-    val same = both && (oVals <=> sVals)
+      .select(pkCols.map(col) ++ valCols.map(col) :+ col("ver_from"): _*)
+    val j = Differ.classify(snap.select((pkCols ++ valCols).map(col): _*),
+      open, pkCols, valCols)
+    def snapCol(c: String) = col(Differ.ProdPrefix + c)
+    def runCol(c: String) = col(Differ.BackupPrefix + c)
     // ONE scan of the join: each key emits its outcome rows as an array
     // (an update is close + reopen → two rows), exploded back into run
     // shape. A filter-per-outcome formulation scans j once per branch —
@@ -102,13 +99,13 @@ object Scd {
       struct(valCols.zip(vals).map { case (n, c) => c.as(n) } :+
         vf.as("ver_from") :+ vt.as("ver_to"): _*)
     val nullVer = lit(null).cast("long")
-    val cont = runRow(valCols.map(col), col("ver_from"), nullVer)
-    val close = runRow(valCols.map(col), col("ver_from"), lit(newVer))
-    val opened = runRow(valCols.map(c => col(s"__s_$c")), lit(newVer), nullVer)
-    val outcome = when(same, array(cont))
-      .when(both, array(close, opened)) // update: close the run, open anew
-      .when(col("__o").isNotNull, array(close)) // delete: close only
-      .otherwise(array(opened)) // insert / reinsert: open a fresh run
+    val cont = runRow(valCols.map(runCol), runCol("ver_from"), nullVer)
+    val close = runRow(valCols.map(runCol), runCol("ver_from"), lit(newVer))
+    val opened = runRow(valCols.map(snapCol), lit(newVer), nullVer)
+    val outcome = when(col("op").isNull, array(cont))
+      .when(col("op") === Differ.OP_UPDATE, array(close, opened))
+      .when(col("op") === Differ.OP_DELETE, array(close))
+      .otherwise(array(opened))
     val advanced = j.select(pkCols.map(col) :+ explode(outcome).as("__r"): _*)
       .select(pkCols.map(col) ++
         (valCols :+ "ver_from" :+ "ver_to").map(f => col(s"__r.$f").as(f)): _*)

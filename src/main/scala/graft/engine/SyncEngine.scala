@@ -8,9 +8,10 @@ import scala.collection.immutable.ListMap
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.codegen.SyncSqlGenerator
@@ -87,10 +88,10 @@ final case class SyncOutcome(
   *   3. record parse        — executor-side flatMap over INSERT
   *                            statements (quote-aware tokenizer)
   *   4. last-wins dedup     — window per (table, pk) ordered by position
-  *   5. diff                — [[SyncJob.recordDiff]], the one record
-  *                            classifier every sync path calls: ONE
-  *                            full-outer join on (table, pk) for all
-  *                            tables at once (single shuffle), null-safe
+  *   5. diff                — [[Differ.classify]] on (table, pk) over
+  *                            `vals`, the record diff every sync path
+  *                            calls: ONE full-outer join for all tables
+  *                            at once (single shuffle), null-safe
   *                            value-array comparison
   *   6. codegen             — executor-side statement rendering
   *   7. sink                — collected script file or sorted text
@@ -445,8 +446,9 @@ class SyncJob(spark: SparkSession) {
       def recs(stmts: Dataset[Stmt], info: SyncJob.CatalogInfo,
           common: Seq[String]) =
         records(stmts, info.metas).filter(col("table").isInCollection(common))
-      (prod, backup, (common: Seq[String]) => SyncJob.recordDiff(
-        recs(scans(0), prod, common), recs(scans(1), backup, common)))
+      (prod, backup, (common: Seq[String]) => Differ.classify(
+        recs(scans(0), prod, common), recs(scans(1), backup, common),
+        Seq("table", "pk"), Seq("vals")))
     }
   }
 
@@ -611,7 +613,8 @@ class SyncJob(spark: SparkSession) {
     val d = summarize(prodPath, Nil)((
       BucketedSync.catalogInfoOf(spark, prodTable),
       BucketedSync.catalogInfoOf(spark, backupTable),
-      (_: Seq[String]) => BucketedSync.diffChanged(spark, prodTable, backupTable)))
+      (common: Seq[String]) =>
+        BucketedSync.diffChanged(spark, prodTable, backupTable, common)))
     try (d.outcome, d.lines(now).collect().mkString("\n"))
     finally d.release()
   }
@@ -656,31 +659,32 @@ object SyncJob {
       stmtEnd: Map[String, Long],
       counts: Option[Map[String, Long]] = None)
 
-  /** The record diff, the one classifier of every sync path (the dump
-    * pipeline, [[BucketedSync.diff]] and the dump watcher): ONE
-    * full-outer join of two record frames on (table, pk). Each side's
-    * other columns come out prefixed `p_` (production) or `b_` (backup)
-    * beside a `p_present`/`b_present` flag, and `op` is INSERT
-    * (production only), DELETE (backup only), UPDATE (null-safe `vals`
-    * inequality) or null (unchanged); callers filter or count the
-    * unchanged rows themselves.
+  /** Write `cat` as a catalog sidecar: one parquet row per table, in DDL
+    * order — `ord`, `table`, `columns`, `pkCols`, `createStmt`,
+    * `colTypes`, then one column per `extra` field, valued per table
+    * name. [[BucketedSync]] snapshots (with their snapshot-only fields)
+    * and the dump watcher's state versions each carry one;
+    * [[readCatalog]] reads both.
     */
-  private[graft] def recordDiff(prod: DataFrame, backup: DataFrame): DataFrame = {
-    def side(df: DataFrame, p: String): DataFrame = df.select(
-      Seq(col("table"), col("pk"), lit(true).as(s"${p}_present")) ++
-        df.columns.filterNot(Set("table", "pk")).map(c => col(c).as(s"${p}_$c")): _*)
-    side(prod, "p").join(side(backup, "b"), Seq("table", "pk"), "full_outer")
-      .withColumn("op",
-        when(col("b_present").isNull, Differ.OP_INSERT)
-          .when(col("p_present").isNull, Differ.OP_DELETE)
-          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+  private[graft] def writeCatalog(spark: SparkSession, path: String,
+      cat: ListMap[String, TableMeta],
+      extra: Seq[(StructField, String => Any)] = Nil): Unit = {
+    val schema = StructType(Seq(
+      StructField("ord", LongType), StructField("table", StringType),
+      StructField("columns", ArrayType(StringType)),
+      StructField("pkCols", ArrayType(StringType)),
+      StructField("createStmt", StringType),
+      StructField("colTypes", ArrayType(StringType))) ++ extra.map(_._1))
+    val rows = cat.toSeq.zipWithIndex.map { case ((t, m), i) =>
+      Row.fromSeq(Seq(i.toLong, t, m.columns, m.pkCols, m.createStmt,
+        m.colTypes) ++ extra.map(_._2(t)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** A catalog sidecar (one parquet row per table: `ord`, `table`,
-    * `columns`, `pkCols`, `createStmt`, `colTypes`, plus whatever its
-    * writer adds) read back as the DDL-ordered catalog, with the rows
-    * for the added columns. [[BucketedSync]] snapshots and the dump
-    * watcher's state versions each carry one.
+  /** A catalog sidecar ([[writeCatalog]]) read back as the DDL-ordered
+    * catalog, with the rows for the writer's extra columns.
     */
   private[graft] def readCatalog(spark: SparkSession, path: String)
       : (ListMap[String, TableMeta], Array[Row]) = {

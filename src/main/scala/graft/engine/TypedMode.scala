@@ -20,7 +20,9 @@ import graft.sources.DumpSource
   *
   * Compat mode is unchanged — typed mode is a parallel read path over the
   * same statement scan and record frames, so golden byte-parity output
-  * still comes from the string pipeline.
+  * still comes from the string pipeline. Typed snapshots diff through
+  * the engine's one keyed classifier, [[Differ.diff]], whose null-safe
+  * comparison then carries the real type semantics.
   *
   * Scale: the per-table snapshot is a projection over the (table, pk)
   * record frame — same single shuffle as the compat path; casts are
@@ -99,30 +101,5 @@ object TypedMode {
     val cat = job.catalog(stmts)
     val recs = job.records(stmts, cat)
     cat.map { case (name, meta) => name -> typedTable(recs, meta) }
-  }
-
-  /** Typed diff of two snapshots of one table: full-outer join on the PK
-    * columns, null-safe comparison of every non-PK column with its real
-    * type semantics. Output: pk columns + op + p_/b_ prefixed values.
-    * Single shuffle on the PK — the same plan shape as the compat diff.
-    */
-  def typedDiff(prod: DataFrame, backup: DataFrame,
-      pkCols: Seq[String]): DataFrame = {
-    val valCols = prod.columns.filterNot(pkCols.contains).toSeq
-    val p = prod.select(
-      pkCols.map(col) ++ valCols.map(c => col(c).as(s"p_$c")) :+
-        lit(true).as("p_present"): _*)
-    val b = backup.select(
-      pkCols.map(col) ++ valCols.map(c => col(c).as(s"b_$c")) :+
-        lit(true).as("b_present"): _*)
-    val changed = valCols.map(c => !(col(s"p_$c") <=> col(s"b_$c")))
-      .reduce(_ || _)
-    p.join(b, pkCols, "full_outer")
-      .withColumn("op",
-        when(col("b_present").isNull, Differ.OP_INSERT)
-          .when(col("p_present").isNull, Differ.OP_DELETE)
-          .when(changed, Differ.OP_UPDATE))
-      .filter(col("op").isNotNull)
-      .drop("p_present", "b_present")
   }
 }

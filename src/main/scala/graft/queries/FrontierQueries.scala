@@ -328,7 +328,7 @@ object FrontierQueries {
     * synthesized prior snapshot (every 7th doc not yet crawled → INSERT,
     * every 10th doc's text since edited → UPDATE, planted prior-only
     * docs → DELETE), rolled up to per-op counts. One full-outer PK join
-    * + null-safe struct compare — identical plan at any corpus size.
+    * + null-safe column compare — identical plan at any corpus size.
     */
   val q190: Q = (s, dir) => {
     val cur = Tables.documents(s, dir).select("doc_id", "text")

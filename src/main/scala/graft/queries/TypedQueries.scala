@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.TypedMode
+import graft.engine.{Differ, TypedMode}
 import graft.tools.DumpGen
 
 /** Typed native mode for dump data as a driver-checkable query: a dump
@@ -28,7 +28,7 @@ object TypedQueries {
       DumpGen.generatePkKeyed(s, dir, outDir, "orders", "o_orderkey")
     val ps = TypedMode.typedSnapshot(s, prod.toString)("orders")
     val bs = TypedMode.typedSnapshot(s, backup.toString)("orders")
-    TypedMode.typedDiff(ps, bs, Seq("o_orderkey"))
+    Differ.diff(ps, bs, Seq("o_orderkey"))
       .select(col("o_orderkey"), col("op"),
         col("p_o_totalprice").as("p_totalprice"),
         col("b_o_orderstatus").as("b_status"),

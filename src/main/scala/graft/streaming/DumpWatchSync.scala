@@ -24,10 +24,10 @@ import graft.sources.DumpSource
   *                    the batch CLI run on (arrival, previous arrival)
   *
   * Scale: the per-batch work is the batch engine's one-shuffle record
-  * classifier ([[graft.engine.SyncJob.recordDiff]]); snapshots are
-  * plain parquet (partitionable by table), and the stream source only
-  * carries file *metadata* — dump bytes are read by the splittable
-  * DumpSource, never through the stream.
+  * diff ([[graft.engine.Differ.classify]] on (table, pk) over `vals`);
+  * snapshots are plain parquet (partitionable by table), and the stream
+  * source only carries file *metadata* — dump bytes are read by the
+  * splittable DumpSource, never through the stream.
   */
 object DumpWatchSync {
 
@@ -178,8 +178,8 @@ object DumpWatchSync {
     // consume it, and recomputing means re-running the full-outer diff
     val ops = (prevSnapshot match {
       case Some(prev) =>
-        SyncJob.recordDiff(incoming, prev.select("table", "pk", "vals"))
-          .filter(col("op").isNotNull)
+        Differ.classify(incoming, prev.select("table", "pk", "vals"),
+          Seq("table", "pk"), Seq("vals")).filter(col("op").isNotNull)
           .select(col("table"), col("pk"), col("op"))
       case None =>
         incoming.select(col("table"), col("pk"), lit(Differ.OP_INSERT).as("op"))
@@ -249,7 +249,7 @@ object DumpWatchSync {
     // catalog sidecar: next batch's schema-drift baseline without
     // re-parsing this dump (written before LATEST so a reader of the
     // new LATEST always finds its catalog)
-    writeCatalogSidecar(spark, stateDir, newVersion, cat)
+    SyncJob.writeCatalog(spark, s"$stateDir/catalog_$newVersion", cat)
     ContentGate.writeSmall(stateDir, "LATEST", newVersion)
     } finally releases.foreach(r => r())
   }
@@ -264,18 +264,6 @@ object DumpWatchSync {
       .filter(v => fileSystem(stateDir)
         .exists(new HPath(stateDir, s"catalog_$v")))
       .map(v => SyncJob.readCatalog(spark, s"$stateDir/catalog_$v")._1)
-
-  private def writeCatalogSidecar(spark: SparkSession, stateDir: String,
-      version: String,
-      cat: scala.collection.immutable.ListMap[String, graft.model.TableMeta])
-      : Unit = {
-    import spark.implicits._
-    cat.toSeq.zipWithIndex.map { case ((t, m), i) =>
-      (i.toLong, t, m.columns, m.pkCols, m.createStmt, m.colTypes)
-    }.toDF("ord", "table", "columns", "pkCols", "createStmt", "colTypes")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/catalog_$version")
-  }
 
   /** Reclaim superseded per-version state. Every arrival writes a full
     * `snapshot_v<N>`, `stats_snapshot_v<N>` and

@@ -236,4 +236,35 @@ class BucketedSyncSpec extends SparkSuite {
       .map(o => (o.table, o.pk, o.op)).toSet
     assert(got == ref)
   }
+
+  test("--state rediff reads each catalog sidecar once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (pf, bf) = (tmpFile(prod), tmpFile(backup))
+    BucketedSync.snapshot(spark, pf, "bsync_rd_prod", buckets = 4)
+    BucketedSync.snapshot(spark, bf, "bsync_rd_backup", buckets = 4)
+    // every action whose plan scans a `<name>_cat` sidecar
+    val sidecarReads = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.collect { case r: LogicalRelation => r.relation }.exists {
+              case h: HadoopFsRelation =>
+                h.location.rootPaths.exists(_.getName.endsWith("_cat"))
+              case _ => false
+            }) sidecarReads.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      new SyncJob(spark).syncFromBucketed("bsync_rd_prod", "bsync_rd_backup",
+        pf, "SIDECAR-TEST")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // one catalog read per snapshot: the change gate takes the common
+    // tables from the restored catalogs instead of re-reading them
+    assert(sidecarReads.get == 2)
+  }
 }

@@ -61,12 +61,4 @@ class DifferSpec extends SparkSuite {
       backup, Differ.diff(prod, backup, Seq("o_orderkey")), Seq("o_orderkey"))
     assert(merged.exceptAll(prod).isEmpty && prod.exceptAll(merged).isEmpty)
   }
-
-  test("catalogDiff: CREATE and DROP sets") {
-    val p = Seq("a", "b").toDF("table")
-    val b = Seq("b", "c").toDF("table")
-    val got = Differ.catalogDiff(p, b).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(got == Set(("a", "CREATE"), ("c", "DROP")))
-  }
 }

@@ -42,6 +42,19 @@ class PlanAssertSpec extends SparkSuite {
     assert(exchanges <= 2, s"expected <=2 hash exchanges, got $exchanges:\n" + p.take(4000))
   }
 
+  test("q39 typed diff is the q06 join: one full outer, one key shuffle per side") {
+    val p = executed("q39_typed_dump_diff")
+    val fullOuter = p.linesIterator.count(_.contains("FullOuter"))
+    assert(fullOuter == 1, s"expected one full-outer join, got $fullOuter:\n" + p.take(4000))
+    // each side shuffles once on (table, pk) for the last-wins dedup and
+    // once on the typed key for the join
+    def hashEx(key: String) =
+      p.linesIterator.count(_.contains(s"Exchange hashpartitioning($key"))
+    assert(hashEx("o_orderkey") <= 2 && hashEx("table") <= 2,
+      s"expected <=2 hash exchanges per key, got ${hashEx("o_orderkey")} " +
+        s"on o_orderkey and ${hashEx("table")} on (table, pk):\n" + p.take(4000))
+  }
+
   test("hot scalar queries stay inside whole-stage codegen") {
     // an unexecuted adaptive plan reports zero codegen subtrees — plan
     // these without AQE to see the static codegen structure

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.TypedMode
+import graft.engine.{Differ, TypedMode}
 import graft.parse.DumpParser
 import graft.tools.DumpGen
 
@@ -87,7 +87,7 @@ class TypedModeSpec extends SparkSuite {
       spark, sf, dir, "orders", "o_orderkey")
     val ps = TypedMode.typedSnapshot(spark, prod.toString)("orders")
     val bs = TypedMode.typedSnapshot(spark, backup.toString)("orders")
-    val diff = TypedMode.typedDiff(ps, bs, Seq("o_orderkey")).cache()
+    val diff = Differ.diff(ps, bs, Seq("o_orderkey")).cache()
     val src = Tables.orders(spark, sf)
     val expIns = src.filter(col("o_orderkey") % 20 === 0).count()
     val expUpd = src.filter(col("o_orderkey") % 20 === 1).count()
@@ -120,10 +120,40 @@ class TypedModeSpec extends SparkSuite {
     val ps = TypedMode.typedSnapshot(spark, f(prod))("acct")
     val bs = TypedMode.typedSnapshot(spark, f(backup))("acct")
     assert(ps.schema("bal").dataType == DecimalType(10, 2))
-    val ops = TypedMode.typedDiff(ps, bs, Seq("id"))
+    val ops = Differ.diff(ps, bs, Seq("id"))
       .select("id", "op").collect().map(r => (r.getLong(0), r.getString(1)))
     // 1.50 == 1.5 under DECIMAL semantics (the compat engine's raw-string
     // diff marks it UPDATE); 2.00 vs 2.01 is a real change
     assert(ops.toSeq == Seq((2L, "UPDATE")))
+  }
+
+  test("typed diff of a table whose columns are all primary key") {
+    // a composite-key link table has no value column: rows only come
+    // and go, so the diff is INSERTs and DELETEs and never an UPDATE.
+    // The dump's record key of a composite PK falls back to the first
+    // value (reference parity), so each dump holds distinct `a` values.
+    val d =
+      """CREATE TABLE `link` (
+        |  `a` INT(11),
+        |  `b` INT(11),
+        |  PRIMARY KEY (`a`,`b`)
+        |) ENGINE=InnoDB;
+        |""".stripMargin
+    def f(text: String) = {
+      val p = Files.createTempFile("typed_link", ".sql")
+      Files.write(p, text.getBytes("UTF-8"))
+      p.toString
+    }
+    val prod = d + "INSERT INTO `link` (`a`, `b`) VALUES\n" +
+      "(1, 10),\n(2, 20),\n(4, 40),\n(5, 50);\n"
+    val backup = d + "INSERT INTO `link` (`a`, `b`) VALUES\n" +
+      "(1, 10),\n(2, 20),\n(3, 30),\n(5, 51);\n"
+    val ps = TypedMode.typedSnapshot(spark, f(prod))("link")
+    val bs = TypedMode.typedSnapshot(spark, f(backup))("link")
+    val ops = Differ.diff(ps, bs, Seq("a", "b"))
+      .select("a", "b", "op").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(ops == Set((4L, 40L, "INSERT"), (5L, 50L, "INSERT"),
+      (3L, 30L, "DELETE"), (5L, 51L, "DELETE")))
   }
 }
