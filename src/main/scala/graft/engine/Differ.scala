@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * [[classify]] is the one full-outer key join of the engine. Its callers:
   * the sync core's record diff ([[SyncJob]]'s dump pipeline,
   * [[BucketedSync.diff]] and the dump watcher, on (table, pk) over
-  * `vals`), [[diff]] (q06/q11/q12/q190, [[mergeApply]] and typed mode's
-  * q39), the SCD-2 advance ([[Scd.advance]], q103 and the watcher's
-  * history) and aggregate maintenance ([[Ivm.aggDeltas]], q91).
+  * `vals` — the watcher's script, op log, stats and SCD-2 history all
+  * read its one diff per arrival), [[diff]] (q06/q11/q12/q190,
+  * [[mergeApply]] and typed mode's q39), the SCD-2 advance
+  * ([[Scd.advance]], q103) and aggregate maintenance
+  * ([[Ivm.aggDeltas]], q91).
   *
   * A value differs under Spark's null-safe `<=>`, which reproduces the
   * reference's string equality with NULL == NULL (sync.py:217-226) on

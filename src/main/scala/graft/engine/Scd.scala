@@ -62,12 +62,8 @@ object Scd {
     * version — the IVM formulation of [[scd2]]: closed runs pass through
     * untouched, and the OPEN runs meet the new snapshot in the engine's
     * keyed classifier ([[Differ.classify]], snapshot as production, open
-    * runs as backup, compared on `valCols`), whose `op` decides each pk:
-    *
-    *  - null (values null-safe equal) → run stays open;
-    *  - DELETE (open but absent from the snapshot) → close at `newVer`;
-    *  - UPDATE (values differ) → close at `newVer` AND open a fresh run;
-    *  - INSERT (snapshot-only, incl. reinsert) → open a fresh run at `newVer`.
+    * runs as backup, compared on `valCols`), whose classified rows
+    * [[outcome]] turns into runs.
     *
     * Cost is O(open runs + snapshot rows) per version — history depth
     * never rescans — vs [[scd2]]'s O(pks × versions) grid; fold it over
@@ -88,6 +84,28 @@ object Scd {
       .select(pkCols.map(col) ++ valCols.map(col) :+ col("ver_from"): _*)
     val j = Differ.classify(snap.select((pkCols ++ valCols).map(col): _*),
       open, pkCols, valCols)
+    closed.select(pkCols.map(col) ++ valCols.map(col) :+
+      col("ver_from") :+ col("ver_to"): _*)
+      .unionByName(outcome(j, newVer, pkCols, valCols))
+  }
+
+  /** The runs one version's classified rows emit: `j` is a
+    * [[Differ.classify]] frame of the version-`newVer` snapshot
+    * (production) against the open runs (backup, with `ver_from`), and
+    * each key's `op` decides its rows:
+    *
+    *  - null (values null-safe equal) → run stays open;
+    *  - DELETE (open but absent from the snapshot) → close at `newVer`;
+    *  - UPDATE (values differ) → close at `newVer` AND open a fresh run;
+    *  - INSERT (snapshot-only, incl. reinsert) → open a fresh run at `newVer`.
+    *
+    * Output: pkCols, valCols, `ver_from`, `ver_to` (NULL while open),
+    * then each `carry` column copied from the snapshot side (NULL where
+    * the key left it) — the dump watcher carries its script order keys
+    * onto the open runs it stores as its next snapshot.
+    */
+  def outcome(j: DataFrame, newVer: Long, pkCols: Seq[String],
+      valCols: Seq[String], carry: Seq[String] = Nil): DataFrame = {
     def snapCol(c: String) = col(Differ.ProdPrefix + c)
     def runCol(c: String) = col(Differ.BackupPrefix + c)
     // ONE scan of the join: each key emits its outcome rows as an array
@@ -96,21 +114,20 @@ object Scd {
     // a 3× join re-evaluation that compounds multiplicatively when
     // advances are folded over a version sequence.
     def runRow(vals: Seq[Column], vf: Column, vt: Column): Column =
-      struct(valCols.zip(vals).map { case (n, c) => c.as(n) } :+
-        vf.as("ver_from") :+ vt.as("ver_to"): _*)
+      struct((valCols.zip(vals).map { case (n, c) => c.as(n) } :+
+        vf.as("ver_from") :+ vt.as("ver_to")) ++
+        carry.map(c => snapCol(c).as(c)): _*)
     val nullVer = lit(null).cast("long")
     val cont = runRow(valCols.map(runCol), runCol("ver_from"), nullVer)
     val close = runRow(valCols.map(runCol), runCol("ver_from"), lit(newVer))
     val opened = runRow(valCols.map(snapCol), lit(newVer), nullVer)
-    val outcome = when(col("op").isNull, array(cont))
+    val rows = when(col("op").isNull, array(cont))
       .when(col("op") === Differ.OP_UPDATE, array(close, opened))
       .when(col("op") === Differ.OP_DELETE, array(close))
       .otherwise(array(opened))
-    val advanced = j.select(pkCols.map(col) :+ explode(outcome).as("__r"): _*)
-      .select(pkCols.map(col) ++
-        (valCols :+ "ver_from" :+ "ver_to").map(f => col(s"__r.$f").as(f)): _*)
-    closed.select(pkCols.map(col) ++ valCols.map(col) :+
-      col("ver_from") :+ col("ver_to"): _*).unionByName(advanced)
+    j.select(pkCols.map(col) :+ explode(rows).as("__r"): _*)
+      .select(pkCols.map(col) ++ (valCols ++ Seq("ver_from", "ver_to") ++ carry)
+        .map(f => col(s"__r.$f").as(f)): _*)
   }
 
   /** Fold [[advance]] over a sequence of `(version, snapshot)` arrivals.

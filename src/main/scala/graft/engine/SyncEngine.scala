@@ -105,7 +105,8 @@ class SyncJob(spark: SparkSession) {
   import spark.implicits._
 
   /** Parse the catalog: collect only CREATE-shaped statements (cheap
-    * distributed prefilter), then parse driver-side in offset order.
+    * distributed prefilter), then sort and parse them driver-side in
+    * offset order — a handful of rows, so one job and no range sort.
     */
   def catalog(stmts: Dataset[Stmt]): ListMap[String, TableMeta] =
     catalogInfo(stmts).metas
@@ -116,8 +117,7 @@ class SyncJob(spark: SparkSession) {
   private[graft] def catalogInfo(stmts: Dataset[Stmt]): SyncJob.CatalogInfo = {
     val creates = stmts
       .filter(col("text").rlike("(?is)^\\s*CREATE\\s+TABLE"))
-      .orderBy("off")
-      .collect()
+      .collect().sortBy(_.off)
     val metas = DumpParser.parseCatalog(creates.iterator.map(_.text))
     val firstCreatePos = creates.headOption.map { st =>
       val m = "(?i)CREATE TABLE".r.findFirstMatchIn(st.text)
@@ -199,24 +199,31 @@ class SyncJob(spark: SparkSession) {
       now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
       : (SyncOutcome, Option[String]) = {
     val d = prepare(prodPath, backupPath)
-    try {
-      val out = new Path(outPath)
-      val partsDir = outPath + ".parts"
-      val fs = fsOf(out)
-      if (d.fitsDriver(maxCollectedOps)) {
-        val lines = d.lines(now).collect()
-        // raw (checksum-free) create: the script is a user-facing file,
-        // not internal state — no .crc sidecar
-        writeLines(graft.operators.ContentGate.rawFs(fs), out, lines,
-          terminated = false)
-        fs.delete(new Path(partsDir), true)
-        (d.outcome, None)
-      } else {
-        d.lines(now).write.mode("overwrite").text(partsDir)
-        fs.delete(out, false)
-        (d.outcome, Some(partsDir))
-      }
-    } finally d.release()
+    try (d.outcome, syncAuto(d, outPath, outPath + ".parts", now, maxCollectedOps))
+    finally d.release()
+  }
+
+  /** The size-routed sink of a [[Prepared]] diff: the collected script
+    * at `outPath`, or the sorted text parts under `partsDir` (returned).
+    * The dump watcher renders its per-arrival scripts through here.
+    */
+  private[graft] def syncAuto(d: Prepared, outPath: String, partsDir: String,
+      now: String, maxCollectedOps: Long): Option[String] = {
+    val out = new Path(outPath)
+    val fs = fsOf(out)
+    if (d.fitsDriver(maxCollectedOps)) {
+      val lines = d.lines(now).collect()
+      // raw (checksum-free) create: the script is a user-facing file,
+      // not internal state — no .crc sidecar
+      writeLines(graft.operators.ContentGate.rawFs(fs), out, lines,
+        terminated = false)
+      fs.delete(new Path(partsDir), true)
+      None
+    } else {
+      d.lines(now).write.mode("overwrite").text(partsDir)
+      fs.delete(out, false)
+      Some(partsDir)
+    }
   }
 
   /** The full script as sorted part files under `outDir` that
@@ -250,7 +257,7 @@ class SyncJob(spark: SparkSession) {
     * route starts from. `release` drops its caches once the route has
     * consumed the joined frame.
     */
-  private final class Prepared(val joined: DataFrame,
+  private[graft] final class Prepared(val joined: DataFrame,
       val outcome: SyncOutcome, val release: () => Unit) {
     def lines(now: String): Dataset[String] = scriptLines(joined, outcome, now)
 
@@ -448,20 +455,21 @@ class SyncJob(spark: SparkSession) {
         records(stmts, info.metas).filter(col("table").isInCollection(common))
       (prod, backup, (common: Seq[String]) => Differ.classify(
         recs(scans(0), prod, common), recs(scans(1), backup, common),
-        Seq("table", "pk"), Seq("vals")))
+        Seq("table", "pk"), Seq("vals")).cache())
     }
   }
 
   /** One diff summarized for the script routes, whatever produced it:
     * the two catalogs' common/missing/extra table split, the record diff
-    * of the common tables (cached, because the stats aggregate and the
-    * script both read it), the CREATE sections and the per-table stats.
+    * of the common tables (which the source caches or reads from a
+    * cache, because the stats aggregate and the script both read it),
+    * the CREATE sections and the per-table stats.
     * Catalogs that carry record counts (snapshot sidecars) supply the
     * stats' table totals, so a diff holding only changed rows still
     * reports every common table. `cached` and the diff are released on
     * failure, or by the caller through [[Prepared.release]].
     */
-  private def summarize(prodPath: String, cached: Seq[Dataset[_]])(
+  private[graft] def summarize(prodPath: String, cached: Seq[Dataset[_]])(
       source: => (SyncJob.CatalogInfo, SyncJob.CatalogInfo,
         Seq[String] => DataFrame)): Prepared = {
     val held = scala.collection.mutable.ArrayBuffer[Dataset[_]](cached: _*)
@@ -473,7 +481,7 @@ class SyncJob(spark: SparkSession) {
       val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
       val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
 
-      val joined = diff(commonTables).cache()
+      val joined = diff(commonTables)
       // released before the scans it is built on: uncaching a frame
       // re-plans the still-cached frames that depend on it
       held.prepend(joined)
@@ -614,7 +622,7 @@ class SyncJob(spark: SparkSession) {
       BucketedSync.catalogInfoOf(spark, prodTable),
       BucketedSync.catalogInfoOf(spark, backupTable),
       (common: Seq[String]) =>
-        BucketedSync.diffChanged(spark, prodTable, backupTable, common)))
+        BucketedSync.diffChanged(spark, prodTable, backupTable, common).cache()))
     try (d.outcome, d.lines(now).collect().mkString("\n"))
     finally d.release()
   }
@@ -688,7 +696,7 @@ object SyncJob {
     */
   private[graft] def readCatalog(spark: SparkSession, path: String)
       : (ListMap[String, TableMeta], Array[Row]) = {
-    val rows = spark.read.parquet(path).orderBy("ord").collect()
+    val rows = spark.read.parquet(path).collect().sortBy(_.getAs[Long]("ord"))
     (ListMap(rows.map { r =>
       val t = r.getAs[String]("table")
       t -> TableMeta(t, r.getAs[Seq[String]]("columns").toIndexedSeq,

@@ -1,11 +1,16 @@
 package graft.streaming
 
+import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.storage.StorageLevel
 
-import graft.engine.{Differ, SyncJob}
+import graft.engine.{Differ, Ivm, Scd, SchemaDiff, SyncJob}
+import graft.model.TableMeta
 import graft.operators.ContentGate
 import graft.sources.DumpSource
 
@@ -16,18 +21,30 @@ import graft.sources.DumpSource
   * the reference's two-snapshot batch semantics, repeated per arrival.
   *
   * State layout (all parquet under `stateDir`):
-  *   snapshot_v<N>/   records of the last-applied dump (table, pk, vals)
+  *   snapshot_v<N>/   records of the last-applied dump: (table, pk,
+  *                    ord_off, ord_row, vals, ver_from) — the script
+  *                    order keys of [[graft.engine.SyncJob.records]]
+  *                    and the start of each row's open SCD-2 run
+  *   catalog_snapshot_v<N>/       that dump's catalog sidecar
+  *   stats_snapshot_v<N>/         maintained per-table row counts
+  *   history_open_snapshot_v<N>/  open SCD-2 runs (the snapshot's
+  *                                table, pk, vals, ver_from; ver_to NULL)
+  *   history_closed/  append-only closed SCD-2 runs
   *   LATEST           text file naming the current snapshot version
-  *   LATEST_DUMP      text file naming the last-applied dump file
+  *   LATEST_DUMP      text file naming the last-applied dump file (read
+  *                    only to upgrade a snapshot without order keys)
   *   ops/             append-only op log with batch_id + source file
+  *   schema_changes/  column-level DDL drift between consecutive arrivals
   *   scripts/         per-arrival full sync scripts, byte-identical to
   *                    the batch CLI run on (arrival, previous arrival)
   *
-  * Scale: the per-batch work is the batch engine's one-shuffle record
-  * diff ([[graft.engine.Differ.classify]] on (table, pk) over `vals`);
-  * snapshots are plain parquet (partitionable by table), and the stream
-  * source only carries file *metadata* — dump bytes are read by the
-  * splittable DumpSource, never through the stream.
+  * Scale: each arriving dump is parsed once, and ONE record diff
+  * ([[graft.engine.Differ.classify]] on (table, pk) over `vals`) of it
+  * against the snapshot feeds everything the arrival writes; the
+  * previous dump is never re-read. Snapshots are plain parquet
+  * (partitionable by table), and the stream source only carries file
+  * *metadata* — dump bytes are read by the splittable DumpSource, never
+  * through the stream.
   */
 object DumpWatchSync {
 
@@ -58,212 +75,202 @@ object DumpWatchSync {
       scriptTs: String = "STREAM"): Unit =
     processBatch(spark, Seq(dumpPath), stateDir, batchId, emitScripts, scriptTs)
 
-  /** Process one micro-batch of arrivals (oldest first). A burst of N
-    * queued dumps used to serialize N full diff+snapshot+script jobs on
-    * the driver; instead:
+  /** Process one micro-batch of arrivals (oldest first):
     *
-    *  - per-arrival SCRIPTS keep their contract — one script per
-    *    consecutive (previous, arriving) pair, each byte-identical to the
-    *    batch CLI on that pair — but the N independent script jobs are
-    *    submitted CONCURRENTLY (Spark schedules jobs from multiple
-    *    driver threads fine; syncDistributed touches no session-level
-    *    mutable state);
-    *  - the snapshot / op-log / maintained-stats advance is COALESCED to
-    *    latest-wins: one diff of (previous snapshot → newest dump). The
-    *    op log then carries the burst's NET row changes (a row inserted
-    *    by dump 2 and deleted by dump 5 never surfaces), which is
-    *    exactly the semantics of diffing snapshots — the intermediate
-    *    dumps were never "current" for any downstream reader;
+    *  - per-arrival SCRIPTS: one per consecutive (previous, arriving)
+    *    pair, each byte-identical to the batch CLI on that pair, rendered
+    *    in order from the pair's record diff. The first pair's backup
+    *    side is the snapshot, each later pair's the previous arrival's
+    *    records;
+    *  - the snapshot / op-log / stats / SCD-2 advance is COALESCED to
+    *    latest-wins: all of it reads one diff of (newest dump, snapshot) —
+    *    for a single arrival, its script's diff. The op log then carries
+    *    the burst's NET row changes (a row inserted by dump 2 and deleted
+    *    by dump 5 never surfaces), which is exactly the semantics of
+    *    diffing snapshots — the intermediate dumps were never "current"
+    *    for any downstream reader;
     *  - schema drift stays per consecutive pair (the alert channel must
     *    not skip a migration that appeared and was reverted mid-burst).
+    *
+    * Each arriving dump's statement scan is read once and cached: its
+    * catalog, its records and its drift baseline all come from it. The
+    * first arrival diffs against an empty snapshot.
     */
   def processBatch(spark: SparkSession, dumpPaths: Seq[String],
       stateDir: String, batchId: Long, emitScripts: Boolean = true,
       scriptTs: String = "STREAM"): Unit = {
     if (dumpPaths.isEmpty) return
     val job = new SyncJob(spark)
-    val prevDump = readLatestDump(stateDir)
-    val chain = prevDump.toSeq ++ dumpPaths
-
-    if (emitScripts && chain.size >= 2) {
-      val fsys = fileSystem(stateDir)
-      fsys.mkdirs(new HPath(stateDir, "scripts"))
-      val pairs = chain.sliding(2).toSeq
-        .collect { case Seq(prev, cur) => (prev, cur) }.zipWithIndex
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, pairs.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val renders = pairs.map { case ((prev, cur), i) =>
-          scala.concurrent.Future {
-            // per-render parts dir under the stateDir (unique per
-            // batch×pair), so the whole script path — distributed
-            // render, concatenation, final script — lives on ONE FS
-            val partsDir =
-              f"$stateDir/_script_parts/b$batchId%05d_$i%03d"
-            job.syncDistributed(cur, prev, partsDir, scriptTs)
-            val name =
-              f"sync_b$batchId%05d_$i%03d_${new HPath(cur).getName}.sql"
-            writeConcatenated(fsys, partsDir, s"$stateDir/scripts/$name")
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(renders),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    }
-
-    // schema-drift log: column-level DDL changes between consecutive
-    // arrivals (engine.SchemaDiff — added/dropped/retyped columns, PK
-    // changes) appended to `stateDir/schema_changes/`. This is the alert
-    // channel that surfaces an unreviewed migration the moment it lands.
-    // Each ARRIVING dump's catalog is parsed ONCE here (and the newest
-    // one feeds the snapshot path below); the PREVIOUS dump's catalog
-    // comes from the sidecar the last batch wrote — pre-sidecar state
-    // dirs fall back to one re-parse of the previous dump. Before this,
-    // the per-pair diffDumps re-parsed both sides of every pair: ~3
-    // full-text parses per steady-state arrival on this path alone.
-    // the newest dump's statements frame is cached: its catalog job
-    // materializes it and the records build below reads the cache — one
-    // text parse for the whole snapshot path instead of two
-    val lastStmts = DumpSource.statements(spark, dumpPaths.last)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     // per-batch caches are released even when a stage throws — a batch
     // API caller catching the failure must not accumulate orphaned
-    // cached frames across retries (`incoming`/`ops` register here as
-    // soon as they persist)
-    val releases = scala.collection.mutable.ArrayBuffer[() => Unit](
-      () => { lastStmts.unpersist(); () })
+    // cached frames across retries
+    val held = ArrayBuffer[Dataset[_]]()
+    def cached[T](ds: Dataset[T]): Dataset[T] = {
+      held += ds
+      ds.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    def release(ds: Seq[Dataset[_]]): Unit =
+      ds.foreach { d => d.unpersist(); held -= d }
+    def diff(prod: DataFrame, backup: DataFrame): DataFrame =
+      cached(Differ.classify(prod, backup, Seq("table", "pk"), Seq("vals")))
     try {
-    val arrivalCats = dumpPaths.map { p =>
-      if (p == dumpPaths.last) p -> job.catalog(lastStmts)
-      else p -> job.catalog(DumpSource.statements(spark, p))
-    }
-    val prevCat = prevDump.map { p =>
-      p -> readCatalogSidecar(spark, stateDir).getOrElse(
-        job.catalog(DumpSource.statements(spark, p)))
-    }
-    (prevCat.toSeq ++ arrivalCats).sliding(2).foreach {
-      case Seq((_, prev), (cur, curCat)) =>
-        val changes = graft.engine.SchemaDiff.changes(curCat, prev)
-        if (changes.nonEmpty) {
-          import spark.implicits._
-          changes.toDF()
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("source_file", lit(cur))
-            .write.mode(SaveMode.Append).parquet(s"$stateDir/schema_changes")
+      val latest = readLatest(stateDir)
+      val snapshot = latest.map(previous(spark, job, stateDir, _, cached(_)))
+      // the next pair's backup side (catalog, records), its diff, and the
+      // caches of the arrival before it
+      var backup = snapshot
+      var pair = Option.empty[DataFrame]
+      var older = Seq.empty[Dataset[_]]
+      val burst = dumpPaths.size > 1
+      dumpPaths.zipWithIndex.foreach { case (path, i) =>
+        val stmts = cached(DumpSource.statements(spark, path))
+        val info = job.catalogInfo(stmts)
+        // a burst reads each arrival's records twice: as production of
+        // its own pair and as backup of the next
+        val recs = job.records(stmts, info.metas)
+        val kept = if (burst) cached(recs) else recs
+        // schema-drift log: column-level DDL changes (engine.SchemaDiff —
+        // added/dropped/retyped columns, PK changes) appended to
+        // `stateDir/schema_changes/`, the alert channel that surfaces an
+        // unreviewed migration the moment it lands
+        for ((backupCat, _) <- backup) {
+          val changes = SchemaDiff.changes(info.metas, backupCat)
+          if (changes.nonEmpty) {
+            import spark.implicits._
+            changes.toDF()
+              .withColumn("batch_id", lit(batchId))
+              .withColumn("source_file", lit(path))
+              .write.mode(SaveMode.Append).parquet(s"$stateDir/schema_changes")
+          }
         }
-      case _ => ()
+        pair = for ((backupCat, backupRecs) <- backup if emitScripts) yield {
+          val d = diff(kept, backupRecs)
+          // scripts are numbered by pair along (snapshot, arrivals...)
+          val n = i + snapshot.size - 1
+          writeScript(job, stateDir, f"b$batchId%05d_$n%03d", path, info,
+            backupCat, d, scriptTs)
+          d
+        }
+        // rendered: the previous arrival's caches go, and a burst's pair
+        // diff too (the state diff below is its own)
+        release((if (burst) pair.toSeq else Nil) ++ older)
+        older = Seq(kept, stmts)
+        backup = Some(info.metas -> kept)
+      }
+      val (cat, recs) = backup.get
+      val base = snapshot.fold( // the first arrival's: empty
+        recs.limit(0).withColumn("ver_from", lit(null).cast("long")))(_._2)
+      val state = pair.filterNot(_ => burst).getOrElse(diff(recs, base))
+      writeState(spark, stateDir, latest, batchId, dumpPaths.last, cat, state)
+    } finally held.reverseIterator.foreach(_.unpersist())
+  }
+
+  /** The current snapshot as the backup side of the next diff: its
+    * catalog from the `catalog_<version>` sidecar, and its records with
+    * their order keys and SCD-2 run starts. A snapshot written before
+    * those columns were stored holds only (table, pk, vals): its records
+    * come from one re-parse of `LATEST_DUMP`, their run starts from
+    * `history_open_<version>`, and a state dir from before catalog
+    * sidecars takes the catalog from that parse too.
+    */
+  private def previous(spark: SparkSession, job: SyncJob, stateDir: String,
+      version: String, cached: DataFrame => DataFrame)
+      : (ListMap[String, TableMeta], DataFrame) = {
+    val snap = spark.read.parquet(s"$stateDir/$version")
+    val sidecar = s"$stateDir/catalog_$version"
+    if (snap.columns.contains("ver_from"))
+      (SyncJob.readCatalog(spark, sidecar)._1, snap)
+    else {
+      val dump = readLatestDump(stateDir).getOrElse(throw new IllegalStateException(
+        s"$stateDir/$version stores no order keys and LATEST_DUMP is missing"))
+      val stmts = DumpSource.statements(spark, dump)
+      val cat =
+        if (fileSystem(stateDir).exists(new HPath(sidecar)))
+          SyncJob.readCatalog(spark, sidecar)._1
+        else job.catalog(stmts)
+      val starts = spark.read.parquet(s"$stateDir/history_open_$version")
+        .select("table", "pk", "ver_from")
+      (cat, cached(job.records(stmts, cat).join(starts, Seq("table", "pk"), "left")))
     }
+  }
 
-    // snapshot / op log / stats: latest-wins — only the newest dump
-    // becomes current state; the diff below carries the burst's net ops.
-    // `incoming` is CACHED for the batch: it has up to four consumers
-    // (op diff, stats seed, SCD-2 advance, the snapshot write) and each
-    // would otherwise re-run the full dump parse — measured at ~100 MB
-    // of text per re-read, the entry's dominant cost and its noise
-    // source (page-cache sensitivity × re-parses).
-    val dumpPath = dumpPaths.last
-    val cat = arrivalCats.last._2
-    val incoming = job.records(lastStmts, cat)
-      .select("table", "pk", "vals")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    releases += (() => { incoming.unpersist(); () })
+  /** One pair's script, rendered from its record diff into `scripts/`
+    * through the sync core's summary and size-routed sink. Only the
+    * parts route stages text parts, under `_script_parts/`, and
+    * concatenates them.
+    */
+  private def writeScript(job: SyncJob, stateDir: String, tag: String,
+      prodPath: String, prod: SyncJob.CatalogInfo,
+      backupCat: ListMap[String, TableMeta], diff: DataFrame,
+      now: String): Unit = {
+    val target = s"$stateDir/scripts/sync_${tag}_${new HPath(prodPath).getName}.sql"
+    val d = job.summarize(prodPath, Nil)((prod,
+      SyncJob.CatalogInfo(backupCat, None, Map.empty),
+      common => diff.filter(col("table").isInCollection(common))))
+    job.syncAuto(d, target, s"$stateDir/_script_parts/$tag", now,
+      SyncJob.DefaultMaxCollectedOps)
+      .foreach(writeConcatenated(fileSystem(stateDir), _, target))
+  }
 
-    val prevSnapshot: Option[DataFrame] = readLatest(stateDir)
-      .map(v => spark.read.parquet(s"$stateDir/$v"))
-
-    // ops is cached too: the op-log append and the stats delta both
-    // consume it, and recomputing means re-running the full-outer diff
-    val ops = (prevSnapshot match {
-      case Some(prev) =>
-        Differ.classify(incoming, prev.select("table", "pk", "vals"),
-          Seq("table", "pk"), Seq("vals")).filter(col("op").isNotNull)
-          .select(col("table"), col("pk"), col("op"))
-      case None =>
-        incoming.select(col("table"), col("pk"), lit(Differ.OP_INSERT).as("op"))
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    releases += (() => { ops.unpersist(); () })
-
-    ops
+  /** Everything an arrival writes, from its one diff `state` of (newest
+    * dump, snapshot): the op log, the maintained stats, the SCD-2 runs
+    * and the next snapshot, then the markers.
+    */
+  private def writeState(spark: SparkSession, stateDir: String,
+      latest: Option[String], batchId: Long, dumpPath: String,
+      cat: ListMap[String, TableMeta], state: DataFrame): Unit = {
+    val ops = state.filter(col("op").isNotNull)
+    ops.select(col("table"), col("pk"), col("op"))
       .withColumn("batch_id", lit(batchId))
       .withColumn("source_file", lit(dumpPath))
       .write.mode(SaveMode.Append).parquet(s"$stateDir/ops")
 
     // maintained per-table row counts (engine.Ivm): advanced from the op
-    // delta alone — O(changed rows) per arrival, no snapshot rescan. The
-    // first arrival seeds from the incoming records; every later arrival
-    // folds +INSERT/−DELETE into the previous stats version.
-    val prevStats: Option[DataFrame] = readLatest(stateDir)
-      .filter(v => fileSystem(stateDir)
-        .exists(new HPath(stateDir, s"stats_$v")))
-      .map(v => spark.read.parquet(s"$stateDir/stats_$v"))
+    // delta alone — O(changed rows) per arrival, no snapshot rescan. A
+    // state dir without a previous stats version counts the arrival.
+    val prevStats = latest.map(v => s"$stateDir/stats_$v")
+      .filter(p => fileSystem(stateDir).exists(new HPath(p)))
     val newStats = prevStats match {
-      case Some(ps) =>
+      case Some(p) =>
         val dn = ops.groupBy(col("table").as("g"))
           .agg(sum(when(col("op") === Differ.OP_INSERT, 1L)
             .when(col("op") === Differ.OP_DELETE, -1L)
             .otherwise(0L)).as("dn"))
-        graft.engine.Ivm.maintainCounts(ps, dn)
+        Ivm.maintainCounts(spark.read.parquet(p), dn)
       case None =>
-        incoming.groupBy(col("table").as("g")).agg(count(lit(1)).as("n"))
+        state.filter(col("p_present").isNotNull)
+          .groupBy(col("table").as("g")).agg(count(lit(1)).as("n"))
     }
     newStats.write.mode(SaveMode.Overwrite)
       .parquet(s"$stateDir/stats_snapshot_v$batchId")
 
-    // maintained SCD-2 history (engine.Scd.advance): the temporal layer,
-    // advanced per arrival from the OPEN runs + the incoming snapshot —
-    // O(open + snapshot) per batch, never a rescan of the version stack.
-    // Storage matches the compute bound: runs CLOSED this batch append
-    // to an immutable log (closed runs never change again), and only the
-    // open-run frame — bounded by the live table size — is rewritten.
-    // Full history = history_closed ∪ history_open_<latest>. The CLI's
-    // stack replay (Scd.historyFromState) stays the manifest-free
-    // fallback; DumpWatchSync-fed state dirs keep both paths equal
-    // (ScdSpec pins it).
-    val openPrev: Option[DataFrame] = readLatest(stateDir)
-      .filter(v => fileSystem(stateDir)
-        .exists(new HPath(stateDir, s"history_open_$v")))
-      .map(v => spark.read.parquet(s"$stateDir/history_open_$v"))
-    val advanced = (openPrev match {
-      case Some(h) => graft.engine.Scd.advance(h, incoming, batchId,
-        Seq("table", "pk"), Seq("vals"))
-      case None => incoming.select(col("table"), col("pk"), col("vals"),
-        lit(batchId).as("ver_from"), lit(null).cast("long").as("ver_to"))
-    }).cache() // two consumers below — diff once, not twice
-    try {
-      advanced.filter(col("ver_to").isNotNull)
-        .write.mode(SaveMode.Append).parquet(s"$stateDir/history_closed")
-      advanced.filter(col("ver_to").isNull)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$stateDir/history_open_snapshot_v$batchId")
-    } finally advanced.unpersist()
-
-    // always track the last-applied dump, so the schema-drift log works
-    // with emitScripts off (the at-scale watcher default elsewhere)
-    ContentGate.writeSmall(stateDir, "LATEST_DUMP", dumpPath)
-
+    // maintained SCD-2 history (engine.Scd.outcome): the snapshot's rows
+    // carry their open run's start, so the one diff is also the SCD-2
+    // step — O(snapshot) per batch, never a rescan of the version stack.
+    // Runs CLOSED this batch append to an immutable log (closed runs
+    // never change again), and the open runs, with the arrival's order
+    // keys, are the next snapshot. Full history = history_closed ∪
+    // history_open_<latest>. The CLI's stack replay
+    // (Scd.historyFromState) stays the manifest-free fallback;
+    // watcher-fed state dirs keep both paths equal (ScdSpec pins it).
+    val runs = Scd.outcome(state, batchId, Seq("table", "pk"), Seq("vals"),
+      carry = Seq("ord_off", "ord_row"))
+    runs.filter(col("ver_to").isNotNull).drop("ord_off", "ord_row")
+      .write.mode(SaveMode.Append).parquet(s"$stateDir/history_closed")
+    val open = runs.filter(col("ver_to").isNull)
     val newVersion = s"snapshot_v$batchId"
-    incoming.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/$newVersion")
-    // catalog sidecar: next batch's schema-drift baseline without
-    // re-parsing this dump (written before LATEST so a reader of the
-    // new LATEST always finds its catalog)
+    open.select("table", "pk", "ord_off", "ord_row", "vals", "ver_from")
+      .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/$newVersion")
+    open.drop("ord_off", "ord_row").write.mode(SaveMode.Overwrite)
+      .parquet(s"$stateDir/history_open_$newVersion")
+
+    ContentGate.writeSmall(stateDir, "LATEST_DUMP", dumpPath)
+    // catalog sidecar: the next batch's backup catalog and schema-drift
+    // baseline (written before LATEST so a reader of the new LATEST
+    // always finds its catalog)
     SyncJob.writeCatalog(spark, s"$stateDir/catalog_$newVersion", cat)
     ContentGate.writeSmall(stateDir, "LATEST", newVersion)
-    } finally releases.foreach(r => r())
   }
-
-  /** The newest snapshot's dump catalog from its sidecar, if the state
-    * dir has one (pre-round-15 state dirs don't — callers fall back to
-    * re-parsing the previous dump).
-    */
-  private def readCatalogSidecar(spark: SparkSession, stateDir: String)
-      : Option[scala.collection.immutable.ListMap[String, graft.model.TableMeta]] =
-    readLatest(stateDir)
-      .filter(v => fileSystem(stateDir)
-        .exists(new HPath(stateDir, s"catalog_$v")))
-      .map(v => SyncJob.readCatalog(spark, s"$stateDir/catalog_$v")._1)
 
   /** Reclaim superseded per-version state. Every arrival writes a full
     * `snapshot_v<N>`, `stats_snapshot_v<N>` and

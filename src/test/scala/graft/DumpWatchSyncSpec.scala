@@ -335,4 +335,74 @@ class DumpWatchSyncSpec extends SparkSuite {
         "step 3 (backup vs prod) script differs from batch")
     } finally q.stop()
   }
+
+  private def refdump(name: String): Array[Byte] = {
+    val in = getClass.getResourceAsStream(s"/refdumps/$name")
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def scriptsOf(stateDir: String): Seq[String] =
+    Files.list(Paths.get(stateDir, "scripts")).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".sql"))
+      .sortBy(_.getFileName.toString)
+      .map(p => new String(Files.readAllBytes(p), "UTF-8"))
+
+  test("the script needs no previous dump file: a rotated-away dump still diffs") {
+    val dumps = Files.createTempDirectory("graft-rotate-dumps")
+    val d1 = dumps.resolve("d1.sql")
+    val d2 = dumps.resolve("d2.sql")
+    Files.write(d1, refdump("backup_sf0.001.sql"))
+    Files.write(d2, refdump("prod_sf0.001.sql"))
+    val copy = Files.createTempFile("graft-rotate-copy", ".sql")
+    Files.copy(d1, copy, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val stateDir = Files.createTempDirectory("graft-rotate-state").toString
+    DumpWatchSync.processDump(spark, d1.toString, stateDir, 0L, scriptTs = "T")
+    Files.delete(d1) // rotated away before the next arrival
+    DumpWatchSync.processDump(spark, d2.toString, stateDir, 1L, scriptTs = "T")
+    val want = SyncSqlGenerator.assemble(
+      new SyncJob(spark).run(d2.toString, copy.toString), "T")
+    assert(scriptsOf(stateDir) == Seq(want))
+  }
+
+  test("a state dir whose snapshot holds only (table, pk, vals) advances like a fresh one") {
+    import org.apache.spark.sql.functions.col
+    val dumps = Files.createTempDirectory("graft-layout-dumps")
+    val d1 = dumps.resolve("d1.sql")
+    val d2 = dumps.resolve("d2.sql")
+    Files.write(d1, refdump("backup_sf0.001.sql"))
+    Files.write(d2, refdump("prod_sf0.001.sql"))
+    def watch(rewrite: Boolean): String = {
+      val stateDir = Files.createTempDirectory("graft-layout-state").toString
+      DumpWatchSync.processDump(spark, d1.toString, stateDir, 0L, scriptTs = "T")
+      if (rewrite) {
+        // the snapshot layout written before order keys and SCD-2 run
+        // starts were stored in it
+        val snap = s"$stateDir/snapshot_v0"
+        val narrow = s"$stateDir/narrow_v0"
+        spark.read.parquet(snap).select("table", "pk", "vals")
+          .write.parquet(narrow)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(snap))
+        Files.move(Paths.get(narrow), Paths.get(snap))
+        assert(spark.read.parquet(snap).columns.toSeq == Seq("table", "pk", "vals"))
+      }
+      DumpWatchSync.processDump(spark, d2.toString, stateDir, 1L, scriptTs = "T")
+      stateDir
+    }
+    val (fresh, narrow) = (watch(rewrite = false), watch(rewrite = true))
+    assert(scriptsOf(narrow) == scriptsOf(fresh))
+    def rows(stateDir: String, dir: String): Set[String] =
+      spark.read.parquet(s"$stateDir/$dir").drop("source_file")
+        .collect().map(_.toSeq.map {
+          case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+          case v => String.valueOf(v)
+        }.mkString("|")).toSet
+    Seq("history_closed", "history_open_snapshot_v1", "snapshot_v1").foreach { d =>
+      assert(rows(narrow, d) == rows(fresh, d), s"$d differs")
+    }
+    val ops = (dir: String) => spark.read.parquet(s"$dir/ops")
+      .filter(col("batch_id") === 1L).select("table", "pk", "op")
+      .collect().map(_.mkString("|")).toSet
+    assert(ops(narrow) == ops(fresh) && ops(fresh).nonEmpty)
+    assert(rows(fresh, "history_closed").nonEmpty)
+  }
 }

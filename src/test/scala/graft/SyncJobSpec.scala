@@ -302,4 +302,48 @@ class SyncJobSpec extends SparkSuite {
     assert(actual > o.ops.size * (64 + 12 * 4),
       s"fixture too narrow to exercise the bound (actual $actual)")
   }
+
+  test("catalogInfo is one Spark job with no exchange before its collect") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val path = tmpFile(new String(
+      getClass.getResourceAsStream("/refdumps/prod_sf0.001.sql").readAllBytes(),
+      "UTF-8"))
+    val stmts = graft.sources.DumpSource.statements(spark, path.toString)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val info = try {
+      val i = job.catalogInfo(stmts)
+      org.apache.spark.ListenerBusDrain(sc)
+      i
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
+    }
+    // DDL order, as a driver-side scan of the dump text finds it
+    val ddlOrder = "CREATE TABLE `([^`]+)`".r
+      .findAllMatchIn(new String(Files.readAllBytes(path), "UTF-8"))
+      .map(_.group(1)).toSeq
+    assert(info.metas.keys.toSeq == ddlOrder && ddlOrder.size == 7)
+    // the CREATE rows are sorted on the driver: one collect, no range
+    // sort (an orderBy("off") ran 3 jobs through an Exchange)
+    assert(jobs.get == 1, s"catalogInfo ran ${jobs.get} jobs")
+    assert(plans.size == 1 && !plans.peek.contains("Exchange"), plans.peek)
+  }
 }
