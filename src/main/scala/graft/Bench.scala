@@ -120,11 +120,12 @@ object Bench {
 
     // Full materialization (all output columns through the noop sink), so
     // expensive final projections aren't pruned the way .count() allows.
-    // Managed operators defer their internal-cache release handles to
-    // PendingRelease; draining here (post-materialization, inside the
-    // timed body) charges each run its own cleanup and prevents the
-    // per-warm-run cache accumulation the round-11 q205 fix traded into
-    // an eager-materialization regression.
+    // Operators defer their internal-cache release handles to this
+    // thread's PendingRelease; draining here (post-materialization, on
+    // the thread that built the frame, inside the timed body) charges
+    // each run its own cleanup and prevents the per-warm-run cache
+    // accumulation the round-11 q205 fix traded into an
+    // eager-materialization regression.
     def materialize(df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.format("noop").mode("overwrite").save()
       PendingRelease.drain()

@@ -30,7 +30,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally PendingRelease.drain() // managed operators' deferred handles
+      finally PendingRelease.drain() // this thread's deferred handles
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -140,11 +140,11 @@ object Scd {
     * blocks released the moment round N materializes
     * ([[graft.operators.Lineage.checkpointTracked]]), keeping live
     * checkpoint storage at O(runs) regardless of how many versions fold.
-    * cleanup() releases the final round once the consuming action is
-    * done.
+    * The final round is released at the calling thread's next
+    * [[graft.PendingRelease.drain]], once the consuming action is done.
     */
-  def advanceFoldManaged(seed: DataFrame, snaps: Seq[(Long, DataFrame)],
-      pkCols: Seq[String], valCols: Seq[String]): (DataFrame, () => Unit) = {
+  def advanceFold(seed: DataFrame, snaps: Seq[(Long, DataFrame)],
+      pkCols: Seq[String], valCols: Seq[String]): DataFrame = {
     var release: () => Unit = () => ()
     var runs = seed
     for ((v, snap) <- snaps) {
@@ -154,18 +154,8 @@ object Scd {
       release = rel
       runs = cp
     }
-    (runs, () => release())
-  }
-
-  /** [[advanceFoldManaged]] with the cleanup deferred to
-    * [[graft.PendingRelease]] (r17 release-audit sweep: the final
-    * round's checkpoint used to stay live past the run).
-    */
-  def advanceFold(seed: DataFrame, snaps: Seq[(Long, DataFrame)],
-      pkCols: Seq[String], valCols: Seq[String]): DataFrame = {
-    val (out, release) = advanceFoldManaged(seed, snaps, pkCols, valCols)
     graft.PendingRelease.defer(release)
-    out
+    runs
   }
 
   /** Point-in-time reconstruction from [[scd2]] runs: the rows valid AT

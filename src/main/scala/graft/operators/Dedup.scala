@@ -94,7 +94,7 @@ object Dedup {
 
   /** Exact Jaccard pairs ≥ threshold from a PREFIX-FILTERED inverted-
     * index candidate join (the same AllPairs/PPJoin machinery as
-    * [[prefixFilterPairsManaged]], which proved lossless against the
+    * [[prefixFilterPairs]], which proved lossless against the
     * all-pairs oracle): only each doc's rarest prefix shingles enter
     * the self-join, candidates pass the length + positional-bound
     * filters, and survivors are verified per-row against per-doc sorted
@@ -122,27 +122,13 @@ object Dedup {
     * size minus ⌈t'·full size⌉ + 1 (t' = threshold minus the rounding
     * half-ulp), still lossless because a passing pair's pruned
     * intersection is ≥ ⌈t'·sz⌉ on both sides.
+    *
+    * The internal caches (shingle table + ranked pruned index) are
+    * released at the calling thread's next [[graft.PendingRelease.drain]],
+    * after the result has materialized.
     */
   def jaccardPairs(sh: DataFrame, threshold: Double, digits: Int = 4,
       maxDocFreq: Option[Long] = None, persist: Boolean = true): DataFrame = {
-    val (pairs, cleanup) =
-      jaccardPairsManaged(sh, threshold, digits, maxDocFreq, persist)
-    // the thunk-less form has no channel to hand the handle back, so the
-    // internal caches (shingle table + ranked pruned index) are released
-    // at the harness's next drain instead of leaking for the session
-    graft.PendingRelease.defer(cleanup)
-    pairs
-  }
-
-  /** [[jaccardPairs]] plus a cleanup thunk that unpersists the internal
-    * shingle cache — call it after the consuming action. The thunk-less
-    * overload leaves the cache to the session (fine for one-shot jobs;
-    * long-running hosts should use this one, cf. SyncJob's prepared-diff
-    * release).
-    */
-  def jaccardPairsManaged(sh: DataFrame, threshold: Double, digits: Int = 4,
-      maxDocFreq: Option[Long] = None, persist: Boolean = true)
-      : (DataFrame, () => Unit) = {
     val s = if (persist) sh.persist(StorageLevel.MEMORY_AND_DISK) else sh
     // the ranked index feeds THREE consumers (both self-join sides +
     // the verify arrays); uncached each would recompute the df join +
@@ -152,7 +138,8 @@ object Dedup {
     val ri = if (persist) {
       val p = ri0.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
     } else ri0
-    val cleanup = () => if (persist) { s.unpersist(); ri.unpersist(); () }
+    if (persist)
+      graft.PendingRelease.defer(() => { s.unpersist(); ri.unpersist(); () })
     val tq = candidateThresholdPpm(threshold, digits)
     val pre = prefixRows(ri, tq)
     // α = ⌈t'·(sz_a+sz_b)/(1+t')⌉: the minimum PRUNED intersection any
@@ -172,13 +159,13 @@ object Dedup {
       .agg(count(lit(1)).as("c"),
         max("rn_a").as("ma"), max("rn_b").as("mb"))
       // positional bound over the PRUNED sets (see
-      // prefixFilterPairsManaged for the proof; ranks here are pruned-
+      // prefixFilterPairs for the proof; ranks here are pruned-
       // set ranks under the same global (df, shingle) order)
       .filter(col("c") +
         least(col("szp_a") - col("ma"), col("szp_b") - col("mb")) >= alpha)
       .select("id_a", "id_b", "sz_a", "sz_b")
     val docArr = ri.groupBy("id").agg(collect_list(col("shingle")).as("toks"))
-    val pairs = cand
+    cand
       .join(docArr.select(col("id").as("id_a"), col("toks").as("ta")), "id_a")
       .join(docArr.select(col("id").as("id_b"), col("toks").as("tb")), "id_b")
       .withColumn("inter",
@@ -187,7 +174,6 @@ object Dedup {
         (col("sz_a") + col("sz_b") - col("inter")), digits))
       .filter(col("jac") >= threshold)
       .select("id_a", "id_b", "jac")
-    (pairs, cleanup)
   }
 
   /** Candidate-generation threshold in ppm: the final filter is
@@ -204,7 +190,7 @@ object Dedup {
 
   /** The df-annotated, optionally df-pruned inverted index with per-doc
     * prefix ranks — the shared candidate substrate of
-    * [[jaccardPairsManaged]] and [[containmentPairsManaged]]:
+    * [[jaccardPairs]] and [[containmentPairs]]:
     * (id, shingle, sz, szp, rn) where `sz` is the doc's FULL distinct-
     * shingle count, `szp` its count surviving the df cap, and `rn` the
     * shingle's 1-based rank within the doc's pruned set under the
@@ -262,26 +248,19 @@ object Dedup {
     * (a shared token inside the larger side's low ranks need not be a
     * collision, so the symmetric bound of the Jaccard path would be
     * unsound here).
+    *
+    * Internal caches are released as [[jaccardPairs]]' are.
     */
   def containmentPairs(sh: DataFrame, threshold: Double, digits: Int = 4,
       maxDocFreq: Option[Long] = None, persist: Boolean = true): DataFrame = {
-    val (pairs, cleanup) =
-      containmentPairsManaged(sh, threshold, digits, maxDocFreq, persist)
-    graft.PendingRelease.defer(cleanup) // see jaccardPairs
-    pairs
-  }
-
-  /** [[containmentPairs]] plus the shingle-cache cleanup thunk. */
-  def containmentPairsManaged(sh: DataFrame, threshold: Double,
-      digits: Int = 4, maxDocFreq: Option[Long] = None,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
     val s = if (persist) sh.persist(StorageLevel.MEMORY_AND_DISK) else sh
-    // same three-consumer caching rationale as jaccardPairsManaged
+    // same three-consumer caching rationale as jaccardPairs
     val ri0 = rankedPrunedIndex(s, maxDocFreq)
     val ri = if (persist) {
       val p = ri0.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
     } else ri0
-    val cleanup = () => if (persist) { s.unpersist(); ri.unpersist(); () }
+    if (persist)
+      graft.PendingRelease.defer(() => { s.unpersist(); ri.unpersist(); () })
     val tq = candidateThresholdPpm(threshold, digits)
     // smaller side: prefix rows only; larger side: the full pruned index
     val cand = prefixRows(ri, tq).select(col("id").as("id_x"),
@@ -300,7 +279,7 @@ object Dedup {
         expr(s"($tq * sz_x + 999999) div 1000000"))
       .select("id_x", "id_y", "sz_x", "sz_y")
     val docArr = ri.groupBy("id").agg(collect_list(col("shingle")).as("toks"))
-    val pairs = cand
+    cand
       .join(docArr.select(col("id").as("id_x"), col("toks").as("tx")), "id_x")
       .join(docArr.select(col("id").as("id_y"), col("toks").as("ty")), "id_y")
       .withColumn("inter",
@@ -310,7 +289,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"), col("containment"))
-    (pairs, cleanup)
   }
 
   /** EXACT Jaccard-threshold pairs via PREFIX FILTERING (the
@@ -358,16 +336,18 @@ object Dedup {
     *
     * @param sh        distinct (id, shingle) table
     *                  ([[hashedShingleTable]] — joins key on longs)
+    * The shingle cache is released at the calling thread's next
+    * [[graft.PendingRelease.drain]].
+    *
     * @param thresholdPpm Jaccard threshold × 10⁶
-    * @return ((id_a, id_b, inter, sz_a, sz_b, jac_ppm), cleanup),
-    *         id_a < id_b
+    * @return (id_a, id_b, inter, sz_a, sz_b, jac_ppm), id_a < id_b
     */
-  def prefixFilterPairsManaged(sh: DataFrame, thresholdPpm: Long,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+  def prefixFilterPairs(sh: DataFrame, thresholdPpm: Long,
+      persist: Boolean = true): DataFrame = {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm out of (0, 1e6]: $thresholdPpm")
     val s = if (persist) sh.persist(StorageLevel.MEMORY_AND_DISK) else sh
-    val cleanup = () => if (persist) { s.unpersist(); () }
+    if (persist) graft.PendingRelease.defer(() => { s.unpersist(); () })
     val dfq = s.groupBy("shingle").agg(count(lit(1)).as("dfq"))
     // sz rides the SAME id-partitioned window as the prefix rank — one
     // exchange instead of a separate groupBy(id) + join back
@@ -399,7 +379,7 @@ object Dedup {
     // per-doc token arrays: doc-length bounded (a document's distinct
     // shingle count), never corpus-bounded — safe row width at any SF
     val docArr = s.groupBy("id").agg(collect_list(col("shingle")).as("toks"))
-    val pairs = cand
+    cand
       .join(docArr.select(col("id").as("id_a"), col("toks").as("ta")), "id_a")
       .join(docArr.select(col("id").as("id_b"), col("toks").as("tb")), "id_b")
       .withColumn("inter",
@@ -409,20 +389,11 @@ object Dedup {
           " div (sz_a + sz_b - inter)").cast("long"))
       .filter(col("jac_ppm") >= thresholdPpm)
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jac_ppm")
-    (pairs, cleanup)
-  }
-
-  /** [[prefixFilterPairsManaged]] without the cleanup handle. */
-  def prefixFilterPairs(sh: DataFrame, thresholdPpm: Long,
-      persist: Boolean = true): DataFrame = {
-    val (pairs, cleanup) = prefixFilterPairsManaged(sh, thresholdPpm, persist)
-    graft.PendingRelease.defer(cleanup) // see jaccardPairs
-    pairs
   }
 
   /** EXACT Jaccard DELTA join via prefix filtering — the arrival-time
-    * counterpart of [[prefixFilterPairsManaged]], the way
-    * [[minhashLshPairsDeltaManaged]] is q22's: a FRESH batch probes the
+    * counterpart of [[prefixFilterPairs]], the way
+    * [[minhashLshPairsDelta]] is q22's: a FRESH batch probes the
     * standing corpus, and candidates fan out only from the fresh side's
     * prefixes (fresh×corpus ∪ fresh×fresh, never corpus×corpus) — the
     * 1 TB-arrival-vs-100 TB-corpus shape, with the LSH delta's recall
@@ -437,7 +408,7 @@ object Dedup {
     * right side additionally requires id_left < id_right (corpus right
     * sides are kept unconditionally — the corpus side never initiates).
     * Length filter, grouped positional bound, and per-doc-array
-    * verification are [[prefixFilterPairsManaged]]'s verbatim; the
+    * verification are [[prefixFilterPairs]]'s verbatim; the
     * output is that operator's restricted to pairs with ≥ 1 fresh
     * member (the q232 oracle replays the ALL-pairs SQL with exactly
     * that restriction, so a hash match proves the one-sided candidate
@@ -446,16 +417,15 @@ object Dedup {
     * `shCorpus` / `shFresh`: distinct (id, shingle) tables
     * ([[hashedShingleTable]]) with disjoint id domains.
     * Output: (id_a, id_b, inter, sz_a, sz_b, jac_ppm), id_a < id_b.
+    * Internal caches are released as [[prefixFilterPairs]]' are.
     */
-  def prefixFilterPairsDeltaManaged(shCorpus: DataFrame, shFresh: DataFrame,
-      thresholdPpm: Long, persist: Boolean = true)
-      : (DataFrame, () => Unit) = {
+  def prefixFilterPairsDelta(shCorpus: DataFrame, shFresh: DataFrame,
+      thresholdPpm: Long, persist: Boolean = true): DataFrame = {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm out of (0, 1e6]: $thresholdPpm")
     val s0 = shCorpus.withColumn("_f", lit(false))
       .unionByName(shFresh.withColumn("_f", lit(true)))
     val s = if (persist) s0.persist(StorageLevel.MEMORY_AND_DISK) else s0
-    val cleanup = () => if (persist) { s.unpersist(); () }
     val dfq = s.groupBy("shingle").agg(count(lit(1)).as("dfq"))
     val idw = Window.partitionBy("id")
     val pre0 = s.join(dfq, "shingle")
@@ -470,11 +440,11 @@ object Dedup {
     val pre = if (persist) {
       val p = pre0.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
     } else pre0
-    val cleanupAll = () => { cleanup(); if (persist) pre.unpersist(); () }
+    if (persist)
+      graft.PendingRelease.defer(() => { s.unpersist(); pre.unpersist(); () })
     val docArr = s.groupBy("id").agg(collect_list(col("shingle")).as("toks"))
-    val pairs = oneSidedPrefixPairs(pre.filter(col("_f")),
+    oneSidedPrefixPairs(pre.filter(col("_f")),
       pre.filter(!col("_f")), docArr, thresholdPpm)
-    (pairs, cleanupAll)
   }
 
   /** Prefix-store FORMAT version (ContentGate tag component — see
@@ -507,7 +477,7 @@ object Dedup {
     * principle only needs ONE shared total order: g → (dfq_corpus(g), g)
     * with dfq_corpus = 0 for unseen grams ranks both sides consistently
     * (df is the selectivity heuristic, not a correctness input — see
-    * [[prefixFilterPairsDeltaManaged]]).
+    * [[prefixFilterPairsDelta]]).
     */
   def prefixStoreEnsure(corpus: DataFrame, idCol: String, textCol: String,
       shingleN: Int, thresholdPpm: Long, dir: String, buckets: Int = 32,
@@ -555,7 +525,7 @@ object Dedup {
 
   /** Exact-Jaccard DELTA pairs of a fresh batch against a
     * [[prefixStoreEnsure]] store — output identical to
-    * [[prefixFilterPairsDeltaManaged]] over (stored corpus, fresh):
+    * [[prefixFilterPairsDelta]] over (stored corpus, fresh):
     * candidate sets may differ by ranking order, but the prefix
     * principle holds under any shared total order and the exact verify
     * makes the final pairs order-independent. Fresh ids must be
@@ -626,7 +596,7 @@ object Dedup {
   }
 
   /** Fresh-initiated candidate join + positional prune + array verify —
-    * the core of [[prefixFilterPairsDeltaManaged]]. `preF`/`preC` are
+    * the core of [[prefixFilterPairsDelta]]. `preF`/`preC` are
     * prefix rows
     * (id, shingle, sz, rn) with ranks under ONE shared total order;
     * `arrs` holds every doc's full token array (id, toks). Generates
@@ -762,28 +732,14 @@ object Dedup {
     * `persist=true` (default) caches the shingle table MEMORY_AND_DISK —
     * it feeds the signature aggregation, both verify sides, and the size
     * counts, so the corpus is tokenized/hashed once — plus the small band
-    * table (both sides of the candidate join).
+    * table (both sides of the candidate join). The caches are released
+    * as [[jaccardPairs]]' are.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5, digits: Int = 4,
       persist: Boolean = true,
       maxBucket: Option[Long] = None): DataFrame = {
-    val (pairs, cleanup) = minhashLshPairsManaged(df, idCol, textCol,
-      shingleN, numHashes, bands, threshold, digits, persist, maxBucket)
-    graft.PendingRelease.defer(cleanup) // see jaccardPairs
-    pairs
-  }
-
-  /** [[minhashLshPairs]] plus a cleanup thunk unpersisting the internal
-    * shingle + band caches — call after the consuming action (see
-    * [[jaccardPairsManaged]]).
-    */
-  def minhashLshPairsManaged(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5, digits: Int = 4,
-      persist: Boolean = true,
-      maxBucket: Option[Long] = None): (DataFrame, () => Unit) = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val sh0 = hashedShingleTable(df, idCol, textCol, shingleN)
     val sh = if (persist) sh0.persist(lvl) else sh0
@@ -817,23 +773,23 @@ object Dedup {
         if (persist) capped.persist(lvl) else capped
       case None => bandsAll
     }
-    val cleanup = () => if (persist) {
+    if (persist) graft.PendingRelease.defer(() => {
       sh.unpersist(); bandsAll.unpersist()
       if (maxBucket.isDefined) bandsDf.unpersist()
       ()
-    }
+    })
     val cand = bandsDf.as("a").join(bandsDf.as("b"), Seq("band", "band_key"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    (arrayVerify(cand, sh, threshold, digits), cleanup)
+    arrayVerify(cand, sh, threshold, digits)
   }
 
   /** Exact-Jaccard verification of banded candidates against per-doc
     * shingle ARRAYS: one aggregate of the shingle table feeds two
     * candidate-keyed joins, instead of re-exchanging the full
     * (id, shingle) table through the candidate join twice — the r11
-    * prefix-family win ([[prefixFilterPairsManaged]]), ported to the
+    * prefix-family win ([[prefixFilterPairs]]), ported to the
     * LSH cores (measured: the verify stage was ~40% of q180's wall at
     * the 10× tile). Values are identical: the collected lists ARE the
     * per-doc distinct shingle sets the join+count counted.
@@ -871,12 +827,13 @@ object Dedup {
     * Pair set == [[minhashLshPairs]] over (corpus ∪ fresh) restricted to
     * pairs with ≥1 fresh side (band-collision criterion and exact-
     * Jaccard verify are identical; ExtensionOpsSpec pins the equality).
-    * Output: (id_a, id_b, jac) with id_a < id_b.
+    * Output: (id_a, id_b, jac) with id_a < id_b. Internal caches are
+    * released as [[minhashLshPairs]]' are.
     */
-  def minhashLshPairsDeltaManaged(corpus: DataFrame, fresh: DataFrame,
+  def minhashLshPairsDelta(corpus: DataFrame, fresh: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.5, digits: Int = 4,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+      persist: Boolean = true): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val shC0 = hashedShingleTable(corpus, idCol, textCol, shingleN)
     val shF0 = hashedShingleTable(fresh, idCol, textCol, shingleN)
@@ -890,17 +847,15 @@ object Dedup {
         alreadyHashed = true), numHashes, bands)
     val bandsC = if (persist) bandsC0.persist(lvl) else bandsC0
     val bandsF = if (persist) bandsF0.persist(lvl) else bandsF0
-    val cleanup = () => if (persist) {
+    if (persist) graft.PendingRelease.defer(() => {
       shC.unpersist(); shF.unpersist(); bandsC.unpersist(); bandsF.unpersist()
       ()
-    }
-    val pairs = minhashLshPairsFromFrames(shC, bandsC, shF, bandsF,
-      threshold, digits)
-    (pairs, cleanup)
+    })
+    minhashLshPairsFromFrames(shC, bandsC, shF, bandsF, threshold, digits)
   }
 
   /** Delta near-dup pairs from PRE-BUILT index frames — the deployment
-    * form of [[minhashLshPairsDeltaManaged]]: `shC`/`bandsC` are the
+    * form of [[minhashLshPairsDelta]]: `shC`/`bandsC` are the
     * standing corpus index ((id, shingle) and (id, band, band_key), e.g.
     * parquet maintained by [[graft.streaming.StreamingDedup]]); `shF`/
     * `bandsF` are the arriving batch's frames. One-sided candidate join:
@@ -938,31 +893,21 @@ object Dedup {
     * use a wider simhash (64-bit, 8 bands — same pigeonhole bound at
     * radius 7) so buckets stay selective, and let AQE's skew-join
     * splitting absorb residual hot keys.
+    *
+    * The internal simhash table feeds BOTH sides of the band self-join,
+    * so it is cached (without the cache the tokenize→hash→32-majority-
+    * agg pipeline, the expensive part, executes twice) and released at
+    * the calling thread's next [[graft.PendingRelease.drain]].
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, persist: Boolean = true): DataFrame = {
-    // r17 release-audit sweep: defer instead of dropping the cleanup
-    val (out, release) =
-      simhashPairsManaged(df, idCol, textCol, maxHamming, persist)
-    graft.PendingRelease.defer(release)
-    out
-  }
-
-  /** [[simhashPairs]] plus a cleanup thunk unpersisting the internal
-    * simhash table — which feeds BOTH sides of the band self-join, so
-    * without the cache the tokenize→hash→32-majority-agg pipeline (the
-    * expensive part) executes twice.
-    */
-  def simhashPairsManaged(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, persist: Boolean = true)
-      : (DataFrame, () => Unit) = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming=$maxHamming: 4-byte banding is only candidate-complete " +
         "for Hamming distance <= 3 (pigeonhole); larger radii would return " +
         "a silently incomplete pair set")
     val sims0 = simhashTable(df, idCol, textCol, 32)
     val sims = if (persist) sims0.persist(StorageLevel.MEMORY_AND_DISK) else sims0
-    val cleanup = () => if (persist) { sims.unpersist(); () }
+    if (persist) graft.PendingRelease.defer(() => { sims.unpersist(); () })
     val bandArr = array((0 until 4).map { b =>
       struct(lit(b).as("band"),
         (shiftright(col("simhash"), b * 8) % 256).as("key"))
@@ -975,12 +920,11 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.simhash").as("sa"), col("b.simhash").as("sb"))
       .distinct()
-    val pairs = cand
+    cand
       .withColumn("hamming",
         bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-    (pairs, cleanup)
   }
 
   /** Connected components over a near-dup pair list — the dedup endgame:
@@ -997,27 +941,14 @@ object Dedup {
     * driver-side step. Round N−1's checkpoint blocks are released as
     * soon as round N's convergence count has consumed them
     * ([[Lineage.checkpointTracked]]), so live checkpoint storage stays
-    * O(nodes) regardless of the round count.
+    * O(nodes) regardless of the round count. The two checkpoint frames
+    * the result still reads from (the symmetrized edge list and the
+    * final labels) are released at the calling thread's next
+    * [[graft.PendingRelease.drain]]; the result cannot be recomputed
+    * afterwards (checkpoints truncate lineage).
     * Output: (id, comp) with comp = min id reachable.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // r17 release-audit sweep: the thunk-less overload used to leave the
-    // two checkpoint frames to the session — one stranded copy per run
-    val (out, release) = connectedComponentsManaged(pairs, maxIter)
-    graft.PendingRelease.defer(release)
-    out
-  }
-
-  /** [[connectedComponents]] plus a cleanup thunk releasing the two
-    * checkpoint frames the result still reads from (the symmetrized edge
-    * list and the final labels) — call after the consuming action; the
-    * result cannot be recomputed afterwards (checkpoints truncate
-    * lineage). The thunk-less overload defers exactly that release to
-    * [[graft.PendingRelease]] (drained post-materialization by every
-    * harness).
-    */
-  def connectedComponentsManaged(pairs: DataFrame, maxIter: Int = 20)
-      : (DataFrame, () => Unit) = {
     val (edges, releaseEdges) = Lineage.checkpointTracked(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
@@ -1051,7 +982,8 @@ object Dedup {
           "rather than consuming non-converged (wrong) labels")
     }
     val releaseFinal = releaseLabels
-    (labels, () => { releaseFinal(); releaseEdges() })
+    graft.PendingRelease.defer(() => { releaseFinal(); releaseEdges() })
+    labels
   }
 
   /** SimHash over distinct tokens: bit b of the result is set iff the
@@ -1260,7 +1192,7 @@ object Dedup {
     *
     * [[deltaPairs]] computes the FRESH side's frames in-plan and feeds
     * [[minhashLshPairsFromFrames]] — identical candidate/verify
-    * semantics to [[minhashLshPairsDeltaManaged]], so a store-backed
+    * semantics to [[minhashLshPairsDelta]], so a store-backed
     * run returns byte-identical pairs to the recompute-everything run
     * (q171's oracle is q104's SQL verbatim for exactly this reason).
     * Short (un-shingle-able) corpus docs follow the same convention as

@@ -35,15 +35,15 @@ object Graph {
     * iterate-until-budget shape; `iters` is a fixed unroll so the oracle
     * can replay it as a CTE chain.
     *
-    * Returns (result, cleanup): the symmetrized edge frame is persisted
-    * (it feeds every iteration) and the last iteration's checkpoint
-    * stays live (the result's plan reads from it); call cleanup() after
-    * the consuming action to release both.
+    * The symmetrized edge frame is persisted (it feeds every iteration)
+    * and the last iteration's checkpoint stays live (the result's plan
+    * reads from it); both are released at the calling thread's next
+    * [[graft.PendingRelease.drain]], after the consuming action.
     */
-  def pageRankManaged(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+  def pageRank(edges: DataFrame, iters: Int,
+      scale: Long = 1000000000000L, persist: Boolean = true): DataFrame = {
     val (und, undRelease) = symmetrized(edges, persist)
+    graft.PendingRelease.defer(undRelease)
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
     val n = deg.agg(count(lit(1)).as("n"))
     // All nodes carry (deg, tele) through the loop: deg for the
@@ -56,8 +56,7 @@ object Graph {
         expr(s"(15 * (CAST($scale AS BIGINT) div n)) div 100"))
       .withColumn("score", expr(s"CAST($scale AS BIGINT) div n"))
       .select("node", "deg", "tele", "score")
-    val (res, loopRelease) = prRounds(und, init, iters)
-    (res, () => { undRelease(); loopRelease() })
+    prRounds(und, init, iters)
   }
 
   /** Personalized PageRank: the teleport mass lands on a SEED set
@@ -68,12 +67,12 @@ object Graph {
     * seed teleport `(15·(scale div |S|)) div 100`, non-seeds 0, initial
     * mass `scale div |S|` at the seeds. Seeds absent from the graph are
     * dropped before |S| is counted. Identical per-iteration plan shape
-    * — one node-keyed shuffle per round.
+    * — one node-keyed shuffle per round — and the same release.
     */
-  def personalizedPageRankManaged(edges: DataFrame, seeds: DataFrame,
-      iters: Int, scale: Long = 1000000000000L,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
+      scale: Long = 1000000000000L, persist: Boolean = true): DataFrame = {
     val (und, undRelease) = symmetrized(edges, persist)
+    graft.PendingRelease.defer(undRelease)
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
     val seedSet = seeds.select(col("node").cast("long").as("node")).distinct()
       .join(deg.select(col("src").as("node")), Seq("node"))
@@ -87,20 +86,7 @@ object Graph {
       .withColumn("score", when(col("is_seed").isNotNull,
           expr(s"CAST($scale AS BIGINT) div ns")).otherwise(lit(0L)))
       .select("node", "deg", "tele", "score")
-    val (res, loopRelease) = prRounds(und, init, iters)
-    (res, () => { undRelease(); loopRelease() })
-  }
-
-  /** [[personalizedPageRankManaged]] with the cleanup deferred to
-    * [[graft.PendingRelease]] (r17 release-audit sweep: q136 leaked the
-    * edge cache + final checkpoint once per run).
-    */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-      scale: Long = 1000000000000L, persist: Boolean = true): DataFrame = {
-    val (out, release) =
-      personalizedPageRankManaged(edges, seeds, iters, scale, persist)
-    graft.PendingRelease.defer(release)
-    out
+    prRounds(und, init, iters)
   }
 
   /** Symmetrize + dedup an edge frame; optionally persist (it feeds
@@ -126,10 +112,11 @@ object Graph {
 
   /** The shared power-iteration loop: score'(v) = tele(v) +
     * (85 · Σ_{u→v} (score(u) div deg(u))) div 100, for a fixed `iters`
-    * unroll over a per-node constant `tele` column.
+    * unroll over a per-node constant `tele` column. Defers the release
+    * of the last round's checkpoint.
     */
   private def prRounds(und: DataFrame, init: DataFrame,
-      iters: Int): (DataFrame, () => Unit) = {
+      iters: Int): DataFrame = {
     var release: () => Unit = () => ()
     var sc = init
     for (i <- 1 to iters) {
@@ -162,20 +149,8 @@ object Graph {
         sc = cp
       }
     }
-    (sc.select(col("node"), col("deg"), col("score")), () => release())
-  }
-
-  /** [[pageRankManaged]] with the cleanup deferred to
-    * [[graft.PendingRelease]] (r17 release-audit sweep: the old
-    * thunk-less form left the symmetrized-edge cache to the session —
-    * warm bench runs of q80 silently REUSED the previous run's cache —
-    * and leaked the final round's checkpoint blocks once per run).
-    */
-  def pageRank(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L, persist: Boolean = true): DataFrame = {
-    val (out, release) = pageRankManaged(edges, iters, scale, persist)
     graft.PendingRelease.defer(release)
-    out
+    sc.select(col("node"), col("deg"), col("score"))
   }
 
   /** Seeded multi-class label propagation over an undirected graph —
@@ -193,17 +168,19 @@ object Graph {
     * neighborhood is still unlabeled keep their current assignment;
     * seeds are CLAMPED to their given label. `iters` bounds the spread
     * radius. One node-keyed shuffle per round (the mass aggregate) —
-    * the [[pageRankManaged]] plan shape — with per-round checkpoint
-    * release via [[Lineage.checkpointTracked]].
+    * the [[pageRank]] plan shape — with per-round checkpoint release via
+    * [[Lineage.checkpointTracked]] and the edge cache and last
+    * checkpoint released as [[pageRank]]'s are.
     *
     * `edges`: Long `src`/`dst` (symmetrized + deduplicated here).
     * `seeds`: (`node`, `label`) — duplicate seed nodes collapse to
     * their smallest label. Output: (node, label, is_seed); `label` is
     * null only for nodes ≥ `iters` hops from every seed.
     */
-  def labelPropagationManaged(edges: DataFrame, seeds: DataFrame,
-      iters: Int, persist: Boolean = true): (DataFrame, () => Unit) = {
+  def labelPropagation(edges: DataFrame, seeds: DataFrame, iters: Int,
+      persist: Boolean = true): DataFrame = {
     val (und, undRelease) = symmetrized(edges, persist)
+    graft.PendingRelease.defer(undRelease)
     val seedLabels = seeds
       .select(col("node").cast("long").as("node"),
         col("label").cast("long").as("label"))
@@ -238,17 +215,8 @@ object Graph {
         cur = cp
       }
     }
-    (cur.select("node", "label", "is_seed"), () => { undRelease(); release() })
-  }
-
-  /** [[labelPropagationManaged]] with the cleanup deferred to
-    * [[graft.PendingRelease]] (r17 release-audit sweep — see [[pageRank]]).
-    */
-  def labelPropagation(edges: DataFrame, seeds: DataFrame, iters: Int,
-      persist: Boolean = true): DataFrame = {
-    val (out, release) = labelPropagationManaged(edges, seeds, iters, persist)
     graft.PendingRelease.defer(release)
-    out
+    cur.select("node", "label", "is_seed")
   }
 
   /** Per-node triangle participation counts — the clustering/community
@@ -328,10 +296,10 @@ object Graph {
     * Output: (node, deg) for nodes alive after `rounds` peels, with deg
     * measured in the surviving subgraph (deg may sit below k again —
     * that residue is what the NEXT round would peel; deg ≥ k for all
-    * rows iff the peel has converged).
+    * rows iff the peel has converged). The last round's degree cache is
+    * released at the calling thread's next [[graft.PendingRelease.drain]].
     */
-  def kCoreManaged(edges: DataFrame, k: Int,
-      rounds: Int): (DataFrame, () => Unit) = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k ≥ 1 and rounds ≥ 1, got ($k, $rounds)")
     val (und, releaseUnd) = symmetrized(edges, persist = true)
     // DELTA peel on the NODE frame: the edge cache is immutable (the
@@ -374,17 +342,8 @@ object Graph {
     releaseUnd() // every round has executed eagerly; out reads only deg
     // deg 0 = all neighbors peeled: absent from the induced edge set,
     // so (matching a recount on that edge set) it does not output
-    val out = deg.filter(col("deg") > 0)
-    (out, releaseDeg)
-  }
-
-  /** [[kCoreManaged]] with the cleanup deferred to
-    * [[graft.PendingRelease]] (r17 release-audit sweep — see [[pageRank]]).
-    */
-  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val (out, release) = kCoreManaged(edges, k, rounds)
-    graft.PendingRelease.defer(release)
-    out
+    graft.PendingRelease.defer(releaseDeg)
+    deg.filter(col("deg") > 0)
   }
 
   /** Fixed-iteration HITS (Kleinberg's hubs and authorities) over a
@@ -411,10 +370,16 @@ object Graph {
     * Edges are deduplicated, NOT symmetrized (direction is the whole
     * point). Output: (node, kind ∈ {'auth','hub'}, score) — a node
     * appearing on both sides carries both rows.
+    *
+    * The edge cache and the last round's raw frames, which the result
+    * plan reads, are released at the calling thread's next
+    * [[graft.PendingRelease.drain]]. `persist` keeps its historical
+    * false default (the caches are then released before returning and
+    * the result re-runs its lineage); callers wanting the cached
+    * iteration speed opt in, as q205 does.
     */
-  def hitsManaged(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+  def hits(edges: DataFrame, iters: Int,
+      scale: Long = 1000000000000L, persist: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters: $iters")
     val e0 = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
@@ -479,20 +444,10 @@ object Graph {
       .unionByName(hub.select(col("node"), lit("hub").as("kind"),
         col("h").cast("long").as("score")))
     releases += (() => { roundCaches.foreach(_.unpersist()); () })
-    if (!persist) releases.foreach(_.apply()) // caller opts out: plans
-    // stay correct (the frames re-run lazily), only the caches go
-    (out, () => releases.foreach(_.apply()))
-  }
-
-  /** [[hitsManaged]] with the cleanup deferred to
-    * [[graft.PendingRelease]] (r17 release-audit sweep). persist keeps
-    * its historical false default: callers wanting the cached iteration
-    * speed opt in (q205 uses [[hitsManaged]] + defer directly).
-    */
-  def hits(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000000L, persist: Boolean = false): DataFrame = {
-    val (out, release) = hitsManaged(edges, iters, scale, persist)
-    graft.PendingRelease.defer(release)
+    val releaseAll = () => releases.foreach(_.apply())
+    // a caller that opts out of persist keeps correct plans (the frames
+    // re-run lazily); only the caches go, right away
+    if (persist) graft.PendingRelease.defer(releaseAll) else releaseAll()
     out
   }
 }

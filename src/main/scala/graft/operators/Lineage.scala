@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Tracked eager localCheckpoints for iterative operators.
   *
@@ -13,9 +14,11 @@ import org.apache.spark.sql.DataFrame
   * the BlockManager until LRU eviction: monotonic storage-memory growth
   * on any long-running session — the genuine scale-killer at 100 TB.
   *
-  * [[checkpointTracked]] diffs the context's persistent-RDD registry
-  * around the checkpoint call, so the caller gets a release thunk that
-  * unpersists exactly the blocks that checkpoint created. Iterative
+  * [[checkpointTracked]] takes the checkpointed RDD from the frame it
+  * returns — the plan of an eager localCheckpoint is a `LogicalRDD`
+  * over exactly the RDD whose blocks it persisted — so the caller gets
+  * a release thunk that unpersists that RDD and nothing else, whatever
+  * other threads persist on the same session meanwhile. Iterative
   * operators release round N−1 as soon as round N has materialized (the
   * newer checkpoint no longer references the older one), keeping live
   * checkpoint storage at O(rows), not O(rows × rounds).
@@ -25,22 +28,14 @@ object Lineage {
   /** Eagerly localCheckpoint `df`; returns the checkpointed frame plus a
     * release thunk that unpersists the checkpoint's storage blocks.
     *
-    * The registry diff assumes no concurrent persist call lands between
-    * the two registry reads (operator-internal iteration is
-    * single-threaded). A localCheckpoint TRUNCATES lineage: after
-    * release() the frame cannot be recomputed, so release a round only
-    * once every downstream consumer has either materialized its own
-    * checkpoint or finished its action.
+    * A localCheckpoint TRUNCATES lineage: after release() the frame
+    * cannot be recomputed, so release a round only once every
+    * downstream consumer has either materialized its own checkpoint or
+    * finished its action.
     */
   def checkpointTracked(df: DataFrame): (DataFrame, () => Unit) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val cp = df.localCheckpoint(true)
-    val added = (sc.getPersistentRDDs.keySet -- before).toSeq
-    val release = () => {
-      val reg = sc.getPersistentRDDs
-      added.foreach(id => reg.get(id).foreach(_.unpersist(false)))
-    }
-    (cp, release)
+    val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    (cp, () => { rdd.unpersist(false); () })
   }
 }

@@ -48,24 +48,50 @@ object Stats {
     * (tₖ feeds both the next level and its own prefix join), so the
     * input-with-bucket frame and the level-1 totals are persisted —
     * without that each reference re-derives the whole chain and the
-    * query re-scans its INPUT once per reference. [[valueDomainCum]]
-    * defers the cache release to [[graft.PendingRelease]] (drained by
-    * every harness after the consuming action); use
-    * [[valueDomainCumManaged]] where a cleanup hook can be threaded
-    * through explicitly instead.
+    * query re-scans its INPUT once per reference. Both caches are
+    * released at the calling thread's next [[graft.PendingRelease.drain]]
+    * (after the consuming action), so every warm run of a caller
+    * (q36/q85/q93/q137, …) pays — and releases — its own caches instead
+    * of reusing the previous run's. The plan's broadcast subjobs run
+    * CONCURRENTLY — racing them on a lazy uncached parent recomputes it
+    * once per subjob (cache fills do not dedupe in-flight work), hence
+    * the eager count() before any consumer is built.
     */
   private[graft] def valueDomainCum(counts0: DataFrame, gCols: Seq[String],
       cCol: String = "c", domainBits: Int = 64): DataFrame = {
-    // r17 release-audit sweep: the thunk-less overload used to LEAVE the
-    // level caches to the session, so every warm bench run of a caller
-    // (q36/q85/q93/q137, …) either reused the previous run's cache
-    // (flattering warm timings) or stranded another copy. Deferring the
-    // release to the harness's post-materialization drain makes every
-    // run pay — and release — its own caches.
-    val (out, release) = valueDomainCumManaged(counts0, gCols, cCol,
-      domainBits = domainBits)
-    graft.PendingRelease.defer(release)
-    out
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val (in0, gNames) = injectG(counts0, gCols)
+    val g = gNames.map(col)
+    val l0 = in0.select(g :+ col("v").cast("long").as("b") :+
+        col(cCol).cast("long").as("c"): _*).persist(lvl)
+    val t1 = up(l0, gNames).persist(lvl)
+    t1.count()
+    graft.PendingRelease.defer(() => { l0.unpersist(); t1.unpersist(); () })
+    // t1 .. t_n: each level 16 bits coarser; root has <= 2^16 buckets
+    val ts = Iterator.iterate(t1)(up(_, gNames)).take(nLevels(domainBits))
+      .toList
+    val root = ts.last
+    val tot = root.groupBy(g: _*).agg(sum(col("c")).as("n"))
+    val hRoot = exPrefix(root, gNames)
+      .select(g :+ col("b") :+ col("p").as("h"): _*)
+    def down(tk: DataFrame, hUp: DataFrame): DataFrame =
+      exPrefix(
+        tk.withColumn("bp", shiftright(col("b"), 16))
+          .join(broadcast(hUp.select(g :+ col("b").as("bp") :+
+            col("h").as("hp"): _*)), gNames :+ "bp"),
+        gNames :+ "bp")
+      .select(g :+ col("b") :+ (col("hp") + col("p")).as("h"): _*)
+    val h1 = ts.init.reverse.foldLeft(hRoot)((h, tk) => down(tk, h))
+    l0.withColumn("bp", shiftright(col("b"), 16))
+      .join(broadcast(h1.select(g :+ col("b").as("bp") :+
+        col("h").as("hp"): _*)), gNames :+ "bp")
+      .withColumn("cin", sum(col("c")).over(
+        Window.partitionBy((gNames :+ "bp").map(col): _*).orderBy("b")
+          .rowsBetween(Window.unboundedPreceding, 0)))
+      .select(g :+ col("b").as("v") :+ col("c").as(cCol) :+
+        (col("hp") + col("cin")).as("cum"): _*)
+      .join(broadcast(tot), gNames)
+      .drop((if (gCols.isEmpty) Seq("_g") else Nil): _*)
   }
 
   // ---- shared radix machinery --------------------------------------
@@ -97,14 +123,6 @@ object Stats {
       Window.partitionBy(part.map(col): _*).orderBy("b")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
 
-  /** [[valueDomainCum]] plus the cleanup thunk releasing its internal
-    * caches (call after the consuming action). The normalized input and
-    * the level-1 totals are persisted: both feed two consumers, and the
-    * plan's broadcast subjobs run CONCURRENTLY — racing them on a lazy
-    * uncached parent recomputes it once per subjob (cache fills do not
-    * dedupe in-flight work), hence the eager count() before any
-    * consumer is built.
-    */
   /** Number of 16-bit coarsening levels above the value level needed to
     * bring the root to <= 2^16 buckets for values fitting in
     * `domainBits` signed bits. 64-bit worst case -> 3 (the t1/t2/t3
@@ -120,49 +138,6 @@ object Stats {
   private def nLevels(domainBits: Int): Int = {
     require(domainBits >= 1 && domainBits <= 64, s"domainBits=$domainBits")
     math.max(1, math.ceil((domainBits - 16) / 16.0).toInt)
-  }
-
-  private[graft] def valueDomainCumManaged(counts0: DataFrame,
-      gCols: Seq[String], cCol: String = "c",
-      persistInput: Boolean = true, domainBits: Int = 64)
-      : (DataFrame, () => Unit) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (in0, gNames) = injectG(counts0, gCols)
-    val g = gNames.map(col)
-    // callers that already persist their counts frame pass
-    // persistInput=false: l0 is then a cheap projection of the cached
-    // parent and caching it again would only duplicate the bytes
-    val l0p = in0.select(g :+ col("v").cast("long").as("b") :+
-        col(cCol).cast("long").as("c"): _*)
-    val l0 = if (persistInput) l0p.persist(lvl) else l0p
-    val t1 = up(l0, gNames).persist(lvl)
-    t1.count()
-    // t1 .. t_n: each level 16 bits coarser; root has <= 2^16 buckets
-    val ts = Iterator.iterate(t1)(up(_, gNames)).take(nLevels(domainBits))
-      .toList
-    val root = ts.last
-    val tot = root.groupBy(g: _*).agg(sum(col("c")).as("n"))
-    val hRoot = exPrefix(root, gNames)
-      .select(g :+ col("b") :+ col("p").as("h"): _*)
-    def down(tk: DataFrame, hUp: DataFrame): DataFrame =
-      exPrefix(
-        tk.withColumn("bp", shiftright(col("b"), 16))
-          .join(broadcast(hUp.select(g :+ col("b").as("bp") :+
-            col("h").as("hp"): _*)), gNames :+ "bp"),
-        gNames :+ "bp")
-      .select(g :+ col("b") :+ (col("hp") + col("p")).as("h"): _*)
-    val h1 = ts.init.reverse.foldLeft(hRoot)((h, tk) => down(tk, h))
-    val out = l0.withColumn("bp", shiftright(col("b"), 16))
-      .join(broadcast(h1.select(g :+ col("b").as("bp") :+
-        col("h").as("hp"): _*)), gNames :+ "bp")
-      .withColumn("cin", sum(col("c")).over(
-        Window.partitionBy((gNames :+ "bp").map(col): _*).orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, 0)))
-      .select(g :+ col("b").as("v") :+ col("c").as(cCol) :+
-        (col("hp") + col("cin")).as("cum"): _*)
-      .join(broadcast(tot), gNames)
-      .drop((if (gCols.isEmpty) Seq("_g") else Nil): _*)
-    (out, () => { if (persistInput) l0.unpersist(); t1.unpersist(); () })
   }
 
   /** The smallest value whose inclusive running weight reaches a
@@ -363,33 +338,22 @@ object Stats {
     * per group (state bounded by the value domain, not the row count) →
     * the same again over |v − median|. No per-group buffered aggregate
     * state, no global row sort.
-    * Output: (group, n, median, mad, n_outliers).
-    */
-  def medianMad(df: DataFrame, groupCol: Column, valueCol: Column,
-      z: Int = 3, domainBits: Int = 64): DataFrame = {
-    // r17 release-audit sweep: defer instead of dropping the cleanup —
-    // q88 leaked the counts/dev/level caches once per run.
-    val (out, release) =
-      medianMadManaged(df, groupCol, valueCol, z, domainBits = domainBits)
-    graft.PendingRelease.defer(release)
-    out
-  }
-
-  /** [[medianMad]] plus a cleanup thunk releasing the internal cache.
+    *
     * The (group, value) count frame feeds three consumers — the median
     * window, the deviation re-aggregation, and the final outlier count —
     * so it is persisted (value-domain-sized, far smaller than the input);
     * without it the input would be scanned and re-aggregated three times.
+    * Every internal cache is released at the calling thread's next
+    * [[graft.PendingRelease.drain]].
+    * Output: (group, n, median, mad, n_outliers).
     */
-  def medianMadManaged(df: DataFrame, groupCol: Column, valueCol: Column,
-      z: Int = 3, persist: Boolean = true, domainBits: Int = 64)
-      : (DataFrame, () => Unit) = {
+  def medianMad(df: DataFrame, groupCol: Column, valueCol: Column,
+      z: Int = 3, domainBits: Int = 64): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val counts0 = df.select(groupCol.as("g"), valueCol.cast("long").as("v"))
+    val counts = df.select(groupCol.as("g"), valueCol.cast("long").as("v"))
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
-    val counts = if (persist) counts0.persist(lvl) else counts0
-    val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
-    if (persist) releases += (() => { counts.unpersist(); () })
+      .persist(lvl)
+    graft.PendingRelease.defer(() => { counts.unpersist(); () })
     // the O(groups) median/MAD frames are tiny; rankSelect (a point
     // lookup) beats the full cumulative sum here: a median needs ONE
     // rank per group, not the whole distribution.
@@ -399,7 +363,7 @@ object Stats {
       val (m0, rel) = rankSelect(cts, Seq("g"), "c",
         n => ((n + 1) / 2).cast("long"), out, persistInput = false,
         domainBits = domainBits)
-      releases += rel
+      graft.PendingRelease.defer(rel)
       m0
     }
     // The median feeds two consumers (the deviation re-aggregation and
@@ -413,24 +377,22 @@ object Stats {
     // mad.count, action); r17 measured the lazy form against it —
     // same rankSelectMulti lesson from r16: overlap the tiny descent
     // with its consumer instead of fencing it behind its own barrier.
-    val med0 = lowerMedian(counts, "median")
-    val med = if (persist) med0.persist(lvl) else med0
-    if (persist) releases += (() => { med.unpersist(); () })
+    val med = lowerMedian(counts, "median").persist(lvl)
+    graft.PendingRelease.defer(() => { med.unpersist(); () })
     val dev = counts.join(broadcast(med.select("g", "median")), Seq("g"))
       .groupBy(col("g"), abs(col("v") - col("median")).as("v"))
       .agg(sum(col("c")).as("c"))
       .persist(lvl) // feeds the mad descent's level chain AND its leaf probe
-    releases += (() => { dev.unpersist(); () })
+    graft.PendingRelease.defer(() => { dev.unpersist(); () })
     val mad = lowerMedian(dev, "mad").drop("n")
     val stats = med.join(mad, Seq("g"))
-    val out = counts.join(broadcast(stats), Seq("g"))
+    counts.join(broadcast(stats), Seq("g"))
       .groupBy("g")
       .agg(max(col("n")).as("n"), max(col("median")).as("median"),
         max(col("mad")).as("mad"),
         coalesce(sum(when(
           abs(col("v") - col("median")) > col("mad") * z, col("c"))),
           lit(0L)).as("n_outliers"))
-    (out, () => releases.foreach(_.apply()))
   }
 
   /** Exact weighted lower percentiles per group: for each requested
@@ -477,39 +439,22 @@ object Stats {
   /** Row-level robust outlier extraction — the records themselves, not
     * just q88-style counts: every row whose |v − median| exceeds
     * z·MAD for its group, with the group stats attached. The
-    * median/MAD pass is [[medianMadManaged]] (value-domain windows, no
+    * median/MAD pass is [[medianMad]] (value-domain windows, no
     * per-group buffered state); the per-group stats frame is tiny and
     * broadcast back onto the input, so extraction is a map-only second
     * pass over the data — the shape that lets 100 TB flag its anomalies
     * without a self-join shuffle.
-    * Output: (g, id, v, median, mad, dev).
+    * Output: (g, id, v, median, mad, dev). The median/MAD caches are
+    * released as [[medianMad]]'s are.
     */
   def robustOutliers(df: DataFrame, groupCol: Column, valueCol: Column,
       idCol: Column, z: Int = 3, domainBits: Int = 64): DataFrame = {
-    // r17 release-audit sweep: defer instead of dropping the cleanup —
-    // q132 leaked the medianMad internals once per run.
-    val (out, release) = robustOutliersManaged(df, groupCol, valueCol,
-      idCol, z, domainBits = domainBits)
-    graft.PendingRelease.defer(release)
-    out
-  }
-
-  /** [[robustOutliers]] plus the cleanup thunk for the internal
-    * median/MAD cache (same contract as [[medianMadManaged]]).
-    */
-  def robustOutliersManaged(df: DataFrame, groupCol: Column,
-      valueCol: Column, idCol: Column, z: Int = 3,
-      persist: Boolean = true, domainBits: Int = 64)
-      : (DataFrame, () => Unit) = {
-    val (stats, cleanup) =
-      medianMadManaged(df, groupCol, valueCol, z, persist, domainBits)
-    val out = df
-      .select(groupCol.as("g"), idCol.as("id"), valueCol.cast("long").as("v"))
+    val stats = medianMad(df, groupCol, valueCol, z, domainBits)
+    df.select(groupCol.as("g"), idCol.as("id"), valueCol.cast("long").as("v"))
       .join(broadcast(stats.select("g", "median", "mad")), Seq("g"))
       .filter(abs(col("v") - col("median")) > col("mad") * z)
       .select(col("g"), col("id"), col("v"), col("median"), col("mad"),
         abs(col("v") - col("median")).as("dev"))
-    (out, cleanup)
   }
 
   /** Per-group quantile (rank) normalization: each row's value mapped

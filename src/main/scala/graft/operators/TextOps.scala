@@ -823,7 +823,7 @@ object TextOps {
     * a crawl before paying to ingest it, and the per-document priority
     * when trimming arrivals to a token budget. The incremental sibling
     * of [[ngramNovelty]] (which scores a corpus against itself), and the
-    * measurement counterpart of Dedup.minhashLshPairsDeltaManaged's
+    * measurement counterpart of Dedup.minhashLshPairsDelta's
     * fresh-vs-corpus dedup.
     *
     * Shape: fresh grams LEFT ANTI join the corpus' distinct gram set —

@@ -173,10 +173,8 @@ object ExtensionQueries {
     */
   val q21: Q = (s, dir) => {
     val sh = Dedup.hashedShingleTable(corpusNear(s, dir), "doc_id", "text", 3)
-    val (pairs, release) =
-      Dedup.jaccardPairsManaged(sh, 0.8, maxDocFreq = Some(64L))
-    graft.PendingRelease.defer(release)
-    pairs.orderBy("id_a", "id_b")
+    Dedup.jaccardPairs(sh, 0.8, maxDocFreq = Some(64L))
+      .orderBy("id_a", "id_b")
   }
   val q21Sql: String =
     s"""WITH corpus AS ($corpusNearSql),
@@ -221,10 +219,8 @@ object ExtensionQueries {
     */
   val q111: Q = (s, dir) => {
     val sh = Dedup.hashedShingleTable(corpusExcerpt(s, dir), "doc_id", "text", 3)
-    val (pairs, release) =
-      Dedup.containmentPairsManaged(sh, 0.8, maxDocFreq = Some(64L))
-    graft.PendingRelease.defer(release)
-    pairs.orderBy("id_a", "id_b")
+    Dedup.containmentPairs(sh, 0.8, maxDocFreq = Some(64L))
+      .orderBy("id_a", "id_b")
   }
   val q111Sql: String =
     s"""WITH corpus AS ($corpusExcerptSql),
@@ -369,7 +365,7 @@ object ExtensionQueries {
   }
 
   // --------------------------------------------------------------- q104
-  /** Incremental corpus dedup ([[Dedup.minhashLshPairsDeltaManaged]]):
+  /** Incremental corpus dedup ([[Dedup.minhashLshPairsDelta]]):
     * the near-dup variants arrive as a FRESH batch against the original
     * documents as the standing corpus — candidates fan out only from
     * the fresh side's bands (fresh×corpus ∪ fresh×fresh, never
@@ -382,11 +378,10 @@ object ExtensionQueries {
     val fresh = base.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" zq zq zq")).as("text"))
-    val (pairs, release) = Dedup.minhashLshPairsDeltaManaged(base, fresh,
+    Dedup.minhashLshPairsDelta(base, fresh,
       "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4,
       threshold = 0.5)
-    graft.PendingRelease.defer(release)
-    pairs.orderBy("id_a", "id_b")
+      .orderBy("id_a", "id_b")
   }
   // fresh-membership mod 1e9: see Frontier2Queries.q232Sql's note
   val q104Sql: String = {

@@ -252,7 +252,7 @@ object Frontier2Queries {
 
   // --------------------------------------------------------------- q232
   /** EXACT Jaccard DELTA join
-    * ([[graft.operators.Dedup.prefixFilterPairsDeltaManaged]]): the
+    * ([[graft.operators.Dedup.prefixFilterPairsDelta]]): the
     * fresh batch (every 10th doc, suffix-perturbed) probes the standing
     * corpus through the one-sided prefix join — candidates fan out only
     * from the FRESH side's prefixes (fresh×corpus ∪ fresh×fresh, never
@@ -270,10 +270,8 @@ object Frontier2Queries {
     val shC = graft.operators.Dedup.hashedShingleTable(d, "doc_id", "text", 3)
     val shF = graft.operators.Dedup.hashedShingleTable(
       fresh, "doc_id", "text", 3)
-    val (pairs, release) = graft.operators.Dedup
-      .prefixFilterPairsDeltaManaged(shC, shF, 600000L)
-    graft.PendingRelease.defer(release)
-    pairs.orderBy("id_a", "id_b")
+    graft.operators.Dedup.prefixFilterPairsDelta(shC, shF, 600000L)
+      .orderBy("id_a", "id_b")
   }
   // fresh-membership in the oracle is mod 1e9: driver SFs keep ids
   // below 1e9, and the 10x scale tile shifts replica ids by exact
@@ -331,15 +329,14 @@ object Frontier2Queries {
       .join(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
-    // managed form: the result plan reads the final round's cached raw
-    // frames, so releasing here would force an eager persist+count
+    // cached iterations: the result plan reads the final round's cached
+    // raw frames, so releasing here would force an eager persist+count
     // round-trip per invocation (the round-11 +117% warm regression);
     // NOT releasing leaks the edge cache + round frames (the round-10
-    // leak). The handle goes to the harness instead: PendingRelease
-    // drains it right after the bench/Verify/spec materializes.
-    val (out, release) = graft.operators.Graph.hitsManaged(edges, iters = 2)
-    graft.PendingRelease.defer(release)
-    out.orderBy("kind", "node")
+    // leak). hits defers the release instead: PendingRelease drains it
+    // right after the bench/Verify/spec materializes.
+    graft.operators.Graph.hits(edges, iters = 2, persist = true)
+      .orderBy("kind", "node")
   }
   val q205Sql: String = {
     val sc = "1000000000000"

@@ -64,7 +64,7 @@ import org.apache.spark.storage.StorageLevel
   * Each unordered pair is detected exactly once: by the batch that
   * delivers its later member (same-batch pairs via fresh×fresh) — the
   * spec pins the accumulated pair set equal to the batch operator
-  * ([[graft.operators.Dedup.minhashLshPairsManaged]]) over the full corpus.
+  * ([[graft.operators.Dedup.minhashLshPairs]]) over the full corpus.
   */
 object StreamingDedup {
 

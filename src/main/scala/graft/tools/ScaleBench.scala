@@ -48,7 +48,7 @@ object ScaleBench {
     }
     def materialize(df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.format("noop").mode("overwrite").save()
-      graft.PendingRelease.drain() // managed operators' deferred handles
+      graft.PendingRelease.drain() // this thread's deferred handles
     }
 
     def dumps(sfDir: String): (String, String) = {

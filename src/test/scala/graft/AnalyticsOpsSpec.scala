@@ -84,14 +84,14 @@ class AnalyticsOpsSpec extends SparkSuite {
   test("pageRank on a symmetric pair matches the closed-form integer recurrence") {
     val edges = Seq((1L, 2L)).toDF("src", "dst")
     val scale = 1000000L
-    val (df, cleanup) = Graph.pageRankManaged(edges, iters = 3, scale = scale)
+    val df = Graph.pageRank(edges, iters = 3, scale = scale)
     val out = df.orderBy("node").as[(Long, Long, Long)].collect()
     // Both nodes have deg 1 and feed each other: scores stay equal, and
     // each iteration applies s' = (15*(S div 2)) div 100 + (85*s) div 100.
     var s = scale / 2
     for (_ <- 1 to 3) s = (15L * (scale / 2)) / 100 + (85L * s) / 100
     assert(out.toSeq == Seq((1L, 1L, s), (2L, 1L, s)))
-    cleanup()
+    PendingRelease.drain()
   }
 
   test("pageRank ranks a star's hub above its leaves and is partition-invariant") {

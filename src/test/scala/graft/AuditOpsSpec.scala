@@ -160,11 +160,11 @@ class AuditOpsSpec extends SparkSuite {
     val stored = Dedup.SigStore.deltaPairs(spark, fresh, "doc_id", "text",
         3, 16, 4, 0.3, dir)
       .orderBy("id_a", "id_b").as[(Long, Long, Double)].collect().toSeq
-    val (direct, release) = Dedup.minhashLshPairsDeltaManaged(corpus,
+    val direct = Dedup.minhashLshPairsDelta(corpus,
       fresh, "doc_id", "text", 3, 16, 4, 0.3)
     val expected = direct.orderBy("id_a", "id_b")
       .as[(Long, Long, Double)].collect().toSeq
-    release()
+    PendingRelease.drain()
     assert(stored == expected, "store path must lose/add no pairs")
     assert(stored.exists { case (a, b, _) => a == 1L && b == 11L },
       "the planted near-dup must be found")

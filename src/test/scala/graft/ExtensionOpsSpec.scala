@@ -320,18 +320,17 @@ class ExtensionOpsSpec extends SparkSuite {
         concat(col("text"), lit(" xq xq")).as("text"))
     val shC = Dedup.hashedShingleTable(base, "id", "text", 3)
     val shF = Dedup.hashedShingleTable(fresh, "id", "text", 3)
-    val (delta, cleanup) =
-      Dedup.prefixFilterPairsDeltaManaged(shC, shF, 500000L)
+    val delta = Dedup.prefixFilterPairsDelta(shC, shF, 500000L)
     val got = delta.select("id_a", "id_b", "jac_ppm")
       .as[(Long, Long, Long)].collect().toSet
-    cleanup()
+    PendingRelease.drain()
     val shAll = Dedup.hashedShingleTable(
       base.unionByName(fresh), "id", "text", 3)
-    val (batch, cleanup2) = Dedup.prefixFilterPairsManaged(shAll, 500000L)
+    val batch = Dedup.prefixFilterPairs(shAll, 500000L)
     val want = batch.select("id_a", "id_b", "jac_ppm")
       .as[(Long, Long, Long)].collect().toSet
       .filter(p => p._1 >= 500000L || p._2 >= 500000L)
-    cleanup2()
+    PendingRelease.drain()
     assert(got == want,
       s"delta=${got.size} batchRestricted=${want.size}; " +
         s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
@@ -379,12 +378,11 @@ class ExtensionOpsSpec extends SparkSuite {
     }
     val shC = Dedup.hashedShingleTable(base, "id", "text", 3)
     val shF = Dedup.hashedShingleTable(fresh, "id", "text", 3)
-    val (delta, cleanup) =
-      Dedup.prefixFilterPairsDeltaManaged(shC, shF, 500000L)
+    val delta = Dedup.prefixFilterPairsDelta(shC, shF, 500000L)
     val want = delta
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jac_ppm")
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    cleanup()
+    PendingRelease.drain()
     val got = probe()
     assert(got == want, s"stored=${got.size} recompute=${want.size}; " +
       s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
@@ -401,12 +399,11 @@ class ExtensionOpsSpec extends SparkSuite {
     Dedup.prefixStoreEnsure(base2, "id", "text", 3, 500000L, store,
       buckets = 8)
     val shC2 = Dedup.hashedShingleTable(base2, "id", "text", 3)
-    val (delta2, cleanup2) =
-      Dedup.prefixFilterPairsDeltaManaged(shC2, shF, 500000L)
+    val delta2 = Dedup.prefixFilterPairsDelta(shC2, shF, 500000L)
     val want2 = delta2
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jac_ppm")
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    cleanup2()
+    PendingRelease.drain()
     assert(probe() == want2 && want2 != want)
   }
 
@@ -415,10 +412,10 @@ class ExtensionOpsSpec extends SparkSuite {
     val fresh = base.filter(col("id") % 7 === 0)
       .select((col("id") + 500000L).as("id"),
         concat(col("text"), lit(" xq xq")).as("text"))
-    val (delta, cleanup) = Dedup.minhashLshPairsDeltaManaged(
+    val delta = Dedup.minhashLshPairsDelta(
       base, fresh, "id", "text", threshold = 0.4)
     val got = delta.as[(Long, Long, Double)].collect().toSet
-    cleanup()
+    PendingRelease.drain()
     val batch = Dedup.minhashLshPairs(
         base.unionByName(fresh), "id", "text", threshold = 0.4)
       .as[(Long, Long, Double)].collect().toSet

@@ -5,12 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The deferred-release registry's embedder contract (round-15 brief
-  * item 8): every harness drains after materialization, but a
-  * long-lived HOST (a watcher, a streaming gate) would leak any
-  * deferred cache if nothing drained per batch. Both streaming drivers
-  * drain at the end of every micro-batch; these specs pin the registry
-  * at baseline after each batch, with a probe handle proving the drain
-  * actually ran (not that nothing was ever deferred).
+  * item 8): every harness drains after materialization, on the thread
+  * that built the frame, but a long-lived HOST (a watcher, a streaming
+  * gate) would leak any deferred cache if nothing drained per batch.
+  * Both streaming drivers drain on the stream thread at the end of
+  * every micro-batch; these specs pin the session's caches at their
+  * pre-batch set after each batch, with a probe handle deferred on the
+  * test thread proving the stream thread's drain releases only its own
+  * handles (the probe survives it; the test thread's drain runs it).
   */
 class PendingReleaseSpec extends SparkSuite {
   import spark.implicits._
@@ -40,16 +42,20 @@ class PendingReleaseSpec extends SparkSuite {
             2L -> "another document entirely about something different"),
         Seq(3L -> "the quick brown fox jumps over the lazy dog again!")
       ).foreach { batch =>
-        // a probe handle deferred before the trigger: the driver's
-        // per-batch drain must release it (and anything an operator
-        // deferred) before the next batch
+        // a probe handle deferred on this thread before the trigger:
+        // the stream thread's per-batch drain releases what that thread
+        // deferred, never this thread's probe
+        val cached = spark.sparkContext.getPersistentRDDs.keySet
         var released = false
         PendingRelease.defer(() => released = true)
         input.addData(batch: _*)
         q.processAllAvailable()
-        assert(released, "per-batch drain never ran the probe handle")
-        assert(PendingRelease.pendingCount == 0,
-          s"${PendingRelease.pendingCount} handles leaked past the batch")
+        assert(!released, "the stream thread's drain ran this thread's probe")
+        assert(spark.sparkContext.getPersistentRDDs.keySet == cached,
+          "caches leaked past the batch")
+        PendingRelease.drain()
+        assert(released, "this thread's drain never ran its probe handle")
+        assert(PendingRelease.pendingCount == 0)
       }
     } finally q.stop()
   }
@@ -66,13 +72,17 @@ class PendingReleaseSpec extends SparkSuite {
       stateDir, emitScripts = false)
     try {
       Seq(10, 11).zipWithIndex.foreach { case (v, i) =>
+        val cached = spark.sparkContext.getPersistentRDDs.keySet
         var released = false
         PendingRelease.defer(() => released = true)
         Files.write(watchDir.resolve(s"d$i.sql"), dump(v).getBytes("UTF-8"))
         q.processAllAvailable()
-        assert(released, "per-batch drain never ran the probe handle")
-        assert(PendingRelease.pendingCount == 0,
-          s"${PendingRelease.pendingCount} handles leaked past the batch")
+        assert(!released, "the stream thread's drain ran this thread's probe")
+        assert(spark.sparkContext.getPersistentRDDs.keySet == cached,
+          "caches leaked past the batch")
+        PendingRelease.drain()
+        assert(released, "this thread's drain never ran its probe handle")
+        assert(PendingRelease.pendingCount == 0)
       }
     } finally q.stop()
   }

@@ -65,13 +65,14 @@ class ScdSpec extends SparkSuite {
       .as[(Long, String, Long, Option[Long])].collect().toSet
     val seed = Scd.scd2(stacked.filter($"ver" === 0), "ver", Seq("pk"), Seq("v"))
     val sc = spark.sparkContext
+    PendingRelease.drain() // this thread's earlier handles are not the fold's
     val before = sc.getPersistentRDDs.keySet
-    val (folded, cleanup) = Scd.advanceFoldManaged(seed,
+    val folded = Scd.advanceFold(seed,
       (1L to 2L).map(v => (v, stacked.filter($"ver" === v).select("pk", "v"))),
       Seq("pk"), Seq("v"))
     val inc = folded.as[(Long, String, Long, Option[Long])].collect().toSet
     assert(inc == batch)
-    cleanup()
+    PendingRelease.drain()
     assert(sc.getPersistentRDDs.keySet == before,
       "fold checkpoints must be released by cleanup()")
   }

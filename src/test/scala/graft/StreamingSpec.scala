@@ -201,11 +201,11 @@ class StreamingSpec extends SparkSuite {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val (expectedDf, cleanup) =
-      graft.operators.Dedup.minhashLshPairsManaged(corpus, "doc_id", "text")
+    val expectedDf =
+      graft.operators.Dedup.minhashLshPairs(corpus, "doc_id", "text")
     val expected = expectedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    cleanup()
+    PendingRelease.drain()
     assert(expected.nonEmpty)
 
     val all = corpus.as[(Long, String)].collect().toSeq
@@ -252,11 +252,11 @@ class StreamingSpec extends SparkSuite {
       .limit(300)
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val (expectedDf, cleanup) =
-      graft.operators.Dedup.minhashLshPairsManaged(corpus, "doc_id", "text")
+    val expectedDf =
+      graft.operators.Dedup.minhashLshPairs(corpus, "doc_id", "text")
     val expected = expectedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    cleanup()
+    PendingRelease.drain()
     assert(expected.nonEmpty)
     val all = corpus.as[(Long, String)].collect().toSeq
     val (copies, orig) = all.partition(_._1 >= 100000L)
@@ -301,11 +301,11 @@ class StreamingSpec extends SparkSuite {
       .limit(300)
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val (expectedDf, cleanup) =
-      graft.operators.Dedup.minhashLshPairsManaged(corpus, "doc_id", "text")
+    val expectedDf =
+      graft.operators.Dedup.minhashLshPairs(corpus, "doc_id", "text")
     val expected = expectedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    cleanup()
+    PendingRelease.drain()
     assert(expected.nonEmpty)
     val all = corpus.as[(Long, String)].collect().toSeq
     val (copies, orig) = all.partition(_._1 >= 100000L)
@@ -349,11 +349,11 @@ class StreamingSpec extends SparkSuite {
       .limit(200)
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val (expectedDf, cleanup) =
-      graft.operators.Dedup.minhashLshPairsManaged(corpus, "doc_id", "text")
+    val expectedDf =
+      graft.operators.Dedup.minhashLshPairs(corpus, "doc_id", "text")
     val expected = expectedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    cleanup()
+    PendingRelease.drain()
     assert(expected.nonEmpty)
     val all = corpus.as[(Long, String)].collect().toSeq
     val (copies, orig) = all.partition(_._1 >= 100000L)
@@ -402,11 +402,11 @@ class StreamingSpec extends SparkSuite {
       .limit(300)
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val (expectedDf, cleanup) =
-      graft.operators.Dedup.minhashLshPairsManaged(corpus, "doc_id", "text")
+    val expectedDf =
+      graft.operators.Dedup.minhashLshPairs(corpus, "doc_id", "text")
     val expected = expectedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    cleanup()
+    PendingRelease.drain()
     assert(expected.nonEmpty)
     val all = corpus.as[(Long, String)].collect().toSeq
     val (copies, orig) = all.partition(_._1 >= 100000L)
@@ -441,11 +441,11 @@ class StreamingSpec extends SparkSuite {
       .limit(150)
     val corpus = docs.unionByName(docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val (expectedDf, cleanup) =
-      graft.operators.Dedup.minhashLshPairsManaged(corpus, "doc_id", "text")
+    val expectedDf =
+      graft.operators.Dedup.minhashLshPairs(corpus, "doc_id", "text")
     val expected = expectedDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    cleanup()
+    PendingRelease.drain()
     val all = corpus.as[(Long, String)].collect().toSeq
     val (copies, orig) = all.partition(_._1 >= 100000L)
     val sd = java.nio.file.Files.createTempDirectory("graft-sdflat").toString
