@@ -257,31 +257,26 @@ object Bench {
       } finally ch.close()
     }
     val syncEntries = Seq[(String, () => Unit)](
-      ("sync_dump_diff", () => {
-        val (_, script) = new SyncJob(spark)
-          .syncCollected(prodPath.toString, backupPath.toString, "bench")
-        Files.write(Paths.get(cacheDir, "sync_out.sql"), script.getBytes("UTF-8"))
-        ()
-      }),
-      // the 100 TB sink: executor-rendered script to a text sink, no
-      // driver collect (byte parity pinned by DistributedSinkSpec) —
-      // benched so the scale path's cost is tracked round-over-round,
-      // not just the reference-parity collected path
-      // ONE output dir for all runs (cold + warms + retries):
-      // syncDistributed writes mode("overwrite"), and a fresh temp dir
-      // per timed run would both accumulate unbounded script copies
-      // under /tmp across bench invocations and charge dir creation to
-      // the timing
-      // size-routed (syncDistributed): a sync this small collects the
-      // ordered lines into one part file — the 32-task text-sink commit
-      // overhead was the entry's measured small-scale floor — while
-      // past-threshold diffs take the executor-rendered distributed
-      // write; bytes identical either way
-      ("sync_dump_diff_distributed", {
-        val out = Paths.get(cacheDir, "sync_distributed_out").toString
+      // the CLI default: the size-routed sink (a diff this small is
+      // collected into one file). ONE output path for all runs (cold +
+      // warms + retries): each run replaces it, and a fresh temp path
+      // per timed run would accumulate script copies under /tmp
+      ("sync_dump_diff", {
+        val out = Paths.get(cacheDir, "sync_out.sql").toString
         () => {
-          new SyncJob(spark).syncDistributed(
+          new SyncJob(spark).syncAuto(
             prodPath.toString, backupPath.toString, out, "bench")
+          ()
+        }
+      }),
+      // the at-scale sink forced (maxCollectedOps = 0): executor-rendered
+      // sorted text parts, no driver collect — benched so that path's
+      // cost is tracked even when the tile fits the collected route
+      ("sync_dump_diff_distributed", {
+        val out = Paths.get(cacheDir, "sync_distributed_out.sql").toString
+        () => {
+          new SyncJob(spark).syncAuto(prodPath.toString, backupPath.toString,
+            out, "bench", maxCollectedOps = 0L)
           ()
         }
       }),
@@ -302,9 +297,9 @@ object Bench {
       ("sync_auto_rediff", () => {
         graft.engine.BucketedSync.ensureSnapshot(spark, prodPath.toString, "bench_auto_prod")
         graft.engine.BucketedSync.ensureSnapshot(spark, backupPath.toString, "bench_auto_backup")
-        val (_, script) = new SyncJob(spark).syncFromBucketed(
-          "bench_auto_prod", "bench_auto_backup", prodPath.toString, "bench")
-        Files.write(Paths.get(cacheDir, "sync_auto_out.sql"), script.getBytes("UTF-8"))
+        new SyncJob(spark).syncFromBucketed("bench_auto_prod",
+          "bench_auto_backup", prodPath.toString,
+          Paths.get(cacheDir, "sync_auto_out.sql").toString, "bench")
         ()
       })
     ).filter(t => selected(t._1)).map { case (name, body) =>

@@ -15,20 +15,21 @@ import graft.report.SummaryReporter
   *
   * defaulting to prod.sql / backup.sql / database_sync_crud.sql.
   *
-  * `--distributed-out <dir>` writes the script as sorted part files
-  * under `<dir>` (SyncJob.syncDistributed), size-routed like the default
-  * path: a diff that fits the driver is collected into one part file, a
-  * larger one goes through the executor-rendered text sink. Either way
-  * the concatenated part files are the single-file script plus a final
-  * newline.
+  * Every sync writes through one size-routed sink (SyncJob.syncAuto): a
+  * diff that fits the driver is written as the single file
+  * `output.sql`; a larger one goes through the executor-rendered text
+  * sink as sorted part files under `output.sql.parts`, which
+  * concatenate to the single-file script plus a final newline. Each run
+  * deletes the other route's output.
   *
   * `--state <dir>` enables the repeated-sync fast path: both dumps are
   * snapshotted as bucketed tables under `<dir>` (fingerprint-gated, so
   * an unchanged dump is never re-parsed), and the diff runs as the
   * Merkle-gated changed-tables-only exchange-free rediff
-  * (engine.BucketedSync). The script is byte-identical to the default
-  * path; the second sync against the same dumps costs the digest scan,
-  * not the parse.
+  * (engine.BucketedSync). Only the diff differs: the script goes
+  * through the same sink, byte-identical to the default path; the
+  * second sync against the same dumps costs the digest scan, not the
+  * parse.
   *
   * `--schema-diff` switches to report-only mode: print the column-level
   * schema evolution between the dumps (engine.SchemaDiff — columns
@@ -123,19 +124,18 @@ object Main {
       } finally spark.stop()
       return
     }
-    val distIdx = rawArgs.indexOf("--distributed-out")
-    val distributedOut =
-      if (distIdx >= 0 && distIdx + 1 < rawArgs.length) Some(rawArgs(distIdx + 1))
-      else None
-    val args1 = if (distIdx >= 0)
-      rawArgs.patch(distIdx, Nil, 2) else rawArgs
-    val stateIdx = args1.indexOf("--state")
+    val stateIdx = rawArgs.indexOf("--state")
     val stateDir =
-      if (stateIdx >= 0 && stateIdx + 1 < args1.length) Some(args1(stateIdx + 1))
+      if (stateIdx >= 0 && stateIdx + 1 < rawArgs.length) Some(rawArgs(stateIdx + 1))
       else None
-    val args0 = if (stateIdx >= 0) args1.patch(stateIdx, Nil, 2) else args1
+    val args0 = if (stateIdx >= 0) rawArgs.patch(stateIdx, Nil, 2) else rawArgs
     val schemaDiffOnly = args0.contains("--schema-diff")
     val args = args0.filterNot(_ == "--schema-diff")
+    // an unknown or removed flag would otherwise be taken as a file name
+    args.find(_.startsWith("--")).foreach { f =>
+      System.err.println(s"❌ Error: Unknown option: $f")
+      sys.exit(1)
+    }
 
     val prodFile = if (args.length >= 2) args(0) else "prod.sql"
     val backupFile = if (args.length >= 2) args(1) else "backup.sql"
@@ -182,44 +182,28 @@ object Main {
       println(s"Comparing SQL dumps:\n  Production: $prodFile\n  Backup: $backupFile")
       val now = LocalDateTime.now.format(
         DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-      (distributedOut, stateDir) match {
-        case (Some(dir), _) =>
-          val outcome = new SyncJob(spark).syncDistributed(
-            prodFile, backupFile, dir, now)
-          SummaryReporter.print(outcome)
-          println(s"\n💾 Sync script parts written to: $dir")
-        case (None, Some(_)) =>
+      val job = new SyncJob(spark)
+      val (outcome, partsDir) = stateDir match {
+        case Some(_) =>
           // bucketed fast path: parse each dump at most once per content
           // (fingerprint-gated snapshots in the state dir), then a
-          // Merkle-gated changed-tables-only exchange-free rediff —
-          // script byte-identical to the syncCollected path
+          // Merkle-gated changed-tables-only exchange-free rediff
           val freshP = graft.engine.BucketedSync.ensureSnapshot(
             spark, prodFile, "graft_state_prod")
           val freshB = graft.engine.BucketedSync.ensureSnapshot(
             spark, backupFile, "graft_state_backup")
           println(s"  State: prod snapshot ${if (freshP) "written" else "reused"}, " +
             s"backup snapshot ${if (freshB) "written" else "reused"}")
-          val (outcome, script) = new SyncJob(spark).syncFromBucketed(
-            "graft_state_prod", "graft_state_backup", prodFile, now)
-          SummaryReporter.print(outcome)
-          Files.write(Paths.get(outputFile), script.getBytes("UTF-8"))
-          println(s"\n💾 Sync script written to: $outputFile")
-        case (None, None) =>
-          // size-routed default: executor-rendered script either way;
-          // small diffs collect to the single file (reference parity),
-          // diffs past SyncJob.DefaultMaxCollectedOps auto-route to the
-          // distributed text sink at <output>.parts so the driver never
-          // holds a diff-sized script
-          val (outcome, partsDir) =
-            new SyncJob(spark).syncAuto(prodFile, backupFile, outputFile, now)
-          SummaryReporter.print(outcome)
-          partsDir match {
-            case Some(dir) => println(
-              s"\n💾 Sync script parts written to: $dir (op count above " +
-                s"${SyncJob.DefaultMaxCollectedOps}; concatenate sorted " +
-                "parts for the single-file script)")
-            case None => println(s"\n💾 Sync script written to: $outputFile")
-          }
+          job.syncFromBucketed("graft_state_prod", "graft_state_backup",
+            prodFile, outputFile, now)
+        case None => job.syncAuto(prodFile, backupFile, outputFile, now)
+      }
+      SummaryReporter.print(outcome)
+      partsDir match {
+        case Some(dir) => println(
+          s"\n💾 Sync script parts written to: $dir (diff too large to " +
+            "collect; concatenate sorted parts for the single-file script)")
+        case None => println(s"\n💾 Sync script written to: $outputFile")
       }
     } finally spark.stop()
   }

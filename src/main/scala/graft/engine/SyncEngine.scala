@@ -35,9 +35,9 @@ final case class DiffOp(
     backupVals: Option[Seq[String]],
     rawInsert: Option[String])
 
-/** One line of the full sync script with its global sort key — every
-  * script route unions banner/comment lines (driver-built, O(tables))
-  * with rendered statements (executor-built) and range-sorts.
+/** One line of the full sync script with its global sort key — the
+  * script unions banner/comment lines (driver-built, O(tables)) with
+  * rendered statements (executor-built) and the sink sorts them by it.
   */
 final case class ScriptLine(
     sec: Int, tbl: Int, off: Long, row: Int, sub: Int, line: String)
@@ -173,27 +173,16 @@ class SyncJob(spark: SparkSession) {
     finally d.release()
   }
 
-  /** The full script as one string, byte-identical to
-    * `SyncSqlGenerator.assemble(run(...), now)` (the golden spec pins
-    * it). Statements are rendered executor-side; the driver receives
-    * only the ordered script lines, never the per-op value arrays.
-    */
-  def syncCollected(prodPath: String, backupPath: String,
-      now: String): (SyncOutcome, String) = {
-    val d = prepare(prodPath, backupPath)
-    try (d.outcome, d.lines(now).collect().mkString("\n"))
-    finally d.release()
-  }
-
   /** The default CLI sink. A diff that fits the driver (op count at
     * most `maxCollectedOps` and estimated script bytes at most
     * [[SyncJob.MaxCollectedBytes]]) is collected and written as ONE
-    * file at `outPath`, [[syncCollected]]'s bytes; a larger one goes
-    * through the distributed text sink at `outPath + ".parts"`, whose
-    * sorted part files concatenate to the same bytes plus a final '\n'.
-    * Each run replaces its route's output and deletes the other
-    * route's, so a reader of either path never gets an older script.
-    * Returns the outcome and, on the parts route, the parts directory.
+    * file at `outPath`, `SyncSqlGenerator.assemble(run(...), now)`'s
+    * bytes; a larger one goes through the distributed text sink at
+    * `outPath + ".parts"`, whose sorted part files concatenate to the
+    * same bytes plus a final '\n'. Each run replaces its route's output
+    * and deletes the other route's, so a reader of either path never
+    * gets an older script. Returns the outcome and, on the parts route,
+    * the parts directory.
     */
   def syncAuto(prodPath: String, backupPath: String, outPath: String,
       now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
@@ -203,54 +192,31 @@ class SyncJob(spark: SparkSession) {
     finally d.release()
   }
 
-  /** The size-routed sink of a [[Prepared]] diff: the collected script
-    * at `outPath`, or the sorted text parts under `partsDir` (returned).
-    * The dump watcher renders its per-arrival scripts through here.
+  /** The size-routed sink of a [[Prepared]] diff, the one writer of a
+    * sync script: the collected script at `outPath`, or the sorted text
+    * parts under `partsDir` (returned). The collected route sorts its
+    * lines on the driver — a script that fits the driver is small, and
+    * a range sort would cost three more Spark jobs — while the parts
+    * route keeps the distributed sort. The sort keys are unique, so
+    * both give the same order.
     */
   private[graft] def syncAuto(d: Prepared, outPath: String, partsDir: String,
       now: String, maxCollectedOps: Long): Option[String] = {
     val out = new Path(outPath)
     val fs = fsOf(out)
     if (d.fitsDriver(maxCollectedOps)) {
-      val lines = d.lines(now).collect()
+      val lines = d.lines(now).collect().sorted(SyncJob.LineOrder).map(_.line)
       // raw (checksum-free) create: the script is a user-facing file,
       // not internal state — no .crc sidecar
-      writeLines(graft.operators.ContentGate.rawFs(fs), out, lines,
-        terminated = false)
+      writeLines(graft.operators.ContentGate.rawFs(fs), out, lines)
       fs.delete(new Path(partsDir), true)
       None
     } else {
-      d.lines(now).write.mode("overwrite").text(partsDir)
+      d.lines(now).orderBy("sec", "tbl", "off", "row", "sub")
+        .select("line").write.mode("overwrite").text(partsDir)
       fs.delete(out, false)
       Some(partsDir)
     }
-  }
-
-  /** The full script as sorted part files under `outDir` that
-    * concatenate to [[syncCollected]]'s bytes plus a final '\n' — the
-    * CLI `--distributed-out` and watcher sink. Same size rule as
-    * [[syncAuto]]: a diff that fits the driver is collected into ONE
-    * part file, because a shuffle-partition-wide text sink spends more
-    * on task launch and per-file commit than on a script that size; a
-    * larger one takes the executor-rendered text sink, where no driver
-    * state grows with the diff. Either route replaces all of `outDir`.
-    */
-  def syncDistributed(prodPath: String, backupPath: String, outDir: String,
-      now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
-      : SyncOutcome = {
-    val d = prepare(prodPath, backupPath)
-    try {
-      if (d.fitsDriver(maxCollectedOps)) {
-        val lines = d.lines(now).collect()
-        val dir = new Path(outDir)
-        val fs = fsOf(dir)
-        fs.delete(dir, true)
-        writeLines(fs, new Path(dir, "part-00000"), lines, terminated = true)
-      } else {
-        d.lines(now).write.mode("overwrite").text(outDir)
-      }
-      d.outcome
-    } finally d.release()
   }
 
   /** One diff of a dump pair, cached and summarized: what every script
@@ -259,7 +225,7 @@ class SyncJob(spark: SparkSession) {
     */
   private[graft] final class Prepared(val joined: DataFrame,
       val outcome: SyncOutcome, val release: () => Unit) {
-    def lines(now: String): Dataset[String] = scriptLines(joined, outcome, now)
+    def lines(now: String): Dataset[ScriptLine] = scriptLines(joined, outcome, now)
 
     /** The one size rule of the routed sinks: collect the script to the
       * driver when both the op count and the estimated script bytes
@@ -273,16 +239,16 @@ class SyncJob(spark: SparkSession) {
     }
   }
 
-  /** The complete script as one globally-ordered line frame —
-    * executor-rendered statements unioned with the O(tables) driver
-    * banner rows under the (sec, tbl, off, row, sub) sort key. Every
-    * script route renders through here, so the byte-parity rules live
-    * in ONE place: notably, DELETE/UPDATE that render empty are
-    * skipped, exactly as assemble does, while empty INSERT lines are
-    * kept (assemble emits them bare).
+  /** The complete script as one line frame — executor-rendered
+    * statements unioned with the O(tables) driver banner rows, each
+    * carrying its (sec, tbl, off, row, sub) sort key; the sink orders
+    * them. Every script route renders through here, so the byte-parity
+    * rules live in ONE place: notably, DELETE/UPDATE that render empty
+    * are skipped, exactly as assemble does, while empty INSERT lines
+    * are kept (assemble emits them bare).
     */
   private def scriptLines(joined: DataFrame, o: SyncOutcome,
-      now: String): Dataset[String] = {
+      now: String): Dataset[ScriptLine] = {
     val bcProd = spark.sparkContext.broadcast(o.prodCatalog)
     val bcBackup = spark.sparkContext.broadcast(o.backupCatalog)
     val bcIdx = spark.sparkContext.broadcast(o.commonTables.zipWithIndex.toMap)
@@ -298,16 +264,13 @@ class SyncJob(spark: SparkSession) {
       else Some(ScriptLine(sec, bcIdx.value(op.table), op.ordOff, op.ordRow, 0, stmt))
     }
     spark.createDataset(driverLines(o, now)).union(stmts)
-      .orderBy("sec", "tbl", "off", "row", "sub")
-      .select("line").as[String]
   }
 
-  /** Writes collected script lines to `path` without joining them into
-    * one string: '\n'-separated, plus a final '\n' when `terminated`
-    * (the text sink's part-file layout).
+  /** Writes collected script lines to `path`, '\n'-separated, without
+    * joining them into one string.
     */
-  private def writeLines(fs: FileSystem, path: Path, lines: Array[String],
-      terminated: Boolean): Unit = {
+  private def writeLines(fs: FileSystem, path: Path,
+      lines: Array[String]): Unit = {
     val w = new BufferedWriter(
       new OutputStreamWriter(fs.create(path, true), UTF_8), 1 << 16)
     try {
@@ -315,7 +278,6 @@ class SyncJob(spark: SparkSession) {
         if (i > 0) w.write('\n')
         w.write(l)
       }
-      if (terminated && lines.nonEmpty) w.write('\n')
     } finally w.close()
   }
 
@@ -606,9 +568,10 @@ class SyncJob(spark: SparkSession) {
   }
 
   /** Full sync script straight from two [[BucketedSync]] snapshots —
-    * the repeated-sync fast path behind the CLI `--state` flag. Byte-
-    * identical to [[syncCollected]] on the same dump pair (the golden
-    * spec pins it), but the dumps are never re-parsed: catalogs, table
+    * the repeated-sync fast path behind the CLI `--state` flag. It
+    * writes through [[syncAuto]]'s size-routed sink and returns what
+    * [[syncAuto]] returns, with the same bytes on the same dump pair
+    * (the golden spec pins it), but the dumps are never re-parsed: catalogs, table
     * counts, and CREATE-section offsets come from the snapshot
     * sidecars; the row diff is the Merkle-gated changed-tables-only
     * exchange-free bucket join ([[BucketedSync.diffChanged]]).
@@ -617,23 +580,24 @@ class SyncJob(spark: SparkSession) {
     * reference-quirk CREATE text when the backup is missing a table.
     */
   def syncFromBucketed(prodTable: String, backupTable: String,
-      prodPath: String, now: String): (SyncOutcome, String) = {
+      prodPath: String, outPath: String, now: String,
+      maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
+      : (SyncOutcome, Option[String]) = {
     val d = summarize(prodPath, Nil)((
       BucketedSync.catalogInfoOf(spark, prodTable),
       BucketedSync.catalogInfoOf(spark, backupTable),
       (common: Seq[String]) =>
         BucketedSync.diffChanged(spark, prodTable, backupTable, common).cache()))
-    try (d.outcome, d.lines(now).collect().mkString("\n"))
+    try (d.outcome, syncAuto(d, outPath, outPath + ".parts", now, maxCollectedOps))
     finally d.release()
   }
 }
 
 object SyncJob {
-  /** Collected-script routing threshold for [[SyncJob.syncAuto]] and
-    * [[SyncJob.syncDistributed]]: above this many classified ops the
-    * script goes through the distributed text sink instead of a driver
-    * collect. 1M ops of TYPICAL width ≈
-    * tens of MB of script bytes — comfortably a driver string, while
+  /** Collected-script routing threshold for [[SyncJob.syncAuto]]:
+    * above this many classified ops the script goes through the
+    * distributed text sink instead of a driver collect. 1M ops of
+    * TYPICAL width ≈ tens of MB of script bytes — comfortably a driver string, while
     * anything larger is the at-scale regime where the single-file
     * contract stops being the point. The op count alone is NOT a safe
     * driver-heap bound (a million wide rows renders to GBs), so the
@@ -651,6 +615,17 @@ object SyncJob {
     * rendered syntax skeleton ([[SyncJob.opBytesCol]]).
     */
   val MaxCollectedBytes: Long = 256L << 20
+
+  /** The collected route's driver-side line order: the same
+    * (sec, tbl, off, row, sub) key the parts route range-sorts by,
+    * compared field by field without allocating a key per comparison.
+    */
+  private val LineOrder: Ordering[ScriptLine] = Ordering.comparatorToOrdering(
+    java.util.Comparator.comparingInt[ScriptLine](_.sec)
+      .thenComparingInt((l: ScriptLine) => l.tbl)
+      .thenComparingLong((l: ScriptLine) => l.off)
+      .thenComparingInt((l: ScriptLine) => l.row)
+      .thenComparingInt((l: ScriptLine) => l.sub))
 
   /** A dump's DDL-ordered catalog plus the byte positions that reproduce
     * the reference's whole-file CREATE-statement capture (see

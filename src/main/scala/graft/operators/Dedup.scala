@@ -536,10 +536,12 @@ object Dedup {
     * the df/pre reads statically, and the surviving candidate pairs'
     * id-buckets prune the arr/ verify read — the probe never scans
     * untouched buckets on either side and never recomputes corpus
-    * shingles, ranks, or arrays.
+    * shingles, ranks, or arrays. The fresh shingle frame and the
+    * candidate pairs, which the result reads, are cached and released
+    * at the calling thread's next [[graft.PendingRelease.drain]].
     */
   def prefixStoreProbeDelta(fresh: DataFrame, idCol: String,
-      textCol: String, dir: String): (DataFrame, () => Unit) = {
+      textCol: String, dir: String): DataFrame = {
     val spark = fresh.sparkSession
     val meta = ContentGate.readSmall(dir, "META").getOrElse(
       throw new IllegalArgumentException(s"prefix store $dir has no META"))
@@ -548,7 +550,7 @@ object Dedup {
       (meta(0).toInt, meta(1).toLong, meta(2).toInt)
     val shF = hashedShingleTable(fresh, idCol, textCol, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cleanup = () => { shF.unpersist(); () }
+    graft.PendingRelease.defer(() => { shF.unpersist(); () })
     val touched = shF
       .select(pmod(col("shingle"), lit(buckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
@@ -583,7 +585,7 @@ object Dedup {
     // shingle frame, not the store (delta ids are disjoint by contract).
     val cand = oneSidedPrefixCandidates(preF, preC, thresholdPpm)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cleanupAll = () => { cleanup(); cand.unpersist(); () }
+    graft.PendingRelease.defer(() => { cand.unpersist(); () })
     val touchedAb = cand.select(explode(array(
         pmod(col("id_a"), lit(buckets.toLong)),
         pmod(col("id_b"), lit(buckets.toLong)))).as("ab"))
@@ -592,7 +594,7 @@ object Dedup {
       .filter(col("ab").isin(touchedAb: _*)).select("id", "toks")
       .unionByName(
         shF.groupBy("id").agg(collect_list(col("shingle")).as("toks")))
-    (verifyCandidatePairs(cand, arrs, thresholdPpm), cleanupAll)
+    verifyCandidatePairs(cand, arrs, thresholdPpm)
   }
 
   /** Fresh-initiated candidate join + positional prune + array verify —
@@ -1059,8 +1061,7 @@ object Dedup {
     * two-word popcount sum. Output: (id_a, id_b, hamming).
     */
   def simhashPairs64(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 7, persist: Boolean = true)
-      : (DataFrame, () => Unit) =
+      maxHamming: Int = 7, persist: Boolean = true): DataFrame =
     hammingPairs64(
       simhash64Table(df, idCol, textCol)
         .select(col("id"), col("sim_hi").as("hi"), col("sim_lo").as("lo")),
@@ -1073,15 +1074,17 @@ object Dedup {
     * [[simhashPairs64]] (text signatures) and
     * [[Multimodal.perceptualHashes]] (image aHash signatures) — any
     * fixed-width fingerprint dedups through the same plan. Output:
-    * (id_a, id_b, hamming).
+    * (id_a, id_b, hamming). With `persist` the signature frame, which
+    * feeds both sides of the band self-join, is cached and released at
+    * the calling thread's next [[graft.PendingRelease.drain]].
     */
   def hammingPairs64(sims0: DataFrame, maxHamming: Int = 7,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+      persist: Boolean = true): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 7,
       s"maxHamming=$maxHamming: 8-band/8-bit banding is only " +
         "candidate-complete for Hamming distance <= 7 (pigeonhole)")
     val sims = if (persist) sims0.persist(StorageLevel.MEMORY_AND_DISK) else sims0
-    val cleanup = () => if (persist) { sims.unpersist(); () }
+    if (persist) graft.PendingRelease.defer(() => { sims.unpersist(); () })
     val bandArr = array((0 until 8).map { b =>
       val w = if (b < 4) col("lo") else col("hi")
       struct(lit(b).as("band"),
@@ -1095,13 +1098,12 @@ object Dedup {
         col("a.hi").as("ha"), col("a.lo").as("la"),
         col("b.hi").as("hb"), col("b.lo").as("lb"))
       .distinct()
-    val pairs = cand
+    cand
       .withColumn("hamming",
         (bit_count(col("ha").bitwiseXOR(col("hb"))) +
           bit_count(col("la").bitwiseXOR(col("lb")))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-    (pairs, cleanup)
   }
 
   /** LSH banding calibration report — the tuning surface for
@@ -1122,10 +1124,12 @@ object Dedup {
     * multiplications (no pow(), whose libm rounding varies across
     * engines), micro-scaled to an exact Long.
     * Output: (decile, n_pairs, catch_p_micro), observed deciles only.
+    * With `persist` the shingle and band frames are cached and released
+    * at the calling thread's next [[graft.PendingRelease.drain]].
     */
   def lshCalibration(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      persist: Boolean = true): (DataFrame, () => Unit) = {
+      persist: Boolean = true): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val rpb = numHashes / bands
     require(rpb * bands == numHashes, s"bands=$bands must divide $numHashes")
@@ -1135,7 +1139,9 @@ object Dedup {
       alreadyHashed = true)
     val bands0 = lshBandsFrom(sigs, numHashes, bands)
     val bandsDf = if (persist) bands0.persist(lvl) else bands0
-    val cleanup = () => if (persist) { sh.unpersist(); bandsDf.unpersist(); () }
+    if (persist) graft.PendingRelease.defer(() => {
+      sh.unpersist(); bandsDf.unpersist(); ()
+    })
     val cand = bandsDf.as("a").join(bandsDf.as("b"), Seq("band", "band_key"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -1148,7 +1154,7 @@ object Dedup {
     val mid = (col("decile") * 2 + 1).cast("double") / lit(20.0)
     val sr = powChain(mid, rpb)
     val qb = powChain(lit(1.0) - sr, bands)
-    val out = cand
+    cand
       .join(sh.select(col("id").as("id_a"), col("shingle")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("shingle")),
         Seq("id_b", "shingle"))
@@ -1161,7 +1167,6 @@ object Dedup {
       .withColumn("catch_p_micro",
         floor((lit(1.0) - qb) * lit(1000000.0) + lit(0.5)).cast("long"))
       .select("decile", "n_pairs", "catch_p_micro")
-    (out, cleanup)
   }
 
   /** Duplicate-cluster size distribution: component sizes from a

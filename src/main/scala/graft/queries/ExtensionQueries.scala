@@ -339,11 +339,9 @@ object ExtensionQueries {
     * report replays bit-for-bit from q22's oracle CTEs.
     */
   val q156: Q = (s, dir) => {
-    // r17 release-audit sweep: defer instead of dropping the cleanup
-    val (cal, release) = Dedup.lshCalibration(corpusNear(s, dir),
+    Dedup.lshCalibration(corpusNear(s, dir),
       "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4)
-    graft.PendingRelease.defer(release)
-    cal.orderBy("decile")
+      .orderBy("decile")
   }
   val q156Sql: String = {
     val marker = "jac AS (SELECT id_a"
@@ -1451,9 +1449,8 @@ object ExtensionQueries {
     val hashes = Multimodal
       .perceptualHashes(Multimodal.fixtureImageCorpus(ids))
       .toDF().select(col("id"), col("ph_hi").as("hi"), col("ph_lo").as("lo"))
-    val (pairs, _) =
-      Dedup.hammingPairs64(hashes, maxHamming = 2, persist = false)
-    pairs.orderBy("id_a", "id_b")
+    Dedup.hammingPairs64(hashes, maxHamming = 2, persist = false)
+      .orderBy("id_a", "id_b")
   }
   val q146Sql: String =
     """WITH d AS (SELECT doc_id, 16 + doc_id % 8 AS sw, 9 + doc_id % 5 AS sh

@@ -309,10 +309,9 @@ object Frontier2Queries {
       shingleN = 3, thresholdPpm = 600000L, store,
       freshnessTag = Some(graft.operators.ContentGate.pathTag(
         s, s"$dir/documents.parquet")))
-    val (pairs, release) = graft.operators.Dedup
+    graft.operators.Dedup
       .prefixStoreProbeDelta(fresh, "doc_id", "text", store)
-    graft.PendingRelease.defer(release)
-    pairs.orderBy("id_a", "id_b")
+      .orderBy("id_a", "id_b")
   }
   val q233Sql: String = q232Sql
 

@@ -522,7 +522,7 @@ object FrontierQueries {
     val corpus = graft.operators.Multimodal.fixtureImageCorpus(ids)
     val aHashes = graft.operators.Multimodal.perceptualHashes(corpus)
       .toDF().select(col("id"), col("ph_hi").as("hi"), col("ph_lo").as("lo"))
-    val (cand, _) = graft.operators.Dedup
+    val cand = graft.operators.Dedup
       .hammingPairs64(aHashes, maxHamming = 2, persist = false)
     val dHashes = graft.operators.Multimodal.differenceHashes(corpus)
       .toDF().select(col("id"), col("ph_hi").as("d_hi"), col("ph_lo").as("d_lo"))

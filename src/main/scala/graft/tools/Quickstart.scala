@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -46,15 +46,13 @@ object Quickstart {
         // the reference-parity CLI path, library form: two mysqldump-style
         // snapshots in, one ordered CRUD sync script out
         val outDir = args.lift(0).getOrElse("/tmp/graft_quickstart")
-        val (outcome, script) = new graft.engine.SyncJob(spark)
-          .syncCollected(s"$outDir/prod.sql", s"$outDir/backup.sql",
-            java.time.LocalDateTime.now().toString)
-        Files.write(Paths.get(outDir, "sync.sql"), script.getBytes("UTF-8"))
+        val (outcome, partsDir) = new graft.engine.SyncJob(spark)
+          .syncAuto(s"$outDir/prod.sql", s"$outDir/backup.sql",
+            s"$outDir/sync.sql", java.time.LocalDateTime.now().toString)
         val ops = outcome.stats.valuesIterator
           .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum
-        println(s"[quickstart] sync script: $outDir/sync.sql " +
-          s"(${script.linesIterator.size} lines, $ops ops, " +
-          s"${outcome.stats.size} tables)")
+        println(s"[quickstart] sync script: ${partsDir.getOrElse(s"$outDir/sync.sql")} " +
+          s"($ops ops, ${outcome.stats.size} tables)")
 
       case "watch" =>
         // the CDC watcher's per-arrival advance: v1 then v2 of the same

@@ -94,44 +94,31 @@ object ScaleBench {
         entry(name, dir => materialize(fn(spark, dir)))
       }
 
-    // sync core: full dump diff at both SFs (dump generation untimed)
-    if (wanted("sync_dump_diff")) {
-      val (ps, bs) = dumps(smallDir)
-      val (pb, bb) = dumps(bigDir)
-      entry("sync_dump_diff", dir => {
-        val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncCollected(p, b, "scale")
-        ()
-      })
-    }
-    // the 100 TB sink: executor-rendered script straight to a text sink,
-    // no driver collect — the ratio the core product claims at scale
-    // (byte parity with the collected script is DistributedSinkSpec's)
-    if (wanted("sync_dump_diff_distributed")) {
-      val (ps, bs) = dumps(smallDir)
-      val (pb, bb) = dumps(bigDir)
-      // one reusable output dir per SF (the sinks overwrite) — a fresh
-      // temp dir per timed run leaks script copies under /tmp
-      val outs = Map(
-        smallDir -> Files.createTempDirectory("graft-scale-sync").toString,
-        bigDir -> Files.createTempDirectory("graft-scale-sync").toString)
-      // the deployment entry: size-routed (small diffs collect into one
-      // part file, past-threshold diffs take the distributed text sink)
-      entry("sync_dump_diff_distributed", dir => {
-        val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncDistributed(p, b, outs(dir), "scale")
-        ()
-      })
-      // the forced 100 TB sink (maxCollectedOps=0): keeps the pure
-      // executor-rendered no-driver-collect path measured at scale even
-      // when the routed entry's tiles both fit the collected route
-      entry("sync_dump_diff_distributed_pure", dir => {
-        val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncDistributed(p, b, outs(dir), "scale",
-          maxCollectedOps = 0L)
-        ()
-      })
-    }
+    // sync core: full dump diff at both SFs (dump generation untimed),
+    // into one reusable output path per SF (each run replaces it) — a
+    // fresh temp path per timed run leaks script copies under /tmp
+    def syncEntry(name: String, maxCollectedOps: Long): Unit =
+      if (wanted(name)) {
+        val (ps, bs) = dumps(smallDir)
+        val (pb, bb) = dumps(bigDir)
+        val outs = Map(
+          smallDir -> Files.createTempDirectory("graft-scale-sync").resolve("out.sql"),
+          bigDir -> Files.createTempDirectory("graft-scale-sync").resolve("out.sql"))
+        entry(name, dir => {
+          val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
+          new SyncJob(spark).syncAuto(p, b, outs(dir).toString, "scale",
+            maxCollectedOps)
+          ()
+        })
+      }
+    // the CLI default: size-routed (a diff that fits the driver is
+    // collected into one file)
+    syncEntry("sync_dump_diff", SyncJob.DefaultMaxCollectedOps)
+    // the at-scale sink forced (maxCollectedOps = 0): executor-rendered
+    // sorted text parts, no driver collect — the ratio the core product
+    // claims at scale, measured even when both tiles fit the collected
+    // route
+    syncEntry("sync_dump_diff_distributed", 0L)
 
     def r3(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
     val entries = results.toSeq

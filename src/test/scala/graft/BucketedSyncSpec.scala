@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.codegen.SyncSqlGenerator
 import graft.engine.{BucketedSync, SyncJob}
 
 /** The bucketed fast-path must classify identically to the streaming
@@ -13,6 +14,16 @@ class BucketedSyncSpec extends SparkSuite {
     val p = Files.createTempFile("bsync", ".sql")
     Files.write(p, text.getBytes("UTF-8"))
     p.toString
+  }
+
+  /** The script the `--state` route collects from two snapshots. */
+  private def fromState(prodTable: String, backupTable: String,
+      prodPath: String, now: String): String = {
+    val out = Files.createTempDirectory("bsync-out").resolve("out.sql")
+    val (_, parts) = new SyncJob(spark).syncFromBucketed(prodTable,
+      backupTable, prodPath, out.toString, now)
+    assert(parts.isEmpty)
+    new String(Files.readAllBytes(out), "UTF-8")
   }
 
   private val ddl =
@@ -142,18 +153,16 @@ class BucketedSyncSpec extends SparkSuite {
     val (pf, bf) = ("file:" + pf0, "file:" + bf0)
     val job = new SyncJob(spark)
     val now = "URI-TEST"
-    val (_, expected) = job.syncCollected(pf, bf, now)
+    val expected = SyncSqlGenerator.assemble(job.run(pf, bf), now)
 
     assert(BucketedSync.ensureSnapshot(spark, pf, "bsync_uri_prod"))
     assert(BucketedSync.ensureSnapshot(spark, bf, "bsync_uri_backup"))
-    val (_, s1) = job.syncFromBucketed("bsync_uri_prod", "bsync_uri_backup",
-      pf, now)
+    val s1 = fromState("bsync_uri_prod", "bsync_uri_backup", pf, now)
     assert(s1 == expected)
 
     // unchanged dump at the same URI: snapshot reused, same bytes
     assert(!BucketedSync.ensureSnapshot(spark, pf, "bsync_uri_prod"))
-    val (_, s2) = job.syncFromBucketed("bsync_uri_prod", "bsync_uri_backup",
-      pf, now)
+    val s2 = fromState("bsync_uri_prod", "bsync_uri_backup", pf, now)
     assert(s2 == expected)
 
     // a changed dump at the same URI re-snapshots
@@ -161,17 +170,16 @@ class BucketedSyncSpec extends SparkSuite {
       "INSERT INTO `t` (`id`, `s`) VALUES\n(9, 'added');\n")
       .getBytes("UTF-8"))
     assert(BucketedSync.ensureSnapshot(spark, pf, "bsync_uri_prod"))
-    val (_, s3) = job.syncFromBucketed("bsync_uri_prod", "bsync_uri_backup",
-      pf, now)
+    val s3 = fromState("bsync_uri_prod", "bsync_uri_backup", pf, now)
     assert(s3 != expected)
-    assert(s3 == job.syncCollected(pf, bf, now)._2)
+    assert(s3 == SyncSqlGenerator.assemble(job.run(pf, bf), now))
   }
 
   test("syncAuto writes the collected script through a file: URI, no crc sidecar") {
     val (pf, bf) = (tmpFile(prod), tmpFile(backup))
     val job = new SyncJob(spark)
     val now = "URI-AUTO"
-    val (_, expected) = job.syncCollected(pf, bf, now)
+    val expected = SyncSqlGenerator.assemble(job.run(pf, bf), now)
     val outDir = Files.createTempDirectory("bsync-uri")
     val out = outDir.resolve("script.sql")
     val (_, parts) = job.syncAuto(pf, bf, "file:" + out, now)
@@ -199,9 +207,9 @@ class BucketedSyncSpec extends SparkSuite {
     val now = "CONCAT-TEST"
     BucketedSync.snapshot(spark, pf, "bsync_cc_prod", buckets = 4, dbuckets = 8)
     BucketedSync.snapshot(spark, bf, "bsync_cc_backup", buckets = 4, dbuckets = 8)
-    val (_, expected) = job.syncCollected(pf, bf, now)
+    val expected = SyncSqlGenerator.assemble(job.run(pf, bf), now)
     assert(expected.contains("-- Updating 1 records in c"))
-    val (_, got) = job.syncFromBucketed("bsync_cc_prod", "bsync_cc_backup", pf, now)
+    val got = fromState("bsync_cc_prod", "bsync_cc_backup", pf, now)
     assert(got == expected)
 
     def ops(df: org.apache.spark.sql.DataFrame) =
@@ -259,8 +267,7 @@ class BucketedSyncSpec extends SparkSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      new SyncJob(spark).syncFromBucketed("bsync_rd_prod", "bsync_rd_backup",
-        pf, "SIDECAR-TEST")
+      fromState("bsync_rd_prod", "bsync_rd_backup", pf, "SIDECAR-TEST")
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     // one catalog read per snapshot: the change gate takes the common

@@ -141,10 +141,9 @@ class ExtensionOpsSpec extends SparkSuite {
 
   test("lshCalibration: deciles match exact pair Jaccards; S-curve is the literal chain") {
     val corpus = Tables.documents(spark, dir).select("doc_id", "text").limit(200)
-    val (cal, cleanup) =
-      Dedup.lshCalibration(corpus, "doc_id", "text", 3, 16, 4)
+    val cal = Dedup.lshCalibration(corpus, "doc_id", "text", 3, 16, 4)
     val rows = cal.orderBy("decile").as[(Long, Long, Long)].collect().toSeq
-    cleanup()
+    PendingRelease.drain()
     assert(rows.nonEmpty && rows.forall(r => r._1 >= 0 && r._1 <= 9))
     assert(rows.forall(_._2 > 0))
     // total pairs across deciles == total candidate pairs at threshold 0
@@ -370,11 +369,10 @@ class ExtensionOpsSpec extends SparkSuite {
     Dedup.prefixStoreEnsure(base, "id", "text", 3, 500000L, store,
       buckets = 8)
     def probe() = {
-      val (p, cleanup) =
-        Dedup.prefixStoreProbeDelta(fresh, "id", "text", store)
+      val p = Dedup.prefixStoreProbeDelta(fresh, "id", "text", store)
       val got = p.select("id_a", "id_b", "inter", "sz_a", "sz_b", "jac_ppm")
         .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-      cleanup(); got
+      PendingRelease.drain(); got
     }
     val shC = Dedup.hashedShingleTable(base, "id", "text", 3)
     val shF = Dedup.hashedShingleTable(fresh, "id", "text", 3)

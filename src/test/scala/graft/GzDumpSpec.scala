@@ -63,16 +63,17 @@ class GzDumpSpec extends SparkSuite {
   test("gzipped pair with a table missing from the backup: plain script") {
     val (prod, backup) = missingTablePair()
     val job = new SyncJob(spark)
-    val (_, plain) = job.syncCollected(prod, backup, "T")
+    val plain = SyncSqlGenerator.assemble(job.run(prod, backup), "T")
     assert(plain.contains("-- Creating missing table: u"))
-    assert(job.syncCollected(gzip(prod), gzip(backup), "T")._2 == plain)
+    assert(SyncSqlGenerator.assemble(job.run(gzip(prod), gzip(backup)), "T") == plain)
   }
 
   test("file: URI pair with a table missing from the backup: plain script") {
     val (prod, backup) = missingTablePair()
     val job = new SyncJob(spark)
-    val (_, plain) = job.syncCollected(prod, backup, "T")
-    assert(job.syncCollected("file:" + prod, "file:" + backup, "T")._2 == plain)
+    val plain = SyncSqlGenerator.assemble(job.run(prod, backup), "T")
+    assert(SyncSqlGenerator.assemble(
+      job.run("file:" + prod, "file:" + backup), "T") == plain)
   }
 
   test("gz statement scan: same statements, unique increasing offsets") {

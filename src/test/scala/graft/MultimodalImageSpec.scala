@@ -86,7 +86,7 @@ class MultimodalImageSpec extends SparkSuite {
     val hashes = Multimodal
       .perceptualHashes(Multimodal.fixtureImageCorpus(ids))
       .toDF("id", "hi", "lo")
-    val (pairs, _) = graft.operators.Dedup.hammingPairs64(
+    val pairs = graft.operators.Dedup.hammingPairs64(
       hashes, maxHamming = 7, persist = false)
     val got = pairs.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap

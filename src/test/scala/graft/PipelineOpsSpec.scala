@@ -90,10 +90,10 @@ class PipelineOpsSpec extends SparkSuite {
   test("simhashPairs64 matches brute-force 64-bit Hamming pairs (band completeness)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
-    val (pairs, cleanup) =
+    val pairs =
       graft.operators.Dedup.simhashPairs64(docs, "doc_id", "text", maxHamming = 7)
     val banded = pairs.as[(Long, Long, Long)].collect().toSet
-    cleanup()
+    graft.PendingRelease.drain()
     // brute force over the collected 64-bit signatures
     val sims = graft.operators.Dedup.simhash64Table(docs, "doc_id", "text")
       .as[(Long, Long, Long)].collect()

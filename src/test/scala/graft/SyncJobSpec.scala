@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 import graft.codegen.SyncSqlGenerator
 import graft.engine.{Differ, SyncJob}
@@ -24,6 +25,28 @@ class SyncJobSpec extends SparkSuite {
       s"  PRIMARY KEY (`${cols.head}`)\n) ENGINE=InnoDB;\n"
 
   private def job = new SyncJob(spark)
+
+  private def res(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/refdumps/$name")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+
+  /** The sorted part files under `dir`, concatenated. */
+  private def concatenated(dir: String): String = new java.io.File(dir).listFiles()
+    .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+    .map(f => read(f.toPath)).mkString
+
+  /** The collected script the `--state` route writes from two snapshots. */
+  private def fromState(prodTable: String, backupTable: String,
+      prodPath: String, now: String): String = {
+    val out = Files.createTempDirectory("graft-state").resolve("out.sql")
+    val (_, parts) = job.syncFromBucketed(prodTable, backupTable, prodPath,
+      out.toString, now)
+    assert(parts.isEmpty)
+    read(out)
+  }
 
   test("identical dumps produce zero operations (sync.py:489-490)") {
     val dump = ddl("t", "id", "v") +
@@ -105,10 +128,6 @@ class SyncJobSpec extends SparkSuite {
   }
 
   test("differential golden: byte-identical to the reference on the sf0.001 pair") {
-    def res(name: String): String = {
-      val in = getClass.getResourceAsStream(s"/refdumps/$name")
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
     val prod = tmpFile(res("prod_sf0.001.sql"))
     val backup = tmpFile(res("backup_sf0.001.sql"))
     val expected = res("out_sf0.001.sql")
@@ -119,34 +138,32 @@ class SyncJobSpec extends SparkSuite {
     val got = SyncSqlGenerator.assemble(o, now)
     assert(got.split("\n", -1).toSeq == expLines)
     // the executor-rendered collected path must emit the same bytes
-    val (_, collected) = job.syncCollected(prod.toString, backup.toString, now)
-    assert(collected == got)
+    val out = Files.createTempDirectory("graft-golden").resolve("out.sql")
+    assert(job.syncAuto(prod.toString, backup.toString, out.toString, now)._2.isEmpty)
+    assert(read(out) == got)
   }
 
   test("--state fast path: snapshot-rediff script is byte-identical, snapshots reuse") {
     import graft.engine.BucketedSync
-    def res(name: String): String = {
-      val in = getClass.getResourceAsStream(s"/refdumps/$name")
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
     val prod = tmpFile(res("prod_sf0.001.sql"))
     val backup = tmpFile(res("backup_sf0.001.sql"))
     val now = "STATE-TEST"
-    val (_, expected) = job.syncCollected(prod.toString, backup.toString, now)
+    val expected = SyncSqlGenerator.assemble(
+      job.run(prod.toString, backup.toString), now)
 
     // first sync: both snapshots written
     assert(BucketedSync.ensureSnapshot(spark, prod.toString, "sjs_prod"))
     assert(BucketedSync.ensureSnapshot(spark, backup.toString, "sjs_backup"))
-    val (o1, s1) = job.syncFromBucketed("sjs_prod", "sjs_backup",
-      prod.toString, now)
-    assert(s1 == expected)
+    val out1 = Files.createTempDirectory("graft-state").resolve("out.sql")
+    val (o1, parts1) = job.syncFromBucketed("sjs_prod", "sjs_backup",
+      prod.toString, out1.toString, now)
+    assert(parts1.isEmpty && read(out1) == expected)
     assert(o1.ops.isEmpty) // fast path never collects per-op rows
 
     // second sync, nothing changed: both snapshots reused, same bytes
     assert(!BucketedSync.ensureSnapshot(spark, prod.toString, "sjs_prod"))
     assert(!BucketedSync.ensureSnapshot(spark, backup.toString, "sjs_backup"))
-    val (_, s2) = job.syncFromBucketed("sjs_prod", "sjs_backup",
-      prod.toString, now)
+    val s2 = fromState("sjs_prod", "sjs_backup", prod.toString, now)
     assert(s2 == expected)
 
     // a fresh session finding on-disk snapshots but no catalog entry
@@ -178,31 +195,27 @@ class SyncJobSpec extends SparkSuite {
     assert(!spark.catalog.tableExists("sjs_prod2"))
     assert(!BucketedSync.ensureSnapshot(spark, prod.toString, "sjs_prod2"))
     assert(spark.catalog.tableExists("sjs_prod2"))
-    val (_, s3) = job.syncFromBucketed("sjs_prod2", "sjs_backup",
-      prod.toString, now)
+    val s3 = fromState("sjs_prod2", "sjs_backup", prod.toString, now)
     assert(s3 == expected)
 
     // a CHANGED dump re-snapshots and the rediff reflects it
     val prod2 = tmpFile(res("prod_sf0.001.sql") +
       "INSERT INTO `nation` (`n_nationkey`, `n_name`, `n_regionkey`) VALUES\n" +
       "(999999, 'NEWLAND', 0);\n")
-    val (_, expected2) = job.syncCollected(prod2.toString, backup.toString, now)
+    val expected2 = SyncSqlGenerator.assemble(
+      job.run(prod2.toString, backup.toString), now)
     assert(BucketedSync.ensureSnapshot(spark, prod2.toString, "sjs_prod"))
-    val (_, s4) = job.syncFromBucketed("sjs_prod", "sjs_backup",
-      prod2.toString, now)
+    val s4 = fromState("sjs_prod", "sjs_backup", prod2.toString, now)
     assert(s4 == expected2)
     assert(s4 != expected)
   }
 
   test("syncAuto routes by op count: collected small, distributed large, same bytes") {
-    def res(name: String): String = {
-      val in = getClass.getResourceAsStream(s"/refdumps/$name")
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
     val prod = tmpFile(res("prod_sf0.001.sql"))
     val backup = tmpFile(res("backup_sf0.001.sql"))
     val now = "AUTO-TEST"
-    val (_, expected) = job.syncCollected(prod.toString, backup.toString, now)
+    val expected = SyncSqlGenerator.assemble(
+      job.run(prod.toString, backup.toString), now)
 
     val outDir = Files.createTempDirectory("graft-auto")
     val outSmall = outDir.resolve("small.sql")
@@ -210,7 +223,7 @@ class SyncJobSpec extends SparkSuite {
     val (_, parts1) = job.syncAuto(prod.toString, backup.toString,
       outSmall.toString, now)
     assert(parts1.isEmpty)
-    assert(new String(Files.readAllBytes(outSmall), "UTF-8") == expected)
+    assert(read(outSmall) == expected)
 
     // threshold 0: every op routes to the distributed parts sink;
     // sorted-part concatenation is byte-identical (modulo the text
@@ -220,9 +233,6 @@ class SyncJobSpec extends SparkSuite {
       outBig.toString, now, maxCollectedOps = 0L)
     assert(parts2.contains(outBig.toString + ".parts"))
     assert(!Files.exists(outBig))
-    def concatenated(dir: String): String = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
     assert(concatenated(parts2.get) == expected + "\n")
 
     // one output path across routes: each run leaves only its own
@@ -236,7 +246,29 @@ class SyncJobSpec extends SparkSuite {
     assert(concatenated(partsSame) == expected + "\n")
     job.syncAuto(prod.toString, backup.toString, outSame.toString, now)
     assert(!Files.exists(java.nio.file.Paths.get(partsSame)))
-    assert(new String(Files.readAllBytes(outSame), "UTF-8") == expected)
+    assert(read(outSame) == expected)
+  }
+
+  test("--state route obeys the size rule: past it, <output>.parts replaces the file") {
+    import graft.engine.BucketedSync
+    val prod = tmpFile(res("prod_sf0.001.sql"))
+    val backup = tmpFile(res("backup_sf0.001.sql"))
+    val now = "STATE-PARTS"
+    val expected = SyncSqlGenerator.assemble(
+      job.run(prod.toString, backup.toString), now)
+    BucketedSync.ensureSnapshot(spark, prod.toString, "sjs_parts_prod")
+    BucketedSync.ensureSnapshot(spark, backup.toString, "sjs_parts_backup")
+    val out = Files.createTempDirectory("graft-state-parts").resolve("out.sql")
+    // a default-threshold run collects the single file...
+    val (_, parts1) = job.syncFromBucketed("sjs_parts_prod", "sjs_parts_backup",
+      prod.toString, out.toString, now)
+    assert(parts1.isEmpty && Files.exists(out))
+    // ...which a run past the size rule replaces with the sorted parts
+    val (_, parts2) = job.syncFromBucketed("sjs_parts_prod", "sjs_parts_backup",
+      prod.toString, out.toString, now, maxCollectedOps = 0L)
+    assert(parts2.contains(out.toString + ".parts"))
+    assert(!Files.exists(out), "stale single-file script left behind")
+    assert(concatenated(parts2.get) == expected + "\n")
   }
 
   test("opBytesCol = value text + per-(table, op) catalog-derived skeleton") {
@@ -345,5 +377,45 @@ class SyncJobSpec extends SparkSuite {
     // sort (an orderBy("off") ran 3 jobs through an Exchange)
     assert(jobs.get == 1, s"catalogInfo ran ${jobs.get} jobs")
     assert(plans.size == 1 && !plans.peek.contains("Exchange"), plans.peek)
+  }
+
+  test("the collected route sorts its lines on the driver: no range sort") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val prod = tmpFile(res("prod_sf0.001.sql"))
+    val backup = tmpFile(res("backup_sf0.001.sql"))
+    val out = Files.createTempDirectory("graft-collected").resolve("out.sql")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val parts = try {
+      val p = job.syncAuto(prod.toString, backup.toString, out.toString, "T")._2
+      org.apache.spark.ListenerBusDrain(sc)
+      p
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
+    }
+    assert(parts.isEmpty)
+    // the line collect after the stats collect is one job with no range
+    // sort; a distributed orderBy there made the route 10 jobs
+    assert(!plans.iterator.asScala.exists(_.contains("rangepartitioning")),
+      plans.iterator.asScala.mkString("\n"))
+    assert(jobs.get == 8, s"the collected route ran ${jobs.get} jobs")
   }
 }
