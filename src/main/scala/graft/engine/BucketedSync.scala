@@ -128,9 +128,14 @@ object BucketedSync {
     */
   def ensureSnapshot(spark: SparkSession, dumpPath: String,
       tableName: String, buckets: Int = 32): Boolean = {
+    // a first run has no sidecar: check before reading, so Spark logs no
+    // FileNotFoundException; the catch stays for a corrupt sidecar
+    val cat = new org.apache.hadoop.fs.Path(catPath(spark, tableName))
     val sidecar: Option[(String, Int)] =
-      try {
-        spark.read.parquet(catPath(spark, tableName))
+      if (!cat.getFileSystem(spark.sessionState.newHadoopConf()).exists(cat))
+        None
+      else try {
+        spark.read.parquet(cat.toString)
           .select("fingerprint", "buckets").limit(1)
           .collect().headOption
           .map(r => (r.getString(0), r.getInt(1)))

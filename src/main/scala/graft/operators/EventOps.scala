@@ -327,10 +327,9 @@ object EventOps {
     * between their first `fromType` event and the first `toType` event
     * at or after it; users are cohorted by the DAY of the first touch
     * and each cohort reports its exact lower-median and p90 latency in
-    * seconds. Quantiles run on [[Stats.rankSelect]]'s radix descent
+    * seconds. Quantiles run on [[Stats.rankSelectMulti]]'s radix descent
     * over the (cohort, latency-second) count frame — no per-cohort
-    * sort, no partition-less window, the q88 median machinery pointed
-    * at a derived series. Rank targets: median = ⌈n/2⌉ = (n+1) div 2,
+    * sort, no partition-less window. Rank targets: median = ⌈n/2⌉ = (n+1) div 2,
     * p90 = ⌈9n/10⌉ = (9n+9) div 10 (both "min v with cum ≥ target").
     *
     * Shape: two user-keyed aggregates (first touch, first conversion),
@@ -363,7 +362,7 @@ object EventOps {
     // latency seconds fit 32 bits a-priori: (t1−t0)/1e6 is bounded by
     // the corpus time span, and a >68-year gap is not a latency.
     // Both quantiles from ONE radix hierarchy (rankSelectMulti, r16):
-    // the two rankSelect calls each rebuilt the level chain over the
+    // two single-target descents each rebuilt the level chain over the
     // same counts frame.
     val (qs, rel1) = Stats.rankSelectMulti(counts, Seq("g"), "c",
       Seq(50L -> ((nn: Column) => ((nn + 1) / 2).cast("long")),
@@ -426,7 +425,7 @@ object EventOps {
     * total arrival order (`arrivalCol` — an ingest sequence/offset;
     * ties broken by it being unique). One group-PARTITIONED window for
     * the running max, one (group, second) count aggregate, two radix
-    * rank-select descents ([[Stats.rankSelect]]) — no partition-less
+    * rank-select descents ([[Stats.rankSelectMulti]]) — no partition-less
     * window, no per-group sort at the percentile step.
     *
     * Output: (g, n_events, late_ppm, median_s, p99_s, max_s) — median/
@@ -449,7 +448,7 @@ object EventOps {
       coalesce(sum(when(col("v") > 0L, col("c"))), lit(0L)).as("n_late"),
       max("v").as("max_s"))
     // both quantiles from ONE radix hierarchy (rankSelectMulti, r16):
-    // the two rankSelect calls each rebuilt the level chain over the
+    // two single-target descents each rebuilt the level chain over the
     // same counts frame
     val (qs, rel1) = Stats.rankSelectMulti(counts, Seq("g"), "c",
       Seq(50L -> ((nn: Column) => ((nn + 1) / 2).cast("long")),

@@ -106,7 +106,7 @@ object Graph {
         col("src").cast("long").as("dst")))
       .repartition(col("src"))
       .dropDuplicates("src", "dst")
-    val und = if (persist) und0.persist(StorageLevel.MEMORY_AND_DISK) else und0
+    val und = if (persist) Lineage.persistOwned(und0) else und0
     (und, () => { if (persist) { und.unpersist(); () } })
   }
 

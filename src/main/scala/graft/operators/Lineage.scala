@@ -1,7 +1,11 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.storage.StorageLevel
 
 /** Tracked eager localCheckpoints for iterative operators.
   *
@@ -38,4 +42,19 @@ object Lineage {
     val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
     (cp, () => { rdd.unpersist(false); () })
   }
+
+  private val owners = new AtomicLong
+
+  /** `df` persisted under a plan that no other call builds. The cache
+    * manager hands an existing entry to any equal plan, so two threads
+    * running the same query would share one cache, and the first
+    * thread's release would drop it under the other's running query
+    * (seen as an empty q80 result and as an orphaned rebuilt cache). A
+    * per-call literal column, dropped at once, makes the plan unique;
+    * the optimizer prunes it, so the cached data and its partitioning
+    * are those of `df`. Frames derived from the result stay unique too.
+    */
+  def persistOwned(df: DataFrame): DataFrame =
+    df.withColumn("__owner", lit(owners.incrementAndGet())).drop("__owner")
+      .persist(StorageLevel.MEMORY_AND_DISK)
 }

@@ -641,7 +641,7 @@ object Sketches {
     * One data scan total: the per-(group, value) counts frame feeds a
     * WEIGHTED sketch aggregation (identical bucketing to
     * [[logHistSketch]] — count(*) becomes sum(c)) AND the exact side's
-    * [[Stats.rankSelect]] radix descents (one per percentile, each a
+    * [[Stats.rankSelectMulti]] radix descent (one target per percentile, each a
     * point lookup over the shared counts — never a full sort, never a
     * partition-less window). The exact rank target mirrors the
     * sketch's crossing test: smallest v with cum·100 ≥ n·p ⟺ rank
@@ -657,7 +657,7 @@ object Sketches {
       valueCol: Column, ps: Seq[Int], domainBits: Int = 64): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // session-cache + eager count: counts feeds the sketch AND every
-    // rankSelect descent (whose broadcasts race an uncached parent)
+    // radix descent (whose broadcasts race an uncached parent)
     val counts = df
       .select(groupCols.map(col) :+ valueCol.cast("long").as("v"): _*)
       .filter(col("v") > 0)
@@ -678,11 +678,11 @@ object Sketches {
     // truncation can come out off by one and silently shift the
     // 'exact' quantile this audit compares against.
     // ALL percentiles descend ONE shared radix hierarchy
-    // (rankSelectMulti, r16): the per-p rankSelect calls each rebuilt
+    // (rankSelectMulti, r16): per-p single-target descents each rebuilt
     // and re-persisted the level chain over the same counts frame —
     // |ps| hierarchy builds and |ps| scans of every level for the same
     // point lookups. Deferring the release also closes the pre-r16 leak
-    // of the per-call t1 caches (the rankSelect release thunks were
+    // of the per-call t1 caches (the per-p release thunks were
     // dropped here) and of the counts cache itself.
     val (exactMulti, relExact) = Stats.rankSelectMulti(counts, groupCols,
       "c", ps.map(p => (p.toLong, (n: Column) =>

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** Table statistics operators — the profiling/histogram layer every
   * engine needs before it can plan over unknown data (reference scope:
@@ -19,7 +24,7 @@ object Stats {
 
   /** Inclusive running sum over a (group, v) VALUE-DOMAIN frame with NO
     * unbounded window partition anywhere — the scale core under
-    * [[equiDepthHistogram]] / [[medianMad]] / [[weightedPercentiles]] /
+    * [[equiDepthHistogram]] / [[weightedPercentiles]] /
     * [[quantileNormalize]].
     *
     * A plain `sum(c) OVER (PARTITION BY g ORDER BY v)` funnels a
@@ -140,82 +145,121 @@ object Stats {
     math.max(1, math.ceil((domainBits - 16) / 16.0).toInt)
   }
 
-  /** The smallest value whose inclusive running weight reaches a
-    * per-group target rank — the point-lookup sibling of
-    * [[valueDomainCum]]: instead of materializing the full cumulative
-    * sum over the domain, DESCEND the radix hierarchy. Per level, an
-    * exclusive-prefix window over the <= 2^16 child buckets of the
-    * (single) chosen parent bucket finds where the target rank crosses;
-    * after three descents only one level-1 bucket of actual values is
-    * scanned. Work is O(domain/2^16 + 4*2^16) rows per group versus the
-    * full-cum's O(domain) — the right shape when only a handful of
-    * ranks are needed (medians, MADs); every window partition stays
-    * <= 2^16 rows.
+  /** Exact per-group weighted rank selection by sort-and-offset: for
+    * each group of `rows` (groups…, v, c), with Long v and c, the
+    * smallest value v whose running weight c, in value order, reaches
+    * the target rank `targetOf(n)`, n the group's total weight. The
+    * target must lie in [1, n]. Rows with a null in any column are
+    * skipped; group columns must not be binary.
     *
-    * `targetOf(n)` maps a group's total weight to the 1-based target
-    * rank (e.g. `(n+1) div 2` for the lower median); must be >= 1 and
-    * <= n. Output: (groups..., `out` = selected value, n).
+    * One range shuffle on (groups…, v), sorted within each partition:
+    * a group is a run of rows that may span many partitions, so one
+    * large group never lands in one task. Pass 1 sums each
+    * (partition, group) run's weight, at most groups + partitions rows
+    * to the driver. The driver turns them into each group's n, its
+    * target, and the partition and remaining rank where the running
+    * sum crosses the target. Pass 2 reads the same sorted rows with
+    * those offsets in its closure and returns each group's crossing
+    * row. Driver memory is O(groups + partitions); the value domain is
+    * never collected.
+    *
+    * The sorted rows are persisted (deserialized, spilling to disk) by
+    * pass 1, so neither pass 2 nor `use` sorts them again, and released
+    * when `use` returns. `use` gets them, for further passes of the
+    * caller, and per group, in group order, its key (the group columns
+    * as a Row), n and the selected value.
     */
-  private[graft] def rankSelect(counts0: DataFrame, gCols: Seq[String],
-      cCol: String, targetOf: Column => Column, out: String,
-      persistInput: Boolean = true, domainBits: Int = 64)
-      : (DataFrame, () => Unit) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (in0, gNames) = injectG(counts0, gCols)
-    val g = gNames.map(col)
-    val l0p = in0.select(g :+ col("v").cast("long").as("b") :+
-        col(cCol).cast("long").as("c"): _*)
-    val l0 = if (persistInput) l0p.persist(lvl) else l0p
-    val t1 = up(l0, gNames).persist(lvl)
-    t1.count() // one parallel build before concurrent broadcasts race
-    val ts = Iterator.iterate(t1)(up(_, gNames)).take(nLevels(domainBits))
-      .toList
-    val root = ts.last
-    val tgt = root.groupBy(g: _*).agg(sum(col("c")).as("n"))
-      .withColumn("t", targetOf(col("n")))
-    // descend: keep the one bucket per group where the exclusive prefix
-    // crosses the target; prefixes are monotone over b, so min(struct)
-    // picks the first crossing
-    val sRoot = exPrefix(root.join(broadcast(tgt), gNames), gNames)
-      .filter(col("p") + col("c") >= col("t"))
-      .groupBy(g: _*)
-      .agg(min(struct(col("b"), col("p").as("h"), col("n"), col("t")))
-        .as("s"))
-      .select(g :+ col("s.b").as("bp") :+ col("s.h").as("h") :+
-        col("s.n").as("n") :+ col("s.t").as("t"): _*)
-    def step(tk: DataFrame, st: DataFrame): DataFrame =
-      exPrefix(
-        tk.withColumn("bp", shiftright(col("b"), 16))
-          .join(broadcast(st), gNames :+ "bp"),
-        gNames :+ "bp")
-      .filter(col("h") + col("p") + col("c") >= col("t"))
-      .groupBy(g: _*)
-      .agg(min(struct(col("b"), (col("h") + col("p")).as("h"), col("n"),
-        col("t"))).as("s"))
-      .select(g :+ col("s.b").as("bp") :+ col("s.h").as("h") :+
-        col("s.n").as("n") :+ col("s.t").as("t"): _*)
-    val s0 = step(l0, ts.init.reverse.foldLeft(sRoot)((st, tk) =>
-      step(tk, st)))
-    val res = s0.select(g :+ col("bp").as(out) :+ col("n"): _*)
-      .drop((if (gCols.isEmpty) Seq("_g") else Nil): _*)
-    (res, () => { if (persistInput) l0.unpersist(); t1.unpersist(); () })
+  private[graft] def selectSorted[A](rows: DataFrame, targetOf: Column => Column)(
+      use: (RDD[Row], Seq[(Row, Long, Long)]) => A): A = {
+    val spark = rows.sparkSession
+    val nG = rows.columns.length - 2
+    require(!rows.schema.take(nG).exists(_.dataType == BinaryType),
+      "selectSorted: binary group column")
+    val keys = rows.columns.take(nG + 1).map(col).toIndexedSeq
+    val sorted = rows.na.drop().repartitionByRange(keys: _*)
+      .sortWithinPartitions(keys: _*).rdd
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // pass 1: (partition, group, weight) in sorted order; a group's
+      // runs are consecutive across partitions
+      val spans = mutable.ArrayBuffer.empty[(Row, mutable.ArrayBuffer[(Int, Long)])]
+      sorted.mapPartitionsWithIndex((p, it) =>
+          runSums(it, nG)(_ => _.getLong(nG + 1)).map { case (g, w) => (p, g, w) })
+        .collect().foreach { case (p, g, w) =>
+          if (spans.nonEmpty && spans.last._1 == g) spans.last._2 += ((p, w))
+          else spans += ((g, mutable.ArrayBuffer((p, w))))
+        }
+      val ns = spans.map(_._2.map(_._2).sum).toSeq
+      val ts = spark.createDataFrame(ns.map(Row(_)).asJava,
+          StructType(Seq(StructField("n", LongType, nullable = false))))
+        .select(targetOf(col("n")).cast("long")).collect().map(_.getLong(0))
+      // per partition: the rank still to go, for each group crossing there
+      val needs = spans.zip(ns).zip(ts).map { case (((g, runs), n), t) =>
+        require(t >= 1 && t <= n, s"target $t outside [1, $n] for group $g")
+        val before = runs.scanLeft(0L)(_ + _._2)
+        val i = runs.indices.find(i => before(i + 1) >= t).get
+        (runs(i)._1, g -> (t - before(i)))
+      }.groupMap(_._1)(_._2).map { case (p, gs) => p -> gs.toMap }
+      // pass 2: the crossing row of each group, one row per group
+      val hit = sorted.mapPartitionsWithIndex { (p, it) =>
+        needs.get(p).fold(Iterator.empty[(Row, Long)]) { left0 =>
+          var cur: Row = null; var left = 0L
+          keyed(it, nG).flatMap { case (g, r) =>
+            if (!(g eq cur)) { cur = g; left = left0.getOrElse(g, 0L) }
+            if (left <= 0) None
+            else {
+              left -= r.getLong(nG + 1)
+              if (left <= 0) Some(g -> r.getLong(nG)) else None
+            }
+          }
+        }
+      }.collect().toMap
+      use(sorted, spans.zip(ns).map { case ((g, _), n) => (g, n, hit(g)) }.toSeq)
+    } finally { sorted.unpersist(blocking = false); () }
   }
 
-  /** Multi-target [[rankSelect]]: the value at EACH of several per-group
-    * target ranks from ONE shared radix hierarchy (r16 optimization,
-    * guide §2.4 "remove shuffles outright"). [[rankSelect]] rebuilds —
-    * and re-persists, re-counts, re-scans — the whole level chain per
-    * call, so k percentile lookups over the same counts frame paid k
-    * hierarchy builds and k scans of every level; every multi-percentile
-    * operator (p50/p90/p99 audits, trim boundaries, tertiles) was
-    * calling it 2-3 times on one counts frame. Here the chain is built
-    * once and the k descent states ride the same per-level scan: the
-    * broadcast state frame carries a target label, so a level's join
-    * fans each scanned bucket out only to the targets whose chosen
-    * parent bucket covers it (exactly 1 state row per (group, label)).
-    * Arithmetic per target is IDENTICAL to [[rankSelect]]'s — same
-    * exclusive prefix, same first-crossing min(struct) — so results are
-    * bit-equal (RankSelectMultiSpec pins this against rankSelect).
+  /** Pairs each row of a partition sorted on its first `nG` columns with
+    * its group key; rows of one run share one key instance, so `eq`
+    * finds the run boundaries.
+    */
+  private def keyed(it: Iterator[Row], nG: Int): Iterator[(Row, Row)] = {
+    var cur: Row = null
+    it.map { r =>
+      if (cur == null || (0 until nG).exists(i => cur.get(i) != r.get(i)))
+        cur = Row.fromSeq(r.toSeq.take(nG))
+      (cur, r)
+    }
+  }
+
+  /** Per run of one group in a sorted partition, the sum of
+    * `weightOf(group)(row)` over its rows.
+    */
+  private def runSums(it: Iterator[Row], nG: Int)(
+      weightOf: Row => Row => Long): Iterator[(Row, Long)] = {
+    val out = mutable.ArrayBuffer.empty[(Row, Long)]
+    var cur: Row = null; var w: Row => Long = null; var sum = 0L
+    keyed(it, nG).foreach { case (g, r) =>
+      if (!(g eq cur)) {
+        if (cur != null) out += ((cur, sum))
+        cur = g; w = weightOf(g); sum = 0L
+      }
+      sum += w(r)
+    }
+    if (cur != null) out += ((cur, sum))
+    out.iterator
+  }
+
+  /** Radix rank selection: the value at EACH of several per-group
+    * target ranks — the smallest value whose running weight reaches
+    * the target — from ONE shared radix hierarchy over the value
+    * domain. Per level, an exclusive-prefix window over the <= 2^16
+    * child buckets of each target's chosen parent bucket finds where
+    * the target crosses; the broadcast state frame carries a target
+    * label, so a level's join fans each scanned bucket out only to the
+    * targets whose chosen parent covers it (exactly 1 state row per
+    * (group, label)), and every window partition stays <= 2^16 rows.
+    * The sort-and-offset [[selectSorted]] returns the same values
+    * (RankSelectMultiSpec checks the two against each other).
     *
     * The O(|groups|·k) result is returned LAZY and unpersisted: callers
     * consume it exactly once (a conditional aggregation folding the
@@ -228,7 +272,7 @@ object Stats {
     *
     * `targets`: (label, targetOf) pairs — label lands in `labelCol`
     * (Long; callers map it back to their percentile/boundary names).
-    * targetOf must be >= 1 and <= n, as in [[rankSelect]].
+    * targetOf must be >= 1 and <= n.
     * Output: (groups..., labelCol, out, n).
     */
   private[graft] def rankSelectMulti(counts0: DataFrame, gCols: Seq[String],
@@ -332,67 +376,47 @@ object Stats {
     *
     * Both medians are "lower medians" (the ⌈n/2⌉-th smallest value):
     * exact integers, no interpolation, so any engine replays them
-    * bit-for-bit. Plan shape is the q36/q85 value-domain histogram
-    * argument applied twice: groupBy(group, value).count (distributed,
-    * map-side combined) → a cumulative-sum window over DISTINCT VALUES
-    * per group (state bounded by the value domain, not the row count) →
-    * the same again over |v − median|. No per-group buffered aggregate
-    * state, no global row sort.
+    * bit-for-bit. Rows whose group or value is null are skipped, as
+    * SQL's median skips nulls; a group with no non-null value has no
+    * output row.
     *
-    * The (group, value) count frame feeds three consumers — the median
-    * window, the deviation re-aggregation, and the final outlier count —
-    * so it is persisted (value-domain-sized, far smaller than the input);
-    * without it the input would be scanned and re-aggregated three times.
-    * Every internal cache is released at the calling thread's next
-    * [[graft.PendingRelease.drain]].
-    * Output: (group, n, median, mad, n_outliers).
+    * Plan: groupBy(group, value).count (map-side combined), then one
+    * [[selectSorted]] for the median over those counts and one for the
+    * MAD over the deviation rows (group, |v − median|, c), mapped from
+    * the median selection's sorted rows with the medians held on the
+    * driver. A last pass over those rows counts the outliers per
+    * group. No window is partitioned by group, so a large group spreads
+    * over many range partitions; driver memory is O(groups +
+    * partitions). The work runs when this is called and nothing stays
+    * cached: the result is a local frame.
+    * Output: (g, n, median, mad, n_outliers).
     */
   def medianMad(df: DataFrame, groupCol: Column, valueCol: Column,
-      z: Int = 3, domainBits: Int = 64): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      z: Int = 3): DataFrame = {
+    val spark = df.sparkSession
     val counts = df.select(groupCol.as("g"), valueCol.cast("long").as("v"))
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .persist(lvl)
-    graft.PendingRelease.defer(() => { counts.unpersist(); () })
-    // the O(groups) median/MAD frames are tiny; rankSelect (a point
-    // lookup) beats the full cumulative sum here: a median needs ONE
-    // rank per group, not the whole distribution.
-    def lowerMedian(cts: DataFrame, out: String): DataFrame = {
-      // |v − median| spans at most the value domain, so the median's
-      // domainBits bound covers the MAD descent too
-      val (m0, rel) = rankSelect(cts, Seq("g"), "c",
-        n => ((n + 1) / 2).cast("long"), out, persistInput = false,
-        domainBits = domainBits)
-      graft.PendingRelease.defer(rel)
-      m0
+    val half = (n: Column) => ((n + 1) / 2).cast("long")
+    val rows = selectSorted(counts, half) { (sorted, meds) =>
+      val median = meds.map { case (g, _, m) => g -> m }.toMap
+      val dev = sorted.mapPartitions { it =>
+        var cur: Row = null; var m = 0L
+        keyed(it, 1).map { case (g, r) =>
+          if (!(g eq cur)) { cur = g; m = median(g) }
+          Row(r.get(0), math.abs(r.getLong(1) - m), r.getLong(2))
+        }
+      }
+      val mad = selectSorted(spark.createDataFrame(dev, counts.schema), half)(
+        (_, hits) => hits.map { case (g, _, d) => g -> d }.toMap)
+      val outliers = sorted.mapPartitions(it => runSums(it, 1) { g =>
+          val (m, bound) = (median(g), mad(g) * z)
+          r => if (math.abs(r.getLong(1) - m) > bound) r.getLong(2) else 0L
+        }).collect()
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      meds.map { case (g, n, m) => Row(g.get(0), n, m, mad(g), outliers(g)) }
     }
-    // The median feeds two consumers (the deviation re-aggregation and
-    // the final stats join), but they run in SUCCESSIVE jobs — the MAD
-    // chain's own eager t1.count() materializes the deviation frame
-    // (and with it this cache) before the final action ever consumes
-    // the stats join — so a LAZY persist fills without a barrier and
-    // nothing races it. The previous eager persist+count() here (and
-    // on the MAD result) serialized FIVE driver-visible jobs ahead of
-    // the final action (median t1.count, med.count, MAD t1.count,
-    // mad.count, action); r17 measured the lazy form against it —
-    // same rankSelectMulti lesson from r16: overlap the tiny descent
-    // with its consumer instead of fencing it behind its own barrier.
-    val med = lowerMedian(counts, "median").persist(lvl)
-    graft.PendingRelease.defer(() => { med.unpersist(); () })
-    val dev = counts.join(broadcast(med.select("g", "median")), Seq("g"))
-      .groupBy(col("g"), abs(col("v") - col("median")).as("v"))
-      .agg(sum(col("c")).as("c"))
-      .persist(lvl) // feeds the mad descent's level chain AND its leaf probe
-    graft.PendingRelease.defer(() => { dev.unpersist(); () })
-    val mad = lowerMedian(dev, "mad").drop("n")
-    val stats = med.join(mad, Seq("g"))
-    counts.join(broadcast(stats), Seq("g"))
-      .groupBy("g")
-      .agg(max(col("n")).as("n"), max(col("median")).as("median"),
-        max(col("mad")).as("mad"),
-        coalesce(sum(when(
-          abs(col("v") - col("median")) > col("mad") * z, col("c"))),
-          lit(0L)).as("n_outliers"))
+    spark.createDataFrame(rows.asJava, StructType(counts.schema("g") +:
+      Seq("n", "median", "mad", "n_outliers").map(StructField(_, LongType))))
   }
 
   /** Exact weighted lower percentiles per group: for each requested
@@ -439,17 +463,15 @@ object Stats {
   /** Row-level robust outlier extraction — the records themselves, not
     * just q88-style counts: every row whose |v − median| exceeds
     * z·MAD for its group, with the group stats attached. The
-    * median/MAD pass is [[medianMad]] (value-domain windows, no
-    * per-group buffered state); the per-group stats frame is tiny and
-    * broadcast back onto the input, so extraction is a map-only second
-    * pass over the data — the shape that lets 100 TB flag its anomalies
-    * without a self-join shuffle.
-    * Output: (g, id, v, median, mad, dev). The median/MAD caches are
-    * released as [[medianMad]]'s are.
+    * median/MAD pass is [[medianMad]] (nulls skipped as there); its
+    * per-group stats frame is local and broadcast back onto the input,
+    * so extraction is a map-only second pass over the data — the shape
+    * that lets 100 TB flag its anomalies without a self-join shuffle.
+    * Output: (g, id, v, median, mad, dev).
     */
   def robustOutliers(df: DataFrame, groupCol: Column, valueCol: Column,
-      idCol: Column, z: Int = 3, domainBits: Int = 64): DataFrame = {
-    val stats = medianMad(df, groupCol, valueCol, z, domainBits)
+      idCol: Column, z: Int = 3): DataFrame = {
+    val stats = medianMad(df, groupCol, valueCol, z)
     df.select(groupCol.as("g"), idCol.as("id"), valueCol.cast("long").as("v"))
       .join(broadcast(stats.select("g", "median", "mad")), Seq("g"))
       .filter(abs(col("v") - col("median")) > col("mad") * z)
@@ -971,7 +993,7 @@ object Stats {
     * medianMad family for the "average order value without the whale
     * orders" question: per group, the p-tail boundary VALUES (lo = the
     * value at rank ⌈αn⌉, hi = at rank ⌈(1−α)n⌉, both via the radix
-    * [[rankSelect]] descent) and the mean over values inside
+    * [[rankSelectMulti]] descent) and the mean over values inside
     * [lo, hi] — value-based trimming, so the definition is
     * partitioning-independent and the oracle replays it exactly; the
     * mean is the single fixed-order 6dp double division of an exact

@@ -1135,8 +1135,8 @@ object TextOps {
     * Plan shape: bigram scoring joins at the (doc, bigram)-DISTINCT
     * level with an occurrence multiplier (the [[bigramLmScore]]
     * argument — join volume O(distinct bigrams), not O(tokens)); the
-    * tertile thresholds come from TWO [[Stats.rankSelect]] point
-    * lookups over the ≤ 20 001-value avg_millibits domain (domainBits
+    * tertile thresholds come from ONE [[Stats.rankSelectMulti]] radix
+    * hierarchy (two point lookups) over the ≤ 20 001-value avg_millibits domain (domainBits
     * = 16: one radix level, every window ≤ 2¹⁶ rows) and broadcast
     * back — no global sort, no per-group row window, nothing about the
     * threshold step grows with the corpus. Documents with < 2 tokens
@@ -1211,7 +1211,7 @@ object TextOps {
       .persist(lvl)
     graft.PendingRelease.defer(() => { counts.unpersist(); () })
     // both tertile thresholds from ONE radix hierarchy
-    // (rankSelectMulti, r16): the two rankSelect calls each rebuilt the
+    // (rankSelectMulti, r16): two single-target descents each rebuilt the
     // level chain over the same counts frame. The labeled rows fold
     // into one 1-row (tert1, tert2) frame — the single consumer that
     // lets the lazy descent run as one overlapped broadcast subjob of

@@ -59,13 +59,12 @@ object CorpusQueries {
   // ---------------------------------------------------------------- q88
   /** Robust outlier statistics ([[Stats.medianMad]]): exact lower
     * median, MAD, and |v − med| > 3·MAD outlier counts of lineitem
-    * price cents per return flag — twice the q36/q85 value-domain
-    * histogram shape, no per-group buffered state anywhere.
+    * price cents per return flag — two sort-and-offset selections over
+    * the (flag, cents) counts, driver memory O(groups + partitions).
     */
   val q88: Q = (s, dir) =>
     Stats.medianMad(Tables.lineitem(s, dir), col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long"), z = 3,
-        domainBits = 32) // item cents < 2^31: data-independent (q85 note)
+        round(col("l_extendedprice") * 100).cast("long"), z = 3)
       .select(col("g").as("flag"), col("n"), col("median"), col("mad"),
         col("n_outliers"))
       .orderBy("flag")
@@ -100,14 +99,14 @@ object CorpusQueries {
   // --------------------------------------------------------------- q132
   /** Row-level robust outlier extraction ([[Stats.robustOutliers]]):
     * the actual anomalous lineitems — |price − median| > 2·MAD within
-    * the return flag — not just q88's counts. Median/MAD from the
-    * value-domain pass, stats broadcast back, extraction map-only.
+    * the return flag — not just q88's counts. Median/MAD from q88's
+    * sort-and-offset selections (driver memory O(groups + partitions)),
+    * stats broadcast back, extraction map-only.
     */
   val q132: Q = (s, dir) =>
     Stats.robustOutliers(Tables.lineitem(s, dir), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long"),
-        col("l_orderkey") * 10 + col("l_linenumber"), z = 2,
-        domainBits = 32)
+        col("l_orderkey") * 10 + col("l_linenumber"), z = 2)
       .select(col("g").as("flag"), col("id").as("line_id"), col("v"),
         col("median"), col("mad"), col("dev"))
       .orderBy("flag", "line_id")

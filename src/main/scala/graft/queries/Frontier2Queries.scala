@@ -437,7 +437,7 @@ object Frontier2Queries {
   // --------------------------------------------------------------- q208
   /** First-view→first-purchase latency quantiles per daily cohort
     * ([[EventOps.conversionLatency]]): exact lower-median and p90
-    * seconds via the q88 radix rank-select — the time-to-convert
+    * seconds via the radix rank-select — the time-to-convert
     * report next to q78's funnel counts and q79's retention grid.
     */
   val q208: Q = (s, dir) =>

@@ -86,22 +86,33 @@ class CorpusOpsSpec extends SparkSuite {
     assert(out.toSeq == Seq(("g1", 8L, 4L, 2L, 1L), ("g2", 4L, 5L, 0L, 0L)))
   }
 
-  test("medianMad is invariant to the domainBits level count, negatives included") {
-    // straddle a 16-bit bucket boundary and include negatives so every
-    // level count exercises real bucket splits AND the arithmetic-shift
-    // ordering for v < 0; results must be bit-identical whether the
-    // radix hierarchy runs 1, 2, or 3 levels deep
+  test("medianMad is exact across 16-bit bucket edges, negatives included") {
+    // values straddle 16-bit bucket edges and include negatives; the
+    // radix implementation returned this row at every level count
+    // (domainBits 21, 32, 48 and 64). 9 values: lower median = 5th
+    // smallest = 65535; |v − 65535| sorted 0, 1, 2, 65534, 65535, … →
+    // MAD 65535; only 500000 (deviation 434465) exceeds 3·MAD
     val vs = Seq(-70000L, -1L, 0L, 1L, 65535L, 65536L, 65537L, 131071L,
       500000L)
     val df = vs.map(("g", _)).toDF("g", "v")
-    val ref = Stats.medianMad(df, col("g"), col("v"), z = 3, domainBits = 64)
+    val out = Stats.medianMad(df, col("g"), col("v"), z = 3)
       .as[(String, Long, Long, Long, Long)].collect().toSeq
-    for (bits <- Seq(21, 32, 48)) {
-      val out = Stats.medianMad(df, col("g"), col("v"), z = 3,
-          domainBits = bits)
-        .as[(String, Long, Long, Long, Long)].collect().toSeq
-      assert(out == ref, s"domainBits=$bits diverged: $out vs $ref")
-    }
+    assert(out == Seq(("g", 9L, 65535L, 65535L, 1L)))
+  }
+
+  test("medianMad skips rows whose group or value is null") {
+    val df = Seq[(Option[String], Option[Long])](
+      (Some("g1"), Some(1L)), (Some("g1"), Some(2L)), (Some("g1"), Some(9L)),
+      (Some("g1"), None), (Some("g1"), None),
+      (Some("g2"), None),
+      (None, Some(4L)), (None, Some(6L))
+    ).toDF("g", "v")
+    val out = Stats.medianMad(df, col("g"), col("v"), z = 3)
+      .as[(String, Long, Long, Long, Long)].collect().toSeq
+    // g1 keeps {1, 2, 9}: median 2, |v − 2| = {1, 0, 7} → MAD 1, and 9
+    // is the one outlier (7 > 3); g2 has no non-null value and the null
+    // group is skipped, so neither has a row
+    assert(out == Seq(("g1", 3L, 2L, 1L, 1L)))
   }
 
   test("weightedPercentiles picks the smallest value reaching p% of total weight") {

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Stats
 
-/** r16 optimization spec: [[Stats.rankSelectMulti]] (one shared radix
-  * hierarchy for k rank targets) must return BIT-EQUAL values to k
-  * independent [[Stats.rankSelect]] descents for every (group, target) —
-  * the multi form is a pure plan restructuring (guide §2.4), never a
-  * semantic change. Exercised across group/no-group, 1/2/3-level
-  * hierarchies (domainBits 16/32/64), skewed weights, and boundary
-  * targets (rank 1 and rank n).
+/** [[Stats.rankSelectMulti]] (one shared radix hierarchy for k rank
+  * targets) must return the same value and n as the sort-and-offset
+  * [[Stats.selectSorted]], run once per target, for every (group,
+  * target): two independent exact algorithms checked against each
+  * other. Exercised across group/no-group, 1/2/3-level hierarchies
+  * (domainBits 16/32/64), skewed weights, and boundary targets (rank 1
+  * and rank n).
   */
 class RankSelectMultiSpec extends SparkSuite {
   import spark.implicits._
@@ -48,11 +48,9 @@ class RankSelectMultiSpec extends SparkSuite {
     val got = multi.select("g", "__t", "out", "n").as[(String, Long, Long, Long)]
       .collect().map(t => (t._1, t._2) -> (t._3, t._4)).toMap
     targets.foreach { case (lab, f) =>
-      val (single, relS) = Stats.rankSelect(cts, Seq("g"), "c", f, "out",
-        persistInput = false, domainBits = 64)
-      val want = single.select("g", "out", "n").as[(String, Long, Long)]
-        .collect().map(t => t._1 -> (t._2, t._3)).toMap
-      relS()
+      val want = Stats.selectSorted(cts.select("g", "v", "c"), f)(
+        (_, hits) => hits.map { case (g, n, v) => g.getString(0) -> (v, n) })
+        .toMap
       want.foreach { case (g, exp) =>
         assert(got((g, lab)) == exp, s"target $lab group $g")
       }
@@ -71,10 +69,8 @@ class RankSelectMultiSpec extends SparkSuite {
       val got = multi.select("__t", "out", "n").as[(Long, Long, Long)]
         .collect().map(t => t._1 -> (t._2, t._3)).toMap
       targets.foreach { case (lab, f) =>
-        val (single, relS) = Stats.rankSelect(cts, Nil, "c", f, "out",
-          persistInput = false, domainBits = bits)
-        val want = single.select("out", "n").as[(Long, Long)].collect().head
-        relS()
+        val want = Stats.selectSorted(cts.select("v", "c"), f)(
+          (_, hits) => hits.map { case (_, n, v) => (v, n) }.head)
         assert(got(lab) == want, s"domainBits $bits target $lab")
       }
       relM(); cts.unpersist()

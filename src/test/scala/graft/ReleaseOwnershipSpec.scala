@@ -35,12 +35,28 @@ class ReleaseOwnershipSpec extends SparkSuite {
     assert(PendingRelease.pendingCount == 0)
   }
 
+  test("equal plans persisted by two callers keep separate caches") {
+    // the cache manager hands an existing entry to any equal plan; with
+    // a shared entry, one caller's release drops the other's cache
+    import org.apache.spark.storage.StorageLevel
+    val df = spark.range(100).toDF("id")
+    val a = graft.operators.Lineage.persistOwned(df)
+    val b = graft.operators.Lineage.persistOwned(df)
+    try {
+      assert(a.count() == 100 && b.count() == 100)
+      a.unpersist()
+      assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "releasing one caller's cache dropped the other's")
+    } finally { a.unpersist(); b.unpersist(); () }
+  }
+
   test("two threads materialize and drain checkpointing entries on one session") {
     // q80 (pageRank) and q143 (labelPropagation) read their last
     // localCheckpoint from the result plan, so the other thread's drain
-    // releasing it mid-action fails the read; q88 persists its counts
-    // and radix levels. Results must equal a single-thread run's, and
-    // the session must end with no persisted RDD the test added.
+    // releasing it mid-action fails the read; both persist the same edge
+    // plan, and q88 persists its sorted rows. Results must equal a
+    // single-thread run's, and the session must end with no persisted
+    // RDD the test added.
     val names = Seq("q80_pagerank", "q143_label_propagation", "q88_median_mad")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def run(name: String): Seq[String] =
