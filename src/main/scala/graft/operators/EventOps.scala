@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Event-stream product analytics: ordered funnels, cohort retention,
   * power-of-two time-decayed engagement, and Markov transition counts.
@@ -327,15 +330,17 @@ object EventOps {
     * between their first `fromType` event and the first `toType` event
     * at or after it; users are cohorted by the DAY of the first touch
     * and each cohort reports its exact lower-median and p90 latency in
-    * seconds. Quantiles run on [[Stats.rankSelectMulti]]'s radix descent
-    * over the (cohort, latency-second) count frame — no per-cohort
-    * sort, no partition-less window. Rank targets: median = ⌈n/2⌉ = (n+1) div 2,
+    * seconds. Both quantiles come from one [[Stats.selectSorted]] over
+    * the (cohort, latency-second) count frame — no per-cohort window,
+    * no partition-less window. Rank targets: median = ⌈n/2⌉ = (n+1) div 2,
     * p90 = ⌈9n/10⌉ = (9n+9) div 10 (both "min v with cum ≥ target").
     *
     * Shape: two user-keyed aggregates (first touch, first conversion),
-    * one (cohort, second) count aggregate, two broadcast-joined radix
-    * descents. Output: (g, n_conv, median_s, p90_s), g = epoch day of
-    * the cohort's first touch.
+    * one (cohort, second) count aggregate, one sort-and-offset
+    * selection. The work runs when this is called and nothing stays
+    * cached: the result is a local frame, in cohort order.
+    * Output: (g, n_conv, median_s, p90_s), g = epoch day of the
+    * cohort's first touch.
     */
   def conversionLatency(events: DataFrame, userCol: String,
       tsCol: String, typeCol: String, fromType: String,
@@ -356,39 +361,14 @@ object EventOps {
       .select(expr("(t0 - pmod(t0, 86400000000)) div 86400000000").as("g"),
         expr("(t1 - t0) div 1000000").as("v"))
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count() // materialize before the descent's broadcasts race
-    val n = counts.groupBy("g").agg(sum("c").as("n_conv"))
-    // latency seconds fit 32 bits a-priori: (t1−t0)/1e6 is bounded by
-    // the corpus time span, and a >68-year gap is not a latency.
-    // Both quantiles from ONE radix hierarchy (rankSelectMulti, r16):
-    // two single-target descents each rebuilt the level chain over the
-    // same counts frame.
-    val (qs, rel1) = Stats.rankSelectMulti(counts, Seq("g"), "c",
-      Seq(50L -> ((nn: Column) => ((nn + 1) / 2).cast("long")),
-        90L -> ((nn: Column) => ((nn * 9 + 9) / 10).cast("long"))),
-      "__t", "qv", persistInput = false, domainBits = 32)
-    // fold the labeled rows into columns with one tiny aggregate — the
-    // single consumer that lets the lazy descent run overlapped inside
-    // the final action (see rankSelectMulti)
-    val quants = qs.groupBy("g")
-      .agg(min(when(col("__t") === 50L, col("qv"))).as("median_s"),
-        min(when(col("__t") === 90L, col("qv"))).as("p90_s"))
-    val out = n.join(broadcast(quants), Seq("g"))
-      .select(col("g"), col("n_conv").cast("long").as("n_conv"),
-        col("median_s"), col("p90_s"))
-    // LAZY persist + deferred release (r17): the old eager res.count()
-    // barrier existed only so the internals could release immediately —
-    // but it serialized the descent behind its own job AND the result
-    // cache itself was never released (one stranded copy per run, the
-    // q172/q153 leak shape). Deferring the whole bundle to the
-    // harness's post-materialization drain keeps the descent overlapped
-    // inside the consuming action and returns the session to baseline.
-    val res = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.PendingRelease.defer(
-      () => { rel1(); counts.unpersist(); res.unpersist(); () })
-    res
+    val rows = Stats.selectSorted(counts, Seq(
+        (n: Column) => ((n + 1) / 2).cast("long"),
+        (n: Column) => ((n * 9 + 9) / 10).cast("long"))) { (_, qs) =>
+      qs.map { case (g, n, q) => Row(g.get(0), n, q(0), q(1)) }
+    }
+    events.sparkSession.createDataFrame(rows.asJava, StructType(
+      counts.schema("g") +: Seq("n_conv", "median_s", "p90_s")
+        .map(StructField(_, LongType))))
   }
 
   /** Event-type path trigrams — the navigation-pattern census behind
@@ -424,9 +404,13 @@ object EventOps {
     * Lateness = running max(ts) over arrival order − ts, so it needs a
     * total arrival order (`arrivalCol` — an ingest sequence/offset;
     * ties broken by it being unique). One group-PARTITIONED window for
-    * the running max, one (group, second) count aggregate, two radix
-    * rank-select descents ([[Stats.rankSelectMulti]]) — no partition-less
-    * window, no per-group sort at the percentile step.
+    * the running max, one (group, second) count aggregate, one
+    * [[Stats.selectSorted]] for both quantiles and one pass over its
+    * sorted rows for the late count and the max — no partition-less
+    * window, no per-group window at the percentile step. Events whose
+    * group or lateness is null are skipped, and n_events counts the
+    * events ranked. The work runs when this is called and nothing
+    * stays cached: the result is a local frame, in group order.
     *
     * Output: (g, n_events, late_ppm, median_s, p99_s, max_s) — median/
     * p99 over ALL events (on-time = 0 s), late_ppm the >0 share.
@@ -442,35 +426,22 @@ object EventOps {
       .select("g", "lat_s")
     val counts = lat.groupBy(col("g"), col("lat_s").as("v"))
       .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count() // materialize before the descent's broadcasts race
-    val agg = counts.groupBy("g").agg(sum("c").as("n_events"),
-      coalesce(sum(when(col("v") > 0L, col("c"))), lit(0L)).as("n_late"),
-      max("v").as("max_s"))
-    // both quantiles from ONE radix hierarchy (rankSelectMulti, r16):
-    // two single-target descents each rebuilt the level chain over the
-    // same counts frame
-    val (qs, rel1) = Stats.rankSelectMulti(counts, Seq("g"), "c",
-      Seq(50L -> ((nn: Column) => ((nn + 1) / 2).cast("long")),
-        99L -> ((nn: Column) => ((nn * 99 + 99) / 100).cast("long"))),
-      "__t", "qv", persistInput = false, domainBits = 32)
-    // fold the labeled rows into columns with one tiny aggregate — the
-    // single consumer that lets the lazy descent run overlapped inside
-    // the final action (see rankSelectMulti)
-    val quants = qs.groupBy("g")
-      .agg(min(when(col("__t") === 50L, col("qv"))).as("median_s"),
-        min(when(col("__t") === 99L, col("qv"))).as("p99_s"))
-    val out = agg.join(broadcast(quants), Seq("g"))
-      .select(col("g"), col("n_events").cast("long").as("n_events"),
-        expr("(cast(n_late as decimal(38,0)) * 1000000) div n_events")
-          .cast("long").as("late_ppm"),
-        col("median_s"), col("p99_s"), col("max_s"))
-    // LAZY persist + deferred release (r17) — see conversionLatency
-    val res = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.PendingRelease.defer(
-      () => { rel1(); counts.unpersist(); res.unpersist(); () })
-    res
+    val rows = Stats.selectSorted(counts, Seq(
+        (n: Column) => ((n + 1) / 2).cast("long"),
+        (n: Column) => ((n * 99 + 99) / 100).cast("long"))) { (sorted, qs) =>
+      // (late events, max lateness) per group
+      val tail = Stats.groupSums(sorted, 1, (0L, Long.MinValue))(_ =>
+        (s, r) => (s._1 + (if (r.getLong(1) > 0) r.getLong(2) else 0L),
+          math.max(s._2, r.getLong(1))))(
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      qs.map { case (g, n, q) =>
+        val (late, mx) = tail(g)
+        Row(g.get(0), n, (BigInt(late) * 1000000 / n).toLong, q(0), q(1), mx)
+      }
+    }
+    events.sparkSession.createDataFrame(rows.asJava, StructType(
+      counts.schema("g") +: Seq("n_events", "late_ppm", "median_s", "p99_s",
+        "max_s").map(StructField(_, LongType))))
   }
 
   /** Cohort value curve — q79's retention grid with MONEY on it: users

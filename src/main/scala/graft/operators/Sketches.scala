@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Portable
 
@@ -641,30 +644,26 @@ object Sketches {
     * One data scan total: the per-(group, value) counts frame feeds a
     * WEIGHTED sketch aggregation (identical bucketing to
     * [[logHistSketch]] — count(*) becomes sum(c)) AND the exact side's
-    * [[Stats.rankSelectMulti]] radix descent (one target per percentile, each a
-    * point lookup over the shared counts — never a full sort, never a
-    * partition-less window). The exact rank target mirrors the
-    * sketch's crossing test: smallest v with cum·100 ≥ n·p ⟺ rank
-    * ceil(n·p/100). Output: (groups..., p, est, exact, err_ppm,
-    * within_bound).
+    * [[Stats.selectSorted]] (one target per percentile, all crossings
+    * in one pass over the sorted counts — never a partition-less
+    * window). The exact rank target mirrors the sketch's crossing
+    * test: smallest v with cum·100 ≥ n·p ⟺ rank ceil(n·p/100). The
+    * exact quantiles come back to the driver as a local frame. Rows
+    * whose value is not positive or whose group is null are skipped.
+    * Output: (groups..., p, est, exact, err_ppm, within_bound).
     *
-    * Precondition: `ps` must be distinct — the shared-hierarchy descent
-    * (rankSelectMulti, r16) keys its per-target state on p and rejects
-    * duplicates at plan build; the pre-r16 per-p loop would instead
-    * have emitted duplicate rows for a duplicated p.
+    * Precondition: `ps` must be distinct; a duplicated p is rejected.
     */
   def logHistErrorAudit(df: DataFrame, groupCols: Seq[String],
-      valueCol: Column, ps: Seq[Int], domainBits: Int = 64): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // session-cache + eager count: counts feeds the sketch AND every
-    // radix descent (whose broadcasts race an uncached parent)
-    val counts = df
+      valueCol: Column, ps: Seq[Int]): DataFrame = {
+    require(ps.distinct.size == ps.size, s"logHistErrorAudit: duplicate ps $ps")
+    // feeds the sketch AND the exact selection
+    val counts = Lineage.persistOwned(df
       .select(groupCols.map(col) :+ valueCol.cast("long").as("v"): _*)
       .filter(col("v") > 0)
       .groupBy((groupCols :+ "v").map(col): _*)
-      .agg(count(lit(1)).as("c"))
-      .persist(lvl)
-    counts.count()
+      .agg(count(lit(1)).as("c")))
+    graft.PendingRelease.defer(() => { counts.unpersist(); () })
     val sk = counts.withColumn("b", floorLog2(col("v")))
       .withColumn("bucket", when(col("v") < 32, col("v"))
         .otherwise(lit(32) + (col("b") - 5) * 16 +
@@ -677,20 +676,15 @@ object Sketches {
     // ceil(n·p/100) exact only while n·p+99 < ~2⁵³; past that the
     // truncation can come out off by one and silently shift the
     // 'exact' quantile this audit compares against.
-    // ALL percentiles descend ONE shared radix hierarchy
-    // (rankSelectMulti, r16): per-p single-target descents each rebuilt
-    // and re-persisted the level chain over the same counts frame —
-    // |ps| hierarchy builds and |ps| scans of every level for the same
-    // point lookups. Deferring the release also closes the pre-r16 leak
-    // of the per-call t1 caches (the per-p release thunks were
-    // dropped here) and of the counts cache itself.
-    val (exactMulti, relExact) = Stats.rankSelectMulti(counts, groupCols,
-      "c", ps.map(p => (p.toLong, (n: Column) =>
-        call_function("div", n * p + lit(99L), lit(100L)))),
-      "p", "exact", persistInput = false, domainBits = domainBits)
-    val exact = exactMulti
-      .select(groupCols.map(col) :+ col("p") :+ col("exact"): _*)
-    graft.PendingRelease.defer(() => { relExact(); counts.unpersist(); () })
+    val rows = Stats.selectSorted(counts, ps.map(p => (n: Column) =>
+        call_function("div", n * p + lit(99L), lit(100L)))) { (_, hits) =>
+      hits.flatMap { case (g, _, vs) =>
+        ps.zip(vs).map { case (p, v) => Row.fromSeq(g.toSeq :+ p.toLong :+ v) }
+      }
+    }
+    val exact = df.sparkSession.createDataFrame(rows.asJava, StructType(
+      groupCols.map(counts.schema(_)) ++
+        Seq("p", "exact").map(StructField(_, LongType))))
     est.join(exact, groupCols :+ "p")
       .select(groupCols.map(col) ++ Seq(col("p"), col("est"), col("exact"),
         expr("((exact - est) * 1000000) div exact").as("err_ppm"),

@@ -146,31 +146,33 @@ object Stats {
   }
 
   /** Exact per-group weighted rank selection by sort-and-offset: for
-    * each group of `rows` (groups…, v, c), with Long v and c, the
-    * smallest value v whose running weight c, in value order, reaches
-    * the target rank `targetOf(n)`, n the group's total weight. The
-    * target must lie in [1, n]. Rows with a null in any column are
-    * skipped; group columns must not be binary.
+    * each group of `rows` (groups…, v, c), with Long v and c, and for
+    * each target, the smallest value v whose running weight c, in value
+    * order, reaches the target rank `targetOf(n)`, n the group's total
+    * weight. Every target must lie in [1, n]. Rows with a null in any
+    * column are skipped; group columns must not be binary.
     *
     * One range shuffle on (groups…, v), sorted within each partition:
     * a group is a run of rows that may span many partitions, so one
     * large group never lands in one task. Pass 1 sums each
     * (partition, group) run's weight, at most groups + partitions rows
     * to the driver. The driver turns them into each group's n, its
-    * target, and the partition and remaining rank where the running
-    * sum crosses the target. Pass 2 reads the same sorted rows with
-    * those offsets in its closure and returns each group's crossing
-    * row. Driver memory is O(groups + partitions); the value domain is
-    * never collected.
+    * targets, and for each target the partition and remaining rank
+    * where the running sum crosses it. Pass 2 reads the same sorted
+    * rows with those offsets in its closure and returns every crossing
+    * row, all targets at once; several targets may cross in one run.
+    * Driver memory is O(groups · targets + partitions); the value
+    * domain is never collected.
     *
     * The sorted rows are persisted (deserialized, spilling to disk) by
     * pass 1, so neither pass 2 nor `use` sorts them again, and released
-    * when `use` returns. `use` gets them, for further passes of the
-    * caller, and per group, in group order, its key (the group columns
-    * as a Row), n and the selected value.
+    * when `use` returns or throws. `use` gets them, for further passes
+    * of the caller, and per group, in group order, its key (the group
+    * columns as a Row), n and the selected value of each target.
     */
-  private[graft] def selectSorted[A](rows: DataFrame, targetOf: Column => Column)(
-      use: (RDD[Row], Seq[(Row, Long, Long)]) => A): A = {
+  private[graft] def selectSorted[A](rows: DataFrame,
+      targetsOf: Seq[Column => Column])(
+      use: (RDD[Row], Seq[(Row, Long, Seq[Long])]) => A): A = {
     val spark = rows.sparkSession
     val nG = rows.columns.length - 2
     require(!rows.schema.take(nG).exists(_.dataType == BinaryType),
@@ -184,7 +186,8 @@ object Stats {
       // runs are consecutive across partitions
       val spans = mutable.ArrayBuffer.empty[(Row, mutable.ArrayBuffer[(Int, Long)])]
       sorted.mapPartitionsWithIndex((p, it) =>
-          runSums(it, nG)(_ => _.getLong(nG + 1)).map { case (g, w) => (p, g, w) })
+          runSums(it, nG, 0L)(_ => (s, r) => s + r.getLong(nG + 1))
+            .map { case (g, w) => (p, g, w) })
         .collect().foreach { case (p, g, w) =>
           if (spans.nonEmpty && spans.last._1 == g) spans.last._2 += ((p, w))
           else spans += ((g, mutable.ArrayBuffer((p, w))))
@@ -192,29 +195,39 @@ object Stats {
       val ns = spans.map(_._2.map(_._2).sum).toSeq
       val ts = spark.createDataFrame(ns.map(Row(_)).asJava,
           StructType(Seq(StructField("n", LongType, nullable = false))))
-        .select(targetOf(col("n")).cast("long")).collect().map(_.getLong(0))
-      // per partition: the rank still to go, for each group crossing there
-      val needs = spans.zip(ns).zip(ts).map { case (((g, runs), n), t) =>
-        require(t >= 1 && t <= n, s"target $t outside [1, $n] for group $g")
+        .select(targetsOf.map(_(col("n")).cast("long")): _*).collect()
+        .map(r => targetsOf.indices.map(r.getLong))
+      // per partition and crossing group: (target, rank still to go),
+      // ascending by rank
+      val needs = spans.zip(ns).zip(ts).flatMap { case (((g, runs), n), gts) =>
         val before = runs.scanLeft(0L)(_ + _._2)
-        val i = runs.indices.find(i => before(i + 1) >= t).get
-        (runs(i)._1, g -> (t - before(i)))
-      }.groupMap(_._1)(_._2).map { case (p, gs) => p -> gs.toMap }
-      // pass 2: the crossing row of each group, one row per group
+        gts.zipWithIndex.map { case (t, k) =>
+          require(t >= 1 && t <= n, s"target $t outside [1, $n] for group $g")
+          val i = runs.indices.find(i => before(i + 1) >= t).get
+          (runs(i)._1, g, (k, t - before(i)))
+        }
+      }.groupBy(_._1).map { case (p, hs) =>
+        p -> hs.groupMap(_._2)(_._3).map { case (g, ks) => g -> ks.sortBy(_._2).toList }
+      }
+      // pass 2: every crossing row, one per (group, target)
       val hit = sorted.mapPartitionsWithIndex { (p, it) =>
-        needs.get(p).fold(Iterator.empty[(Row, Long)]) { left0 =>
-          var cur: Row = null; var left = 0L
+        needs.get(p).fold(Iterator.empty[((Row, Int), Long)]) { want =>
+          var cur: Row = null; var left = List.empty[(Int, Long)]; var sum = 0L
           keyed(it, nG).flatMap { case (g, r) =>
-            if (!(g eq cur)) { cur = g; left = left0.getOrElse(g, 0L) }
-            if (left <= 0) None
+            if (!(g eq cur)) { cur = g; sum = 0L; left = want.getOrElse(g, Nil) }
+            if (left.isEmpty) Nil
             else {
-              left -= r.getLong(nG + 1)
-              if (left <= 0) Some(g -> r.getLong(nG)) else None
+              sum += r.getLong(nG + 1)
+              val (done, rest) = left.span(_._2 <= sum)
+              left = rest
+              done.map { case (k, _) => (g, k) -> r.getLong(nG) }
             }
           }
         }
       }.collect().toMap
-      use(sorted, spans.zip(ns).map { case ((g, _), n) => (g, n, hit(g)) }.toSeq)
+      use(sorted, spans.zip(ns).map { case ((g, _), n) =>
+        (g, n, targetsOf.indices.map(k => hit((g, k))))
+      }.toSeq)
     } finally { sorted.unpersist(blocking = false); () }
   }
 
@@ -231,119 +244,33 @@ object Stats {
     }
   }
 
-  /** Per run of one group in a sorted partition, the sum of
-    * `weightOf(group)(row)` over its rows.
+  /** Per run of one group in a sorted partition, the fold of
+    * `add(group)` over its rows from `zero`.
     */
-  private def runSums(it: Iterator[Row], nG: Int)(
-      weightOf: Row => Row => Long): Iterator[(Row, Long)] = {
-    val out = mutable.ArrayBuffer.empty[(Row, Long)]
-    var cur: Row = null; var w: Row => Long = null; var sum = 0L
+  private def runSums[S](it: Iterator[Row], nG: Int, zero: S)(
+      add: Row => (S, Row) => S): Iterator[(Row, S)] = {
+    val out = mutable.ArrayBuffer.empty[(Row, S)]
+    var cur: Row = null; var f: (S, Row) => S = null; var sum = zero
     keyed(it, nG).foreach { case (g, r) =>
       if (!(g eq cur)) {
         if (cur != null) out += ((cur, sum))
-        cur = g; w = weightOf(g); sum = 0L
+        cur = g; f = add(g); sum = zero
       }
-      sum += w(r)
+      sum = f(sum, r)
     }
     if (cur != null) out += ((cur, sum))
     out.iterator
   }
 
-  /** Radix rank selection: the value at EACH of several per-group
-    * target ranks — the smallest value whose running weight reaches
-    * the target — from ONE shared radix hierarchy over the value
-    * domain. Per level, an exclusive-prefix window over the <= 2^16
-    * child buckets of each target's chosen parent bucket finds where
-    * the target crosses; the broadcast state frame carries a target
-    * label, so a level's join fans each scanned bucket out only to the
-    * targets whose chosen parent covers it (exactly 1 state row per
-    * (group, label)), and every window partition stays <= 2^16 rows.
-    * The sort-and-offset [[selectSorted]] returns the same values
-    * (RankSelectMultiSpec checks the two against each other).
-    *
-    * The O(|groups|·k) result is returned LAZY and unpersisted: callers
-    * consume it exactly once (a conditional aggregation folding the
-    * labels into columns), so the descent materializes as one broadcast
-    * subjob inside the caller's final action. A caller that must
-    * consume it twice persists it itself — each extra lazy consumer
-    * re-runs the full descent (see the inline comment at the return for
-    * the measured eager-persist counter-example). The returned thunk
-    * releases only the internal level caches.
-    *
-    * `targets`: (label, targetOf) pairs — label lands in `labelCol`
-    * (Long; callers map it back to their percentile/boundary names).
-    * targetOf must be >= 1 and <= n.
-    * Output: (groups..., labelCol, out, n).
+  /** Per group of the sorted rows `sorted`, the fold of `add(group)`
+    * over its rows: one job, whose runs' folds (one per partition and
+    * group) `merge` joins on the driver.
     */
-  private[graft] def rankSelectMulti(counts0: DataFrame, gCols: Seq[String],
-      cCol: String, targets: Seq[(Long, Column => Column)],
-      labelCol: String, out: String,
-      persistInput: Boolean = true, domainBits: Int = 64)
-      : (DataFrame, () => Unit) = {
-    require(targets.nonEmpty, "rankSelectMulti: no targets")
-    require(targets.map(_._1).distinct.size == targets.size,
-      "rankSelectMulti: duplicate target labels")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (in0, gNames) = injectG(counts0, gCols)
-    val g = gNames.map(col)
-    val l0p = in0.select(g :+ col("v").cast("long").as("b") :+
-        col(cCol).cast("long").as("c"): _*)
-    val l0 = if (persistInput) l0p.persist(lvl) else l0p
-    val t1 = up(l0, gNames).persist(lvl)
-    t1.count() // one parallel build before concurrent broadcasts race
-    val ts = Iterator.iterate(t1)(up(_, gNames)).take(nLevels(domainBits))
-      .toList
-    val root = ts.last
-    // (groups, label, n, t): one target rank per (group, label); built
-    // from the tiny root totals, so the k-way union is k scans of an
-    // O(groups)-row frame, not of the data
-    val tot = root.groupBy(g: _*).agg(sum(col("c")).as("n"))
-    val tgt = targets.map { case (lab, f) =>
-        tot.select(g :+ lit(lab).as("__rsLab") :+ col("n") :+
-          f(col("n")).as("t"): _*)
-      }.reduce(_.unionByName(_))
-    val sRoot = exPrefix(root.join(broadcast(tgt), gNames),
-        gNames :+ "__rsLab")
-      .filter(col("p") + col("c") >= col("t"))
-      .groupBy((gNames :+ "__rsLab").map(col): _*)
-      .agg(min(struct(col("b"), col("p").as("h"), col("n"), col("t")))
-        .as("s"))
-      .select(g :+ col("__rsLab") :+ col("s.b").as("bp") :+
-        col("s.h").as("h") :+ col("s.n").as("n") :+ col("s.t").as("t"): _*)
-    def step(tk: DataFrame, st: DataFrame): DataFrame =
-      exPrefix(
-        tk.withColumn("bp", shiftright(col("b"), 16))
-          .join(broadcast(st), gNames :+ "bp"),
-        // bp is a FUNCTION of (group, label) — st holds exactly one row
-        // per (group, label) — so partitioning the prefix by label keeps
-        // every window <= 2^16 rows exactly as the single-target descent
-        gNames :+ "__rsLab")
-      .filter(col("h") + col("p") + col("c") >= col("t"))
-      .groupBy((gNames :+ "__rsLab").map(col): _*)
-      .agg(min(struct(col("b"), (col("h") + col("p")).as("h"), col("n"),
-        col("t"))).as("s"))
-      .select(g :+ col("__rsLab") :+ col("s.b").as("bp") :+
-        col("s.h").as("h") :+ col("s.n").as("n") :+ col("s.t").as("t"): _*)
-    val s0 = step(l0, ts.init.reverse.foldLeft(sRoot)((st, tk) =>
-      step(tk, st)))
-    // the label travels under an internal name through the descent:
-    // exPrefix/struct columns (p, h, n, t, b, bp) must never collide
-    // with the caller's labelCol (q172 passes labelCol = "p", which
-    // exPrefix would otherwise overwrite mid-descent)
-    val res = s0.select(g :+ col("__rsLab").as(labelCol) :+
-        col("bp").as(out) :+ col("n"): _*)
-      .drop((if (gCols.isEmpty) Seq("_g") else Nil): _*)
-    // deliberately LAZY and unpersisted: callers consume the result
-    // exactly once (a conditional aggregation folding the labels into
-    // columns), so the whole descent materializes as one broadcast
-    // subjob INSIDE the caller's final action, overlapped with its main
-    // scan. An eager persist+count here was measured to serialize the
-    // descent behind an extra AQE-barrier chain and LOSE ~0.5-1 s per
-    // query vs the overlapped two-descent form it replaced — a caller
-    // that must consume the result twice persists it itself.
-    (res, () => { if (persistInput) l0.unpersist(); t1.unpersist(); () })
-  }
-
+  private[graft] def groupSums[S](sorted: RDD[Row],
+      nG: Int, zero: S)(add: Row => (S, Row) => S)(merge: (S, S) => S)
+      : Map[Row, S] =
+    sorted.mapPartitions(it => runSums(it, nG, zero)(add)).collect()
+      .groupMapReduce(_._1)(_._2)(merge)
 
   /** Equi-depth histogram of an integer-valued column: `k` buckets with
     * (as near as ties allow) equal row counts. Rule: every distinct
@@ -388,7 +315,7 @@ object Stats {
     * group. No window is partitioned by group, so a large group spreads
     * over many range partitions; driver memory is O(groups +
     * partitions). The work runs when this is called and nothing stays
-    * cached: the result is a local frame.
+    * cached: the result is a local frame, in group order.
     * Output: (g, n, median, mad, n_outliers).
     */
   def medianMad(df: DataFrame, groupCol: Column, valueCol: Column,
@@ -397,8 +324,8 @@ object Stats {
     val counts = df.select(groupCol.as("g"), valueCol.cast("long").as("v"))
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
     val half = (n: Column) => ((n + 1) / 2).cast("long")
-    val rows = selectSorted(counts, half) { (sorted, meds) =>
-      val median = meds.map { case (g, _, m) => g -> m }.toMap
+    val rows = selectSorted(counts, Seq(half)) { (sorted, meds) =>
+      val median = meds.map { case (g, _, ms) => g -> ms.head }.toMap
       val dev = sorted.mapPartitions { it =>
         var cur: Row = null; var m = 0L
         keyed(it, 1).map { case (g, r) =>
@@ -406,14 +333,13 @@ object Stats {
           Row(r.get(0), math.abs(r.getLong(1) - m), r.getLong(2))
         }
       }
-      val mad = selectSorted(spark.createDataFrame(dev, counts.schema), half)(
-        (_, hits) => hits.map { case (g, _, d) => g -> d }.toMap)
-      val outliers = sorted.mapPartitions(it => runSums(it, 1) { g =>
-          val (m, bound) = (median(g), mad(g) * z)
-          r => if (math.abs(r.getLong(1) - m) > bound) r.getLong(2) else 0L
-        }).collect()
-        .groupMapReduce(_._1)(_._2)(_ + _)
-      meds.map { case (g, n, m) => Row(g.get(0), n, m, mad(g), outliers(g)) }
+      val mad = selectSorted(spark.createDataFrame(dev, counts.schema), Seq(half))(
+        (_, hits) => hits.map { case (g, _, ds) => g -> ds.head }.toMap)
+      val outliers = groupSums(sorted, 1, 0L) { g =>
+        val (m, bound) = (median(g), mad(g) * z)
+        (s, r) => if (math.abs(r.getLong(1) - m) > bound) s + r.getLong(2) else s
+      }(_ + _)
+      meds.map { case (g, n, ms) => Row(g.get(0), n, ms.head, mad(g), outliers(g)) }
     }
     spark.createDataFrame(rows.asJava, StructType(counts.schema("g") +:
       Seq("n", "median", "mad", "n_outliers").map(StructField(_, LongType))))
@@ -992,59 +918,52 @@ object Stats {
   /** Trimmed mean — the robust-location estimator completing the
     * medianMad family for the "average order value without the whale
     * orders" question: per group, the p-tail boundary VALUES (lo = the
-    * value at rank ⌈αn⌉, hi = at rank ⌈(1−α)n⌉, both via the radix
-    * [[rankSelectMulti]] descent) and the mean over values inside
-    * [lo, hi] — value-based trimming, so the definition is
-    * partitioning-independent and the oracle replays it exactly; the
+    * value at rank ⌈αn⌉, hi = at rank ⌈(1−α)n⌉) and the mean over
+    * values inside [lo, hi] — value-based trimming, so the definition
+    * is partitioning-independent and the oracle replays it exactly; the
     * mean is the single fixed-order 6dp double division of an exact
     * integer sum.
+    *
+    * Plan: groupBy(group, value).count, then one [[selectSorted]] for
+    * both boundaries, and one pass over its sorted rows for the kept
+    * count and sum, with the boundaries held on the driver. Rows whose
+    * group or value is null are skipped, and n counts the rows ranked.
+    * The work runs when this is called and nothing stays cached: the
+    * result is a local frame, in group order.
     *
     * @param alphaPct tail percentage to trim on EACH side (e.g. 5)
     * Output: (g, n, lo, hi, n_kept, trimmed_mean_6dp).
     */
   def trimmedMean(df: DataFrame, groupCol: Column, valueCol: Column,
-      alphaPct: Int, domainBits: Int = 64): DataFrame = {
+      alphaPct: Int): DataFrame = {
     require(alphaPct >= 1 && alphaPct <= 49, s"alphaPct: $alphaPct")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val counts = df.select(groupCol.as("g"), valueCol.cast("long").as("v"))
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .persist(lvl)
-    counts.count() // materialize before the descent's broadcasts race
-    // both trim boundaries from ONE radix hierarchy (rankSelectMulti):
-    // the two single-target descents each rebuilt the level chain over
-    // the same counts frame — same lookups, half the hierarchy work
-    val (boundRows, rel1) = rankSelectMulti(counts, Seq("g"), "c",
-      Seq(0L -> ((nn: Column) => ((nn * alphaPct + 99) / 100).cast("long")),
-        1L -> ((nn: Column) =>
-          ((nn * (100 - alphaPct) + 99) / 100).cast("long"))),
-      "__t", "bv", persistInput = false, domainBits = domainBits)
-    // fold the two labeled rows per group into (lo, hi) COLUMNS with one
-    // tiny aggregate — the single consumer the lazy multi-descent needs,
-    // so it runs as one overlapped broadcast subjob of the final action
-    val bounds = boundRows.groupBy("g")
-      .agg(min(when(col("__t") === 0L, col("bv"))).as("lo"),
-        min(when(col("__t") === 1L, col("bv"))).as("hi"))
-    val out = counts
-      .join(broadcast(bounds), Seq("g"))
-      .groupBy("g", "lo", "hi")
-      .agg(sum("c").as("n"),
-        coalesce(sum(when(col("v") >= col("lo") && col("v") <= col("hi"),
-          col("c"))), lit(0L)).as("n_kept"),
-        coalesce(sum(when(col("v") >= col("lo") && col("v") <= col("hi"),
-          expr("cast(v as decimal(38,0)) * c"))),
-          lit(0L).cast("decimal(38,0)")).as("ks"))
-      .select(col("g"), col("n").cast("long").as("n"), col("lo"),
-        col("hi"), col("n_kept").cast("long").as("n_kept"),
-        expr("""case when n_kept = 0 then 0.0d else
-          |  round(cast(ks as double) / cast(n_kept as double), 6) end"""
-          .stripMargin).as("trimmed_mean_6dp"))
-    // LAZY persist + deferred release (r17): the eager res.count()
-    // barrier only existed so the internals could release immediately,
-    // and the result cache itself leaked (see EventOps.conversionLatency)
-    val res = out.persist(lvl)
-    graft.PendingRelease.defer(
-      () => { rel1(); counts.unpersist(); res.unpersist(); () })
-    res
+    val rows = selectSorted(counts, Seq(
+        (n: Column) => ((n * alphaPct + 99) / 100).cast("long"),
+        (n: Column) => ((n * (100 - alphaPct) + 99) / 100).cast("long"))) {
+      (sorted, bounds) =>
+        val lohi = bounds.map { case (g, _, b) => g -> (b(0), b(1)) }.toMap
+        val kept = groupSums(sorted, 1, (0L, BigInt(0))) { g =>
+          val (lo, hi) = lohi(g)
+          (s, r) => {
+            val (v, c) = (r.getLong(1), r.getLong(2))
+            if (v >= lo && v <= hi) (s._1 + c, s._2 + BigInt(v) * c) else s
+          }
+        }((a, b) => (a._1 + b._1, a._2 + b._2))
+        bounds.map { case (g, n, b) =>
+          val (nk, ks) = kept(g)
+          // nk ≥ 1: the lo row is kept. Spark's round(double, 6) is
+          // HALF_UP on the double's decimal form
+          val mean = java.math.BigDecimal.valueOf(ks.toDouble / nk.toDouble)
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+          Row(g.get(0), n, b(0), b(1), nk, mean)
+        }
+    }
+    df.sparkSession.createDataFrame(rows.asJava, StructType(counts.schema("g") +:
+      Seq("n", "lo", "hi").map(StructField(_, LongType)) :+
+      StructField("n_kept", LongType, nullable = false) :+
+      StructField("trimmed_mean_6dp", org.apache.spark.sql.types.DoubleType)))
   }
 
   /** Benford first-digit profile — the classic fabricated-data /

@@ -1135,11 +1135,11 @@ object TextOps {
     * Plan shape: bigram scoring joins at the (doc, bigram)-DISTINCT
     * level with an occurrence multiplier (the [[bigramLmScore]]
     * argument — join volume O(distinct bigrams), not O(tokens)); the
-    * tertile thresholds come from ONE [[Stats.rankSelectMulti]] radix
-    * hierarchy (two point lookups) over the ≤ 20 001-value avg_millibits domain (domainBits
-    * = 16: one radix level, every window ≤ 2¹⁶ rows) and broadcast
-    * back — no global sort, no per-group row window, nothing about the
-    * threshold step grows with the corpus. Documents with < 2 tokens
+    * tertile thresholds come from one [[Stats.selectSorted]] over the
+    * ≤ 20 001-value avg_millibits count frame and return to the plan
+    * as two literals — no global sort of the documents, no per-group
+    * row window, nothing about the threshold step grows with the
+    * corpus. Documents with < 2 tokens
     * have no bigrams and are dropped (min-length gate, as in CCNet).
     * Output: (id, n_bigrams, doc_bits, avg_millibits, bucket).
     */
@@ -1181,8 +1181,7 @@ object TextOps {
     */
   private def perplexityFromCounts(docBg: DataFrame, c2: DataFrame,
       c1: DataFrame, vocab: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val scored = docBg
+    val scored = Lineage.persistOwned(docBg
       .join(c2, Seq("w1", "w2"), "left")
       .join(c1, Seq("w1"), "left")
       .crossJoin(broadcast(vocab))
@@ -1199,39 +1198,23 @@ object TextOps {
       .groupBy("id")
       .agg(sum(col("cnt")).as("n_bigrams"),
         sum(col("cnt") * col("bits")).as("doc_bits"))
-      .withColumn("avg_millibits", expr("(doc_bits * 1000) div n_bigrams"))
-      .persist(lvl) // feeds the tertile counts AND the final bucket map
+      .withColumn("avg_millibits", expr("(doc_bits * 1000) div n_bigrams")))
+    // feeds the tertile selection AND the final bucket map
     graft.PendingRelease.defer(() => { scored.unpersist(); () })
     // tertile thresholds: the ceil(n/3)-th and ceil(2n/3)-th smallest
-    // avg_millibits — two radix point lookups over a ≤ 20 001-value
-    // domain (bits/bigram ≤ 20 → millibits ≤ 20 000), session-cache
-    // contract as valueDomainCum
-    val counts = scored.select(col("avg_millibits").as("v"))
-      .groupBy("v").agg(count(lit(1)).as("c"))
-      .persist(lvl)
-    graft.PendingRelease.defer(() => { counts.unpersist(); () })
-    // both tertile thresholds from ONE radix hierarchy
-    // (rankSelectMulti, r16): two single-target descents each rebuilt the
-    // level chain over the same counts frame. The labeled rows fold
-    // into one 1-row (tert1, tert2) frame — the single consumer that
-    // lets the lazy descent run as one overlapped broadcast subjob of
-    // the final action — and ONE crossJoin replaces two. Release is
-    // deferred so the leaked t1-cache pair of the pre-r16 form goes
-    // away too.
-    val (terts, relTerts) = Stats.rankSelectMulti(counts, Nil, "c",
-      Seq(1L -> ((n: Column) => ((n + 2) / 3).cast("long")),
-        2L -> ((n: Column) => ((n * 2 + 2) / 3).cast("long"))),
-      "__t", "tv", persistInput = false, domainBits = 16)
-    graft.PendingRelease.defer(relTerts)
-    val bounds = terts.agg(
-      min(when(col("__t") === 1L, col("tv"))).as("tert1"),
-      min(when(col("__t") === 2L, col("tv"))).as("tert2"))
+    // avg_millibits, over a ≤ 20 001-value domain (bits/bigram ≤ 20 →
+    // millibits ≤ 20 000); no document scored, no threshold needed
+    val counts = scored.groupBy(col("avg_millibits").as("v"))
+      .agg(count(lit(1)).as("c"))
+    val terts = Stats.selectSorted(counts, Seq(
+        (n: Column) => ((n + 2) / 3).cast("long"),
+        (n: Column) => ((n * 2 + 2) / 3).cast("long")))(
+      (_, ts) => ts.headOption.fold(Seq(0L, 0L))(_._3))
     scored
-      .crossJoin(broadcast(bounds))
       .select(col("id"), col("n_bigrams"), col("doc_bits"),
         col("avg_millibits"),
-        when(col("avg_millibits") <= col("tert1"), "head")
-          .when(col("avg_millibits") <= col("tert2"), "middle")
+        when(col("avg_millibits") <= terts(0), "head")
+          .when(col("avg_millibits") <= terts(1), "middle")
           .otherwise("tail").as("bucket"))
   }
 

@@ -375,17 +375,16 @@ object AuditQueries {
   // --------------------------------------------------------------- q172
   /** Quantile-sketch error audit ([[graft.operators.Sketches
     * .logHistErrorAudit]]): q151's log-histogram p50/p90/p99 estimates
-    * next to the EXACT quantiles (radix rank lookups over the shared
-    * value counts — one data scan total), relative error in ppm, and
-    * the est ≤ exact ≤ est·17/16 band check — the measured-error
-    * calibration report completing the q156 (LSH) / q157 (PQ) family.
-    * Prices fit 32 signed bits by a data-independent bound (cents,
-    * same argument as q132).
+    * next to the EXACT quantiles (one sort-and-offset selection over
+    * the shared value counts — one data scan total), relative error in
+    * ppm, and the est ≤ exact ≤ est·17/16 band check — the
+    * measured-error calibration report completing the q156 (LSH) /
+    * q157 (PQ) family.
     */
   val q172: Q = (s, dir) =>
     graft.operators.Sketches.logHistErrorAudit(Tables.lineitem(s, dir),
         Seq("l_returnflag"), round(col("l_extendedprice") * 100)
-          .cast("long"), Seq(50, 90, 99), domainBits = 32)
+          .cast("long"), Seq(50, 90, 99))
       .orderBy("l_returnflag", "p")
   val q172Sql: String = {
     val bChain = (1 to 39)

@@ -61,13 +61,13 @@ object CorpusQueries {
     * median, MAD, and |v − med| > 3·MAD outlier counts of lineitem
     * price cents per return flag — two sort-and-offset selections over
     * the (flag, cents) counts, driver memory O(groups + partitions).
+    * The operator's local result is already in flag order.
     */
   val q88: Q = (s, dir) =>
     Stats.medianMad(Tables.lineitem(s, dir), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long"), z = 3)
       .select(col("g").as("flag"), col("n"), col("median"), col("mad"),
         col("n_outliers"))
-      .orderBy("flag")
   val q88Sql: String =
     """WITH c AS (SELECT l_returnflag AS g,
       |    CAST(round(l_extendedprice*100) AS BIGINT) AS v, count(*) AS c

@@ -437,13 +437,13 @@ object Frontier2Queries {
   // --------------------------------------------------------------- q208
   /** First-view→first-purchase latency quantiles per daily cohort
     * ([[EventOps.conversionLatency]]): exact lower-median and p90
-    * seconds via the radix rank-select — the time-to-convert
-    * report next to q78's funnel counts and q79's retention grid.
+    * seconds from one sort-and-offset selection — the time-to-convert
+    * report next to q78's funnel counts and q79's retention grid. The
+    * operator's local result is already in cohort order.
     */
   val q208: Q = (s, dir) =>
     EventOps.conversionLatency(Tables.events(s, dir), "user_id", "ts",
         "event_type", fromType = "view", toType = "purchase")
-      .orderBy("g")
   val q208Sql: String =
     """WITH base AS (SELECT user_id AS u, epoch_us(ts) AS us,
       |    event_type AS et FROM events),
@@ -900,12 +900,12 @@ object Frontier2Queries {
     * late-share ppm and exact median/p99/max lateness seconds behind
     * the running event-time high-water mark in event_id arrival order
     * — the number a `withWatermark` delay is chosen FROM (shorter than
-    * p99 drops the tail, longer holds state for nothing).
+    * p99 drops the tail, longer holds state for nothing). The
+    * operator's local result is already in group order.
     */
   val q222: Q = (s, dir) =>
     EventOps.latenessProfile(Tables.events(s, dir), "event_type", "ts",
         "event_id")
-      .orderBy("g")
   val q222Sql: String =
     """WITH b AS (SELECT event_type AS g, event_id AS aid,
       |    epoch_us(ts) AS us FROM events),
@@ -1004,14 +1004,13 @@ object Frontier2Queries {
   // --------------------------------------------------------------- q226
   /** Trimmed mean ([[Stats.trimmedMean]]): per-returnflag mean item
     * cents with 5% trimmed from each tail — the whale-robust average
-    * completing q88's median/MAD family; boundaries from the radix
-    * rank-select, value-based trimming, one 6dp division.
+    * completing q88's median/MAD family; both boundaries from one
+    * sort-and-offset selection, value-based trimming, one 6dp division.
+    * The operator's local result is already in group order.
     */
   val q226: Q = (s, dir) =>
     Stats.trimmedMean(Tables.lineitem(s, dir), col("l_returnflag"),
-        round(col("l_extendedprice") * 100), alphaPct = 5,
-        domainBits = 32)
-      .orderBy("g")
+        round(col("l_extendedprice") * 100), alphaPct = 5)
   val q226Sql: String =
     """WITH c AS (SELECT l_returnflag AS g,
       |    CAST(round(l_extendedprice * 100) AS BIGINT) AS v,
@@ -1063,8 +1062,8 @@ object Frontier2Queries {
   // --------------------------------------------------------------- q228
   /** Drift dashboard — the monitoring-side composition entry (q179's
     * role for curation): FIVE operator families over the same event
-    * corpus in ONE plan — CUSUM change-point, lateness profile (two
-    * concurrent radix descents with managed cache lifecycles), Pareto
+    * corpus in ONE plan — CUSUM change-point, lateness profile (one
+    * sort-and-offset selection, run when the plan is built), Pareto
     * coverage, the seasonality peak, and the double-fire audit —
     * melted to (g, metric, v) long format so the oracle hash pins
     * every family's output at once. Exercises exactly the cross-family
@@ -1074,8 +1073,7 @@ object Frontier2Queries {
     val ev = Tables.events(s, dir)
     // melt via ONE explode per stage — a per-metric union of selects
     // would duplicate each stage's whole aggregation subtree once per
-    // metric (measured 5.4 s vs 4.4 s warm at sf0.1; the remainder is
-    // the lateness stage's managed radix descents)
+    // metric (measured 5.4 s vs 4.4 s warm at sf0.1)
     def melt(df: DataFrame, pairs: (String, String)*): DataFrame =
       df.select(col("g"), explode(array(pairs.map { case (m, c) =>
           struct(lit(m).as("metric"), col(c).cast("long").as("v"))

@@ -930,9 +930,9 @@ object PipelineQueries {
     * bigram LM trained on the src0 reference slice, every document
     * scored by integer surprise bits (floor-log2 via binary-string
     * length — no libm log anywhere), bucketed head/middle/tail at the
-    * corpus tertiles. The thresholds come from two radix point lookups
-    * over the ≤ 20 001-value milli-bits domain; the oracle replays the
-    * same ranks with a ROW_NUMBER over the per-doc averages.
+    * corpus tertiles. The thresholds come from one sort-and-offset
+    * selection over the ≤ 20 001-value milli-bits counts; the oracle
+    * replays the same ranks with a ROW_NUMBER over the per-doc averages.
     */
   val q153: Q = (s, dir) =>
     TextOps.perplexityBuckets(Tables.documents(s, dir), "doc_id", "text",

@@ -183,7 +183,7 @@ class AuditOpsSpec extends SparkSuite {
     import graft.operators.Sketches
     val df = (1L to 100L).map(v => ("g", v)).toDF("grp", "v")
     val out = Sketches.logHistErrorAudit(df, Seq("grp"), col("v"),
-        Seq(50, 99), domainBits = 17)
+        Seq(50, 99))
       .orderBy("p")
       .as[(String, Long, Long, Long, Long, Long)].collect()
     // p50: v=50 has b=5, bucket 41, lb (16+9)<<1 = 50 — exact hit.

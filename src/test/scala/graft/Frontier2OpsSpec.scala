@@ -404,7 +404,7 @@ class Frontier2OpsSpec extends SparkSuite {
   test("trimmedMean trims by boundary values from the radix descent") {
     val df = (1L to 10L).map(v => ("g", v)).toDF("g0", "v0")
     val out = Stats.trimmedMean(df, col("g0"), col("v0"),
-        alphaPct = 20, domainBits = 32)
+        alphaPct = 20)
       .as[(String, Long, Long, Long, Long, Double)].head()
     // lo = value at rank ⌈0.2·10⌉ = 2, hi = at rank ⌈0.8·10⌉ = 8 →
     // keep 2..8, mean 5.0

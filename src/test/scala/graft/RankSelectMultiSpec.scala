@@ -5,26 +5,29 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Stats
 
-/** [[Stats.rankSelectMulti]] (one shared radix hierarchy for k rank
-  * targets) must return the same value and n as the sort-and-offset
-  * [[Stats.selectSorted]], run once per target, for every (group,
-  * target): two independent exact algorithms checked against each
-  * other. Exercised across group/no-group, 1/2/3-level hierarchies
-  * (domainBits 16/32/64), skewed weights, and boundary targets (rank 1
-  * and rank n).
+/** Multi-target [[Stats.selectSorted]] (every rank target of every
+  * group from one pass 2) must return, per (group, target), the same
+  * value and n as a driver brute force over the weighted values.
+  * Exercised with and without a group, on values across 16-bit bucket
+  * edges, skewed weights, boundary targets (rank 1 and rank n), targets
+  * crossing in one partition run of a group and groups spanning range
+  * partitions.
   */
 class RankSelectMultiSpec extends SparkSuite {
   import spark.implicits._
 
-  private val targets: Seq[(Long, Column => Column)] = Seq(
-    1L -> ((n: Column) => lit(1L)),                      // min
-    50L -> ((n: Column) => ((n + 1) / 2).cast("long")),  // lower median
-    90L -> ((n: Column) => ((n * 9 + 9) / 10).cast("long")),
-    100L -> ((n: Column) => n)                           // max
+  /** (target as a column, the same target on the driver), deliberately
+    * not in rank order.
+    */
+  private val targets: Seq[(Column => Column, Long => Long)] = Seq(
+    ((n: Column) => ((n * 9 + 9) / 10).cast("long"), (n: Long) => (n * 9 + 9) / 10),
+    ((n: Column) => lit(1L), (_: Long) => 1L),                     // min
+    ((n: Column) => n, (n: Long) => n),                            // max
+    ((n: Column) => ((n + 1) / 2).cast("long"), (n: Long) => (n + 1) / 2)
   )
 
-  /** Deterministic pseudo-random (g, v, c) frame spanning several radix
-    * buckets at every level (values up to ~2^40).
+  /** Deterministic pseudo-random (g, v, c) frame spanning several 16-bit
+    * buckets (values up to ~2^40).
     */
   private def counts(nGroups: Int) = {
     val rows = for {
@@ -33,59 +36,96 @@ class RankSelectMultiSpec extends SparkSuite {
     } yield {
       val h = (g * 1000003L + i * 2654435761L) & 0x7FFFFFFFFFFFL
       // mix tiny values (dense low buckets) with wide-spread ones, and
-      // skew the weights so crossings land mid-bucket
+      // skew the weights so crossings land mid-run
       val v = if (i % 3 == 0) (h % 1000) else h % (1L << 40)
       (s"g$g", v, (h % 7) + 1)
     }
     rows.toDF("g", "v", "c")
   }
 
-  test("multi-target descent == k single descents (grouped, 64-bit)") {
-    val cts = counts(3).persist()
-    cts.count()
-    val (multi, relM) = Stats.rankSelectMulti(cts, Seq("g"), "c", targets,
-      "__t", "out", persistInput = false, domainBits = 64)
-    val got = multi.select("g", "__t", "out", "n").as[(String, Long, Long, Long)]
-      .collect().map(t => (t._1, t._2) -> (t._3, t._4)).toMap
-    targets.foreach { case (lab, f) =>
-      val want = Stats.selectSorted(cts.select("g", "v", "c"), f)(
-        (_, hits) => hits.map { case (g, n, v) => g.getString(0) -> (v, n) })
-        .toMap
-      want.foreach { case (g, exp) =>
-        assert(got((g, lab)) == exp, s"target $lab group $g")
-      }
-      assert(want.size == got.count(_._1._2 == lab))
+  /** Per group: (n, the value at each target rank), on the driver. */
+  private def brute(rows: Seq[(String, Long, Long)]) =
+    rows.groupBy(_._1).map { case (g, gr) =>
+      val vs = gr.groupMapReduce(_._2)(_._3)(_ + _).toSeq.sorted
+      val cum = vs.scanLeft(0L)(_ + _._2).tail
+      val n = cum.last
+      g -> (n, targets.map { case (_, t) => vs(cum.indexWhere(_ >= t(n)))._1 })
     }
-    relM(); cts.unpersist()
+
+  private def select(df: org.apache.spark.sql.DataFrame) =
+    Stats.selectSorted(df, targets.map(_._1))((_, hits) =>
+      hits.map { case (g, n, vs) => g -> (n, vs) })
+
+  test("multi-target selectSorted == a driver brute force (grouped, skewed weights)") {
+    val cts = counts(3)
+    val got = select(cts).map { case (g, r) => g.getString(0) -> r }
+    assert(got.map(_._1) == Seq("g0", "g1", "g2"), "group order")
+    assert(got.toMap == brute(cts.as[(String, Long, Long)].collect().toSeq))
   }
 
-  test("multi-target descent == singles with no group, tight domainBits") {
-    Seq(16 -> 9999L, 32 -> (1L << 30)).foreach { case (bits, cap) =>
+  test("multi-target selectSorted == a driver brute force with no group") {
+    Seq(9999L, 1L << 30).foreach { cap =>
       val cts = counts(1).select(col("v") % cap as "v", col("c"))
-        .groupBy("v").agg(sum("c").as("c")).persist()
-      cts.count()
-      val (multi, relM) = Stats.rankSelectMulti(cts, Nil, "c", targets,
-        "__t", "out", persistInput = false, domainBits = bits)
-      val got = multi.select("__t", "out", "n").as[(Long, Long, Long)]
-        .collect().map(t => t._1 -> (t._2, t._3)).toMap
-      targets.foreach { case (lab, f) =>
-        val want = Stats.selectSorted(cts.select("v", "c"), f)(
-          (_, hits) => hits.map { case (_, n, v) => (v, n) }.head)
-        assert(got(lab) == want, s"domainBits $bits target $lab")
-      }
-      relM(); cts.unpersist()
+        .groupBy("v").agg(sum("c").as("c"))
+      val got = select(cts).map(_._2)
+      val want = brute(cts.as[(Long, Long)].collect().toSeq
+        .map { case (v, c) => ("", v, c) })("")
+      assert(got == Seq(want), s"cap $cap")
     }
   }
 
-  test("release returns the registry caches (no leak)") {
+  test("two targets crossing in one partition run, and a group spanning partitions") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "7")
+    spark.conf.set(keys(1), "false")
+    try {
+      // 70 distinct (g, v) rows, fully sampled into 7 range partitions
+      // of 10: "a" spans partitions 0-3, "b" 4-5, and "c" (9 rows) and
+      // "d" (1 row) share partition 6, so all four targets of "c" cross
+      // in one run and all four of "d" on one row
+      val rnd = new scala.util.Random(11)
+      def group(g: String, k: Int) =
+        rnd.shuffle((-5000L to 5000L).toList).take(k).map(v =>
+          (g, v, if (rnd.nextInt(5) == 0) 20L + rnd.nextInt(30) else 1L + rnd.nextInt(3)))
+      val rows = group("a", 40) ++ group("b", 20) ++ group("c", 9) ++ group("d", 1)
+      val cts = rows.toDF("g", "v", "c")
+      val want = brute(rows)
+      val layout = cts.repartitionByRange(col("g"), col("v"))
+        .select(spark_partition_id(), col("g"), col("v"))
+        .as[(Int, String, Long)].collect().toSeq
+      val parts = layout.groupMap(_._2)(_._1).map { case (g, ps) => g -> ps.toSet }
+      assert(parts("a").size > 1, s"layout: $layout")
+      // distinct crossing rows of one group in one partition
+      val sharedRun = want.exists { case (g, (_, vs)) =>
+        vs.distinct.map(v => layout.find(r => r._2 == g && r._3 == v).get._1)
+          .groupBy(identity).exists(_._2.size > 1)
+      }
+      assert(sharedRun, s"layout: $layout")
+      val got = select(cts).map { case (g, r) => g.getString(0) -> r }
+      assert(got.map(_._1) == Seq("a", "b", "c", "d"), "group order")
+      assert(got.toMap == want)
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("selectSorted leaves no persisted RDD, also when use throws") {
     val cts = counts(2)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val (multi, rel) = Stats.rankSelectMulti(cts, Seq("g"), "c",
-      targets.take(2), "__t", "out", persistInput = true, domainBits = 32)
-    multi.count()
-    assert(spark.sparkContext.getPersistentRDDs.size > before)
-    rel()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "rankSelectMulti release must unpersist l0 and t1")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val rows = Stats.selectSorted(cts, targets.take(2).map(_._1))(
+      (sorted, _) => sorted.count())
+    assert(rows == 400L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    intercept[IllegalStateException] {
+      Stats.selectSorted(cts, targets.map(_._1))((sorted, _) => {
+        assert(spark.sparkContext.getPersistentRDDs.keySet != before)
+        throw new IllegalStateException("use failed")
+      })
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "selectSorted must unpersist its sorted rows")
   }
 }

@@ -54,10 +54,12 @@ class ReleaseOwnershipSpec extends SparkSuite {
     // q80 (pageRank) and q143 (labelPropagation) read their last
     // localCheckpoint from the result plan, so the other thread's drain
     // releasing it mid-action fails the read; both persist the same edge
-    // plan, and q88 persists its sorted rows. Results must equal a
-    // single-thread run's, and the session must end with no persisted
-    // RDD the test added.
-    val names = Seq("q80_pagerank", "q143_label_propagation", "q88_median_mad")
+    // plan, q88 persists its sorted rows, and q172 persists its value
+    // counts for a lazy consumer. Results must equal a single-thread
+    // run's, and the session must end with no persisted RDD the test
+    // added.
+    val names = Seq("q80_pagerank", "q143_label_propagation", "q88_median_mad",
+      "q172_sketch_error_audit")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def run(name: String): Seq[String] =
       try SparkEntry.queries(name)(spark, dir).collect().map(_.toString)

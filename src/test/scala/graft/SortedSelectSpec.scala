@@ -86,27 +86,40 @@ class SortedSelectSpec extends SparkSuite {
     }
   }
 
-  test("medianMad runs a fixed number of Spark jobs") {
+  /** Spark jobs started while `f` runs. */
+  private def jobsOf(f: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("medianMad runs a fixed number of Spark jobs") {
     withStraddle {
       val df = frame(7)
-      val sc = spark.sparkContext
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      try {
-        Stats.medianMad(df, col("g"), col("v"), z = 3).collect()
-        org.apache.spark.ListenerBusDrain(sc)
-      } finally sc.removeSparkListener(listener)
+      val jobs = jobsOf(Stats.medianMad(df, col("g"), col("v"), z = 3).collect())
       // the counts aggregate's shuffle, then per selection (median, MAD)
       // the range shuffle's sample and map jobs and the two passes, then
       // the outlier pass; the result is a local frame
-      assert(jobs.get == 10, s"medianMad ran ${jobs.get} jobs")
+      assert(jobs == 10, s"medianMad ran $jobs jobs")
     }
+  }
+
+  test("q88 adds no job to medianMad's but the lineitem read") {
+    // the local result is already in flag order: no range sort on top
+    val jobs = jobsOf(SparkEntry.queries("q88_median_mad")(spark,
+      "/root/testdata/sf0.001").collect())
+    assert(jobs <= 11, s"q88 ran $jobs jobs")
   }
 }
