@@ -7,7 +7,8 @@ import graft.operators.Stats
 
 /** Multi-target [[Stats.selectSorted]] (every rank target of every
   * group from one pass 2) must return, per (group, target), the same
-  * value and n as a driver brute force over the weighted values.
+  * value and n as a driver brute force over the weighted values, and
+  * as a single-target call per target.
   * Exercised with and without a group, on values across 16-bit bucket
   * edges, skewed weights, boundary targets (rank 1 and rank n), targets
   * crossing in one partition run of a group and groups spanning range
@@ -61,6 +62,23 @@ class RankSelectMultiSpec extends SparkSuite {
     val got = select(cts).map { case (g, r) => g.getString(0) -> r }
     assert(got.map(_._1) == Seq("g0", "g1", "g2"), "group order")
     assert(got.toMap == brute(cts.as[(String, Long, Long)].collect().toSeq))
+  }
+
+  test("multi-target descent == k single descents (grouped, 64-bit)") {
+    // values across the whole signed 64-bit range, not just ~2^40
+    val wide = Seq(("g0", Long.MinValue, 3L), ("g1", Long.MaxValue, 5L),
+      ("g2", -1L, 2L), ("g2", Long.MinValue + 1, 1L)).toDF("g", "v", "c")
+    val cts = counts(3).union(wide)
+    val multi = select(cts).map { case (g, r) => g.getString(0) -> r }.toMap
+    targets.zipWithIndex.foreach { case ((f, _), i) =>
+      val single = Stats.selectSorted(cts, Seq(f))((_, hits) =>
+        hits.map { case (g, n, vs) => g.getString(0) -> (n, vs) })
+      assert(single.size == multi.size, s"target $i")
+      single.foreach { case (g, (n, vs)) =>
+        assert(multi(g)._1 == n && multi(g)._2(i) == vs.head,
+          s"target $i group $g")
+      }
+    }
   }
 
   test("multi-target selectSorted == a driver brute force with no group") {
