@@ -499,38 +499,6 @@ object Curate {
           .otherwise("pass").as("verdict"))
   }
 
-  /** Classifier-calibration report: per equi-depth score bucket (the
-    * [[graft.operators.Stats]] equi-depth rule — a distinct score v
-    * lands wholly in bucket `(cumBefore(v)·k) div N`), how often an
-    * INDEPENDENT quality signal (`passCol`, e.g. the full gopher-rule
-    * battery) agrees — the audit run before trusting a learned quality
-    * filter to gate a 100 TB corpus: a well-calibrated classifier shows
-    * pass_ppm rising monotonically across buckets; a flat profile means
-    * the score is noise.
-    *
-    * Shape: ONE score-keyed aggregate collapses the corpus to ≤
-    * |score domain| rows carrying (count, passes); the cumulative rank
-    * each bucket needs comes from the radix-decomposed
-    * [[Stats.valueDomainCum]] (every window partition ≤ 2¹⁶ rows by
-    * construction — no single-partition WindowExec at any scale); the
-    * final aggregate is ≤ k rows. `domainBits` is the a-priori bound on
-    * the score's signed bit width (see Stats: a wrong bound only widens
-    * window partitions, never changes results). Scores may be negative.
-    * Output: (bucket, n_docs, n_pass, pass_ppm, v_min, v_max).
-    */
-  /** Quality-threshold sweep: for each candidate cutoff, what the
-    * corpus retains — documents, weight (tokens), and their ppm shares
-    * — if every row scoring BELOW the cutoff is dropped. The
-    * "pick the gate" decision table printed before committing a
-    * quality threshold to a 100 TB pass: the whole Pareto front in one
-    * report instead of one trial pipeline per candidate.
-    *
-    * ONE corpus scan: a score-keyed aggregate collapses the data to
-    * ≤ |score domain| rows, then each cutoff's retention is a triangle
-    * join over the (tiny, broadcast) per-score frame — never a rescan
-    * per cutoff, never a window. Output: (cutoff, n_docs, total_weight,
-    * docs_ppm, weight_ppm).
-    */
   /** Shard-assignment balance audit: hash-assign every row to one of
     * `nShards` output shards and report each shard's row count, weight
     * (bytes/tokens), and load as a per-mille multiple of the ideal
@@ -559,6 +527,19 @@ object Curate {
         expr(s"(weight * $nShards * 1000) div tw").as("load_x1000"))
   }
 
+  /** Quality-threshold sweep: for each candidate cutoff, what the
+    * corpus retains — documents, weight (tokens), and their ppm shares
+    * — if every row scoring BELOW the cutoff is dropped. The
+    * "pick the gate" decision table printed before committing a
+    * quality threshold to a 100 TB pass: the whole Pareto front in one
+    * report instead of one trial pipeline per candidate.
+    *
+    * ONE corpus scan: a score-keyed aggregate collapses the data to
+    * ≤ |score domain| rows, then each cutoff's retention is a triangle
+    * join over the (tiny, broadcast) per-score frame — never a rescan
+    * per cutoff, never a window. Output: (cutoff, n_docs, total_weight,
+    * docs_ppm, weight_ppm).
+    */
   def thresholdSweep(scored: DataFrame, scoreCol: String,
       weightCol: String, cutoffs: Seq[Int]): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -580,23 +561,32 @@ object Curate {
         expr("(cast(total_weight as decimal(38,0)) * 1000000) div tw").as("weight_ppm"))
   }
 
+  /** Classifier-calibration report: per equi-depth score bucket (the
+    * [[graft.operators.Stats]] equi-depth rule — a distinct score v
+    * lands wholly in bucket `(cumBefore(v)·k) div N`), how often an
+    * INDEPENDENT quality signal (`passCol`, e.g. the full gopher-rule
+    * battery) agrees — the audit run before trusting a learned quality
+    * filter to gate a 100 TB corpus: a well-calibrated classifier shows
+    * pass_ppm rising monotonically across buckets; a flat profile means
+    * the score is noise.
+    *
+    * Shape: ONE score-keyed aggregate collapses the corpus to ≤
+    * |score domain| rows carrying (count, passes); the cumulative rank
+    * each bucket needs comes from [[Stats.runningSums]] over those rows
+    * (sort-and-offset: no window, no task holding the whole domain),
+    * which carries the passes along; the final aggregate is ≤ k rows.
+    * Scores may be negative. Rows with a null score are skipped, and N
+    * counts the scored rows.
+    * Output: (bucket, n_docs, n_pass, pass_ppm, v_min, v_max).
+    */
   def scoreCalibration(scored: DataFrame, scoreCol: String,
-      passCol: String, k: Int = 10, domainBits: Int = 64): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // session-cache contract as Stats.valueDomainCum: counts feeds the
-    // radix levels AND the final join; eager count before the
-    // broadcast subjobs race on an uncached parent
+      passCol: String, k: Int = 10): DataFrame = {
     val counts = scored
       .groupBy(col(scoreCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"),
         sum(col(passCol).cast("long")).as("np"))
-      .persist(lvl)
-    graft.PendingRelease.defer(() => { counts.unpersist(); () })
-    counts.count()
-    val cum = Stats.valueDomainCum(counts.select("v", "c"), Nil,
-      domainBits = domainBits)
-    counts.join(cum.select(col("v"),
-        expr(s"((cum - c) * $k) div n").as("bucket")), Seq("v"))
+    Stats.runningSums(counts, 0)
+      .withColumn("bucket", expr(s"((cum - c) * $k) div n"))
       .groupBy("bucket")
       .agg(sum(col("c")).as("n_docs"), sum(col("np")).as("n_pass"),
         min(col("v")).as("v_min"), max(col("v")).as("v_max"))

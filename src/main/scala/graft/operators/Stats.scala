@@ -22,168 +22,31 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
   */
 object Stats {
 
-  /** Inclusive running sum over a (group, v) VALUE-DOMAIN frame with NO
-    * unbounded window partition anywhere — the scale core under
-    * [[equiDepthHistogram]] / [[weightedPercentiles]] /
-    * [[quantileNormalize]].
+  /** Range-sorts `rows` on their first `nG` columns (the groups) and
+    * the value after them, and runs pass 1 over the sorted rows: the
+    * weight (the column after the value, a Long) of each run of one
+    * group in one partition. A group is a run of rows that may span many
+    * partitions, so one large group never lands in one task. Rows with
+    * a null group, value or weight are skipped; group columns must not
+    * be binary.
     *
-    * A plain `sum(c) OVER (PARTITION BY g ORDER BY v)` funnels a
-    * group's ENTIRE value domain through one task (and with no group at
-    * all, Spark warns `No Partition Defined … moving all data to a
-    * single partition`) — correct at bench scale, a named scale-killer
-    * at 100 TB with a high-cardinality domain (prices in cents). Here
-    * the global prefix decomposes over a 16-bit radix hierarchy of the
-    * value — [[nLevels]] levels deep, 3 for the full 64-bit worst case
-    * (b1 = v≫16, b2 = v≫32, b3 = v≫48), fewer when the caller supplies
-    * a tighter data-independent `domainBits` bound:
-    * per-level bucket totals are distributed aggregates, each
-    * exclusive-prefix window partitions by the PARENT bucket and so
-    * holds ≤ 2¹⁶ rows BY CONSTRUCTION — at every level, for any data
-    * size, any value distribution (arithmetic shift is floor division:
-    * order-preserving for negatives too). cum(v) = h3(b3) + p2(b2) +
-    * p1(b1) + in-bucket prefix. No driver collect, no action; the b3
-    * root level is one ≤ 65 536-row partition keyed by the group (or a
-    * constant when there is none — never an empty partition spec).
-    *
-    * Input: distinct (groups…, v) rows with a Long weight `cCol`.
-    * Output: input + `cum` (inclusive prefix of cCol within group by v)
-    * + `n` (group total, broadcast back from the root level).
-    *
-    * The hierarchy's frames are referenced more than once in the DAG
-    * (tₖ feeds both the next level and its own prefix join), so the
-    * input-with-bucket frame and the level-1 totals are persisted —
-    * without that each reference re-derives the whole chain and the
-    * query re-scans its INPUT once per reference. Both caches are
-    * released at the calling thread's next [[graft.PendingRelease.drain]]
-    * (after the consuming action), so every warm run of a caller
-    * (q36/q85/q93/q137, …) pays — and releases — its own caches instead
-    * of reusing the previous run's. The plan's broadcast subjobs run
-    * CONCURRENTLY — racing them on a lazy uncached parent recomputes it
-    * once per subjob (cache fills do not dedupe in-flight work), hence
-    * the eager count() before any consumer is built.
+    * Returns the sorted rows, persisted (deserialized, spilling to
+    * disk) so later passes read them without sorting again, and per
+    * group, in group order, the (partition, weight) of each of its runs
+    * in partition order: at most groups + partitions pairs on the
+    * driver. The caller releases the sorted rows; if pass 1 throws they
+    * are released here.
     */
-  private[graft] def valueDomainCum(counts0: DataFrame, gCols: Seq[String],
-      cCol: String = "c", domainBits: Int = 64): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (in0, gNames) = injectG(counts0, gCols)
-    val g = gNames.map(col)
-    val l0 = in0.select(g :+ col("v").cast("long").as("b") :+
-        col(cCol).cast("long").as("c"): _*).persist(lvl)
-    val t1 = up(l0, gNames).persist(lvl)
-    t1.count()
-    graft.PendingRelease.defer(() => { l0.unpersist(); t1.unpersist(); () })
-    // t1 .. t_n: each level 16 bits coarser; root has <= 2^16 buckets
-    val ts = Iterator.iterate(t1)(up(_, gNames)).take(nLevels(domainBits))
-      .toList
-    val root = ts.last
-    val tot = root.groupBy(g: _*).agg(sum(col("c")).as("n"))
-    val hRoot = exPrefix(root, gNames)
-      .select(g :+ col("b") :+ col("p").as("h"): _*)
-    def down(tk: DataFrame, hUp: DataFrame): DataFrame =
-      exPrefix(
-        tk.withColumn("bp", shiftright(col("b"), 16))
-          .join(broadcast(hUp.select(g :+ col("b").as("bp") :+
-            col("h").as("hp"): _*)), gNames :+ "bp"),
-        gNames :+ "bp")
-      .select(g :+ col("b") :+ (col("hp") + col("p")).as("h"): _*)
-    val h1 = ts.init.reverse.foldLeft(hRoot)((h, tk) => down(tk, h))
-    l0.withColumn("bp", shiftright(col("b"), 16))
-      .join(broadcast(h1.select(g :+ col("b").as("bp") :+
-        col("h").as("hp"): _*)), gNames :+ "bp")
-      .withColumn("cin", sum(col("c")).over(
-        Window.partitionBy((gNames :+ "bp").map(col): _*).orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, 0)))
-      .select(g :+ col("b").as("v") :+ col("c").as(cCol) :+
-        (col("hp") + col("cin")).as("cum"): _*)
-      .join(broadcast(tot), gNames)
-      .drop((if (gCols.isEmpty) Seq("_g") else Nil): _*)
-  }
-
-  // ---- shared radix machinery --------------------------------------
-  // Uniform level schema (groups..., b, c): IDENTICAL column names at
-  // every level, so all per-level stages compile to the same
-  // whole-stage-codegen unit and hit the codegen cache. (A first
-  // version named columns per level — _b1/_c1/_b2/... — and paid one
-  // multi-hundred-ms compile per level per descent; compile time, not
-  // data, dominated the cold run.)
-
-  private def injectG(df: DataFrame, gCols: Seq[String])
-      : (DataFrame, Seq[String]) =
-    if (gCols.nonEmpty) (df, gCols)
-    else (df.withColumn("_g", lit(0)), Seq("_g"))
-
-  /** One 16-bit coarsening step: (g, b, c) -> (g, b>>16, sum c). */
-  private def up(df: DataFrame, gNames: Seq[String]): DataFrame =
-    df.select(gNames.map(col) :+ shiftright(col("b"), 16).as("b") :+
-        col("c"): _*)
-      .groupBy((gNames :+ "b").map(col): _*)
-      .agg(sum(col("c")).as("c"))
-
-  /** Exclusive prefix `p` of c over b within `part` — every partition
-    * holds <= 2^16 rows by radix construction (the root level spans the
-    * 2^16 possible values of v>>48).
-    */
-  private def exPrefix(df: DataFrame, part: Seq[String]): DataFrame =
-    df.withColumn("p", coalesce(sum(col("c")).over(
-      Window.partitionBy(part.map(col): _*).orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-
-  /** Number of 16-bit coarsening levels above the value level needed to
-    * bring the root to <= 2^16 buckets for values fitting in
-    * `domainBits` signed bits. 64-bit worst case -> 3 (the t1/t2/t3
-    * chain); a cents-valued price column (fits well inside 40 bits for
-    * any real currency amount — a DATA-INDEPENDENT bound, so it holds
-    * at 100 TB exactly as at bench scale) -> 2; a 32-bit domain -> 1.
-    * Every level that cannot distinguish any values (all buckets would
-    * be 0/-1) is pure stage overhead: one shuffle, one window, one
-    * broadcast, and — under AQE — one more re-planning barrier, which
-    * is where the wall time of a chain of sub-second stages actually
-    * goes.
-    */
-  private def nLevels(domainBits: Int): Int = {
-    require(domainBits >= 1 && domainBits <= 64, s"domainBits=$domainBits")
-    math.max(1, math.ceil((domainBits - 16) / 16.0).toInt)
-  }
-
-  /** Exact per-group weighted rank selection by sort-and-offset: for
-    * each group of `rows` (groups…, v, c), with Long v and c, and for
-    * each target, the smallest value v whose running weight c, in value
-    * order, reaches the target rank `targetOf(n)`, n the group's total
-    * weight. Every target must lie in [1, n]. Rows with a null in any
-    * column are skipped; group columns must not be binary.
-    *
-    * One range shuffle on (groups…, v), sorted within each partition:
-    * a group is a run of rows that may span many partitions, so one
-    * large group never lands in one task. Pass 1 sums each
-    * (partition, group) run's weight, at most groups + partitions rows
-    * to the driver. The driver turns them into each group's n, its
-    * targets, and for each target the partition and remaining rank
-    * where the running sum crosses it. Pass 2 reads the same sorted
-    * rows with those offsets in its closure and returns every crossing
-    * row, all targets at once; several targets may cross in one run.
-    * Driver memory is O(groups · targets + partitions); the value
-    * domain is never collected.
-    *
-    * The sorted rows are persisted (deserialized, spilling to disk) by
-    * pass 1, so neither pass 2 nor `use` sorts them again, and released
-    * when `use` returns or throws. `use` gets them, for further passes
-    * of the caller, and per group, in group order, its key (the group
-    * columns as a Row), n and the selected value of each target.
-    */
-  private[graft] def selectSorted[A](rows: DataFrame,
-      targetsOf: Seq[Column => Column])(
-      use: (RDD[Row], Seq[(Row, Long, Seq[Long])]) => A): A = {
-    val spark = rows.sparkSession
-    val nG = rows.columns.length - 2
+  private def sortedRuns(rows: DataFrame, nG: Int)
+      : (RDD[Row], Seq[(Row, Seq[(Int, Long)])]) = {
     require(!rows.schema.take(nG).exists(_.dataType == BinaryType),
-      "selectSorted: binary group column")
+      "binary group column")
     val keys = rows.columns.take(nG + 1).map(col).toIndexedSeq
-    val sorted = rows.na.drop().repartitionByRange(keys: _*)
-      .sortWithinPartitions(keys: _*).rdd
+    val sorted = rows.na.drop(rows.columns.take(nG + 2).toIndexedSeq)
+      .repartitionByRange(keys: _*).sortWithinPartitions(keys: _*).rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // pass 1: (partition, group, weight) in sorted order; a group's
-      // runs are consecutive across partitions
+      // a group's runs are consecutive across partitions
       val spans = mutable.ArrayBuffer.empty[(Row, mutable.ArrayBuffer[(Int, Long)])]
       sorted.mapPartitionsWithIndex((p, it) =>
           runSums(it, nG, 0L)(_ => (s, r) => s + r.getLong(nG + 1))
@@ -192,7 +55,40 @@ object Stats {
           if (spans.nonEmpty && spans.last._1 == g) spans.last._2 += ((p, w))
           else spans += ((g, mutable.ArrayBuffer((p, w))))
         }
-      val ns = spans.map(_._2.map(_._2).sum).toSeq
+      (sorted, spans.map { case (g, runs) => (g, runs.toSeq) }.toSeq)
+    } catch { case e: Throwable => sorted.unpersist(blocking = false); throw e }
+  }
+
+  /** Exact per-group weighted rank selection by sort-and-offset: for
+    * each group of `rows` (groups…, v, c), with Long v and c, and for
+    * each target, the smallest value v whose running weight c, in value
+    * order, reaches the target rank `targetOf(n)`, n the group's total
+    * weight. Every target must lie in [0, n]; target 0 selects the
+    * group's smallest value. Rows with a null in any column are
+    * skipped; group columns must not be binary.
+    *
+    * The range sort and pass 1 are [[sortedRuns]]. The driver turns
+    * the run weights into each group's n, its targets, and for each
+    * target the partition and remaining rank where the running sum
+    * crosses it. Pass 2 reads the same sorted rows with those offsets
+    * in its closure and returns every crossing row, all targets at
+    * once; several targets may cross in one run. Driver memory is
+    * O(groups · targets + partitions); the value domain is never
+    * collected.
+    *
+    * The sorted rows are released when `use` returns or throws. `use`
+    * gets them, for further passes of the caller, and per group, in
+    * group order, its key (the group columns as a Row), n and the
+    * selected value of each target.
+    */
+  private[graft] def selectSorted[A](rows: DataFrame,
+      targetsOf: Seq[Column => Column])(
+      use: (RDD[Row], Seq[(Row, Long, Seq[Long])]) => A): A = {
+    val spark = rows.sparkSession
+    val nG = rows.columns.length - 2
+    val (sorted, spans) = sortedRuns(rows, nG)
+    try {
+      val ns = spans.map(_._2.map(_._2).sum)
       val ts = spark.createDataFrame(ns.map(Row(_)).asJava,
           StructType(Seq(StructField("n", LongType, nullable = false))))
         .select(targetsOf.map(_(col("n")).cast("long")): _*).collect()
@@ -202,7 +98,7 @@ object Stats {
       val needs = spans.zip(ns).zip(ts).flatMap { case (((g, runs), n), gts) =>
         val before = runs.scanLeft(0L)(_ + _._2)
         gts.zipWithIndex.map { case (t, k) =>
-          require(t >= 1 && t <= n, s"target $t outside [1, $n] for group $g")
+          require(t >= 0 && t <= n, s"target $t outside [0, $n] for group $g")
           val i = runs.indices.find(i => before(i + 1) >= t).get
           (runs(i)._1, g, (k, t - before(i)))
         }
@@ -227,8 +123,47 @@ object Stats {
       }.collect().toMap
       use(sorted, spans.zip(ns).map { case ((g, _), n) =>
         (g, n, targetsOf.indices.map(k => hit((g, k))))
-      }.toSeq)
+      })
     } finally { sorted.unpersist(blocking = false); () }
+  }
+
+  /** Inclusive running sum per group by sort-and-offset: each row of
+    * `rows` (groups…, v, c, carried…), distinct on (groups…, v), its
+    * first `nG` columns the groups, with Long v and c, plus `cum`, the
+    * sum of c over the group's rows with a value ≤ v, and `n`, the
+    * group's total. Other columns ride along unchanged. Rows with a
+    * null group, v or c are skipped; group columns must not be binary.
+    *
+    * The range sort and pass 1 are [[sortedRuns]], as in
+    * [[selectSorted]]. The driver turns each (partition, group) run's
+    * weight into the weight of the group's earlier runs, and pass 2
+    * adds it to the running sum within the run. Driver memory is
+    * O(groups + partitions); no window runs and no task holds a whole
+    * group. Pass 2 is lazy: the result is a distributed frame over the
+    * sorted rows, which stay persisted until the calling thread's
+    * [[graft.PendingRelease.drain]].
+    */
+  private[graft] def runningSums(rows: DataFrame, nG: Int): DataFrame = {
+    val (sorted, spans) = sortedRuns(rows, nG)
+    graft.PendingRelease.defer(() => { sorted.unpersist(blocking = false); () })
+    // per partition and group: (weight of the group's earlier runs, n)
+    val offsets = spans.flatMap { case (g, runs) =>
+      val n = runs.map(_._2).sum
+      runs.zip(runs.scanLeft(0L)(_ + _._2)).map { case ((p, _), before) =>
+        (p, g, (before, n))
+      }
+    }.groupBy(_._1).map { case (p, gs) => p -> gs.map(x => x._2 -> x._3).toMap }
+    val out = sorted.mapPartitionsWithIndex { (p, it) =>
+      val off = offsets.getOrElse(p, Map.empty[Row, (Long, Long)])
+      var cur: Row = null; var cum = 0L; var n = 0L
+      keyed(it, nG).map { case (g, r) =>
+        if (!(g eq cur)) { cur = g; cum = off(g)._1; n = off(g)._2 }
+        cum += r.getLong(nG + 1)
+        Row.fromSeq(r.toSeq :+ cum :+ n)
+      }
+    }
+    rows.sparkSession.createDataFrame(out, StructType(rows.schema.fields ++
+      Seq("cum", "n").map(StructField(_, LongType, nullable = false))))
   }
 
   /** Pairs each row of a partition sorted on its first `nG` columns with
@@ -278,17 +213,18 @@ object Stats {
     * first row's 0-based position scaled to buckets) — deterministic,
     * tie-stable, and exactly replayable in SQL.
     *
+    * Null values are skipped, and N counts the non-null rows.
+    *
     * Plan: groupBy(value).count (distributed, map-side combined) → the
-    * radix-decomposed cumulative sum over DISTINCT VALUES
-    * ([[valueDomainCum]]: every window partition ≤ 2¹⁶ rows, no
-    * single-partition WindowExec) → final per-bucket aggregate.
+    * running sum over DISTINCT VALUES by sort-and-offset
+    * ([[runningSums]]: a range sort, no window, no task holding the
+    * whole domain) → final per-bucket aggregate.
     * Output: (bucket, n_rows, n_values, v_min, v_max).
     */
-  def equiDepthHistogram(df: DataFrame, valueCol: Column, k: Int,
-      domainBits: Int = 64): DataFrame = {
+  def equiDepthHistogram(df: DataFrame, valueCol: Column, k: Int): DataFrame = {
     val counts = df.select(valueCol.cast("long").as("v"))
       .groupBy("v").agg(count(lit(1)).as("c"))
-    valueDomainCum(counts, Nil, domainBits = domainBits)
+    runningSums(counts, 0)
       .withColumn("bucket", expr(s"((cum - c) * $k) div n"))
       .groupBy("bucket")
       .agg(sum(col("c")).as("n_rows"), count(lit(1)).as("n_values"),
@@ -355,37 +291,34 @@ object Stats {
     * W·100 within Long range (~9·10¹⁶ total weight — beyond any real
     * corpus).
     *
-    * Same scale shape as [[equiDepthHistogram]]/[[medianMad]]: one
-    * distributed groupBy(group, value) weight-sum, one cumulative window
-    * over DISTINCT VALUES per group, one final aggregate with a
-    * conditional min per percentile. No per-group buffered state.
+    * A group whose total weight W is 0 passes the test at every value,
+    * so each of its percentiles is the group's smallest value. Rows
+    * whose group, value or weight is null are skipped, and W sums the
+    * weights ranked.
+    *
+    * Plan: one distributed groupBy(group, value) weight-sum, then one
+    * [[selectSorted]] with one target per percentile: `cum·100 ≥ W·p`
+    * holds from rank ⌈W·p/100⌉ on, and W = 0 gives target 0. No window
+    * is partitioned by group; driver memory is O(groups · percentiles +
+    * partitions). The work runs when this is called and nothing stays
+    * cached: the result is a local frame, in group order.
     * Output: (g, w_total, p_<p1>, p_<p2>, ...).
     */
   def weightedPercentiles(df: DataFrame, groupCol: Column, valueCol: Column,
-      weightCol: Column, ps: Seq[Int], domainBits: Int = 64): DataFrame = {
+      weightCol: Column, ps: Seq[Int]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
       s"percentiles $ps out of [1, 100]")
     val counts = df.select(groupCol.as("g"), valueCol.cast("long").as("v"),
         weightCol.cast("long").as("w"))
       .groupBy("g", "v").agg(sum(col("w")).as("wv"))
-    val cum = valueDomainCum(counts, Seq("g"), cCol = "wv",
-      domainBits = domainBits)
-      .withColumnRenamed("n", "wt")
-    val aggs = max(col("wt")).as("w_total") +:
-      ps.map(p => min(when(col("cum") * 100 >= col("wt") * p, col("v")))
-        .as(s"p_$p"))
-    cum.groupBy("g").agg(aggs.head, aggs.tail: _*)
+    val rows = selectSorted(counts, ps.map(p => (w: Column) =>
+        call_function("div", w * p + 99, lit(100L)))) { (_, hits) =>
+      hits.map { case (g, w, vs) => Row.fromSeq(g.get(0) +: w +: vs) }
+    }
+    df.sparkSession.createDataFrame(rows.asJava, StructType(counts.schema("g") +:
+      ("w_total" +: ps.map(p => s"p_$p")).map(StructField(_, LongType))))
   }
 
-  /** Column profile: per listed column, row/null/distinct counts and
-    * min/max rendered as strings. Each column is profiled by its OWN
-    * aggregate over a one-column projection (column-pruned scan), then
-    * the single-row results union — N distinct-counts in one aggregate
-    * would Expand the input N× (the q46 lesson). Columns must render
-    * identically across engines: strings, integers, and dates are safe;
-    * raw doubles are not (format the value to an exact type first).
-    * Output: (col_name, n_rows, n_nulls, n_distinct, min_s, max_s).
-    */
   /** Row-level robust outlier extraction — the records themselves, not
     * just q88-style counts: every row whose |v − median| exceeds
     * z·MAD for its group, with the group stats attached. The
@@ -412,19 +345,20 @@ object Stats {
     * across languages, …). Ties share one quantile by construction:
     * the rank lives on the DISTINCT value, not the row.
     *
+    * Rows whose group or value is null are skipped and have no output
+    * row; n counts the rows ranked.
+    *
     * Value-domain shape throughout (the medianMad argument): one
-    * groupBy(g, v) count, one cumulative window over distinct values
-    * per group, then the tiny per-value frame joins back to the rows on
+    * groupBy(g, v) count, one [[runningSums]] over the distinct values
+    * per group, then the per-value frame joins back to the rows on
     * (g, v) — no global sort, no per-group row window, state bounded by
     * the value domain. Output: (g, id, v, cume_micro).
     */
   def quantileNormalize(df: DataFrame, groupCol: Column, valueCol: Column,
-      idCol: Column, domainBits: Int = 64): DataFrame = {
+      idCol: Column): DataFrame = {
     val rows = df.select(groupCol.as("g"), idCol.as("id"),
       valueCol.cast("long").as("v"))
-    val q = valueDomainCum(
-        rows.groupBy("g", "v").agg(count(lit(1)).as("c")), Seq("g"),
-        domainBits = domainBits)
+    val q = runningSums(rows.groupBy("g", "v").agg(count(lit(1)).as("c")), 1)
       .select(col("g"), col("v"),
         expr("(cum * 1000000) div n").as("cume_micro"))
     rows.join(q, Seq("g", "v"))
@@ -527,6 +461,15 @@ object Stats {
         col("total"), col("n_keys"))
   }
 
+  /** Column profile: per listed column, row/null/distinct counts and
+    * min/max rendered as strings. Each column is profiled by its OWN
+    * aggregate over a one-column projection (column-pruned scan), then
+    * the single-row results union — N distinct-counts in one aggregate
+    * would Expand the input N× (the q46 lesson). Columns must render
+    * identically across engines: strings, integers, and dates are safe;
+    * raw doubles are not (format the value to an exact type first).
+    * Output: (col_name, n_rows, n_nulls, n_distinct, min_s, max_s).
+    */
   def profile(df: DataFrame, cols: Map[String, Column]): DataFrame =
     cols.toSeq.sortBy(_._1).map { case (name, c) =>
       df.select(c.as("v"))
@@ -966,22 +909,6 @@ object Stats {
       StructField("trimmed_mean_6dp", org.apache.spark.sql.types.DoubleType)))
   }
 
-  /** Benford first-digit profile — the classic fabricated-data /
-    * unit-mixup audit: for each group, the observed count of each
-    * leading digit 1-9 of the (positive) integer value next to
-    * Benford's expected share log₁₀(1+1/d) as hardcoded ppm constants
-    * (they sum to exactly 10⁶), plus the per-digit deviation
-    * |10⁶·obs − n·exp| div n — integer-exact, so no transcendental is
-    * evaluated at query time on either engine. First digit is string
-    * arithmetic on the non-negative value (substr of the cast), not
-    * log/pow — exact for the full int64 range.
-    *
-    * One aggregate to the (group, digit) domain joined against the
-    * broadcast 9-row constant table; zero-count digits surface with
-    * n_obs = 0 so the profile always has 9·|groups| rows.
-    *
-    * Output: (g, digit, n_obs, exp_ppm, dev_ppm).
-    */
   /** First-digit extraction shared by the batch profile and the
     * streaming monitor: string arithmetic on the positive long — exact
     * for the full int64 range, no log/pow.
@@ -1018,6 +945,22 @@ object Stats {
           .as("dev_ppm"))
   }
 
+  /** Benford first-digit profile — the classic fabricated-data /
+    * unit-mixup audit: for each group, the observed count of each
+    * leading digit 1-9 of the (positive) integer value next to
+    * Benford's expected share log₁₀(1+1/d) as hardcoded ppm constants
+    * (they sum to exactly 10⁶), plus the per-digit deviation
+    * |10⁶·obs − n·exp| div n — integer-exact, so no transcendental is
+    * evaluated at query time on either engine. First digit is string
+    * arithmetic on the non-negative value (substr of the cast), not
+    * log/pow — exact for the full int64 range.
+    *
+    * One aggregate to the (group, digit) domain joined against the
+    * broadcast 9-row constant table; zero-count digits surface with
+    * n_obs = 0 so the profile always has 9·|groups| rows.
+    *
+    * Output: (g, digit, n_obs, exp_ppm, dev_ppm).
+    */
   def benfordProfile(df: DataFrame, groupCol: Column,
       valueCol: Column): DataFrame =
     benfordFromCounts(leadingDigitCounts(df, groupCol, valueCol))

@@ -1686,51 +1686,36 @@ object TextOps {
     *
     * Shape: one corpus explode → one type-frequency aggregate → one
     * (frequency value → type count) aggregate bounded by the distinct-
-    * frequency domain → ONE radix cumulative sum over that domain with
-    * the weight as a 2-way-exploded group column ([[Stats.valueDomainCum]]
-    * grouped on the weight tag — the q151 trick: type- and occurrence-
-    * weighted prefixes ride one level chain, one barrier, and one window
-    * pass instead of two chains plus a cum⋈cum join; no partition-less
-    * window) → per-budget min-crossing selection over the bounded frame.
+    * frequency domain → ONE [[Stats.runningSums]] over that domain with
+    * the weight as a 2-way-exploded group column (the q151 trick: the
+    * type- and occurrence-weighted sums ride one range sort and its
+    * two passes; no window) → per-budget min-crossing selection over
+    * the bounded frame.
     * Output: (k, f_min, vocab_types, oov_types, oov_occurrences,
     * oov_ppm).
     */
   def vocabCoverage(df: DataFrame, idCol: String, textCol: String,
-      budgets: Seq[Int], domainBits: Int = 64): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      budgets: Seq[Int]): DataFrame = {
     val base = Spread.ensure(
       df.select(col(idCol).as("id"), col(textCol).as("t")), "id")
-    // session-cache + eager counts: the frequency-domain frame feeds
-    // two radix cums; the merged cum frame feeds the per-budget
-    // selection AND the join back
     val counts = base.select(explode(Portable.tokens(col("t"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
       .groupBy(col("c").as("v")).agg(count(lit(1)).as("nt"))
       .withColumn("occ", col("v") * col("nt"))
-      .persist(lvl)
-    graft.PendingRelease.defer(() => { counts.unpersist(); () })
-    counts.count()
-    // r17: both weightings through ONE radix chain — the weight tag is
-    // a group column (exactly the q151 2-way-explode move), so the
-    // per-tag prefixes and totals are bit-identical to two separate
-    // cums while paying one t1 barrier, one window pass per level, and
-    // one conditional fold instead of two chains + a cum⋈cum join
+    // both weightings through one running-sum pass: the weight tag is a
+    // group column, so each tag's sums and total equal those of a
+    // separate pass
     val both = counts.select(explode(array(
         struct(lit("t").as("w"), col("v"), col("nt").as("c")),
         struct(lit("o").as("w"), col("v"), col("occ").as("c")))).as("e"))
       .select(col("e.w").as("w"), col("e.v").as("v"), col("e.c").as("c"))
-    val cum2 = Stats.valueDomainCum(both, Seq("w"),
-      domainBits = domainBits)
-    val cum = cum2.groupBy("v").agg(
+    val cum = Stats.runningSums(both, 1).groupBy("v").agg(
         max(when(col("w") === "t", col("c"))).as("nt"),
         max(when(col("w") === "t", col("cum"))).as("cumt"),
         max(when(col("w") === "t", col("n"))).as("tt"),
         max(when(col("w") === "o", col("c"))).as("occ"),
         max(when(col("w") === "o", col("cum"))).as("cumo"),
         max(when(col("w") === "o", col("n"))).as("toc"))
-      .persist(lvl)
-    graft.PendingRelease.defer(() => { cum.unpersist(); () })
-    cum.count()
     // f_k = min v with types-strictly-below(v) ≥ T − k; min(struct)
     // carries the crossing row's cum columns along
     cum.select(explode(array(budgets.map(k => lit(k.toLong)): _*))
@@ -1822,12 +1807,11 @@ object TextOps {
     val base = Spread.ensure(
       df.select(col(idCol).as("id"), batchCol.as("batch"),
         col(textCol).as("t")), "id")
-    // session-cache contract (as Stats.valueDomainCum): the (batch,
-    // token) counts feed TWO aggregates (first-seen min, per-batch
-    // totals) — uncached, each would re-tokenize the corpus; the tiny
-    // report frame feeds three consumers incl. broadcasts, and
-    // concurrent broadcast subjobs RACE on an uncached parent, hence
-    // the eager counts
+    // session-cache contract: the (batch, token) counts feed TWO
+    // aggregates (first-seen min, per-batch totals) — uncached, each
+    // would re-tokenize the corpus; the tiny report frame feeds three
+    // consumers incl. broadcasts, and concurrent broadcast subjobs RACE
+    // on an uncached parent, hence the eager counts
     val perBatchTok = base
       .select(col("batch"), explode(Portable.tokens(col("t"))).as("tok"))
       .groupBy("batch", "tok").agg(count(lit(1)).as("c"))

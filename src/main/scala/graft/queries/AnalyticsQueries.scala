@@ -360,14 +360,12 @@ object AnalyticsQueries {
   /** Equi-depth histogram ([[Stats.equiDepthHistogram]]) of lineitem
     * price cents into 16 buckets — optimizer-statistics building as a
     * distributed value-domain aggregate (never ntile over a globally
-    * sorted row stream; the q36 histogram argument applied to stats).
+    * sorted row stream): the running sum over the distinct prices is
+    * one sort-and-offset pass ([[Stats.runningSums]]).
     */
   val q85: Q = (s, dir) =>
     Stats.equiDepthHistogram(Tables.lineitem(s, dir),
-        round(col("l_extendedprice") * 100).cast("long"), 16,
-        // single-item price in cents fits 32 signed bits (< $21M) — a
-        // data-independent bound, so one radix level suffices at any SF
-        domainBits = 32)
+        round(col("l_extendedprice") * 100).cast("long"), 16)
       .orderBy("bucket")
   val q85Sql: String =
     """WITH v AS (SELECT CAST(round(l_extendedprice*100) AS BIGINT) AS v

@@ -94,7 +94,7 @@ object AuditQueries {
   // --------------------------------------------------------------- q164
   /** Classifier-calibration report ([[Curate.scoreCalibration]]): the
     * q114 hashed-linear quality score equi-depth-bucketed into deciles
-    * (radix cumulative ranks — no partition-less window), each bucket
+    * (cumulative ranks by one sort-and-offset pass — no window), each bucket
     * audited against the INDEPENDENT full gopher-rule battery (q101,
     * all five rules pass). Score and rule flags come from ONE fused
     * corpus scan. The report a pipeline reads before letting a learned
@@ -107,8 +107,7 @@ object AuditQueries {
         TextOps.gopherRules(col("text")).last)
       .select(col("score"),
         (col("gopher_score") === 5).cast("long").as("pass"))
-    Curate.scoreCalibration(scored, "score", "pass", k = 10,
-        domainBits = 32)
+    Curate.scoreCalibration(scored, "score", "pass", k = 10)
       .orderBy("bucket")
   }
   val q164Sql: String =
@@ -476,8 +475,9 @@ object AuditQueries {
   /** Vocabulary-budget coverage sweep ([[TextOps.vocabCoverage]]): for
     * vocab sizes 10/100/1000, the frequency floor, retained types, and
     * stranded OOV types/occurrences/ppm — the tokenizer-size decision
-    * table next to q167's Zipf profile. Two radix cumulative sums over
-    * the distinct-frequency domain; no partition-less window.
+    * table next to q167's Zipf profile. Both cumulative sums over the
+    * distinct-frequency domain come from one sort-and-offset pass; no
+    * window.
     */
   val q174: Q = (s, dir) =>
     TextOps.vocabCoverage(Tables.documents(s, dir), "doc_id", "text",

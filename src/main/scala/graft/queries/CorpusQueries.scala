@@ -152,8 +152,7 @@ object CorpusQueries {
     */
   val q137: Q = (s, dir) =>
     Stats.quantileNormalize(Tables.documents(s, dir), col("lang"),
-        col("n_chars"), col("doc_id"),
-        domainBits = 32) // doc length in chars < 2^31 by construction
+        col("n_chars"), col("doc_id"))
       .select(col("g").as("lang"), col("id").as("doc_id"), col("v"),
         col("cume_micro"))
       .orderBy("lang", "doc_id")
@@ -267,15 +266,15 @@ object CorpusQueries {
     * where 25/50/75/90% of the shipped QUANTITY sits, per return flag —
     * the weighted-quantile statistic (token-weighted corpus cuts, spend-
     * weighted price bands) via the pure integer `cum·100 ≥ W·p` test.
+    * The operator's result is local and already in flag order, so no
+    * sort runs on top.
     */
   val q93: Q = (s, dir) =>
     Stats.weightedPercentiles(Tables.lineitem(s, dir), col("l_returnflag"),
         round(col("l_extendedprice") * 100).cast("long"),
-        round(col("l_quantity")).cast("long"), Seq(25, 50, 75, 90),
-        domainBits = 32) // item cents < 2^31: data-independent (q85 note)
+        round(col("l_quantity")).cast("long"), Seq(25, 50, 75, 90))
       .select(col("g").as("flag"), col("w_total"),
         col("p_25"), col("p_50"), col("p_75"), col("p_90"))
-      .orderBy("flag")
   val q93Sql: String =
     """WITH c AS (SELECT l_returnflag AS g,
       |    CAST(round(l_extendedprice*100) AS BIGINT) AS v,

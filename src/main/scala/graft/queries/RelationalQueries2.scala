@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
 
@@ -261,19 +264,21 @@ object RelationalQueries2 {
   /** Exact percentiles (linear interpolation over sorted integer cents —
     * Spark `percentile` and DuckDB `quantile_cont` share the definition,
     * and exact-integer inputs make the interpolation IEEE-identical).
+    * The selected values come back as a local frame in flag order, so
+    * no sort runs on top.
     */
   val q36: Q = (s, dir) => {
     // Distributed exact percentiles via integer histograms. Spark's
     // built-in `percentile` is a TypedImperativeAggregate buffering a
     // value→count map per group on a single reducer — O(distinct) state
-    // in one task, which grows with data volume. Integer cents have a
-    // bounded domain, so instead: groupBy(flag, value).count() (fully
-    // distributed, map-side combining), a window cumulative sum over the
-    // *histogram* (domain-bounded, not data-bounded), and linear
-    // interpolation at rank p·(n-1) — the exact definition both Spark's
-    // percentile and DuckDB's quantile_cont implement, reproduced here
-    // value-for-value (lower + (upper-lower)·frac on exact ints).
-    import org.apache.spark.sql.expressions.Window
+    // in one task, which grows with data volume. Instead:
+    // groupBy(flag, value).count() (fully distributed, map-side
+    // combining), one sort-and-offset rank selection over that
+    // histogram (Stats.selectSorted), and linear interpolation at rank
+    // p·(n-1) — the exact definition both Spark's percentile and
+    // DuckDB's quantile_cont implement, reproduced here value-for-value
+    // (lower + (upper-lower)·frac on exact ints). Null values are
+    // skipped, as both engines skip them.
     val li = Tables.lineitem(s, dir)
       .withColumn("qty_c", cents(col("l_quantity")))
       .withColumn("p_c", cents(col("l_extendedprice")))
@@ -281,30 +286,38 @@ object RelationalQueries2 {
     val ps: Seq[(String, String, Double)] = Seq(
       ("qty_p25", "q", 0.25), ("qty_p50", "q", 0.5), ("qty_p75", "q", 0.75),
       ("price_p50", "p", 0.5), ("price_p99", "p", 0.99))
-    // both value columns share ONE histogram/window/lookup pipeline via a
-    // 2-way explode — half the stages of building them separately
+    // both value columns share ONE histogram and selection via a 2-way
+    // explode — half the stages of building them separately
     val ex = li.select(col("l_returnflag"), explode(array(
         struct(lit("q").as("w"), col("qty_c").as("v")),
         struct(lit("p").as("w"), col("p_c").as("v")))).as("e"))
       .select(col("l_returnflag"), col("e.w").as("w"), col("e.v").as("v"))
     val hist = ex.groupBy("l_returnflag", "w", "v").agg(count(lit(1)).as("c"))
-    // radix-decomposed cumulative sum (Stats.valueDomainCum): no window
-    // partition ever holds more than 2^16 histogram rows, and the
-    // per-(flag, w) total `n` comes back from the root level for free
-    val j = graft.operators.Stats.valueDomainCum(hist,
-      Seq("l_returnflag", "w"), domainBits = 32) // item cents < 2^31
-    // value at 0-based sorted index i = first histogram row with cum > i
-    val lookups = ps.flatMap { case (nm, wv, p) =>
-      val r = lit(p) * (col("n") - 1).cast("double")
-      Seq(
-        min(when(col("w") === wv && col("cum") > floor(r), col("v")))
-          .as(s"${nm}_lo"),
-        min(when(col("w") === wv && col("cum") > ceil(r), col("v")))
-          .as(s"${nm}_hi"))
+    // the value at 0-based sorted index i is rank i + 1: per percentile
+    // the ranks ⌊p·(n-1)⌋+1 and ⌈p·(n-1)⌉+1, for every (flag, w) group
+    def pos(p: Double)(n: Column) = lit(p) * (n - 1).cast("double")
+    val targets = ps.flatMap { case (_, _, p) =>
+      Seq((n: Column) => floor(pos(p)(n)) + 1, (n: Column) => ceil(pos(p)(n)) + 1)
     }
-    val agg = j.groupBy("l_returnflag").agg(max(col("n")).as("n"), lookups: _*)
+    // per flag, in flag order: each percentile's n, lo and hi, taken
+    // from its column's group (null when that column has no value)
+    val rows = graft.operators.Stats.selectSorted(hist, targets) { (_, hits) =>
+      val byGroup = hits.map { case (g, n, vs) => (g.get(0), g.get(1)) -> (n, vs) }.toMap
+      hits.map(_._1.get(0)).distinct.map { flag =>
+        Row.fromSeq(flag +: ps.zipWithIndex.flatMap { case ((_, w, _), i) =>
+          byGroup.get((flag, w)).fold(Seq[Any](null, null, null)) {
+            case (n, vs) => Seq(n, vs(2 * i), vs(2 * i + 1))
+          }
+        })
+      }
+    }
+    val agg = s.createDataFrame(rows.asJava, StructType(hist.schema("l_returnflag") +:
+      ps.flatMap { case (nm, _, _) =>
+        Seq("n", "lo", "hi").map(x => StructField(s"${nm}_$x", LongType))
+      }))
+    // the local frame is already in flag order
     agg.select(col("l_returnflag") +: ps.map { case (nm, _, p) =>
-      val r = lit(p) * (col("n") - 1).cast("double")
+      val r = pos(p)(col(s"${nm}_n"))
       val lo = col(s"${nm}_lo").cast("double")
       val hi = col(s"${nm}_hi").cast("double")
       // the symmetric interpolation both engines implement:
@@ -312,7 +325,7 @@ object RelationalQueries2 {
       when(ceil(r) === floor(r), lo)
         .otherwise((ceil(r).cast("double") - r) * lo +
           (r - floor(r).cast("double")) * hi).as(nm)
-    }: _*).orderBy("l_returnflag")
+    }: _*)
   }
   val q36Sql: String =
     """SELECT l_returnflag,

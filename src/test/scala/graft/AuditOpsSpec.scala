@@ -32,8 +32,7 @@ class AuditOpsSpec extends SparkSuite {
     val scored = (Seq.fill(2)(-5L) ++ Seq.fill(3)(0L) ++ Seq.fill(5)(7L))
       .zip(Seq(1L, 0L, 1L, 1L, 0L, 1L, 1L, 1L, 1L, 1L))
       .toDF("score", "pass")
-    val out = Curate.scoreCalibration(scored, "score", "pass", k = 5,
-        domainBits = 17)
+    val out = Curate.scoreCalibration(scored, "score", "pass", k = 5)
       .orderBy("bucket")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     assert(out.toSeq == Seq(
@@ -211,7 +210,7 @@ class AuditOpsSpec extends SparkSuite {
     val docs = Seq((1L, "a a a a a a b b b b c c c c d e"))
       .toDF("doc_id", "text")
     val out = TextOps.vocabCoverage(docs, "doc_id", "text",
-        budgets = Seq(1, 2, 3, 5), domainBits = 17)
+        budgets = Seq(1, 2, 3, 5))
       .orderBy("k")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     // k=1: need types-at-or-above ≤ 1 → f=6 ('a' alone): below are

@@ -294,7 +294,8 @@ class PlanAssertSpec extends SparkSuite {
   }
 
   test("value-domain stats never plan a partition-less WindowExec") {
-    // Stats.valueDomainCum's radix decomposition exists precisely so no
+    // these entries rank or sum over a value domain by sort-and-offset
+    // (Stats.selectSorted, Stats.runningSums) precisely so no
     // cumulative sum funnels a whole value domain through one task; a
     // refactor that reintroduces Window.orderBy with an empty partition
     // spec must fail here, not in the 100 TB run.

@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{EventOps, Sketches, Stats, TextOps}
+import graft.operators.{Curate, EventOps, Sketches, Stats, TextOps}
 
-/** What each exact-quantile operator returns when the input holds a
-  * null value and a null group. The quantile skips both, and a group's
-  * count is the quantile's n: it counts only the rows the quantile
-  * ranks.
+/** What each exact-quantile or running-sum operator returns when the
+  * input holds a null value and, where the operator is grouped, a null
+  * group. The operator skips both, and a group's count is the
+  * operator's n: it counts only the rows it ranks.
   */
 class QuantileNullSpec extends SparkSuite {
   import spark.implicits._
@@ -84,5 +84,98 @@ class QuantileNullSpec extends SparkSuite {
       .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
     assert(out == Seq(("g", 50L, 50L, 50L, 0L, 1L),
       ("g", 99L, 96L, 99L, 30303L, 1L)))
+  }
+
+  test("equiDepthHistogram skips null values; N counts the non-null rows") {
+    val df = ((1L to 10L).map(Option(_)) ++ Seq(None, None)).toDF("v")
+    val out = Stats.equiDepthHistogram(df, col("v"), 2).orderBy("bucket")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(out == Seq((0L, 5L, 5L, 1L, 5L), (1L, 5L, 5L, 6L, 10L)))
+  }
+
+  test("weightedPercentiles skips null values, weights and groups; W = 0 selects the smallest value") {
+    val df = Seq[(Option[String], Option[Long], Option[Long])](
+      (Some("a"), Some(1L), Some(1L)), (Some("a"), Some(2L), Some(1L)),
+      (Some("a"), Some(3L), Some(8L)), (Some("a"), None, Some(5L)),
+      (Some("a"), Some(4L), None),
+      (Some("b"), None, Some(3L)),
+      (Some("z"), Some(7L), Some(0L)), (Some("z"), Some(9L), Some(0L)),
+      (None, Some(1L), Some(4L)), (None, Some(2L), Some(4L))
+    ).toDF("g", "v", "w")
+    val out = Stats.weightedPercentiles(df, col("g"), col("v"), col("w"),
+        Seq(25, 50, 90))
+      .as[(Option[String], Option[Long], Option[Long], Option[Long], Option[Long])]
+      .collect().toSeq
+    // "a" ranks weights 1, 1, 8 (W = 10); "b" has no non-null value and
+    // the null group is skipped; "z" weighs 0, so every percentile is
+    // its smallest value
+    assert(out == Seq(
+      (Some("a"), Some(10L), Some(3L), Some(3L), Some(3L)),
+      (Some("z"), Some(0L), Some(7L), Some(7L), Some(7L))))
+  }
+
+  test("quantileNormalize skips null values and the null group; n counts ranked rows") {
+    val df = Seq[(Option[String], Long, Option[Long])](
+      (Some("a"), 1L, Some(10L)), (Some("a"), 2L, Some(20L)),
+      (Some("a"), 3L, Some(20L)), (Some("a"), 4L, None),
+      (Some("b"), 5L, None),
+      (None, 6L, Some(7L)), (None, 7L, Some(8L))
+    ).toDF("g", "id", "v")
+    val out = Stats.quantileNormalize(df, col("g"), col("v"), col("id"))
+      .orderBy("id").as[(Option[String], Long, Option[Long], Option[Long])]
+      .collect().toSeq
+    // "a" ranks 10, 20, 20 (n = 3); "b" has only a null value
+    assert(out == Seq((Some("a"), 1L, Some(10L), Some(333333L)),
+      (Some("a"), 2L, Some(20L), Some(1000000L)),
+      (Some("a"), 3L, Some(20L), Some(1000000L))))
+  }
+
+  test("scoreCalibration skips null scores; N counts the scored rows") {
+    val scored = Seq[(Option[Long], Option[Long])](
+      (Some(-5L), Some(1L)), (Some(-5L), Some(0L)), (Some(0L), Some(1L)),
+      (Some(0L), None), (Some(7L), Some(1L)), (Some(7L), Some(1L)),
+      (None, Some(1L)), (None, Some(0L)), (None, None)
+    ).toDF("score", "pass")
+    val out = Curate.scoreCalibration(scored, "score", "pass", k = 3)
+      .orderBy("bucket")
+      .as[(Long, Long, Option[Long], Option[Long], Long, Long)]
+      .collect().toSeq
+    // N = 6: cumBefore -5 → 0, 0 → 2, 7 → 4; a null pass is not a pass
+    assert(out == Seq((0L, 2L, Some(1L), Some(500000L), -5L, -5L),
+      (1L, 2L, Some(1L), Some(500000L), 0L, 0L),
+      (2L, 2L, Some(2L), Some(1000000L), 7L, 7L)))
+  }
+
+  test("vocabCoverage drops a null text and counts a null-id document") {
+    val docs = Seq[(Option[Long], String)](
+      (Some(1L), "a a a b b c"), (Some(2L), null), (None, "c d")
+    ).toDF("doc_id", "text")
+    val out = TextOps.vocabCoverage(docs, "doc_id", "text",
+        budgets = Seq(1, 2, 4)).orderBy("k")
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    // a×3, b×2, c×2, d×1: T = 4 types, 8 occurrences
+    assert(out == Seq((1L, 3L, 1L, 3L, 5L, 625000L),
+      (2L, 3L, 1L, 3L, 5L, 625000L), (4L, 1L, 4L, 0L, 0L, 0L)))
+  }
+
+  test("q36 skips null values and the null flag per column") {
+    val d = java.nio.file.Files.createTempDirectory("q36null").toString
+    Seq[(Option[String], Option[Double], Option[Double])](
+      (Some("A"), Some(1.0), Some(10.0)), (Some("A"), Some(2.0), Some(20.0)),
+      (Some("A"), Some(4.0), Some(40.0)), (Some("A"), None, Some(30.0)),
+      (Some("A"), Some(3.0), None),
+      (Some("N"), Some(5.0), Some(50.5)), (Some("N"), Some(6.0), Some(60.25)),
+      (Some("R"), None, Some(70.0)), (Some("R"), None, None),
+      (None, Some(9.0), Some(90.0))
+    ).toDF("l_returnflag", "l_quantity", "l_extendedprice")
+      .write.parquet(s"$d/lineitem.parquet")
+    val out = try SparkEntry.queries("q36_percentiles")(spark, d).collect()
+        .map(_.toSeq).toSeq
+      finally PendingRelease.drain()
+    // "A" ranks quantities 100..400 and prices 1000..4000 cents, four
+    // each, as quantile_cont does; "R" has no quantity
+    assert(out == Seq(Seq("A", 175.0, 250.0, 325.0, 2500.0, 3970.0),
+      Seq("N", 525.0, 550.0, 575.0, 5537.5, 6015.25),
+      Seq("R", null, null, null, 7000.0, 7000.0)))
   }
 }

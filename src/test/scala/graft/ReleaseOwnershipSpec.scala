@@ -57,9 +57,11 @@ class ReleaseOwnershipSpec extends SparkSuite {
     // plan, q88 persists its sorted rows, and q172 persists its value
     // counts for a lazy consumer. Results must equal a single-thread
     // run's, and the session must end with no persisted RDD the test
-    // added.
+    // added. q164 and q174 read running sums lazily from sorted rows
+    // their own thread's drain releases.
     val names = Seq("q80_pagerank", "q143_label_propagation", "q88_median_mad",
-      "q172_sketch_error_audit")
+      "q172_sketch_error_audit", "q164_classifier_calibration",
+      "q174_vocab_coverage")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def run(name: String): Seq[String] =
       try SparkEntry.queries(name)(spark, dir).collect().map(_.toString)

@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Stats
 
-/** [[Stats.medianMad]]'s sort-and-offset selection when groups span
-  * range partitions: 7 shuffle partitions with adaptive coalescing off,
-  * so the (group, value) range shuffle really splits groups, compared
-  * with a driver brute force; and its job count.
+/** [[Stats.medianMad]]'s sort-and-offset selection and
+  * [[Stats.runningSums]] when groups span range partitions: 7 shuffle
+  * partitions with adaptive coalescing off, so the (group, value) range
+  * shuffle really splits groups, compared with a driver brute force;
+  * and the job counts of the entries built on them.
   */
 class SortedSelectSpec extends SparkSuite {
   import spark.implicits._
@@ -86,6 +87,28 @@ class SortedSelectSpec extends SparkSuite {
     }
   }
 
+  test("runningSums matches a driver brute force when groups straddle range partitions") {
+    withStraddle {
+      val df = frame(20261019)
+      val counts = df.groupBy("g", "v").agg(count(lit(1)).as("c"))
+        .withColumn("tag", concat(col("g"), col("v").cast("string")))
+      val got = try Stats.runningSums(counts, 1)
+          .as[(String, Long, Long, String, Long, Long)].collect().toSeq
+        finally PendingRelease.drain()
+      val want = df.as[(String, Long)].collect().toSeq
+        .groupBy(identity).map { case (gv, xs) => gv -> xs.size.toLong }
+        .toSeq.sorted.groupBy(_._1._1).values.flatMap { rows =>
+          val n = rows.map(_._2).sum
+          rows.zip(rows.scanLeft(0L)(_ + _._2).tail).map {
+            case (((g, v), c), cum) => (g, v, c, g + v, cum, n)
+          }
+        }.toSeq.sorted
+      assert(got.sorted == want)
+      assert(got.map(r => (r._1, r._2)) == want.map(r => (r._1, r._2)),
+        "rows must come out in (group, value) order")
+    }
+  }
+
   /** Spark jobs started while `f` runs. */
   private def jobsOf(f: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -121,5 +144,18 @@ class SortedSelectSpec extends SparkSuite {
     val jobs = jobsOf(SparkEntry.queries("q88_median_mad")(spark,
       "/root/testdata/sf0.001").collect())
     assert(jobs <= 11, s"q88 ran $jobs jobs")
+  }
+
+  test("the sort-and-offset entries run a fixed number of Spark jobs") {
+    // one collect each at sf0.001
+    val pinned = Seq("q36_percentiles" -> 6, "q85_equidepth_hist" -> 9,
+      "q93_weighted_percentiles" -> 6, "q137_quantile_normalize" -> 9,
+      "q164_classifier_calibration" -> 10, "q174_vocab_coverage" -> 12)
+    val got = pinned.map { case (q, _) =>
+      q -> (try jobsOf(SparkEntry.queries(q)(spark,
+        "/root/testdata/sf0.001").collect())
+      finally PendingRelease.drain())
+    }
+    assert(got == pinned)
   }
 }
