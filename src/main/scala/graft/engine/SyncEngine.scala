@@ -9,13 +9,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codegen.SyncSqlGenerator
-import graft.model.{InsertRow, Stmt, TableMeta}
+import graft.model.{Stmt, TableMeta}
 import graft.parse.DumpParser
 import graft.sources.DumpSource
 
@@ -85,8 +90,9 @@ final case class SyncOutcome(
   *                            ordered ([[graft.sources.DumpSource]])
   *   2. catalog             — CREATE statements are a tiny fraction;
   *                            parsed on the driver in offset order
-  *   3. record parse        — executor-side flatMap over INSERT
-  *                            statements (quote-aware tokenizer)
+  *   3. record parse        — one byte scan per INSERT statement
+  *                            ([[graft.parse.DumpParser.RecordScan]]),
+  *                            Catalyst rows in, Catalyst rows out
   *   4. last-wins dedup     — window per (table, pk) ordered by position
   *   5. diff                — [[Differ.classify]] on (table, pk) over
   *                            `vals`, the record diff every sync path
@@ -139,28 +145,62 @@ class SyncJob(spark: SparkSession) {
     * .rawInsertCol]]) — carrying it would double the window-shuffle bytes.
     */
   def records(stmts: Dataset[Stmt], cat: ListMap[String, TableMeta]): DataFrame = {
-    val bc = spark.sparkContext.broadcast(cat)
-    val rows: Dataset[InsertRow] = stmts.flatMap { st =>
-      DumpParser.parseInsert(st.text) match {
-        case Some((table, valuesPart)) if bc.value.contains(table) =>
-          val meta = bc.value(table)
-          DumpParser.splitValueSets(valuesPart).iterator.zipWithIndex.map {
-            case (vs, i) =>
-              val vals = DumpParser.splitValues(vs)
-              InsertRow(table, st.off, i, DumpParser.pkString(vals, meta), vals)
-          }.toSeq
-        case _ => Nil // unknown table or no column list: ignored (sync.py:55,59)
-      }
-    }
     val part = Window.partitionBy("table", "pk")
     val lastFirst = part.orderBy(col("off").desc, col("row").desc)
-    rows.toDF()
+    recordRows(stmts, cat)
       .withColumn("rn", row_number().over(lastFirst))
       .withColumn("ord", min(struct(col("off"), col("row"))).over(part))
       .filter(col("rn") === 1)
       .select(col("table"), col("pk"),
         col("ord.off").as("ord_off"), col("ord.row").as("ord_row"),
         col("vals"))
+  }
+
+  /** Every INSERT row of a dump before dedup, as [[SyncJob.RecordSchema]]
+    * rows: (table, off, row, pk, vals), `row` being the value set's index
+    * within its statement, so (off, row) is the global statement position
+    * the reference's dict semantics depend on (SURVEY.md §7.4). Each
+    * partition runs one [[DumpParser.RecordScan]] over the statements'
+    * UTF-8 bytes, read as Catalyst rows (a cached scan serves them), and
+    * emits Catalyst rows: each statement's bytes are copied once, and
+    * every value is a view of that copy.
+    */
+  private[graft] def recordRows(stmts: Dataset[Stmt],
+      cat: ListMap[String, TableMeta]): DataFrame = {
+    val bc = spark.sparkContext.broadcast(cat)
+    val offAt = stmts.schema.fieldIndex("off")
+    val textAt = stmts.schema.fieldIndex("text")
+    val rows = stmts.queryExecution.toRdd.mapPartitions[InternalRow] { it =>
+      val scan = new DumpParser.RecordScan(bc.value)
+      val names = scan.tables.map(t => UTF8String.fromString(t.name))
+      val bar = UTF8String.fromString("|")
+      it.flatMap { st =>
+        val b = st.getUTF8String(textAt).getBytes
+        if (!scan.start(b, 0, b.length)) Iterator.empty
+        else {
+          val off = st.getLong(offAt)
+          Iterator.from(0).takeWhile(_ => scan.nextSet()).map { i =>
+            val n = scan.values
+            val vals = new Array[UTF8String](n)
+            var k = 0
+            while (k < n) {
+              vals(k) = UTF8String.fromBytes(b, scan.valueFrom(k),
+                scan.valueUntil(k) - scan.valueFrom(k))
+              k += 1
+            }
+            val at = scan.pk
+            // DumpParser.pkString's rule over the views
+            val pk =
+              if (at.length == 1 && at(0) >= 0 && at(0) < n) vals(at(0))
+              else UTF8String.concatWs(bar, at.filter(_ < n).map(j =>
+                if (j >= 0) vals(j) else if (n > 0) vals(0) else UTF8String.EMPTY_UTF8): _*)
+            new GenericInternalRow(Array[Any](names(scan.table), off, i, pk,
+              new GenericArrayData(vals.asInstanceOf[Array[Any]])))
+          }
+        }
+      }
+    }
+    Bridge.internalFrame(spark, rows, SyncJob.RecordSchema)
   }
 
   /** Reference-parity run: the outcome with every classified op
@@ -594,6 +634,17 @@ class SyncJob(spark: SparkSession) {
 }
 
 object SyncJob {
+  /** Schema of [[SyncJob.recordRows]]: the names, types and nullability
+    * an encoded (table: String, off: Long, row: Int, pk: String,
+    * vals: Seq[String]) case class has.
+    */
+  private[graft] val RecordSchema: StructType = StructType(Seq(
+    StructField("table", StringType),
+    StructField("off", LongType, nullable = false),
+    StructField("row", IntegerType, nullable = false),
+    StructField("pk", StringType),
+    StructField("vals", ArrayType(StringType))))
+
   /** Collected-script routing threshold for [[SyncJob.syncAuto]]:
     * above this many classified ops the script goes through the
     * distributed text sink instead of a driver collect. 1M ops of

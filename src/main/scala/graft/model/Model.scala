@@ -26,20 +26,3 @@ final case class TableMeta(
   * file (global order key, stable across partitioned reads) + text.
   */
 final case class Stmt(off: Long, text: String)
-
-/** One parsed INSERT row before dedup. `row` is the value-set index within
-  * a multi-row VALUES clause; (off, row) is the global statement position
-  * the reference's dict semantics depend on (SURVEY.md §7.4).
-  *
-  * The replay INSERT text is NOT carried here: it is a pure function of
-  * (table, vals) ([[graft.parse.DumpParser.rawInsert]]) and is derived at
-  * render time ([[graft.codegen.SyncSqlGenerator.rawInsertCol]]) — carrying
-  * it would double the bytes through the dedup window, the diff join, and
-  * every persisted snapshot.
-  */
-final case class InsertRow(
-    table: String,
-    off: Long,
-    row: Int,
-    pk: String,
-    vals: Seq[String])

@@ -1,5 +1,7 @@
 package graft.parse
 
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
@@ -7,8 +9,9 @@ import graft.model.TableMeta
 
 /** Pure-Scala MySQL-dump grammar, reimplementing the reference parser's
   * documented semantics (/root/reference/sync.py:29-173, catalogued in
-  * SURVEY.md §1.3/§2.1). Pure functions only — the DDL half runs on the
-  * driver (catalogs are small), the DML half inside executor `flatMap`s.
+  * SURVEY.md §1.3/§2.1). Spark-free — the DDL half runs on the driver
+  * (catalogs are small); the DML half is [[DumpParser.RecordScan]], one
+  * byte scanner each executor partition runs over its INSERT statements.
   *
   * Deliberate semantic deviations (SURVEY.md §7.4 item 3 — our grammar is
   * a superset; differential tests exclude inputs hitting reference bugs):
@@ -30,7 +33,6 @@ import graft.model.TableMeta
 object DumpParser {
 
   private val CreateHead = "(?is)CREATE TABLE.*?`(\\w+)`\\s*\\((.*?)\\)\\s*ENGINE.*".r
-  private val InsertHead = "(?is)\\s*INSERT INTO\\s+`(\\w+)`\\s*\\([^)]+\\)\\s*VALUES\\s*(.*)".r
   private val ColumnLine = "`(\\w+)`.*".r
   private val ColumnTypeLine = "`(\\w+)`\\s+([A-Za-z]+(?:\\s*\\([^)]*\\))?).*".r
   private val PkLine = "(?is).*?PRIMARY KEY\\s*\\(\\s*`([^`]+)`\\s*\\).*".r
@@ -98,11 +100,14 @@ object DumpParser {
   }
 
   /** INSERT recognizer: explicit column list required (sync.py:55);
-    * returns (table, valuesBlob).
+    * returns (table, valuesBlob), the blob starting after `VALUES` and
+    * the whitespace that follows it.
     */
-  def parseInsert(stmtText: String): Option[(String, String)] = stmtText match {
-    case InsertHead(table, valuesPart) => Some((table, valuesPart))
-    case _ => None
+  def parseInsert(stmtText: String): Option[(String, String)] = {
+    val b = stmtText.getBytes(UTF_8)
+    val s = new RecordScan(Map.empty)
+    if (!s.head(b, 0, b.length)) None
+    else Some((s.tableName, new String(b, s.pos, b.length - s.pos, UTF_8)))
   }
 
   /** Split a VALUES blob into individual `(...)` groups, honoring quoted
@@ -110,29 +115,10 @@ object DumpParser {
     * sync.py:106-119).
     */
   def splitValueSets(valuesPart: String): List[String] = {
+    val b = valuesPart.getBytes(UTF_8)
+    val s = new RecordScan(Map.empty).over(b, 0, b.length)
     val out = List.newBuilder[String]
-    val cur = new java.lang.StringBuilder
-    var inGroup = false
-    var quote: Char = 0
-    var i = 0
-    val n = valuesPart.length
-    while (i < n) {
-      val c = valuesPart.charAt(i)
-      if (!inGroup) {
-        if (c == '(') { inGroup = true; cur.setLength(0) }
-      } else if (quote != 0) {
-        if (c == quote) {
-          if (i + 1 < n && valuesPart.charAt(i + 1) == quote) {
-            cur.append(c).append(quote); i += 1
-          } else { cur.append(c); quote = 0 }
-        } else cur.append(c)
-      } else c match {
-        case '\'' | '"' => quote = c; cur.append(c)
-        case ')' => inGroup = false; out += cur.toString
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
+    while (s.nextSet()) out += new String(b, s.setFrom, s.setUntil - s.setFrom, UTF_8)
     out.result()
   }
 
@@ -142,42 +128,194 @@ object DumpParser {
     * machine's semantics (sync.py:121-158).
     */
   def splitValues(valueSet: String): IndexedSeq[String] = {
-    val out = IndexedSeq.newBuilder[String]
-    val cur = new java.lang.StringBuilder
-    var quote: Char = 0
-    var i = 0
-    val n = valueSet.length
-    while (i < n) {
-      val c = valueSet.charAt(i)
-      if (quote == 0) {
-        if (c == '\'' || c == '"') { quote = c; cur.append(c) }
-        else if (c == ',') { out += cur.toString.trim; cur.setLength(0) }
-        else cur.append(c)
-      } else {
-        cur.append(c)
-        if (c == quote) {
-          if (i + 1 < n && valueSet.charAt(i + 1) == quote) {
-            cur.append(quote); i += 1
-          } else quote = 0
-        }
-      }
-      i += 1
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.result()
+    val b = valueSet.getBytes(UTF_8)
+    val s = new RecordScan(Map.empty).over(b, 0, b.length)
+    s.cutAll()
+    IndexedSeq.tabulate(s.values)(k =>
+      new String(b, s.valueFrom(k), s.valueUntil(k) - s.valueFrom(k), UTF_8))
   }
 
   /** Pipe-joined PK string (sync.py:160-173): PK columns projected by
     * position; a PK column missing from the column list falls back to the
     * row's first value; an index past the row's end contributes nothing.
+    * [[RecordScan]]'s callers apply the same rule to its byte cuts.
     */
   def pkString(values: IndexedSeq[String], meta: TableMeta): String =
-    meta.pkCols.flatMap { pk =>
-      val idx = meta.columns.indexOf(pk)
-      if (idx < 0) Some(values.headOption.getOrElse(""))
-      else if (idx < values.length) Some(values(idx))
-      else None
-    }.mkString("|")
+    pkIndexes(meta).iterator.filter(_ < values.length)
+      .map(i => if (i < 0) values.headOption.getOrElse("") else values(i))
+      .mkString("|")
+
+  /** Each PK column's position in the column list, -1 when absent. */
+  private def pkIndexes(meta: TableMeta): Array[Int] =
+    meta.pkCols.map(meta.columns.indexOf(_)).toArray
+
+  /** The one tokenizer of INSERT statements: a single pass over a
+    * statement's UTF-8 bytes that matches the INSERT head by hand and cuts
+    * each value set into values, reporting byte offsets — the executor
+    * side of [[graft.engine.SyncJob.records]], which makes one scanner per
+    * partition over the catalog `cat` (the String forms above run on it
+    * too). Bytes tokenize exactly as chars do: every delimiter is ASCII,
+    * and no byte of a multi-byte UTF-8 character is below 0x80.
+    *
+    * The head is matched as the reference grammar's regex
+    * \s*INSERT INTO\s+`(\w+)`\s*\([^)]+\)\s*VALUES\s* (sync.py:55)
+    * matches it: Java's `\s` (the six bytes ` \t\n\x0B\f\r`) and `\w`
+    * (`[A-Za-z0-9_]`), keywords ASCII case-insensitive.
+    *
+    * Drop reasons — every record a statement yields no row for, one
+    * place to count them:
+    *  - the statement is not an INSERT with a column list ([[start]]'s
+    *    head match fails, sync.py:55);
+    *  - its table has no CREATE in the catalog ([[start]], sync.py:59);
+    *  - its last value set has no closing `)` ([[nextSet]] returns false).
+    * A row whose value count differs from the column list is kept.
+    */
+  final class RecordScan(cat: scala.collection.Map[String, TableMeta]) {
+    /** The catalog's tables; [[table]] indexes them. */
+    val tables: Array[TableMeta] = cat.values.toArray
+    private val tableIndex = tables.iterator.map(_.name).zipWithIndex.toMap
+    private val pkAt = tables.map(pkIndexes)
+
+    private var b = Array.emptyByteArray
+    private var end = 0
+    /** Scan position; after a head match, the VALUES blob's start. */
+    private[parse] var pos = 0
+    private var tableFrom = 0
+    private var tableUntil = 0
+    /** The current value set's bytes: after its `(`, up to its `)`. */
+    private[parse] var setFrom = 0
+    private[parse] var setUntil = 0
+    /** The current statement's table, as an index into [[tables]]. */
+    var table = -1
+    /** Value count of the current set; value k is bytes
+      * [[valueFrom]](k) until [[valueUntil]](k).
+      */
+    var values = 0
+    private var cuts = new Array[Int](32)
+
+    def valueFrom(k: Int): Int = cuts(2 * k)
+    def valueUntil(k: Int): Int = cuts(2 * k + 1)
+    /** Positions of the current table's PK columns ([[pkIndexes]]). */
+    def pk: Array[Int] = pkAt(table)
+
+    /** Starts the statement in `bytes` [from, until): true when it is an
+      * INSERT with a column list into a catalogued table, and then
+      * [[nextSet]] walks its value sets.
+      */
+    def start(bytes: Array[Byte], from: Int, until: Int): Boolean =
+      head(bytes, from, until) && {
+        table = tableIndex.getOrElse(tableName, -1)
+        table >= 0
+      }
+
+    /** Cuts the next complete value set; false when none is left. */
+    def nextSet(): Boolean = {
+      while (pos < end && b(pos) != '(') pos += 1
+      pos < end && cut(pos + 1, ')')
+    }
+
+    private[parse] def tableName: String =
+      new String(b, tableFrom, tableUntil - tableFrom, US_ASCII)
+
+    private[parse] def over(bytes: Array[Byte], from: Int, until: Int): this.type = {
+      b = bytes; pos = from; end = until
+      this
+    }
+
+    /** Cuts everything up to the end as one value set, `)` included. */
+    private[parse] def cutAll(): Unit = { cut(pos, Bare); () }
+
+    private[parse] def head(bytes: Array[Byte], from: Int, until: Int): Boolean = {
+      over(bytes, from, until)
+      var i = keyword(spaces(from), "INSERT INTO")
+      val t = spaces(i)
+      if (t == i || !at(t, '`')) return false
+      i = t + 1
+      while (i < end && isWord(b(i))) i += 1
+      if (i == t + 1 || !at(i, '`')) return false
+      tableFrom = t + 1; tableUntil = i
+      i = spaces(i + 1)
+      if (!at(i, '(') || i + 1 >= end || b(i + 1) == ')') return false
+      i += 2
+      while (i < end && b(i) != ')') i += 1
+      if (i >= end) return false
+      i = keyword(spaces(i + 1), "VALUES")
+      if (i < 0) return false
+      pos = spaces(i)
+      true
+    }
+
+    private def at(i: Int, c: Char): Boolean = i >= 0 && i < end && b(i) == c
+
+    /** First position from `i` that is not a `\s` byte (`i` if negative). */
+    private def spaces(i: Int): Int = {
+      var j = i
+      while (j >= 0 && j < end && { val c = b(j); c == ' ' || (c >= '\t' && c <= '\r') })
+        j += 1
+      j
+    }
+
+    /** Position after `kw` (upper case) matched ASCII case-insensitively
+      * at `i`, or -1.
+      */
+    private def keyword(i: Int, kw: String): Int = {
+      if (i < 0 || i + kw.length > end) return -1
+      var k = 0
+      while (k < kw.length) {
+        val w = kw.charAt(k)
+        val c = b(i + k)
+        if (c != w && !(w >= 'A' && w <= 'Z' && c == w + 32)) return -1
+        k += 1
+      }
+      i + kw.length
+    }
+
+    private def isWord(c: Byte): Boolean =
+      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+        c == '_'
+
+    /** The one value-splitting loop: cuts values at unquoted commas from
+      * `from` to an unquoted `close` (true) or the end (true only for
+      * [[Bare]]). A doubled quote (SQL's escape) needs no case of its
+      * own: closing and reopening the literal leaves the same state. Each
+      * value is trimmed of bytes <= 0x20 (`String.trim`'s rule); a last
+      * field that trims empty is dropped.
+      */
+    private def cut(from: Int, close: Int): Boolean = {
+      values = 0; setFrom = from
+      var s = from
+      var quote = 0
+      var i = from
+      while (i < end) {
+        val c = b(i)
+        if (quote != 0) { if (c == quote) quote = 0 }
+        else if (c == '\'' || c == '"') quote = c
+        else if (c == ',') { add(s, i, keepEmpty = true); s = i + 1 }
+        else if (c == close) {
+          add(s, i, keepEmpty = false); setUntil = i; pos = i + 1
+          return true
+        }
+        i += 1
+      }
+      pos = end
+      close == Bare && { add(s, end, keepEmpty = false); setUntil = end; true }
+    }
+
+    private def add(from: Int, until: Int, keepEmpty: Boolean): Unit = {
+      var s = from
+      var e = until
+      while (s < e && (b(s) & 0xff) <= 0x20) s += 1
+      while (e > s && (b(e - 1) & 0xff) <= 0x20) e -= 1
+      if (keepEmpty || s < e) {
+        if (2 * values + 2 > cuts.length) cuts = java.util.Arrays.copyOf(cuts, 2 * cuts.length)
+        cuts(2 * values) = s; cuts(2 * values + 1) = e
+        values += 1
+      }
+    }
+  }
+
+  /** A `close` no byte equals: the value set runs to the end. */
+  private val Bare = 256
 
   /** Reconstructed single-row INSERT, column list deliberately omitted
     * (sync.py:69).

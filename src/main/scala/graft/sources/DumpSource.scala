@@ -31,9 +31,10 @@ object DumpSource {
     conf.set("textinputformat.record.delimiter", ";\n")
     // local-FS blocks are large; cap split size so a single dump file
     // still fans out across all cores. 4 MB (not the HDFS-ish 128 MB)
-    // because the per-byte work here is regex tokenization, not IO — a
-    // single-digit-MB dump must still parse on >1 core, and a straggling
-    // oversized split serializes the whole parse stage.
+    // because the per-byte work downstream is the record scan's
+    // tokenizing and the rows it emits, not IO — a single-digit-MB dump
+    // must still parse on >1 core, and a straggling oversized split
+    // serializes the whole parse stage.
     conf.set("mapreduce.input.fileinputformat.split.maxsize", "4194304")
     val rdd = spark.sparkContext
       .newAPIHadoopFile(path, classOf[TextInputFormat],

@@ -34,6 +34,17 @@ object Bridge {
       .asInstanceOf[org.apache.spark.sql.SparkSession]
   }
 
+  /** A frame over an RDD of Catalyst rows laid out as `schema`, with no
+    * serializer between them (`internalCreateDataFrame` is
+    * `private[sql]`). Each row's values must have the internal types of
+    * `schema`'s fields.
+    */
+  def internalFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Catalog-resolved on-disk location of `table`: the table's actual
     * metadata location when it exists, else the path the catalog WOULD
     * assign (`defaultTablePath` — honors the current database's

@@ -418,4 +418,55 @@ class SyncJobSpec extends SparkSuite {
       plans.iterator.asScala.mkString("\n"))
     assert(jobs.get == 8, s"the collected route ran ${jobs.get} jobs")
   }
+
+  test("records reads a cached scan as Catalyst rows: no object round trip") {
+    import org.apache.spark.storage.StorageLevel
+    import graft.sources.DumpSource
+    val prod = tmpFile(res("prod_sf0.001.sql"))
+    val stmts = DumpSource.statements(spark, prod.toString)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val cat = job.catalog(stmts)
+      val recs = job.records(stmts, cat)
+      assert(recs.count() > 0)
+      // the statement rows come from the scan cache, and neither they
+      // nor the records go through a typed object
+      val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val nodes = Seq(stmts, recs).flatMap(d =>
+        plans.collect(d.queryExecution.executedPlan) { case n => n.nodeName })
+      assert(nodes.contains("InMemoryTableScan"), nodes)
+      assert(!nodes.exists(Set("DeserializeToObject", "SerializeFromObject")), nodes)
+    } finally { stmts.unpersist(); () }
+  }
+
+  test("two concurrent syncAuto calls on one pair: the single call's bytes, no cache left") {
+    // prepare's scans and its joined diff sit on fresh Hadoop RDDs per
+    // call, so two calls never share a cache manager entry; a shared
+    // one would be released under the other call
+    val prod = tmpFile(res("prod_sf0.001.sql")).toString
+    val backup = tmpFile(res("backup_sf0.001.sql")).toString
+    def sync(): String = {
+      val out = Files.createTempDirectory("graft-concurrent").resolve("out.sql")
+      try {
+        assert(job.syncAuto(prod, backup, out.toString, "T")._2.isEmpty)
+        read(out)
+      } finally PendingRelease.drain()
+    }
+    val expected = sync()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 2).map { t =>
+      new Thread(() => {
+        for (r <- 0 until 2) {
+          try { if (sync() != expected) errors.add(s"thread $t round $r: script differs") }
+          catch { case e: Exception => errors.add(s"thread $t round $r failed: $e") }
+        }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a concurrent sync left a persisted RDD")
+  }
 }
